@@ -1,187 +1,16 @@
-"""Seeded input generators for the benchmark.
+"""Seeded inputs of the benchmark.
 
-Everything the engine reads during a run is made here from ``--seed``:
-the fixture tables the query workloads scan (same schema and value
-ranges as the engine's sf fixtures) and the Debezium-style change
-envelopes the CDC workload lands.  The same seed gives byte-identical
-files; the engine never sees the seed itself.
+The seed sets the order of the queries within a pass and the
+Debezium-style change envelopes the CDC workload lands; the query
+workloads read the fixed fixture tables under ``fixtures/``.  The same
+seed gives byte-identical envelopes and the same order; the engine
+never sees the seed itself.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import random
-
-import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-SF01_TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-               "lineitem", "events", "documents", "embeddings"]
-
-# Row counts of the sf0.1 fixtures; a workload scales them by one factor.
-SF01_ROWS = {
-    "customer": 15_000,
-    "supplier": 1_000,
-    "part": 20_000,
-    "orders": 150_000,
-    "lineitem": 600_000,
-    "events": 100_000,
-    "event_users": 1_500,
-    "documents": 5_000,
-    "embeddings": 2_000,
-}
-
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-PART_ADJ = ["blue", "cold", "hot", "large", "new", "old", "red", "small"]
-PART_NOUN = ["anvil", "bolt", "gear", "nut", "plate", "ring", "rod", "spring"]
-PART_TYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-LANGS = ["en", "de", "es", "fr", "zh"]
-LANG_P = [0.41, 0.14, 0.15, 0.15, 0.15]
-VOCAB = (
-    "a agg batch big column customer data fast filter group hash join key "
-    "line merge order part query row scan slow small sort spark stream "
-    "table the value vector window"
-).split()
-
-_DAY_US = 86_400 * 1_000_000
-
-
-def _days(base: str, offsets: np.ndarray) -> pa.Array:
-    """Timestamps at midnight ``offsets`` days after ``base``."""
-    start = np.datetime64(base, "us").astype(np.int64)
-    return pa.array(start + offsets.astype(np.int64) * _DAY_US, pa.timestamp("us"))
-
-
-def _money(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray:
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def _names(prefix: str, n: int) -> list[str]:
-    return [f"{prefix}#{k:09d}" for k in range(n)]
-
-
-def make_tables(out_dir: str, seed: int, scale: float) -> dict[str, int]:
-    """Write the ten fixture tables under ``out_dir`` as single parquet
-    files.  ``scale`` multiplies the sf0.1 row counts.  Returns row
-    counts per table."""
-    rng = np.random.default_rng(seed)
-    n = {k: max(10, int(v * scale)) for k, v in SF01_ROWS.items()}
-    tables: dict[str, pa.Table] = {}
-
-    tables["region"] = pa.table({
-        "r_regionkey": pa.array(range(5), pa.int32()),
-        "r_name": REGIONS,
-    })
-    tables["nation"] = pa.table({
-        "n_nationkey": pa.array(range(25), pa.int32()),
-        "n_name": [f"NATION_{k}" for k in range(25)],
-        "n_regionkey": pa.array(rng.integers(0, 5, 25), pa.int32()),
-    })
-    nc = n["customer"]
-    tables["customer"] = pa.table({
-        "c_custkey": pa.array(np.arange(nc), pa.int64()),
-        "c_name": _names("Customer", nc),
-        "c_nationkey": pa.array(rng.integers(0, 25, nc), pa.int32()),
-        "c_acctbal": _money(rng, -999.99, 9999.99, nc),
-        "c_mktsegment": rng.choice(SEGMENTS, nc),
-    })
-    ns = n["supplier"]
-    tables["supplier"] = pa.table({
-        "s_suppkey": pa.array(np.arange(ns), pa.int64()),
-        "s_name": _names("Supplier", ns),
-        "s_nationkey": pa.array(rng.integers(0, 25, ns), pa.int32()),
-        "s_acctbal": _money(rng, -999.99, 9999.99, ns),
-    })
-    npart = n["part"]
-    keys = np.arange(npart)
-    tables["part"] = pa.table({
-        "p_partkey": pa.array(keys, pa.int64()),
-        "p_name": [
-            f"{PART_ADJ[a]} {PART_NOUN[b]}"
-            for a, b in zip(rng.integers(0, 8, npart), rng.integers(0, 8, npart))
-        ],
-        "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, npart)],
-        "p_type": rng.choice(PART_TYPES, npart),
-        "p_size": pa.array(rng.integers(1, 51, npart), pa.int32()),
-        "p_retailprice": 900.0 + (keys % 1000) / 10.0,
-    })
-    no = n["orders"]
-    tables["orders"] = pa.table({
-        "o_orderkey": pa.array(np.arange(no), pa.int64()),
-        "o_custkey": pa.array(rng.integers(0, nc, no), pa.int64()),
-        "o_orderstatus": rng.choice(["F", "O", "P"], no),
-        "o_totalprice": _money(rng, 1000.0, 500_000.0, no),
-        "o_orderdate": _days("1995-01-01", rng.integers(0, 2404, no)),
-        "o_orderpriority": rng.choice(PRIORITIES, no),
-    })
-    nl = n["lineitem"]
-    tables["lineitem"] = pa.table({
-        "l_orderkey": pa.array(rng.integers(0, no, nl), pa.int64()),
-        "l_partkey": pa.array(rng.integers(0, npart, nl), pa.int64()),
-        "l_suppkey": pa.array(rng.integers(0, ns, nl), pa.int64()),
-        "l_linenumber": pa.array(rng.integers(1, 8, nl), pa.int32()),
-        "l_quantity": rng.integers(1, 51, nl).astype(np.float64),
-        "l_extendedprice": _money(rng, 900.0, 105_000.0, nl),
-        "l_discount": rng.integers(0, 11, nl) / 100.0,
-        "l_tax": rng.integers(0, 9, nl) / 100.0,
-        "l_returnflag": rng.choice(["A", "N", "R"], nl),
-        "l_linestatus": rng.choice(["F", "O"], nl),
-        "l_shipdate": _days("1995-01-02", rng.integers(0, 2499, nl)),
-    })
-    ne = n["events"]
-    start = np.datetime64("2024-01-01", "us").astype(np.int64)
-    ts = np.sort(rng.integers(0, 30 * _DAY_US, ne)) + start
-    tables["events"] = pa.table({
-        "event_id": pa.array(np.arange(ne), pa.int64()),
-        "ts": pa.array(ts, pa.timestamp("us")),
-        "user_id": pa.array(rng.integers(0, n["event_users"], ne), pa.int64()),
-        "event_type": rng.choice(EVENT_TYPES, ne),
-        "value": np.round(rng.exponential(50.0, ne), 2),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, ne)],
-    })
-    tables["documents"] = _documents(rng, n["documents"])
-    nv = n["embeddings"]
-    vec = rng.standard_normal((nv, 64)).astype(np.float32)
-    vec /= np.linalg.norm(vec, axis=1, keepdims=True)
-    tables["embeddings"] = pa.table({
-        "vec_id": pa.array(np.arange(nv), pa.int64()),
-        "embedding": pa.array(list(vec), pa.list_(pa.float32())),
-        "label": pa.array(rng.integers(0, 10, nv), pa.int32()),
-    })
-
-    os.makedirs(out_dir, exist_ok=True)
-    for name, table in tables.items():
-        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
-    return {name: t.num_rows for name, t in tables.items()}
-
-
-def _documents(rng: np.random.Generator, nd: int) -> pa.Table:
-    """Random-vocabulary documents of 10-100 words.  One in twenty is a
-    near-duplicate of an earlier document (its text plus `` dup``) and a
-    few are exact copies, so the dedup operators have clusters to find."""
-    texts: list[str] = []
-    for i in range(nd):
-        r = rng.random()
-        if i > 10 and r < 0.05:
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
-        elif i > 10 and r < 0.052:
-            texts.append(texts[int(rng.integers(0, i))])
-        else:
-            words = rng.choice(VOCAB, int(rng.integers(10, 101)))
-            texts.append(" ".join(words))
-    return pa.table({
-        "doc_id": pa.array(np.arange(nd), pa.int64()),
-        "text": texts,
-        "lang": rng.choice(LANGS, nd, p=LANG_P),
-        "source": [f"src{k % 20}" for k in range(nd)],
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    })
-
 
 # --- CDC change stream -----------------------------------------------------
 

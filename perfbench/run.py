@@ -1,13 +1,15 @@
 #!/usr/bin/env python3
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload oltp_sql --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload corpus_dedup --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout.  Each call is one fresh process: it
-generates the workload's inputs from ``--seed`` under ``.bench_runs/``,
 starts the engine's session on ``local[<cpus>]``, sets up, warms up,
-measures for ``--seconds`` and checks the outputs.  The last line of
-stdout is ``{"correct", "attempted", "failed", "metrics"}``: the
+measures for ``--seconds`` and checks the outputs.  The seed sets the
+query order and the CDC change envelopes, written under
+``.bench_runs/``; the query workload reads the fixture tables under
+``perfbench/fixtures/``.  The last line of stdout is
+``{"correct", "attempted", "failed", "metrics"}``: the
 end-to-end metrics of ``BENCHMARK.json`` with ``--trace 0``, its
 per-layer metrics with ``--trace 1``.  The line before it is the run's
 report (host context, output checks, counts and the metrics that are
@@ -26,10 +28,11 @@ import shutil
 import sys
 import time
 
+T0 = time.perf_counter()
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 PKG = "ultimate_data_engineering_project_spark"
-WORKLOADS = ("oltp_sql", "corpus_dedup", "cdc_upsert")
+WORKLOADS = ("corpus_dedup", "cdc_upsert")
 
 
 def _args(argv=None):
@@ -48,8 +51,9 @@ def _environment(work: str) -> None:
     os.makedirs(tmp)
     os.makedirs(local)
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    # the heap starts at its maximum, so its resident size does not
-    # depend on when the collector chose to grow it
+    # A 2 GiB heap fixed from the start with -Xms: with the engine's 8 GiB
+    # default the collector grows the heap at times that vary run to run,
+    # and peak RSS spread 33% over five seeds (15% with -Xms8g).
     heap = os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = local
@@ -61,7 +65,8 @@ def _environment(work: str) -> None:
         "--conf " + shlex.quote(f"spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}"),
         "pyspark-shell",
     ])
-    sys.path[:0] = [ROOT, HERE]
+    # tests/ for the engine's DuckDB oracle comparison
+    sys.path[:0] = [ROOT, HERE, os.path.join(ROOT, "tests")]
 
 
 def _metric_specs() -> dict:
@@ -117,8 +122,7 @@ def main(argv=None) -> int:
         if args.workload == "cdc_upsert":
             result = wl.run_cdc(run)
         else:
-            names = wl.OLTP_SQL if args.workload == "oltp_sql" else wl.CORPUS_DEDUP
-            result = wl.run_queries(run, args.workload, names)
+            result = wl.run_queries(run, wl.CORPUS_DEDUP)
         peak_rss = tr.tree_peak_rss()
         jvm = run.spark._jvm
         versions = {
@@ -128,6 +132,7 @@ def main(argv=None) -> int:
         }
     finally:
         _stop(run.spark)
+    run.mark("stop")
     shutil.rmtree(work, ignore_errors=True)
     ticks = tr.host_ticks()
 
@@ -146,6 +151,7 @@ def main(argv=None) -> int:
             **versions,
         },
         "jvm_start_s": jvm_start_s,
+        "process_s": time.perf_counter() - T0,
         "peak_rss_by_process_mb": peak_rss,
         "failed_frac": run.failed / max(1, run.attempted),
         "end_to_end": result["end_to_end"],

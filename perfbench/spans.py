@@ -41,8 +41,6 @@ WRAPPED = [
     ("operators.similarity", "pq_train", "similarity.pq_train"),
     ("operators.similarity", "pq_candidates_int", "similarity.pq_train"),
     ("operators.similarity", "scored_pairs", "similarity.scored_pairs"),
-    # the fitting step nb_train and the holdout plan both call
-    ("operators.classifier", "nb_model", "classifier.nb_train"),
     ("streaming.pipelines", "run_cdc_stream", "cdc.run_cdc_stream"),
     ("streaming.pipelines", "cdc_table_image", "cdc.table_image"),
     ("pipelines", "gold_balance_distribution", "gold.balance_distribution"),
