@@ -253,6 +253,14 @@ def python_operator_totals(spark, first_exec: int, last_exec: int) -> dict[str, 
     return {"python_rows": rows, "python_bytes": nbytes}
 
 
+def jvm_ms(spark) -> dict[str, int]:
+    """Milliseconds the driver JVM has spent compiling (JIT) and
+    collecting garbage since it started."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    return {"jit_ms": int(mf.getCompilationMXBean().getTotalCompilationTime()),
+            "gc_ms": sum(int(gc.getCollectionTime()) for gc in mf.getGarbageCollectorMXBeans())}
+
+
 def sql_execution_count(spark) -> int:
     """Next SQL execution id (ids are dense from 0 in one session)."""
     return int(spark._jsparkSession.sharedState().statusStore().executionsCount())
