@@ -5,6 +5,8 @@ carry the 100 TB story (map-only assignment, cluster-keyed equi-join
 for pair generation).
 """
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +15,7 @@ from ultimate_data_engineering_project_spark.operators import clustering
 from ultimate_data_engineering_project_spark.sources.readers import load_table
 
 K = 8
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _numpy_corpus(spark, sf_dir):
@@ -104,13 +107,74 @@ def test_lloyd_empty_cluster_keeps_fallback(spark):
     # explicit centroids (quantized domain): centroid 1 sits far from
     # every vector, so it attracts no members
     cents = [[0, 0], [100_000_000, 100_000_000], [1_000_000, 1_000_000]]
-    assigned = clustering.assign_clusters(df, cents)
-    step = clustering.lloyd_step(assigned)
-    updated = clustering.collect_centroids(step, cents)
-    present = {r["cluster_id"] for r in step.collect()}
+    present = {r["cluster_id"] for r in clustering.assign_clusters(df, cents).collect()}
+    (updated,) = clustering.lloyd_update(df, [cents])
     assert 1 not in present  # no members landed on the far centroid
     assert updated[1] == cents[1]  # ...so its centroid is unchanged
     assert len(updated) == 3
+
+
+@pytest.mark.parametrize("m", [1, 2, 4, 8])
+def test_batched_lloyd_matches_numpy_per_slice(spark, m):
+    """lloyd_update trains m codebooks at once, book j on the j-th
+    64/m-wide slice; each must equal an independent one-step integer
+    Lloyd on its slice alone: init rows vec_id < K, ties to the lowest
+    code, round-half-up means, empty clusters keep their init."""
+    sf01 = os.path.join(REPO, "perfbench", "fixtures", "sf0.01")
+    emb = load_table(spark, sf01, "embeddings")
+    ids, _, Q = _numpy_corpus(spark, sf01)
+    low = np.argsort(ids)[:K]
+    assert (ids[low] == np.arange(K)).all()  # the init rows: vec_id < K
+    init = Q[low]
+    d = Q.shape[1] // m
+    want = []
+    for j in range(m):
+        sub, c0 = Q[:, j * d : (j + 1) * d], init[:, j * d : (j + 1) * d]
+        a, _ = _np_assign(sub, c0)
+        book = c0.copy()
+        for c in range(K):
+            members = sub[a == c]
+            if len(members):
+                n = len(members)
+                book[c] = np.floor_divide(2 * members.sum(axis=0) + n, 2 * n)
+        want.append(book.tolist())
+    cents = clustering.init_centroids(emb, K)
+    got = clustering.lloyd_update(
+        emb, [[c[j * d : (j + 1) * d] for c in cents] for j in range(m)]
+    )
+    assert got == want
+
+
+def _construction_jobs(spark, group, build):
+    """Spark jobs launched while ``build()`` constructs its frame."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "construction")
+    try:
+        build()
+    finally:
+        sc.setJobGroup(f"{group}_done", "clear")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_codebook_training_jobs_independent_of_book_count(spark, sf_dir):
+    """All PQ sub-space codebooks train in one bounded pass, so the
+    construction-time jobs of pq_candidates_int do not grow with m;
+    one k-means iteration is an init collect plus one update (its
+    exchange and bounded collect), at most 3 jobs."""
+    from ultimate_data_engineering_project_spark.operators import similarity
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    jobs = {
+        m: _construction_jobs(
+            spark, f"pq_m{m}", lambda m=m: similarity.pq_candidates_int(emb, m=m)
+        )
+        for m in (2, 8)
+    }
+    assert jobs[2] == jobs[8], jobs
+    refine = _construction_jobs(
+        spark, "kmeans_refine_1", lambda: clustering.kmeans_refine(emb, K, n_iters=1)
+    )
+    assert refine <= 3, refine
 
 
 def test_semantic_dedup_is_within_cluster_cosine(spark, sf_dir):

@@ -1280,6 +1280,21 @@ def test_bpe_segment_words_rejects_separator_in_word(spark):
         bpe_segment_words(words, [(1, "a", "b", "ab", 2)]).collect()
 
 
+def test_bpe_segment_words_null_word_segments_to_null(spark):
+    """A NULL word is not a separator hit: it passes the guard and
+    segments to a NULL token list instead of raising."""
+    from ultimate_data_engineering_project_spark.operators.text import (
+        bpe_segment_words,
+    )
+
+    words = spark.createDataFrame([("ab",), (None,)], "word string")
+    got = {
+        r["word"]: r["__toks"]
+        for r in bpe_segment_words(words, [(1, "a", "b", "ab", 2)]).collect()
+    }
+    assert got == {"ab": ["ab"], None: None}
+
+
 def test_decode_confluent_evolving_data_collections_element(spark):
     """r12 judge ask #4 end to end on Spark: the Debezium transaction
     envelope's ``data_collections`` array<record> whose ELEMENT record

@@ -6,6 +6,8 @@ regress the 100 TB story.
 
 import re
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from ultimate_data_engineering_project_spark.plans.catalog import catalog
@@ -436,6 +438,17 @@ def test_scored_pairs_dispatch_is_scale_adaptive(spark, sf_dir):
     try:
         p3 = plan(fn(spark, sf_dir))
         assert "MapInArrow" not in p3
+    finally:
+        spark.conf.unset("spark.udep.similarity.kernel")
+
+
+def test_scored_pairs_rejects_unknown_kernel(spark, sf_dir):
+    """A typo in spark.udep.similarity.kernel fails loudly instead of
+    silently running the JVM fold."""
+    spark.conf.set("spark.udep.similarity.kernel", "sql")
+    try:
+        with pytest.raises(ValueError, match="similarity.kernel"):
+            catalog()["cosine_topk_bruteforce"].fn(spark, sf_dir)
     finally:
         spark.conf.unset("spark.udep.similarity.kernel")
 

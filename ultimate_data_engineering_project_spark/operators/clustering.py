@@ -10,12 +10,16 @@ Why this exists: at 100 TB the two clustering consumers are
     SEMANTIC pairs are found within clusters only, turning an O(n²)
     all-pairs cosine into per-cluster blocks keyed by cluster id.
 
-Scale shape: assignment is a pure map (per-row fold against a
-broadcast literal centroid matrix — no join, no shuffle); the Lloyd
-update is one partial-aggregated groupBy(cluster, dim) shuffle whose
-output is k×dim rows (tiny); SemDeDup candidate generation is a
-cluster-keyed equi-join (never a cartesian — the catalog-wide plan ban
-applies).  Nothing here re-shuffles the corpus beyond the one
+Scale shape: init collects the k lowest-id rows and sorts them on the
+driver (one job, no sort exchange); assignment is a pure map (per-row
+fold against a broadcast literal centroid matrix — no join, no
+shuffle); the Lloyd update (:func:`lloyd_update`) trains any number of
+codebooks at once — one Arrow map emits per-batch member sums, then
+ONE groupBy(book, cluster, pos) exchange of at most batches×k×dim rows
+and one bounded collect, so PQ's m sub-space codebooks cost the same
+Spark round trips as a single k-means.  SemDeDup candidate generation
+is a cluster-keyed equi-join (never a cartesian — the catalog-wide plan
+ban applies).  Nothing here re-shuffles the corpus beyond the one
 aggregation a mean requires.
 
 Engine portability (the md5-twin trick applied to clustering): all
@@ -95,15 +99,36 @@ def _nearest(cents_lit: Column, qv: Column) -> Column:
     )[0]
 
 
+def _argmin_books(Q, books):
+    """Per-book nearest centroid: book j covers the j-th ``d``-wide
+    slice of each row of the int64 matrix ``Q`` (``d`` = the books'
+    width).  Squared L2 as ONE int64 numpy matmul per book —
+    |q|² + |c|² − 2·q·c, every term an EXACT integer (≤ dim·(2·
+    QUANT_SCALE)² ≈ 2.6e14 per product sum, far under int64), so it
+    is bit-identical to the sequential :func:`_dist2_int` fold and to
+    the SQL oracle.  argmin returns the FIRST minimum — ties to the
+    lowest centroid id.  Returns (codes, dist2), both (rows, books)."""
+    import numpy as np
+
+    d = books[0].shape[1]
+    codes = np.empty((len(Q), len(books)), dtype=np.int64)
+    dist2 = np.empty_like(codes)
+    rows = np.arange(len(Q))
+    for j, C in enumerate(books):
+        sub = Q[:, j * d : (j + 1) * d]
+        d2 = (
+            (sub * sub).sum(axis=1)[:, None]
+            + (C * C).sum(axis=1)[None, :]
+            - 2 * (sub @ C.T)
+        )
+        codes[:, j] = d2.argmin(axis=1)
+        dist2[:, j] = d2[rows, codes[:, j]]
+    return codes, dist2
+
+
 def _assign_kernel(centroids: list[list[int]], keep_cols: list[str]):
-    """Arrow-vectorized assignment kernel (mapInPandas): squared-L2 of
-    each row's quantized vector against every centroid in ONE int64
-    numpy matmul — |q|² + |c|² − 2·q·c, every term an EXACT integer
-    (≤ dim·(2·QUANT_SCALE)² ≈ 2.6e14 per product sum, far under
-    int64), so the result is bit-identical to the sequential
-    :func:`_dist2_int` fold and to the SQL oracle.  argmin returns the
-    FIRST minimum — ties to the lowest centroid id, same as the
-    reference path.
+    """Arrow-vectorized assignment kernel (mapInPandas): the
+    single-book :func:`_argmin_books`, exact int64.
 
     Why a kernel and not column expressions (§2.11 documented
     inexpressible-efficiently case): Spark's higher-order functions
@@ -116,18 +141,16 @@ def _assign_kernel(centroids: list[list[int]], keep_cols: list[str]):
     import pandas as pd
 
     C = np.array(centroids, dtype=np.int64)
-    c2 = (C * C).sum(axis=1)
 
     def fn(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             Q = np.array(pdf["qv"].tolist(), dtype=np.int64)
-            d = (Q * Q).sum(axis=1)[:, None] + c2[None, :] - 2 * (Q @ C.T)
-            cid = d.argmin(axis=1)
+            codes, dist2 = _argmin_books(Q, [C])
             out = {c: pdf[c] for c in keep_cols}
-            out["cluster_id"] = cid.astype(np.int64)
-            out["dist2"] = d[np.arange(len(d)), cid]
+            out["cluster_id"] = codes[:, 0]
+            out["dist2"] = dist2[:, 0]
             yield pd.DataFrame(out)
 
     return fn
@@ -155,9 +178,9 @@ def init_centroids(
     rows = (
         corpus.filter(F.col(id_col) < k)
         .select(F.col(id_col).alias("__i"), quantize_vec(F.col(vec_col)).alias("__q"))
-        .orderBy("__i")
         .collect()
     )
+    rows.sort(key=lambda r: r["__i"])  # k rows: a driver sort, not a range exchange
     if len(rows) != k:
         raise ValueError(
             f"init_centroids needs contiguous ids 0..{k - 1} in {id_col!r}; "
@@ -187,49 +210,66 @@ def assign_clusters(
     )
 
 
-def lloyd_step(assigned: DataFrame) -> DataFrame:
-    """One Lloyd update from an :func:`assign_clusters` frame: the
-    integer round-half-up mean of each cluster's members, element-wise.
+def lloyd_update(
+    corpus: DataFrame,
+    books: list[list[list[int]]],
+    vec_col: str = "embedding",
+) -> list[list[list[int]]]:
+    """One Lloyd update of ``g = len(books)`` codebooks at once — book
+    j covers the j-th equal slice of the quantized vector (``g = 1``
+    is plain k-means; PQ passes its m sub-space books).  Each updated
+    centroid is the integer round-half-up mean of its members,
+    element-wise: floor((2s + n) / (2n)).
 
-    Shape: posexplode fans each row to ``dim`` (cluster, pos, val)
-    rows; ONE groupBy(cluster, pos) aggregation (map-side partial sums,
-    then a k·dim-row exchange — tiny regardless of corpus size); the
-    centroid arrays reassemble from sorted (pos, elem) structs.  Empty
-    clusters simply emit no row (callers keep the old centroid).
-    """
-    per_dim = assigned.select(
-        "cluster_id", F.posexplode("qv").alias("pos", "val")
-    )
-    means = per_dim.groupBy("cluster_id", "pos").agg(
-        F.sum("val").alias("s"), F.count(F.lit(1)).alias("n")
+    Shape: ONE Arrow map assigns every row in every book
+    (:func:`_argmin_books`) and emits its batch's member sums as
+    ``(book, cluster_id, pos, s, n)`` rows; ONE groupBy(book,
+    cluster_id, pos) exchange adds them up (at most batches×k×dim rows,
+    whatever the corpus size); ONE bounded collect (≤ k×dim rows)
+    returns the means.  Clusters that lost all members keep their
+    current centroid, the standard Lloyd convention."""
+    import numpy as np
+    import pandas as pd
+
+    Bs = [np.asarray(b, dtype=np.int64) for b in books]
+    k, d = Bs[0].shape
+
+    def member_sums(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            Q = np.array(pdf["qv"].tolist(), dtype=np.int64)
+            codes, _ = _argmin_books(Q, Bs)
+            for j in range(len(Bs)):
+                onehot = (codes[:, j][:, None] == np.arange(k)).astype(np.int64)
+                s = onehot.T @ Q[:, j * d : (j + 1) * d]  # (k, d), exact int64
+                n = onehot.sum(axis=0)
+                cid = np.flatnonzero(n)
+                yield pd.DataFrame(
+                    {
+                        "book": np.full(len(cid) * d, j, dtype=np.int64),
+                        "cluster_id": np.repeat(cid, d),
+                        "pos": np.tile(np.arange(d, dtype=np.int64), len(cid)),
+                        "s": s[cid].ravel(),
+                        "n": np.repeat(n[cid], d),
+                    }
+                )
+
+    sums = (
+        corpus.select(quantize_vec(F.col(vec_col)).alias("qv"))
+        .mapInPandas(member_sums, "book long, cluster_id long, pos long, s long, n long")
+        .groupBy("book", "cluster_id", "pos")
+        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
     )
     # round-half-up(s/n) in pure integer terms: floor((2s+n)/(2n)).
     # Division is exact-enough IEEE (see module docstring bound).
     elem = F.floor(
         (F.lit(2) * F.col("s") + F.col("n")) / (F.lit(2) * F.col("n"))
     ).cast("long")
-    return (
-        means.withColumn("elem", elem)
-        .groupBy("cluster_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "elem"))),
-                lambda st: st["elem"],
-            ).alias("centroid"),
-            F.max("n").alias("n_members"),
-        )
-    )
-
-
-def collect_centroids(
-    lloyd_frame: DataFrame, fallback: list[list[int]]
-) -> list[list[int]]:
-    """k updated centroid rows -> driver literals for the next
-    assignment pass (DOCUMENTED BOUNDED COLLECT: k rows).  Clusters
-    that lost all members keep their ``fallback`` (previous) centroid,
-    the standard Lloyd convention."""
-    new = {int(r["cluster_id"]): list(r["centroid"]) for r in lloyd_frame.collect()}
-    return [new.get(cid, fallback[cid]) for cid in range(len(fallback))]
+    new = [[list(c) for c in b] for b in books]
+    for r in sums.select("book", "cluster_id", "pos", elem.alias("elem")).collect():
+        new[r["book"]][r["cluster_id"]][r["pos"]] = r["elem"]
+    return new
 
 
 def kmeans_refine(
@@ -242,14 +282,14 @@ def kmeans_refine(
     """k-means with deterministic init and ``n_iters`` Lloyd updates,
     returning the final assignment ``(id, cluster_id, dist2)``.
 
-    Each iteration is one corpus map + one k·dim aggregation; the
-    corpus is never shuffled on its own key.  ``n_iters`` is a small
-    constant (driver loop over bounded collects), not data-driven.
+    Each iteration is one :func:`lloyd_update` (one corpus map + one
+    k·dim aggregation); the corpus is never shuffled on its own key.
+    ``n_iters`` is a small constant (driver loop over bounded
+    collects), not data-driven.
     """
     cents = init_centroids(corpus, k, id_col, vec_col)
     for _ in range(n_iters):
-        assigned = assign_clusters(corpus, cents, id_col, vec_col)
-        cents = collect_centroids(lloyd_step(assigned), cents)
+        (cents,) = lloyd_update(corpus, [cents], vec_col)
     return assign_clusters(corpus, cents, id_col, vec_col).select(
         "id", "cluster_id", "dist2"
     )
@@ -364,15 +404,14 @@ def ivf_candidates_int(
     lists.  Returns (query_id, neighbor_id) — the candidate set whose
     misses the recall audit exposes row by row.
 
-    Scale shape: index build is the Lloyd pipeline (corpus maps + one
-    k·dim aggregate, corpus never shuffled on its own key); probing
-    BROADCASTS the query→list expansion onto the index (the
-    ivf_probe_index serving shape).  Ties everywhere break to the
+    Scale shape: index build is init + one :func:`lloyd_update`
+    (corpus maps + one k·dim aggregate, corpus never shuffled on its
+    own key); probing BROADCASTS the query→list expansion onto the
+    index (the ivf_probe_index serving shape).  Ties everywhere break to the
     lowest cid — array_sort on struct<dist2,cid> matches the oracle's
     ORDER BY dist2, cid."""
     cents0 = init_centroids(corpus, n_lists, id_col, vec_col)
-    assigned = assign_clusters(corpus, cents0, id_col, vec_col)
-    cents1 = collect_centroids(lloyd_step(assigned), cents0)
+    (cents1,) = lloyd_update(corpus, [cents0], vec_col)
     index = assign_clusters(corpus, cents1, id_col, vec_col).select(
         F.col("id").alias("neighbor_id"), "cluster_id"
     )

@@ -218,7 +218,7 @@ def scored_pairs(
     cost only amortizes once the candidate volume is large (see
     KERNEL_MIN_BYTES_DEFAULT).  ``spark.udep.similarity.kernel`` =
     ``arrow``/``jvm`` forces a side; ``auto`` (default) sizes from the
-    pair frame's source files.  Frames with no file listing use the
+    pair frame's source files; any other value raises ValueError.  Frames with no file listing use the
     JVM path (in-memory sources are bounded micro-batches or tests);
     set the conf explicitly when serving from non-file sources at
     scale.  Both forms drop the vector columns so post-scoring
@@ -226,6 +226,10 @@ def scored_pairs(
     from ultimate_data_engineering_project_spark import tuning
 
     mode = tuning._conf(pairs, KERNEL_CONF, "auto")
+    if mode not in ("auto", "arrow", "jvm"):
+        raise ValueError(
+            f"{KERNEL_CONF}={mode!r}: expected 'auto', 'arrow' or 'jvm'"
+        )
     if mode == "auto":
         size = tuning.estimate_input_bytes(pairs)
         try:
@@ -1256,7 +1260,8 @@ def pq_candidates_int(
       2. per sub-space codebooks: deterministic init (the sub-vectors
          of ids 0..n_codes-1) + ONE integer Lloyd refine — the
          kmeans_lloyd_refine_int recipe applied to each of the ``m``
-         d_sub-wide slices (empty codes keep their init sub-centroid);
+         d_sub-wide slices (empty codes keep their init sub-centroid),
+         all ``m`` trained together by clustering.lloyd_update;
       3. encode: each corpus vector -> m nearest-sub-centroid codes
          (exact int64 squared L2; ties to the lowest code);
       4. ADC: each query precomputes its m x n_codes integer look-up
@@ -1271,11 +1276,13 @@ def pq_candidates_int(
     invisible at any downstream re-rank budget — exactly the loss the
     m/n_codes/rerank knobs trade away.
 
-    Scale shape: training is m bounded Lloyd passes (corpus maps + one
-    n_codes*d_sub aggregate each — the corpus never shuffles on its
-    own key); encode is one Arrow-kernel map (int64 matmul per
-    sub-space, bit-identical to the sequential fold — the
-    clustering._assign_kernel argument); the ADC scan broadcasts the
+    Scale shape: training is ONE bounded pass for all m sub-spaces —
+    one init collect, then one Lloyd update (a corpus map + one
+    n_codes*dim aggregate + one bounded collect — the corpus never
+    shuffles on its own key), so its Spark jobs do not grow with m;
+    encode is one Arrow-kernel map (the same per-book int64 argmin,
+    bit-identical to the sequential fold — the
+    clustering._argmin_books argument); the ADC scan broadcasts the
     bounded query set so the corpus again never shuffles; the only
     exchange is the top-``rerank`` window on query_id.
 
@@ -1286,12 +1293,11 @@ def pq_candidates_int(
     import pandas as pd
 
     from ultimate_data_engineering_project_spark.operators.clustering import (
+        _argmin_books,
         _dist2_int,
         _lit_int_matrix,
-        assign_clusters,
-        collect_centroids,
         init_centroids,
-        lloyd_step,
+        lloyd_update,
         quantize_vec,
     )
 
@@ -1299,40 +1305,27 @@ def pq_candidates_int(
         raise ValueError(f"vector dim ({dim}) must be divisible by m ({m})")
     d_sub = dim // m
 
-    # 1+2: per-sub-space int codebooks (m is a small constant; each
-    # pass is the bounded-collect Lloyd pipeline the IVF audit uses)
-    books: list[list[list[int]]] = []
-    for j in range(m):
-        sub = corpus.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), j * d_sub + 1, d_sub).alias("__sub"),
-        )
-        c0 = init_centroids(sub, n_codes, id_col, "__sub")
-        assigned = assign_clusters(sub, c0, id_col, "__sub")
-        books.append(collect_centroids(lloyd_step(assigned), c0))
+    # 1+2: one init collect (the full vectors of ids 0..n_codes-1, cut
+    # into the m sub-space inits on the driver), then one batched
+    # Lloyd update for all m codebooks
+    init = init_centroids(corpus, n_codes, id_col, vec_col)
+    books = lloyd_update(
+        corpus,
+        [[c[j * d_sub : (j + 1) * d_sub] for c in init] for j in range(m)],
+        vec_col,
+    )
 
     # 3: Arrow-kernel encode — all m argmins in one int64 pass per
-    # batch; argmin takes the FIRST minimum (ties -> lowest code),
-    # matching the oracle's ORDER BY d2, code
+    # batch; ties -> lowest code, matching the oracle's ORDER BY d2, code
     cbs = [np.asarray(b, dtype=np.int64) for b in books]
-    c2s = [(cb * cb).sum(axis=1) for cb in cbs]
 
     def encode_batches(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(pdf["qv"].tolist(), dtype=np.int64)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j, cb in enumerate(cbs):
-                sub = X[:, j * d_sub : (j + 1) * d_sub]
-                d2 = (
-                    (sub * sub).sum(axis=1)[:, None]
-                    + c2s[j][None, :]
-                    - 2 * (sub @ cb.T)
-                )
-                codes[:, j] = d2.argmin(axis=1)
+            codes, _ = _argmin_books(np.array(pdf["qv"].tolist(), dtype=np.int64), cbs)
             yield pd.DataFrame(
-                {"neighbor_id": pdf["id"], "pq_codes": list(codes)}
+                {"neighbor_id": pdf["id"], "pq_codes": list(codes.astype(np.int32))}
             )
 
     enc = corpus.select(

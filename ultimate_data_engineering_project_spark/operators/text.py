@@ -1348,9 +1348,13 @@ def bpe_segment_words(
     # probe executed that whole subtree once at CONSTRUCTION time and
     # again in the real query.  Filters are never column-pruned, so
     # the raise fires wherever the segmentation is actually computed.
+    # ``contains`` is NULL for a NULL word, so it is let through
+    # explicitly; it segments to NULL.
     sep2 = sep + sep
     out = words.filter(
-        F.when(~F.col(word_col).contains(sep), F.lit(True)).otherwise(
+        F.when(
+            F.col(word_col).isNull() | ~F.col(word_col).contains(sep), F.lit(True)
+        ).otherwise(
             F.raise_error(
                 F.lit(
                     "bpe_segment_words separator occurs inside a word to "
