@@ -162,6 +162,20 @@ CANARY_TIMEOUT_SENTINEL_SEC = 9999.0
 PAR_DRIFT_BOUND = 2.5
 
 
+def time_query(spark, fn, sf_dir: str, n_runs: int = N_RUNS) -> list[float]:
+    """Wall seconds of ``n_runs`` build -> noop-write runs of one catalog
+    query.  Each run re-plans and re-reads the parquet, nothing is
+    cached; callers report the min (the first run pays one-time
+    JIT/codegen class loading, and single runs on a busy host carry
+    multi-second scheduler/GC noise)."""
+    samples = []
+    for _ in range(n_runs):
+        start = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        samples.append(time.perf_counter() - start)
+    return samples
+
+
 def _committed_reference() -> dict | None:
     """The committed BENCH_FULL_LATEST payload to band against.
 
@@ -381,19 +395,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     for name in HEADLINE:
         fn = qs[name]
-        # best of 3 runs: the first run pays one-time JIT/codegen class
-        # loading for the query's operators, and single runs on a busy
-        # host carry multi-second scheduler/GC noise; the min is the
-        # engine's achievable latency (plan + execute, nothing cached —
-        # each run re-plans and re-reads the parquet).
-        best = None
-        for _ in range(N_RUNS):
-            start = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - start
-            best = elapsed if best is None else min(best, elapsed)
-        timings[name] = round(best, 3)
+        timings[name] = round(min(time_query(spark, fn, sf_dir)), 3)
         n = fn(spark, sf_dir).count()  # untimed sanity row count
         print(f"# {name}: {timings[name]:.3f}s ({n} rows)", file=sys.stderr)
 
@@ -438,15 +440,7 @@ def main() -> None:
             spark2.sparkContext.setLogLevel("ERROR")
             spark2.read.parquet(f"{sf_dir}/region.parquet").count()
             for name in flagged:
-                fn = qs[name]
-                best = None
-                for _ in range(N_RUNS):
-                    start = time.perf_counter()
-                    df = fn(spark2, sf_dir)
-                    df.write.format("noop").mode("overwrite").save()
-                    elapsed = time.perf_counter() - start
-                    best = elapsed if best is None else min(best, elapsed)
-                fresh = round(best, 3)
+                fresh = round(min(time_query(spark2, qs[name], sf_dir)), 3)
                 c = ref_q[name]
                 suspect_lines[name] = {
                     "committed": c,

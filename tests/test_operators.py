@@ -997,7 +997,7 @@ def test_minhash_pairs_vs_exact(spark, near_dup_docs):
 
 
 def test_minhash_kernels_bit_identical(spark, near_dup_docs, sf_dir):
-    """The arrow and sql signature kernels share coefficients and must
+    """The arrow and jvm signature kernels share coefficients and must
     produce bit-identical signatures — and therefore identical pairs."""
     from ultimate_data_engineering_project_spark.operators.dedup import (
         _with_minhash_signature,
@@ -1007,27 +1007,32 @@ def test_minhash_kernels_bit_identical(spark, near_dup_docs, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(200)
     shh = docs.select("doc_id", shingle_hashes(F.col("text"), 3).alias("__shh"))
-    sql_sig = _with_minhash_signature(shh, "sql", 32, 42).select(
-        "doc_id", F.col("__sig").alias("sql_sig")
+    jvm_sig = _with_minhash_signature(shh, "jvm", 32, 42).select(
+        "doc_id", F.col("__sig").alias("jvm_sig")
     )
     arrow_sig = _with_minhash_signature(shh, "arrow", 32, 42).select(
         "doc_id", F.col("__sig").alias("arrow_sig")
     )
-    both = sql_sig.join(arrow_sig, "doc_id")
+    both = jvm_sig.join(arrow_sig, "doc_id")
     assert both.count() == 200
-    assert both.filter(F.col("sql_sig") != F.col("arrow_sig")).count() == 0
+    assert both.filter(F.col("jvm_sig") != F.col("arrow_sig")).count() == 0
 
-    for kernel in ("arrow", "sql"):
-        found = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.minhash_lsh_pairs(
-                near_dup_docs, "doc_id", jaccard_threshold=0.3, kernel=kernel
-            ).collect()
-        }
-        assert (1, 4) in found
-        assert (1, 3) not in found
-    with pytest.raises(ValueError, match="kernel"):
-        dedup.minhash_lsh_pairs(near_dup_docs, "doc_id", kernel="nope")
+    try:
+        for kernel in ("arrow", "jvm"):
+            spark.conf.set("spark.udep.similarity.kernel", kernel)
+            found = {
+                (r["id_a"], r["id_b"])
+                for r in dedup.minhash_lsh_pairs(
+                    near_dup_docs, "doc_id", jaccard_threshold=0.3
+                ).collect()
+            }
+            assert (1, 4) in found
+            assert (1, 3) not in found
+        spark.conf.set("spark.udep.similarity.kernel", "nope")
+        with pytest.raises(ValueError, match="kernel"):
+            dedup.minhash_lsh_pairs(near_dup_docs, "doc_id")
+    finally:
+        spark.conf.unset("spark.udep.similarity.kernel")
 
 
 def test_minhash_rejects_ragged_bands(spark, near_dup_docs):
@@ -2052,6 +2057,31 @@ def test_spread_narrow_scan_fire_and_skip(spark, tmp_path):
     # 16 files < shuffle.partitions (32) but widening would be only
     # 2x (width=min(32, 64)=32): the spread must skip
     assert n_roundrobin(_spread_narrow_scan(spark.read.parquet(many))) == 0
+
+
+def test_split_estimate_from_listing(spark, tmp_path):
+    """The metadata-only listing sums the source file sizes, and the
+    split estimate is max(files, ceil(bytes / maxPartitionBytes)) —
+    the byte branch, where a few large files out-split their count."""
+    import math
+    import os
+
+    from ultimate_data_engineering_project_spark import tuning
+
+    out = tmp_path / "multi.parquet"
+    rows = spark.range(4000).selectExpr("id", "repeat(cast(id AS string), 20) AS t")
+    rows.repartition(3).write.parquet(str(out))
+    files = [out / f for f in os.listdir(out) if f.endswith(".parquet")]
+    total = sum(os.path.getsize(f) for f in files)
+    df = spark.read.parquet(str(out))
+    assert tuning.input_files(df) == (len(files), total)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    try:
+        n_splits = tuning.estimate_splits(df)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert n_splits == max(len(files), math.ceil(total / 4096))
+    assert n_splits > len(files)  # the byte branch decided
 
 
 def test_repetition_stats_edges(spark):

@@ -454,9 +454,10 @@ def test_scored_pairs_rejects_unknown_kernel(spark, sf_dir):
 
 
 def test_minhash_kernel_auto_dispatch(spark, sf_dir):
-    """r15: minhash_lsh_pairs kernel='auto' picks the sql (JVM) fold on
-    a small file-backed corpus — no Python eval node in the plan — and
-    the arrow kernel when forced by the conf threshold."""
+    """minhash_lsh_pairs picks the JVM fold on a small file-backed
+    corpus — no Python eval node in the plan — and the arrow kernel
+    when forced by the conf threshold, unless spark.udep.similarity.kernel
+    forces the JVM side (the same dispatch as scored_pairs)."""
     from ultimate_data_engineering_project_spark.operators import dedup
 
     docs = load_table(spark, sf_dir, "documents")
@@ -466,8 +467,48 @@ def test_minhash_kernel_auto_dispatch(spark, sf_dir):
     try:
         p2 = plan(dedup.minhash_lsh_pairs(docs, "doc_id"))
         assert "MapInPandas" in p2
+        spark.conf.set("spark.udep.similarity.kernel", "jvm")
+        p3 = plan(dedup.minhash_lsh_pairs(docs, "doc_id"))
+        assert "MapInPandas" not in p3, p3[:500]
     finally:
         spark.conf.unset("spark.udep.similarity.kernelMinInputBytes")
+        spark.conf.unset("spark.udep.similarity.kernel")
+
+
+@pytest.mark.parametrize(
+    "key, bad",
+    [
+        ("spark.udep.pin.mode", "alwyas"),
+        ("spark.udep.pin.storage", "disk"),
+        ("spark.udep.pin.minInputBytes", "1GB"),
+        ("spark.udep.similarity.kernelMinInputBytes", "abc"),
+        ("spark.udep.similarity.kernel", "sql"),
+    ],
+)
+def test_dispatch_conf_typo_raises(spark, sf_dir, key, bad):
+    """A typo in any scale-dispatch conf fails loudly, naming the key,
+    at every site that reads it — never a quiet fallback to the
+    default (which would silently take the small-scale side)."""
+    from ultimate_data_engineering_project_spark import tuning
+    from ultimate_data_engineering_project_spark.operators import dedup, similarity
+
+    docs = load_table(spark, sf_dir, "documents")
+    emb = load_table(spark, sf_dir, "embeddings")
+    pairs = emb.select(F.col("embedding").alias("a"), F.col("embedding").alias("b"))
+    if key.startswith("spark.udep.pin."):
+        sites = [lambda: tuning.pin(docs), lambda: tuning.pin(docs, force=True)]
+    else:
+        sites = [
+            lambda: similarity.scored_pairs(pairs, "a", "b"),
+            lambda: dedup.minhash_lsh_pairs(docs, "doc_id"),
+        ]
+    spark.conf.set(key, bad)
+    try:
+        for site in sites:
+            with pytest.raises(ValueError, match=re.escape(key)):
+                site()
+    finally:
+        spark.conf.unset(key)
 
 
 def test_tuning_pin_modes(spark, sf_dir):

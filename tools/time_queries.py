@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Isolated per-query timer for the optimization loop (guide §1.4): times
-named HEADLINE/catalog queries with the noop sink, best-of-N in one
-session, same forcing as bench.py but without the full-sweep overhead.
+named HEADLINE/catalog queries best-of-N in one session with
+bench.py's own build -> noop-write loop (``bench.time_query``), without
+the full-sweep overhead.
 
 Usage: python tools/time_queries.py [-n RUNS] name [name ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
@@ -11,7 +12,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -25,6 +25,7 @@ def main() -> None:
     names = args
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from bench import time_query
     from ultimate_data_engineering_project_spark.session import get_spark
     from ultimate_data_engineering_project_spark.plans.catalog import queries
 
@@ -34,14 +35,8 @@ def main() -> None:
     spark.read.parquet(f"{sf_dir}/region.parquet").count()  # JVM warm-up
 
     for name in names:
-        fn = qs[name]
-        samples = []
-        for _ in range(n_runs):
-            spark.sparkContext.setJobDescription(f"time: {name}")
-            start = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - start)
+        spark.sparkContext.setJobDescription(f"time: {name}")
+        samples = time_query(spark, qs[name], sf_dir, n_runs)
         spark.sparkContext.setJobDescription(None)
         print(
             f"{name}: min={min(samples):.3f}s "

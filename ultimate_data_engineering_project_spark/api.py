@@ -13,6 +13,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ultimate_data_engineering_project_spark import tuning
 from ultimate_data_engineering_project_spark.session import configure_session
 from ultimate_data_engineering_project_spark.sources.readers import register_temp_views
 
@@ -141,18 +142,9 @@ class Engine:
         """pg_total_relation_size / get_table_size analog
         (psql_connector.py:101-110): row count plus on-disk bytes summed
         over the table's input files (0 bytes for purely in-memory
-        views)."""
-        import os
-        from urllib.parse import urlparse
-
+        views and remote files)."""
         df = self.spark.table(table)
-        n_bytes = 0
-        for f in df.inputFiles():
-            path = urlparse(f).path or f
-            try:
-                n_bytes += os.path.getsize(path)
-            except OSError:
-                pass  # remote/object-store file: size not locally stat-able
+        n_bytes = tuning.input_files(df)[1]
         return {"table": table, "n_rows": df.count(), "n_bytes": n_bytes}
 
     def database_info(self) -> dict:

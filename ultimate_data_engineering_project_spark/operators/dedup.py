@@ -145,7 +145,7 @@ def _minhash_coeffs(num_hashes: int, seed: int):
 
 def _minhash_signature_arrow(num_hashes: int, seed: int, shh_col: str = "__shh"):
     """Arrow kernel for the signature fold: the same
-    h_i(x) = (a_i*(x & p) + b_i) mod p family as the SQL kernel, but the
+    h_i(x) = (a_i*(x & p) + b_i) mod p family as the JVM fold, but the
     (shingles × num_hashes) min-reduction runs as one vectorized numpy
     batch per Arrow chunk instead of an interpreted Catalyst HOF fold.
 
@@ -205,84 +205,19 @@ def _with_minhash_signature(
     df: DataFrame, kernel: str, num_hashes: int, seed: int
 ) -> DataFrame:
     """Append ``__sig`` (array<long>) to ``df`` (which must carry
-    ``__shh``) using the chosen kernel."""
+    ``__shh``) using ``kernel``, ``arrow`` or ``jvm`` (see
+    :func:`tuning.kernel`)."""
     from pyspark.sql import types as T
 
-    if kernel == "sql":
+    if kernel == "jvm":
         return df.withColumn(
             "__sig", _minhash_signature("__shh", num_hashes, seed)
         )
-    if kernel == "arrow":
-        out_schema = T.StructType(
-            list(df.schema.fields)
-            + [T.StructField("__sig", T.ArrayType(T.LongType()), False)]
-        )
-        return df.mapInPandas(
-            _minhash_signature_arrow(num_hashes, seed), out_schema
-        )
-    raise ValueError(f"unknown MinHash kernel {kernel!r}; use 'arrow' or 'sql'")
-
-
-def _spread_width(df: DataFrame) -> int:
-    """Round-robin spread width for heavy map-side per-row work over a
-    possibly few-file input: 4x the scan's estimated SPLIT count (file
-    count, or bytes/maxPartitionBytes for large splittable files),
-    floor 8, capped by the session's shuffle.partitions.
-
-    Why not just conf width: an explicit repartition(n) is exempt from
-    AQE coalescing, so conf-width (32 here, thousands on a cluster)
-    over a small corpus pays a full task wave per stage for partitions
-    holding a handful of docs (~25% of query latency at sf0.1,
-    measured).  Why splits and not files: ONE 10 GB parquet file is ~80
-    scan splits — sizing from the file count alone would collapse the
-    heavy pipeline to 8-wide on a cluster with hundreds of cores.
-    Local file sizes come from the filesystem; for remote schemes
-    (sizes not cheaply listable driver-side) this falls back to conf
-    width, the pre-existing behavior.  inputFiles() is metadata-only —
-    probing .rdd.getNumPartitions() instead would finalize the AQE plan
-    and EXECUTE upstream exchange stages when the caller passes a
-    derived frame (join/agg output), running that pipeline twice."""
-    n_conf = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    n_splits = _estimate_splits(df)
-    if n_splits is None:
-        return n_conf
-    return min(n_conf, max(8, 4 * n_splits))
-
-
-def _estimate_splits(df: DataFrame) -> int | None:
-    """Estimated scan split count from the frame's input files (file
-    count, or bytes/maxPartitionBytes for large splittable files) —
-    metadata-only, never finalizes the AQE plan.  None when the source
-    has no file listing, a remote scheme, or the listing raced a
-    rewrite (callers fall back to conf width / no spread)."""
-    import os
-    import re
-    from urllib.parse import urlsplit
-
-    spark = df.sparkSession
-    try:
-        files = df.inputFiles()
-    except Exception:  # pragma: no cover - sources without file listing
-        return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        u = urlsplit(f)
-        if u.scheme.lower() not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(u.path or f)
-        except OSError:  # pragma: no cover - listing raced a rewrite
-            return None
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    m = re.fullmatch(r"(\d+)\s*([kmgt]?)b?", raw.strip().lower())
-    if m:
-        mult = {"": 1, "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
-        max_split = int(m.group(1)) * mult[m.group(2)]
-    else:  # pragma: no cover - unexpected conf format
-        max_split = 128 * 1024 * 1024
-    return max(len(files), -(-total // max_split))
+    out_schema = T.StructType(
+        list(df.schema.fields)
+        + [T.StructField("__sig", T.ArrayType(T.LongType()), False)]
+    )
+    return df.mapInPandas(_minhash_signature_arrow(num_hashes, seed), out_schema)
 
 
 def minhash_lsh_pairs(
@@ -295,28 +230,20 @@ def minhash_lsh_pairs(
     bands: int = 8,
     seed: int = 42,
     jaccard_threshold: float = 0.5,
-    kernel: str = "auto",
     max_band_size: int | None = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via MinHash + LSH banding (X2),
     verified with exact shingle-set Jaccard.
 
-    ``kernel`` picks the signature implementation: ``'arrow'``
-    computes the (shingles × num_hashes) min-fold in one vectorized
-    numpy batch per Arrow chunk; ``'sql'`` is the pure-Catalyst HOF
-    fold.  Both use the same universal-hash coefficients and produce
-    bit-identical signatures (asserted in tests), so the choice is
-    pure performance — ``'auto'`` (default, r15) sizes the input like
-    similarity.scored_pairs: the sql kernel below
-    spark.udep.similarity.kernelMinInputBytes (no Python workers, no
-    Arrow transpose — the fixed fan-out cost dominates small corpora,
-    and a duplicated JVM branch is cheap), the arrow kernel above it
-    (the fold is the only per-row superlinear term — Catalyst
-    interprets HOF lambdas per element while numpy runs one
-    (shingles × hashes) batch per Arrow chunk; its payoff grows with
-    document length × num_hashes).  The sql kernel also keeps
-    everything JVM-side with zero Python workers — pick it explicitly
-    when Python worker memory is the scarce resource.
+    The signature fold runs on the kernel :func:`tuning.kernel` picks,
+    the same dispatch as ``similarity.scored_pairs``: ``arrow`` computes
+    the (shingles × num_hashes) min-fold as one numpy batch per Arrow
+    chunk, ``jvm`` is the Catalyst higher-order-function fold.  Both use
+    the same universal-hash coefficients and produce bit-identical
+    signatures (asserted in tests).  The fold is the only per-row
+    superlinear term, so the Arrow kernel's payoff grows with document
+    length × num_hashes; below the threshold its fixed Python-worker
+    cost dominates.
 
     Plan shape: per-doc signature (map-only) -> explode to `bands` rows
     -> self equi-join on (band_id, band_hash) -> distinct pairs ->
@@ -339,23 +266,11 @@ def minhash_lsh_pairs(
     # cheaper than string arrays (shingle strings are never built).
     # round-robin spread BEFORE the heavy per-row work: a corpus landing
     # as few large files (or one) would otherwise run the whole
-    # shingle+signature pipeline on as few cores (width rationale in
-    # _spread_width).
-    n_spread = _spread_width(df)
-    if kernel == "auto":
-        from ultimate_data_engineering_project_spark.operators import similarity
-
-        size = tuning.estimate_input_bytes(df)
-        thresh = similarity.KERNEL_MIN_BYTES_DEFAULT
-        try:
-            thresh = int(
-                tuning._conf(
-                    df, similarity.KERNEL_MIN_BYTES_CONF, str(thresh)
-                )
-            )
-        except ValueError:
-            pass
-        kernel = "arrow" if size is not None and size >= thresh else "sql"
+    # shingle+signature pipeline on as few cores.  One listing sizes
+    # both the spread and the kernel.
+    files = tuning.input_files(df)
+    n_spread = tuning.spread_width(df, files)
+    kernel = tuning.kernel(df, files)
     # NOT checkpointed (r14, A/B-measured): materializing the heavy
     # per-doc shingle-hash arrays costs more than re-deriving them for
     # the verify sides — the expensive thing to pin is the SIGNATURE
@@ -479,11 +394,11 @@ def _md5_shingle_sets(
     set-arithmetic verify step.  Round-robin spread BEFORE the heavy
     md5 work: a corpus landing as one file would otherwise run
     num_hashes x |shingles| md5 calls per doc on one core (the same
-    guard as the xxhash path's _spread_width)."""
+    guard as the xxhash path's tuning.spread_width)."""
     toks = F.split(F.col("__text"), " ")
     return (
         df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
-        .repartition(_spread_width(df))
+        .repartition(tuning.spread_width(df))
         .filter(F.size(toks) >= shingle_n)
         .select("__id", shingles(F.col("__text"), shingle_n).alias("__shs"))
     )
@@ -805,7 +720,7 @@ def ngram_jaccard_pairs(
     not n^2.  At 100 TB you'd pre-filter hot shingles (stop-shingles) —
     exposed via `max_doc_freq`.
     """
-    n_spread = _spread_width(df)
+    n_spread = tuning.spread_width(df)
     base = (
         df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
         .repartition(n_spread)
@@ -861,8 +776,8 @@ def simhash(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """
     # round-robin spread first: the bit-vote fold is heavy per-row map
     # work, and a single-file corpus would run it all on one core (the
-    # minhash `_spread_width` discipline)
-    df = df.repartition(_spread_width(df))
+    # minhash `tuning.spread_width` discipline)
+    df = df.repartition(tuning.spread_width(df))
     # SQL-expression form: the Python API's shiftright/shiftleft only
     # accept literal ints for the shift amount, the SQL functions accept
     # any expression.  Vote layout: per-BIT scalar aggregates over the
@@ -913,7 +828,7 @@ def simhash_md5(
     n_hex = n_bits // 4
     # round-robin spread first (see `simhash`): heavy per-row fold must
     # not run on a single-file scan's one partition
-    df = df.repartition(_spread_width(df))
+    df = df.repartition(tuning.spread_width(df))
     # per-bit scalar aggregates over the once-bound token-hash array
     # (see `simhash` — 2x faster than the per-token array fold,
     # bit-identical)
@@ -1328,9 +1243,9 @@ def ngram_contamination(
         return (
             # round-robin spread BEFORE the per-row shingle pipeline —
             # a single-file corpus would otherwise hash every shingle
-            # on one core (the same trap _spread_width closes for the
+            # on one core (the trap tuning.spread_width closes for the
             # minhash/jaccard paths)
-            df.repartition(_spread_width(df))
+            df.repartition(tuning.spread_width(df))
             .filter(toks_ok)
             .select(
                 F.col(id_col).alias(out_id),

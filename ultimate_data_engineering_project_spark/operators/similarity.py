@@ -14,23 +14,22 @@ All arithmetic in double precision with sequential array folds so
 results are bit-stable and match the DuckDB oracle
 (list_cosine_similarity over DOUBLE[]).
 
-r14/r15 (optimization): every candidate-pair SCORING pass goes through
-`scored_pairs`, which dispatches by input scale between the JVM
-higher-order-function fold and the batch-native Arrow kernel
-`scored_pairs_arrow` (guide §4.2) — ~100x less per-pair CPU at
-identical results (BIT-identical kernel, pinned raw-value-for-raw-
+Every candidate-pair SCORING pass goes through `scored_pairs`, which
+picks by input scale (tuning.py) between the JVM higher-order-function
+fold and the batch-native Arrow kernel `scored_pairs_arrow`: ~100x
+less per-pair CPU at bit-identical results (pinned raw-value-for-raw-
 value by tests/test_operators.py; rounding stays in the JVM), but a
 fixed Python-worker fan-out cost that only amortizes over large
-candidate volumes (r14 drove every small-scale ANN line 10-40% slower
-by forcing the kernel unconditionally).  The expression form
-`cosine()` remains the semantics reference and the oracle-equivalence
-twin.
+candidate volumes.  The expression form `cosine()` remains the
+semantics reference and the oracle-equivalence twin.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql import types as T
+
+from ultimate_data_engineering_project_spark import tuning
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -185,23 +184,6 @@ def scored_pairs_arrow(
     return scored.withColumn(out_col, F.round(F.col(raw), round_digits)).drop(raw)
 
 
-#: conf keys for the kernel dispatch (see tuning.py module docstring)
-KERNEL_CONF = "spark.udep.similarity.kernel"  # auto | arrow | jvm
-KERNEL_MIN_BYTES_CONF = "spark.udep.similarity.kernelMinInputBytes"
-
-#: Auto-dispatch threshold: use the Arrow kernel when the pair frame's
-#: SOURCE input exceeds this.  The kernel's per-pair cost is ~100x
-#: below the interpreted HOF fold's, but it pays a fixed Python-worker
-#: fan-out + Arrow transpose per stage — fresh-process A/B at sf0.1
-#: (~7 MB of vectors, 400k candidate pairs): kernel 8.5s vs expression
-#: <1s for brute-force cosine, and the driver's r14 cold sweep showed
-#: the same sign on all five ANN lines.  At 256 MiB of vector input
-#: (~10-100M candidate pairs after blocking) the fold's per-pair CPU
-#: is minutes and dwarfs any worker spin-up; below it the JVM path
-#: wins or ties.
-KERNEL_MIN_BYTES_DEFAULT = 256 << 20
-
-
 def scored_pairs(
     pairs: DataFrame,
     a_col: str,
@@ -210,38 +192,14 @@ def scored_pairs(
     round_digits: int = 6,
     out_col: str = "cosine_sim",
 ) -> DataFrame:
-    """Exact cosine over a candidate-pair frame, dispatching between
-    the JVM expression fold (:func:`cosine`) and the batch-native
-    Arrow kernel (:func:`scored_pairs_arrow`) by input scale — the two
-    are BIT-IDENTICAL (pinned by tests/test_operators.py), so the
-    choice is pure performance: the kernel's fixed Python-boundary
-    cost only amortizes once the candidate volume is large (see
-    KERNEL_MIN_BYTES_DEFAULT).  ``spark.udep.similarity.kernel`` =
-    ``arrow``/``jvm`` forces a side; ``auto`` (default) sizes from the
-    pair frame's source files; any other value raises ValueError.  Frames with no file listing use the
-    JVM path (in-memory sources are bounded micro-batches or tests);
-    set the conf explicitly when serving from non-file sources at
-    scale.  Both forms drop the vector columns so post-scoring
-    exchanges stay narrow."""
-    from ultimate_data_engineering_project_spark import tuning
-
-    mode = tuning._conf(pairs, KERNEL_CONF, "auto")
-    if mode not in ("auto", "arrow", "jvm"):
-        raise ValueError(
-            f"{KERNEL_CONF}={mode!r}: expected 'auto', 'arrow' or 'jvm'"
-        )
-    if mode == "auto":
-        size = tuning.estimate_input_bytes(pairs)
-        try:
-            thresh = int(
-                tuning._conf(
-                    pairs, KERNEL_MIN_BYTES_CONF, str(KERNEL_MIN_BYTES_DEFAULT)
-                )
-            )
-        except ValueError:
-            thresh = KERNEL_MIN_BYTES_DEFAULT
-        mode = "arrow" if size is not None and size >= thresh else "jvm"
-    if mode == "arrow":
+    """Exact cosine over a candidate-pair frame on the kernel
+    :func:`tuning.kernel` picks: the JVM expression fold
+    (:func:`cosine`) or the batch-native Arrow kernel
+    (:func:`scored_pairs_arrow`).  The two are BIT-IDENTICAL (pinned by
+    tests/test_operators.py), so the choice is pure performance.  Both
+    forms drop the vector columns so post-scoring exchanges stay
+    narrow."""
+    if tuning.kernel(pairs) == "arrow":
         return scored_pairs_arrow(
             pairs, a_col, b_col, round_digits=round_digits, out_col=out_col
         )
@@ -991,8 +949,6 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    *,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Encode every vector as ``m`` small codes (nearest sub-centroid
     per sub-space) — the compressed representation PQ serves from.
@@ -1003,64 +959,35 @@ def pq_encode(
     before parquet even compresses), and every downstream scan prunes
     to it.
 
-    ``kernel``: ``'arrow'`` (default) runs the (rows × n_codes × d_sub)
-    distance argmin as one numpy batch per Arrow chunk — the m × n_codes
-    interpreted-HOF distance evaluations per row otherwise dominate
-    encode time (measured ~4x at sf0.1).  ``'sql'`` is the
-    pure-expression twin (zero Python workers).  Both take the FIRST
-    minimal code on ties; kernel equality on the fixture corpus is
-    pinned in tests (exact-ULP distance ties could in principle differ
-    between the sequential fold and numpy's reduction order — the
-    re-rank stage makes top-k robust to that regardless)."""
+    One ``mapInPandas`` kernel runs the (rows × n_codes × d_sub)
+    distance argmin as one numpy batch per Arrow chunk; an interpreted
+    expression fold would evaluate m × n_codes distances per row
+    (measured ~4x slower at sf0.1).  Ties take the FIRST minimal code;
+    the re-rank stage makes top-k robust to exact-ULP distance ties."""
+    import numpy as np
+    import pandas as pd
+
     m = len(codebooks)
     d_sub = len(codebooks[0][0])
-    if kernel == "arrow":
-        import numpy as np
-        import pandas as pd
+    cbs = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    id_type = corpus.schema[id_col].dataType.simpleString()
 
-        cbs = [np.asarray(b, dtype=np.float64) for b in codebooks]
-        id_type = corpus.schema[id_col].dataType.simpleString()
+    def encode_batches(batches):
+        for pdf in batches:
+            if len(pdf):
+                X = np.array([np.asarray(v, dtype=np.float64) for v in pdf["__v"]])
+                codes = np.empty((len(pdf), m), dtype=np.int32)
+                for j, cb in enumerate(cbs):
+                    sub = X[:, j * d_sub : (j + 1) * d_sub]
+                    d2 = ((sub[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
+                    codes[:, j] = d2.argmin(axis=1)
+                yield pd.DataFrame({id_col: pdf[id_col], "pq_codes": list(codes)})
+            else:
+                yield pd.DataFrame({id_col: pdf[id_col], "pq_codes": []})
 
-        def encode_batches(batches):
-            for pdf in batches:
-                if len(pdf):
-                    X = np.array(
-                        [np.asarray(v, dtype=np.float64) for v in pdf["__v"]]
-                    )
-                    codes = np.empty((len(pdf), m), dtype=np.int32)
-                    for j, cb in enumerate(cbs):
-                        sub = X[:, j * d_sub : (j + 1) * d_sub]
-                        d2 = ((sub[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
-                        codes[:, j] = d2.argmin(axis=1)
-                    yield pd.DataFrame(
-                        {id_col: pdf[id_col], "pq_codes": list(codes)}
-                    )
-                else:
-                    yield pd.DataFrame({id_col: pdf[id_col], "pq_codes": []})
-
-        return corpus.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
-        ).mapInPandas(encode_batches, f"{id_col} {id_type}, pq_codes array<int>")
-    if kernel != "sql":
-        raise ValueError(f"unknown PQ encode kernel {kernel!r}; use 'arrow' or 'sql'")
-    vec = F.col(vec_col)
-    codes = F.array(
-        *[
-            F.array_sort(
-                F.transform(
-                    _lit_matrix(codebooks[j]),
-                    lambda c, i: F.struct(
-                        _centroid_dist2(F.slice(vec, j * d_sub + 1, d_sub), c).alias(
-                            "dist2"
-                        ),
-                        i.alias("code"),
-                    ),
-                )
-            )[0]["code"]
-            for j in range(m)
-        ]
-    )
-    return corpus.select(F.col(id_col), codes.alias("pq_codes"))
+    return corpus.select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+    ).mapInPandas(encode_batches, f"{id_col} {id_type}, pq_codes array<int>")
 
 
 def pq_topk(

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ultimate_data_engineering_project_spark import tuning
+
 # Tiny function-word lists per language for the n-gram/marker heuristic
 # language ID.  Deliberately small and public-knowledge (closed-class
 # words); the fixture corpus is a synthetic word soup, so `lang_id`
@@ -120,15 +122,11 @@ def _spread_narrow_scan(df: DataFrame) -> DataFrame:
     100 TB input is thousands of splits and this is a no-op — no
     exchange (unlike dedup's unconditional spread, whose per-row
     minhash kernel dominates any exchange cost)."""
-    from ultimate_data_engineering_project_spark.operators.dedup import (
-        _estimate_splits,
-    )
-
-    n_splits = _estimate_splits(df)  # one listing: width shares it
+    files = tuning.input_files(df)  # one listing: width shares it
+    n_splits = tuning.estimate_splits(df, files)
     if n_splits is None:
         return df
-    n_conf = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    width = min(n_conf, max(8, 4 * n_splits))  # _spread_width's formula
+    width = tuning.spread_width(df, files)
     return df.repartition(width) if width >= 4 * n_splits else df
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ultimate_data_engineering_project_spark import tuning
 from ultimate_data_engineering_project_spark.functions.scalar import dsum, dsum_sql
 from ultimate_data_engineering_project_spark.operators.timeseries import (
     adaptive_width_sql,
@@ -1180,10 +1181,6 @@ def avro_embedding_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     string and null-union paths on real data."""
     from ultimate_data_engineering_project_spark.sources import avro_py
 
-    from ultimate_data_engineering_project_spark.operators.dedup import (
-        _spread_width,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     rows = emb.select(
         "vec_id",
@@ -1191,16 +1188,13 @@ def avro_embedding_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.col("vec_id").cast("string")).alias("vec_uuid"),
         "embedding",
     )
-    # r15 (guide §4): the embeddings table reads as a single scan
-    # split at bench scale, so the whole encode->strip->decode chain —
-    # two chained per-row Python codec stages — ran as ONE serial
-    # task regardless of core count (the r14 driver measured it
-    # FASTER on 8 cores than 32: pure JVM-background overhead around
-    # an unparallelized Python stage).  Spread the rows round-robin to
-    # the scan-derived width (the dedup heavy-map rule: 4x splits,
-    # floor 8, capped by shuffle.partitions) so the codec runs wide;
-    # the shuffle moves only the narrow pre-encode rows once.
-    rows = rows.repartition(_spread_width(emb))
+    # the embeddings table reads as a single scan split at bench
+    # scale, so the whole encode->strip->decode chain — two chained
+    # per-row Python codec stages — would run as ONE serial task at
+    # any core count.  Spread the rows round-robin to the scan-derived
+    # width (tuning.spread_width) so the codec runs wide; the shuffle
+    # moves only the narrow pre-encode rows once.
+    rows = rows.repartition(tuning.spread_width(emb))
     frames = avro_py.encode_confluent_frames(rows, _AVRO_EMB_SCHEMA, 5)
     decoded = avro_py.decode_confluent_avro_py(frames, _AVRO_EMB_SCHEMA)
     checksum = F.aggregate(

@@ -1,39 +1,52 @@
-"""Scale-adaptive execution knobs shared by operators and plans.
+"""Scale decisions: every choice the engine makes from input size.
 
-Two decisions in this engine are SCALE-DEPENDENT — the right choice at
-sf0.1 on one machine is the wrong one over a 100 TB corpus — and both
-were hard-coded to the large-scale answer in r14, which the driver's
-cold-sweep measurements punished (34/44 queries regressed; VERDICT.md
-r14 "What's wrong" #1/#5):
+The right plan for a test-sized fixture on one machine is the wrong one
+over a 100 TB corpus, so these choices are made per call from the
+frame's source files, sized metadata-only (:func:`input_files`: the
+file listing plus a local stat; it never runs a job and never
+finalizes the AQE plan).  This list is the only place they are made:
 
-* **Materializing a frame consumed by several plan branches** ("pin").
-  Catalyst performs no cross-branch subtree reuse, so a frame feeding
-  both sides of a self-join is recomputed per side.  Recomputing twice
-  costs two passes over the input; pinning costs one pass PLUS a full
-  materialization (a blocking job, executor storage, lost pipeline
-  parallelism, and for eager pins a job at DataFrame-CONSTRUCTION
-  time).  On a small input the double computation overlaps on idle
-  cores and wins; over a 100 TB input the extra full pass dwarfs the
-  materialization.  :func:`pin` makes the choice from the estimated
-  input size, parameterized by conf.
+* **Pin** — :func:`pin`, at every multi-branch frame site.
+  ``spark.udep.pin.mode``: ``auto`` (default) | ``always`` | ``never``.
+  ``spark.udep.pin.minInputBytes``: integer, default 1 GiB.
+  ``spark.udep.pin.storage``: ``auto`` (default) | ``localCheckpoint``
+  | ``diskPersist``.
+  Catalyst reuses no subtree across branches, so a frame feeding both
+  sides of a self-join is computed once per side.  Below the threshold
+  the duplicated branch overlaps on idle cores and is cheaper than a
+  blocking materialization job; above it the second pass over the
+  input costs more than one materialization.  1 GiB per scan is where
+  a duplicated pass stops hiding behind idle cores at any practical
+  executor sizing (measured pin cost at sf0.1: 0.3-5 s per query).
 
-* **Scoring candidate pairs in a vectorized Python kernel vs a JVM
-  expression** (operators/similarity.scored_pairs): the Arrow kernel
-  is ~100x cheaper per pair but pays Python-worker fan-out + Arrow
-  (de)serialization per stage — a fixed multi-second cost on a fresh
-  session that dominates small candidate sets (fresh-process A/B at
-  sf0.1: kernel 8.5s vs expression <1s for brute-force cosine).  The
-  dispatch there uses :func:`estimate_input_bytes` with its own
-  threshold conf.
+* **Similarity kernel** — :func:`kernel`, in
+  ``similarity.scored_pairs`` (cosine scoring) and
+  ``dedup.minhash_lsh_pairs`` (MinHash signature fold).
+  ``spark.udep.similarity.kernel``: ``auto`` (default) | ``arrow`` |
+  ``jvm``.
+  ``spark.udep.similarity.kernelMinInputBytes``: integer, default
+  256 MiB.
+  Each site has a bit-identical Arrow kernel and JVM
+  higher-order-function fold.  The Arrow kernel is far cheaper per row
+  but pays a fixed Python-worker start and Arrow transfer per stage,
+  which dominates small inputs (brute-force cosine at sf0.1, ~7 MB of
+  vectors: kernel 8.5 s, JVM fold under 1 s).  At 256 MiB of vector
+  input, ~10-100M candidate pairs after blocking, the fold's per-pair
+  CPU is minutes and dwarfs the worker start.  The JVM fold also keeps
+  every byte off the Python workers.
 
-Both estimators are metadata-only (`inputFiles()` + local stat): they
-never trigger jobs and never finalize the AQE plan.
+* **Scan spread width** — :func:`spread_width`, before heavy per-row
+  map work (dedup shingling and signatures, the text folds, the Avro
+  codec).  No conf: ``min(spark.sql.shuffle.partitions, max(8, 4 *
+  splits))``, where splits is :func:`estimate_splits`.  A corpus that
+  lands as a few files would otherwise run the whole per-row pipeline
+  on a few cores, and an explicit ``repartition(n)`` is exempt from
+  AQE coalescing, so the full conf width would pay a task wave per
+  near-empty partition on a small input.
 
-Fault tolerance at scale (r14 ADVICE item): `localCheckpoint` stores
-non-replicated executor-local blocks and TRUNCATES lineage — one lost
-executor kills the query.  When :func:`pin` decides to materialize on
-a non-local master it therefore uses `persist(DISK_ONLY)` (lineage
-kept, recompute on loss) unless the conf forces the checkpoint form.
+In ``auto`` mode a frame with no local listing (in-memory sources, a
+remote scheme) takes the small side.  A mode outside its list or a
+threshold that is not an integer raises ``ValueError`` naming the key.
 """
 
 from __future__ import annotations
@@ -43,111 +56,161 @@ from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame
 
-#: conf keys (documented in OPTIMIZATION_r15.md)
-PIN_MODE_CONF = "spark.udep.pin.mode"  # auto | always | never
+PIN_MODE_CONF = "spark.udep.pin.mode"
 PIN_MIN_BYTES_CONF = "spark.udep.pin.minInputBytes"
-PIN_STORAGE_CONF = "spark.udep.pin.storage"  # auto | localCheckpoint | diskPersist
-
-#: Pin when the pinned frame's SOURCE input exceeds this (auto mode).
-#: Rationale: the loss from NOT pinning is bounded by one extra pass
-#: over the input (the duplicated branch), which overlaps on idle
-#: cores below full cluster utilization; the loss from pinning is a
-#: blocking materialization job + storage churn, measured at 0.3-5s
-#: per query at sf0.1 (driver r14: minhash_recall_audit +5.6s,
-#: simhash +0.7s).  1 GiB per scan is the point where a duplicated
-#: pass stops hiding behind idle cores on any practical executor
-#: sizing and the one-materialization shape must win.
+PIN_STORAGE_CONF = "spark.udep.pin.storage"
 PIN_MIN_BYTES_DEFAULT = 1 << 30
 
+KERNEL_CONF = "spark.udep.similarity.kernel"
+KERNEL_MIN_BYTES_CONF = "spark.udep.similarity.kernelMinInputBytes"
+KERNEL_MIN_BYTES_DEFAULT = 256 << 20
 
-def estimate_input_bytes(df: DataFrame) -> int | None:
-    """Total size of the frame's source files, metadata-only.
 
-    None when the frame has no file listing (in-memory/RDD-backed
-    sources, e.g. an already-checkpointed batch), a remote scheme
-    (sizes not cheaply listable driver-side), or the listing raced a
-    rewrite — callers fall back to their documented default.  Never
-    runs a job and never finalizes the AQE plan (probing
-    ``.rdd.getNumPartitions()`` instead would execute upstream
-    exchange stages)."""
+def input_files(df: DataFrame) -> tuple[int, int]:
+    """``(file count, total bytes)`` of the frame's source files.
+
+    ``(0, 0)`` when there is no local listing: in-memory or RDD-backed
+    sources (an already-checkpointed batch), a remote scheme whose
+    sizes are not cheaply listable from the driver, or a listing that
+    raced a rewrite.  Metadata-only: probing
+    ``.rdd.getNumPartitions()`` instead would finalize the AQE plan and
+    execute upstream exchange stages of a derived frame."""
     try:
         files = df.inputFiles()
     except Exception:  # pragma: no cover - sources without file listing
-        return None
-    if not files:
-        return None
+        return 0, 0
     total = 0
     for f in files:
         u = urlsplit(f)
         if u.scheme.lower() not in ("", "file"):
-            return None
+            return 0, 0
         try:
             total += os.path.getsize(u.path or f)
         except OSError:  # pragma: no cover - listing raced a rewrite
-            return None
-    return total
+            return 0, 0
+    return len(files), total
 
 
-def _conf(df: DataFrame, key: str, default: str) -> str:
+def estimate_splits(
+    df: DataFrame, files: tuple[int, int] | None = None
+) -> int | None:
+    """Scan split count: the file count, or bytes over
+    ``spark.sql.files.maxPartitionBytes`` for large splittable files.
+    None without a local listing.  ``files`` is a listing the caller
+    already holds."""
+    n_files, n_bytes = files or input_files(df)
+    if not n_files:
+        return None
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return max(n_files, -(-n_bytes // conf.filesMaxPartitionBytes()))
+
+
+def spread_width(df: DataFrame, files: tuple[int, int] | None = None) -> int:
+    """Round-robin width before heavy per-row work: 4x the scan's
+    split count, at least 8, at most ``spark.sql.shuffle.partitions``
+    (the conf width when the splits are unknown).  Splits, not files:
+    one 10 GB parquet file is ~80 splits."""
+    n_conf = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n_splits = estimate_splits(df, files)
+    return n_conf if n_splits is None else min(n_conf, max(8, 4 * n_splits))
+
+
+def _conf_choice(df: DataFrame, key: str, allowed: tuple[str, ...]) -> str:
+    """The session value of ``key`` (default ``allowed[0]``), which must
+    be one of ``allowed``."""
+    value = df.sparkSession.conf.get(key, allowed[0])
+    if value not in allowed:
+        raise ValueError(
+            f"{key}={value!r}: expected one of {', '.join(map(repr, allowed))}"
+        )
+    return value
+
+
+def _conf_int(df: DataFrame, key: str, default: int) -> int:
+    """The session value of ``key`` as an integer."""
+    raw = df.sparkSession.conf.get(key, str(default))
     try:
-        return str(df.sparkSession.conf.get(key, default))
-    except Exception:  # pragma: no cover - conf service unavailable
-        return default
+        return int(raw)
+    except ValueError:
+        raise ValueError(f"{key}={raw!r}: expected an integer") from None
+
+
+def choose(
+    df: DataFrame,
+    mode_conf: str,
+    min_bytes_conf: str,
+    min_bytes_default: int,
+    *,
+    small: str,
+    large: str,
+    force: bool = False,
+    files: tuple[int, int] | None = None,
+) -> str:
+    """Resolve one scale decision to ``small`` or ``large``.
+
+    ``mode_conf`` is ``auto``, ``small`` or ``large``; the last two
+    force a side.  ``auto`` takes ``large`` when the source files total
+    at least ``min_bytes_conf`` bytes, and lists them only then.
+    ``force=True`` resolves ``auto`` to ``large`` without listing; a
+    forced ``small`` mode still wins.  ``files`` is a listing the
+    caller already holds."""
+    mode = _conf_choice(df, mode_conf, ("auto", small, large))
+    threshold = _conf_int(df, min_bytes_conf, min_bytes_default)
+    if mode != "auto":
+        return mode
+    if force:
+        return large
+    n_files, n_bytes = files or input_files(df)
+    return large if n_files and n_bytes >= threshold else small
+
+
+def kernel(df: DataFrame, files: tuple[int, int] | None = None) -> str:
+    """``arrow`` or ``jvm`` for the similarity kernels."""
+    return choose(
+        df,
+        KERNEL_CONF,
+        KERNEL_MIN_BYTES_CONF,
+        KERNEL_MIN_BYTES_DEFAULT,
+        small="jvm",
+        large="arrow",
+        files=files,
+    )
 
 
 def pin(df: DataFrame, *, eager: bool = False, force: bool = False) -> DataFrame:
-    """Materialize ``df`` once for multi-branch consumption — IF the
-    input is big enough that recomputing the subtree per branch costs
-    more than materializing it (see module docstring).
+    """Materialize ``df`` once for multi-branch consumption when the
+    input is big enough (see the module docstring).
 
-    Modes (``spark.udep.pin.mode``):
-      * ``auto`` (default): pin iff the frame's source files total >=
-        ``spark.udep.pin.minInputBytes`` (default 1 GiB).  Frames with
-        no file listing (in-memory sources) are NOT pinned — such
-        frames are either already materialized (checkpointed batches)
-        or test-sized; a cluster feeding this engine from non-file
-        sources should set the mode explicitly.
-      * ``always`` / ``never``: force the choice (A/B and cluster
-        overrides).
+    ``force=True`` skips the size gate, for frames measured worth
+    materializing at every scale (the recall audit's shared shingle
+    frames); ``spark.udep.pin.mode=never`` still wins.  Frames with no
+    file listing are not pinned in ``auto`` mode: they are already
+    materialized or test-sized, and a cluster feeding non-file sources
+    sets the mode explicitly.
 
-    Storage (``spark.udep.pin.storage``):
-      * ``auto`` (default): ``localCheckpoint`` on a local[...] master
-        (single machine — executor loss means the app is gone anyway);
-        ``persist(DISK_ONLY)`` otherwise, keeping lineage so a lost
-        executor recomputes instead of failing the query (ADVICE r14).
-      * ``localCheckpoint`` / ``diskPersist``: force the form.
-
-    ``eager`` controls localCheckpoint eagerness only; the default
-    False avoids blocking jobs at DataFrame-construction time (the
-    r14 cold-sweep cost: every ``explain``/plan build ran the jobs).
-
-    ``force=True`` skips the size gate — for frames A/B-measured worth
-    materializing even on small inputs (e.g. the recall audit's shared
-    shingle frames: every no-pin variant was 1.5-3x slower AND
-    unstable at sf0.1); only the storage mechanism stays
-    scale/cluster-dependent.  ``spark.udep.pin.mode=never`` still
-    wins, as the global escape hatch.
-    """
-    mode = _conf(df, PIN_MODE_CONF, "auto")
-    if mode == "never":
+    Storage ``auto`` uses ``localCheckpoint`` on a local master, where
+    executor loss ends the app anyway, and ``persist(DISK_ONLY)``
+    elsewhere, which keeps lineage so a lost executor recomputes
+    instead of failing the query.  ``eager`` applies to
+    ``localCheckpoint`` only; lazy (the default) runs no job while the
+    DataFrame is being built."""
+    storage = _conf_choice(
+        df, PIN_STORAGE_CONF, ("auto", "localCheckpoint", "diskPersist")
+    )
+    taken = choose(
+        df,
+        PIN_MODE_CONF,
+        PIN_MIN_BYTES_CONF,
+        PIN_MIN_BYTES_DEFAULT,
+        small="never",
+        large="always",
+        force=force,
+    )
+    if taken == "never":
         return df
-    if mode != "always" and not force:
-        size = estimate_input_bytes(df)
-        try:
-            thresh = int(_conf(df, PIN_MIN_BYTES_CONF, str(PIN_MIN_BYTES_DEFAULT)))
-        except ValueError:
-            thresh = PIN_MIN_BYTES_DEFAULT
-        if size is None or size < thresh:
-            return df
-
-    storage = _conf(df, PIN_STORAGE_CONF, "auto")
     if storage == "auto":
-        master = ""
-        try:
-            master = df.sparkSession.sparkContext.master or ""
-        except Exception:  # pragma: no cover
-            pass
-        storage = "localCheckpoint" if master.startswith("local") else "diskPersist"
+        local = df.sparkSession.sparkContext.master.startswith("local")
+        storage = "localCheckpoint" if local else "diskPersist"
     if storage == "diskPersist":
         from pyspark import StorageLevel
 
