@@ -569,7 +569,7 @@ def test_dispatcher_stats_from_manifest(spark, tmp_path):
     )
     base.write.parquet(table)
     sinks.compact_parquet(
-        spark, table, via_manifest=True, stats_keys=["k"],
+        spark, table, stats_keys=["k"],
         keep_generations=1,
     )
     st = windows.stats_from_manifest(spark, table, ["k"])
@@ -612,7 +612,7 @@ def test_dispatcher_stats_from_manifest(spark, tmp_path):
     )
     hot.write.mode("append").parquet(manifest.join(table, ptr["data"]))
     sinks.compact_parquet(
-        spark, table, via_manifest=True, stats_keys=["k"],
+        spark, table, stats_keys=["k"],
         keep_generations=1,
     )
     st2 = windows.stats_from_manifest(spark, table, ["k"])
@@ -673,7 +673,7 @@ def test_manifest_stats_staleness_guard(spark, tmp_path):
     )
     base.write.parquet(table)
     sinks.compact_parquet(
-        spark, table, via_manifest=True, stats_keys=["k"],
+        spark, table, stats_keys=["k"],
         keep_generations=1,
     )
     # snapshot histogram: uniform -> plain
@@ -737,7 +737,7 @@ def test_manifest_stats_staleness_guard(spark, tmp_path):
     table2 = str(tmp_path / "steady")
     base.write.parquet(table2)
     sinks.compact_parquet(
-        spark, table2, via_manifest=True, stats_keys=["k"],
+        spark, table2, stats_keys=["k"],
         keep_generations=1,
     )
     ptr2 = manifest.read_pointer(spark, table2)
@@ -794,7 +794,7 @@ def test_staleness_guard_exception_triage(spark, tmp_path, monkeypatch):
             (F.col("id") % 10).alias("k"), F.col("id").alias("v")
         ).write.parquet(table)
         sinks.compact_parquet(
-            spark, table, via_manifest=True, stats_keys=["k"]
+            spark, table, stats_keys=["k"]
         )
 
     # REAL race shape: the guard's first pointer read saw generation A,

@@ -1701,25 +1701,18 @@ def test_incremental_rollup_stream_matches_batch(spark, sf_dir, tmp_path):
 
     n_parts = compact_rollup(spark, rollup_dir, keep_last=1)
     assert n_parts == 2
+    # the folded batches live on only inside the gen-000001 base; the
+    # replayable tail partition stays at the root
     assert sorted(
         os.path.basename(p) for p in _glob.glob(rollup_dir + "/batch=*")
-    ) == ["batch=1", "batch=2"]
+    ) == ["batch=2"]
+    assert sorted(
+        os.path.basename(p) for p in _glob.glob(rollup_dir + "/gen-*")
+    ) == ["gen-000001"]
     assert rows(read_rollup(spark, rollup_dir)) == want
     # idempotent when nothing left to fold
     assert compact_rollup(spark, rollup_dir, keep_last=1) == 2
-
-    # crash restore: a crash between the two swap renames leaves the
-    # complete pre-compaction table in .compact.old and no live dir —
-    # the next run must restore it before doing anything
-    import shutil as _shutil
-
-    _shutil.move(rollup_dir, rollup_dir + ".compact.old")
-    assert compact_rollup(spark, rollup_dir, keep_last=1) == 2
     assert rows(read_rollup(spark, rollup_dir)) == want
-
-    # object-store paths refuse loudly (rename is copy+delete there)
-    with pytest.raises(ValueError, match="local paths only"):
-        compact_rollup(spark, "s3a://bucket/rollup")
 
     # keep_last=0 would fold the replayable tail batch into the base —
     # a crash-replayed stream rewriting that id would overwrite the
@@ -1732,9 +1725,10 @@ def test_incremental_hist_rollup_stream_and_compaction(spark, sf_dir, tmp_path):
     """The PERCENTILE continuous aggregate rides the same machinery as
     the rollup (r9): run_incremental_rollup_stream(partials_fn=hist)
     lands histogram partials per micro-batch, read_rollup(merge_fn=
-    quantiles) serves p50/p95 equal to the direct aggregate, and BOTH
-    compaction protocols (rename swap and manifest pointer) fold the
-    count-per-bin state without changing the served view."""
+    quantiles) serves p50/p95 equal to the direct aggregate, and two
+    successive compactions (the first folding into an empty base, the
+    second into the existing one) fold the count-per-bin state without
+    changing the served view."""
     import functools
     import glob as _glob
 
@@ -1775,12 +1769,12 @@ def test_incremental_hist_rollup_stream_and_compaction(spark, sf_dir, tmp_path):
     assert len(want) > 0
     assert len(_glob.glob(rollup_dir + "/batch=*")) == 3
 
-    # rename-swap compaction folds bins exactly (count addition)
+    # the first compaction folds bins exactly (count addition)
     assert compact_rollup(spark, rollup_dir, keep_last=1) == 2
     assert rows(read_rollup(spark, rollup_dir, merge_fn=serve)) == want
 
-    # manifest-pointer compaction: land one more batch so the fold has
-    # >= 2 live partitions, then fold into gen-000001 and serve —
+    # land one more batch so batch 2 leaves the replayable tail, then
+    # fold it into the gen-000001 base as gen-000002 and serve —
     # expected view = all events + the re-landed slice's extra counts
     s0 = events.where(
         F.pmod(F.coalesce(F.col("event_id"), F.lit(0)), F.lit(3)) == 0
@@ -1793,10 +1787,10 @@ def test_incremental_hist_rollup_stream_and_compaction(spark, sf_dir, tmp_path):
             )
         )
     )
-    assert compact_rollup(spark, rollup_dir, via_manifest=True) == 2
+    assert compact_rollup(spark, rollup_dir) == 2
     import json as _json
 
-    assert _json.load(open(rollup_dir + "/_current"))["base"] == "gen-000001"
+    assert _json.load(open(rollup_dir + "/_current"))["base"] == "gen-000002"
     assert rows(read_rollup(spark, rollup_dir, merge_fn=serve)) == want2
 
 
@@ -1840,9 +1834,9 @@ def test_hist_rollup_time_travel(spark, sf_dir, tmp_path):
 
     # gen1 folds batches 0-1 (keep_last=1); then batch 3 arrives and
     # gen2 folds through batch 2
-    compact_rollup(spark, rollup_dir, via_manifest=True, keep_generations=2)
+    compact_rollup(spark, rollup_dir, keep_generations=2)
     aggregates.hist_partials(slices[3]).write.parquet(rollup_dir + "/batch=3")
-    compact_rollup(spark, rollup_dir, via_manifest=True, keep_generations=2)
+    compact_rollup(spark, rollup_dir, keep_generations=2)
 
     assert rows(read_rollup(spark, rollup_dir, merge_fn=serve,
                             at_generation=1)) == direct(2)
@@ -1888,18 +1882,15 @@ def test_compact_rollup_generation_ageing_time_travel(spark, sf_dir, tmp_path):
             df = df.unionByName(s)
         return rows(aggregates.merge_rollup(aggregates.rollup_partials(df)))
 
-    with pytest.raises(ValueError, match="via_manifest"):
-        compact_rollup(spark, rollup_dir, keep_generations=1)
-
     for i in range(4):
         aggregates.rollup_partials(slices[i]).write.parquet(
             rollup_dir + f"/batch={i}"
         )
     # gen1 folds batches 0-2
-    compact_rollup(spark, rollup_dir, via_manifest=True, keep_generations=2)
+    compact_rollup(spark, rollup_dir, keep_generations=2)
     aggregates.rollup_partials(slices[4]).write.parquet(rollup_dir + "/batch=4")
     # gen2 folds through batch 3; gen1 retained by ageing
-    compact_rollup(spark, rollup_dir, via_manifest=True, keep_generations=2)
+    compact_rollup(spark, rollup_dir, keep_generations=2)
     assert _json.load(open(rollup_dir + "/_current"))["base"] == "gen-000002"
     assert _os.path.exists(rollup_dir + "/gen-000001")
 
@@ -1911,7 +1902,7 @@ def test_compact_rollup_generation_ageing_time_travel(spark, sf_dir, tmp_path):
 
     # gen3: with keep_generations=1, gen1 ages out, gen2 survives
     aggregates.rollup_partials(slices[5]).write.parquet(rollup_dir + "/batch=5")
-    compact_rollup(spark, rollup_dir, via_manifest=True, keep_generations=1)
+    compact_rollup(spark, rollup_dir, keep_generations=1)
     gens = sorted(
         _os.path.basename(p) for p in _glob.glob(rollup_dir + "/gen-*")
     )
@@ -1955,11 +1946,11 @@ def test_compact_rollup_ageing_rampup_and_orphan(spark, sf_dir, tmp_path):
         )
     # three folds at keep_generations=3: 2 superseded < 3 kept — the
     # ramp-up window must retain every generation
-    compact_rollup(spark, rollup_dir, via_manifest=True, keep_generations=3)
+    compact_rollup(spark, rollup_dir, keep_generations=3)
     aggregates.rollup_partials(slices[4]).write.parquet(rollup_dir + "/batch=4")
-    compact_rollup(spark, rollup_dir, via_manifest=True, keep_generations=3)
+    compact_rollup(spark, rollup_dir, keep_generations=3)
     aggregates.rollup_partials(slices[5]).write.parquet(rollup_dir + "/batch=5")
-    compact_rollup(spark, rollup_dir, via_manifest=True, keep_generations=3)
+    compact_rollup(spark, rollup_dir, keep_generations=3)
     assert sorted(
         _os.path.basename(p) for p in _glob.glob(rollup_dir + "/gen-*")
     ) == ["gen-000001", "gen-000002", "gen-000003"]
@@ -2005,7 +1996,7 @@ def test_compact_rollup_race_retry(spark, sf_dir, tmp_path):
         aggregates.rollup_partials(slices[i]).write.parquet(
             rollup_dir + f"/batch={i}"
         )
-    compact_rollup(spark, rollup_dir, via_manifest=True,
+    compact_rollup(spark, rollup_dir,
                    keep_generations=1)  # gen-1, folded through 2
     aggregates.rollup_partials(slices[4]).write.parquet(rollup_dir + "/batch=4")
     want = sorted(map(tuple, read_rollup(spark, rollup_dir).collect()))
@@ -2026,7 +2017,7 @@ def test_compact_rollup_race_retry(spark, sf_dir, tmp_path):
     manifest.write_pointer = hooked
     try:
         with pytest.raises(manifest.ManifestRaceError, match="race"):
-            compact_rollup(spark, rollup_dir, via_manifest=True,
+            compact_rollup(spark, rollup_dir,
                            keep_generations=1)
         # retry path: batch 5 arrives; A folds batch 4 into gen-4 and
         # loses to a winner flipping gen-5; the retry re-runs from the
@@ -2047,7 +2038,7 @@ def test_compact_rollup_race_retry(spark, sf_dir, tmp_path):
 
         state["armed"] = True
         manifest.write_pointer = hooked2
-        compact_rollup(spark, rollup_dir, via_manifest=True,
+        compact_rollup(spark, rollup_dir,
                        keep_generations=1, race_retries=1)
     finally:
         manifest.write_pointer = real_write
@@ -2098,7 +2089,7 @@ def test_compact_rollup_via_manifest(spark, sf_dir, tmp_path):
         return rows(aggregates.merge_rollup(aggregates.rollup_partials(df)))
 
     # fold batches 0-2 into gen-000001; batch=3 is the replayable tail
-    assert compact_rollup(spark, rollup_dir, via_manifest=True) == 2
+    assert compact_rollup(spark, rollup_dir) == 2
     ptr = _json.load(open(rollup_dir + "/_current"))
     assert ptr == {"base": "gen-000001", "folded_through": 2, "generation": 1}
     assert sorted(
@@ -2112,18 +2103,18 @@ def test_compact_rollup_via_manifest(spark, sf_dir, tmp_path):
 
     # second fold: base + batches 3-? merge into gen-000002, old gen
     # deleted; nothing-to-fold rerun is a no-op with the same count
-    assert compact_rollup(spark, rollup_dir, via_manifest=True) == 2
+    assert compact_rollup(spark, rollup_dir) == 2
     assert _json.load(open(rollup_dir + "/_current"))["base"] == "gen-000002"
     assert not _os.path.exists(rollup_dir + "/gen-000001")
     assert rows(read_rollup(spark, rollup_dir)) == arrived(5)
-    assert compact_rollup(spark, rollup_dir, via_manifest=True) == 2
+    assert compact_rollup(spark, rollup_dir) == 2
 
     # crash AFTER flip, before cleanup: a stale superseded batch dir
     # reappears — readers ignore it (pointer-driven), next run deletes
     aggregates.rollup_partials(slices[0]).write.parquet(rollup_dir + "/batch=0")
     assert rows(read_rollup(spark, rollup_dir)) == arrived(5)
     aggregates.rollup_partials(slices[5]).write.parquet(rollup_dir + "/batch=5")
-    assert compact_rollup(spark, rollup_dir, via_manifest=True) == 2
+    assert compact_rollup(spark, rollup_dir) == 2
     assert not _os.path.exists(rollup_dir + "/batch=0")
     assert rows(read_rollup(spark, rollup_dir)) == arrived(6)
 
@@ -2137,7 +2128,7 @@ def test_compact_rollup_via_manifest(spark, sf_dir, tmp_path):
     )  # garbage the crashed run left
     assert rows(read_rollup(spark, rollup_dir)) == arrived(6)
     aggregates.rollup_partials(slices[0]).write.parquet(rollup_dir + "/batch=6")
-    assert compact_rollup(spark, rollup_dir, via_manifest=True) == 2
+    assert compact_rollup(spark, rollup_dir) == 2
     got = _json.load(open(rollup_dir + "/_current"))
     assert got["base"] == orphan and got["generation"] == cur["generation"] + 1
     want7 = rows(

@@ -163,12 +163,14 @@ def test_hll_rollup_merges_instead_of_rescanning(spark, sf_dir):
 
 def test_compact_parquet_small_files(spark, tmp_path):
     """compact_parquet must collapse a many-small-files directory to
-    ~ceil(bytes/target) files, preserve every row, and leave no temp
-    dirs behind; with sort_within_by the compacted files are internally
-    sorted (row-group stats become selective)."""
+    ~ceil(bytes/target) files under the first generation prefix,
+    preserve every row, and leave no flat files behind; with
+    sort_within_by the compacted files are internally sorted (row-group
+    stats become selective)."""
     import glob
 
     from pyspark.sql import functions as F
+    from ultimate_data_engineering_project_spark.sources.readers import read_current
     from ultimate_data_engineering_project_spark.sources.sinks import compact_parquet
 
     path = str(tmp_path / "bronze")
@@ -184,63 +186,13 @@ def test_compact_parquet_small_files(spark, tmp_path):
     n_files = compact_parquet(
         spark, path, target_file_bytes=1 << 30, sort_within_by=["id"]
     )
-    after = glob.glob(f"{path}/*.parquet")
+    after = glob.glob(f"{path}/gen-000001/*.parquet")
     assert n_files == len(after) == 1  # all input bytes fit one target file
-    assert spark.read.parquet(path).count() == total_before
-    assert not glob.glob(f"{path}.compact.*")
+    assert not glob.glob(f"{path}/*.parquet")
+    assert read_current(spark, path).count() == total_before
     # rows inside the compacted file are id-sorted
     ids = [r["id"] for r in spark.read.parquet(after[0]).collect()]
     assert ids == sorted(ids)
-
-
-def test_compact_parquet_recovers_interrupted_swap(spark, tmp_path):
-    """The two-rename swap is not atomic; a crash between the renames
-    leaves the live path missing and the data in ``.compact.old``.  The
-    next call must RESTORE that state before compacting (r8), and a
-    stale ``.compact.old`` left after a completed swap must not break
-    the subsequent swap's rename."""
-    import glob
-    import os
-    import shutil
-
-    from ultimate_data_engineering_project_spark.sources.sinks import compact_parquet
-
-    path = str(tmp_path / "bronze")
-    spark.range(100).repartition(5).write.mode("overwrite").parquet(path)
-    n = spark.read.parquet(path).count()
-    # simulate the crash window: first rename done, second never ran
-    shutil.move(path, path + ".compact.old")
-    assert not os.path.exists(path)
-    compact_parquet(spark, path, target_file_bytes=1 << 30)
-    assert spark.read.parquet(path).count() == n
-    assert not glob.glob(f"{path}.compact.*")
-    # stale .old relic from a crash after a completed swap
-    spark.range(7).write.mode("overwrite").parquet(path + ".compact.old")
-    compact_parquet(spark, path, target_file_bytes=1 << 30)
-    assert spark.read.parquet(path).count() == n
-    assert not glob.glob(f"{path}.compact.*")
-
-
-def test_compact_parquet_partitioned(spark, tmp_path):
-    """Hive-partitioned compaction: one file per partition directory
-    afterward, partition values intact."""
-    import glob
-
-    from pyspark.sql import functions as F
-    from ultimate_data_engineering_project_spark.sources.sinks import compact_parquet
-
-    path = str(tmp_path / "part")
-    df = spark.range(900).select(
-        F.col("id"), (F.col("id") % 3).cast("string").alias("day")
-    )
-    df.repartition(10).write.mode("overwrite").partitionBy("day").parquet(path)
-    assert len(glob.glob(f"{path}/day=*/*.parquet")) > 3
-
-    compact_parquet(spark, path, target_file_bytes=1 << 30, partition_by=["day"])
-    for d in range(3):
-        files = glob.glob(f"{path}/day={d}/*.parquet")
-        assert len(files) == 1, files
-    assert spark.read.parquet(path).count() == 900
 
 
 def test_compact_parquet_via_manifest(spark, tmp_path):
@@ -248,8 +200,7 @@ def test_compact_parquet_via_manifest(spark, tmp_path):
     (r8 judge ask #4): first call ADOPTS a legacy flat table into
     gen-000001 + pointer, later calls advance the generation, readers
     follow the pointer (read_current), superseded prefixes are deleted,
-    and both crash windows self-heal.  Remote-scheme rejection applies
-    only to the rename-swap path."""
+    and both crash windows self-heal."""
     import glob
     import json
     import os
@@ -267,7 +218,7 @@ def test_compact_parquet_via_manifest(spark, tmp_path):
 
     # adoption: flat root -> gen-000001, flat files deleted
     n = compact_parquet(
-        spark, path, target_file_bytes=1 << 30, via_manifest=True,
+        spark, path, target_file_bytes=1 << 30,
         sort_within_by=["id"],
     )
     assert n == 1
@@ -282,7 +233,7 @@ def test_compact_parquet_via_manifest(spark, tmp_path):
 
     # second compaction advances the generation and deletes gen-000001
     assert compact_parquet(
-        spark, path, target_file_bytes=1 << 30, via_manifest=True
+        spark, path, target_file_bytes=1 << 30
     ) == 1
     assert json.load(open(path + "/_current"))["data"] == "gen-000002"
     assert not os.path.exists(path + "/gen-000001")
@@ -293,7 +244,7 @@ def test_compact_parquet_via_manifest(spark, tmp_path):
     spark.range(3).write.parquet(path + "/gen-000003")
     assert sorted(r["id"] for r in read_current(spark, path).collect()) == want
     assert compact_parquet(
-        spark, path, target_file_bytes=1 << 30, via_manifest=True
+        spark, path, target_file_bytes=1 << 30
     ) == 1
     got = json.load(open(path + "/_current"))
     assert got == {"data": "gen-000003", "generation": 3}
@@ -306,7 +257,7 @@ def test_compact_parquet_via_manifest(spark, tmp_path):
         F.col("id"), (F.col("id") % 3).cast("string").alias("day")
     ).repartition(10).write.partitionBy("day").parquet(p2)
     n = compact_parquet(
-        spark, p2, target_file_bytes=1 << 30, via_manifest=True,
+        spark, p2, target_file_bytes=1 << 30,
         partition_by=["day"],
     )
     assert n == 3  # one file per day directory
@@ -340,20 +291,16 @@ def test_manifest_generation_ageing_and_time_travel(spark, tmp_path):
     path = str(tmp_path / "aged")
     spark.range(300).select(F.col("id")).repartition(30).write.parquet(path)
 
-    # keep_generations without the manifest layout is a loud error
-    with pytest.raises(ValueError, match="via_manifest"):
-        compact_parquet(spark, path, keep_generations=1)
-
     # adoption -> gen1 (30 small files compacted to 1)
     compact_parquet(
-        spark, path, target_file_bytes=1 << 30, via_manifest=True,
+        spark, path, target_file_bytes=1 << 30,
         keep_generations=2,
     )
     # gen2, gen3 with ageing: both predecessors retained (N=2)
     compact_parquet(spark, path, target_file_bytes=1 << 30,
-                    via_manifest=True, keep_generations=2)
+                    keep_generations=2)
     compact_parquet(spark, path, target_file_bytes=1 << 30,
-                    via_manifest=True, keep_generations=2)
+                    keep_generations=2)
     assert json.load(open(path + "/_current"))["generation"] == 3
     assert sorted(
         os.path.basename(p) for p in glob.glob(path + "/gen-*")
@@ -372,7 +319,7 @@ def test_manifest_generation_ageing_and_time_travel(spark, tmp_path):
 
     # 4th compaction: gen1 ages out (keep 2 newest superseded = 2,3)
     compact_parquet(spark, path, target_file_bytes=1 << 30,
-                    via_manifest=True, keep_generations=2)
+                    keep_generations=2)
     assert not os.path.exists(path + "/gen-000001")
     with pytest.raises(ValueError, match="gen-000002"):
         read_at_generation(spark, path, 1)
@@ -382,13 +329,13 @@ def test_manifest_generation_ageing_and_time_travel(spark, tmp_path):
     # run's policy reconciles to exactly the keep window
     spark.range(7).write.parquet(path + "/gen-000001")
     compact_parquet(spark, path, target_file_bytes=1 << 30,
-                    via_manifest=True, keep_generations=1)
+                    keep_generations=1)
     gens = sorted(os.path.basename(p) for p in glob.glob(path + "/gen-*"))
     assert gens == ["gen-000004", "gen-000005"]  # current + 1 retained
     assert read_current(spark, path).count() == 300
 
     # keep_generations=0 (default) still deletes everything superseded
-    compact_parquet(spark, path, target_file_bytes=1 << 30, via_manifest=True)
+    compact_parquet(spark, path, target_file_bytes=1 << 30)
     gens = sorted(os.path.basename(p) for p in glob.glob(path + "/gen-*"))
     assert gens == ["gen-000006"]
 
@@ -421,7 +368,7 @@ def test_manifest_ageing_rampup_and_orphan_time_travel(spark, tmp_path):
     # so the ramp-up window must retain EVERYTHING
     for _ in range(3):
         compact_parquet(spark, path, target_file_bytes=1 << 30,
-                        via_manifest=True, keep_generations=3)
+                        keep_generations=3)
     assert sorted(
         os.path.basename(p) for p in glob.glob(path + "/gen-*")
     ) == ["gen-000001", "gen-000002", "gen-000003"]
@@ -458,7 +405,7 @@ def test_manifest_race_retry_two_writers(spark, tmp_path):
     path = str(tmp_path / "race")
     spark.range(200).select(F.col("id")).repartition(8).write.parquet(path)
     compact_parquet(spark, path, target_file_bytes=1 << 30,
-                    via_manifest=True, keep_generations=1)  # gen-1
+                    keep_generations=1)  # gen-1
 
     # interleave: writer A flips to gen-2; BEFORE A's post-flip verify
     # runs, winner B performs a FULL compaction (reads A's gen-2 data,
@@ -472,7 +419,7 @@ def test_manifest_race_retry_two_writers(spark, tmp_path):
         if state["armed"] and meta.get("generation") == 2:
             state["armed"] = False  # B's own flips pass through
             compact_parquet(spark_, table_dir, target_file_bytes=1 << 30,
-                            via_manifest=True, keep_generations=1)
+                            keep_generations=1)
             state["b_done"] = True
 
     manifest.write_pointer = hooked
@@ -480,7 +427,7 @@ def test_manifest_race_retry_two_writers(spark, tmp_path):
         # race_retries=0: the loud single-compactor abort is unchanged
         with pytest.raises(manifest.ManifestRaceError, match="race"):
             compact_parquet(spark, path, target_file_bytes=1 << 30,
-                            via_manifest=True, keep_generations=1)
+                            keep_generations=1)
         assert state["b_done"]
         assert json.load(open(path + "/_current"))["generation"] == 3
 
@@ -493,12 +440,12 @@ def test_manifest_race_retry_two_writers(spark, tmp_path):
             if state["armed"] and meta.get("generation") == 4:
                 state["armed"] = False
                 compact_parquet(spark_, table_dir, target_file_bytes=1 << 30,
-                                via_manifest=True, keep_generations=1)
+                                keep_generations=1)
                 state["b_done"] = True
 
         manifest.write_pointer = hooked2
         compact_parquet(spark, path, target_file_bytes=1 << 30,
-                        via_manifest=True, keep_generations=1,
+                        keep_generations=1,
                         race_retries=1)
     finally:
         manifest.write_pointer = real_write
@@ -534,7 +481,7 @@ def test_snapshot_tables_consistent_across_flip(spark, tmp_path):
     spark.range(7).write.parquet(flat_dir)
     for d in (a_dir, b_dir):
         compact_parquet(spark, d, target_file_bytes=1 << 30,
-                        via_manifest=True, keep_generations=1)
+                        keep_generations=1)
 
     frames, gens = snapshot_tables(
         spark, {"a": a_dir, "b": b_dir, "flat": flat_dir}
@@ -544,7 +491,7 @@ def test_snapshot_tables_consistent_across_flip(spark, tmp_path):
     # concurrent writer: table a recompacts between the snapshot and
     # the read — pointer flips to gen-2 and the ageing cleanup runs
     compact_parquet(spark, a_dir, target_file_bytes=1 << 30,
-                    via_manifest=True, keep_generations=1)
+                    keep_generations=1)
 
     # the pinned frame still reads generation 1's prefix, untorn
     src = {r[0] for r in frames["a"].select(F.input_file_name()).collect()}
@@ -581,7 +528,7 @@ def test_manifest_adoption_crash_and_writer_race_guard(spark, tmp_path):
     spark.range(5000, 5003).write.parquet(path + "/gen-000001")
 
     n = compact_parquet(
-        spark, path, target_file_bytes=1 << 30, via_manifest=True
+        spark, path, target_file_bytes=1 << 30
     )
     assert n == 1
     ptr = json.load(open(path + "/_current"))
@@ -597,7 +544,7 @@ def test_manifest_adoption_crash_and_writer_race_guard(spark, tmp_path):
     ).write.partitionBy("day").parquet(p2)
     spark.range(3).write.parquet(p2 + "/gen-000001")
     compact_parquet(
-        spark, p2, target_file_bytes=1 << 30, via_manifest=True,
+        spark, p2, target_file_bytes=1 << 30,
         partition_by=["day"],
     )
     out = read_current(spark, p2)

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """SCALING.md sweep: run the 12 representative catalog entries at
 sf0.001 / sf0.01 / sf0.1 (driver testdata) and sf1 (self-generated 10x
-decade — tools/gen_sf1.py), best of N_RUNS full executions each, and
-print the markdown table + a JSON line.
+decade — tools/gen_sf1.py), best of N_RUNS build -> noop-write runs
+each (``bench.time_query``), and print the markdown table + a JSON
+line.
 
 The join/window-heavy entries also run at the HOT-KEY sf1skew variant
 (tools/gen_sf1.py --skew: one user holding 10% of events, one customer
@@ -130,6 +131,7 @@ SKEW_ENTRIES = [
 
 
 def main(sf1_dir: str, skew_dir: str | None = None) -> None:
+    from bench import time_query
     from ultimate_data_engineering_project_spark.plans.catalog import queries
     from ultimate_data_engineering_project_spark.session import get_spark
 
@@ -149,17 +151,10 @@ def main(sf1_dir: str, skew_dir: str | None = None) -> None:
     for label, d in dirs:
         names = SKEW_ENTRIES if label == "sf1skew" else ENTRIES
         for name in names:
-            best = None
-            for _ in range(N_RUNS):
-                t0 = time.time()
-                # noop sink, not count(): count() lets Catalyst prune
-                # every unreferenced expression from projection-only
-                # plans (see bench.py) — the sweep must time real work
-                qs[name](spark, d).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
+            # time_query forces through the noop sink, not count():
+            # count() lets Catalyst prune every unreferenced expression
+            # from projection-only plans (see bench.py)
+            best = min(time_query(spark, qs[name], d, N_RUNS))
             n = qs[name](spark, d).count()  # untimed row count
             results.setdefault(name, {})[label] = round(best, 3)
             rows_at.setdefault(name, {})[label] = n
@@ -249,14 +244,12 @@ def main(sf1_dir: str, skew_dir: str | None = None) -> None:
         vocab = vocab.localCheckpoint(eager=True)  # exclude training
         grp = f"bpe_encode_d{depth}"
         sc.setJobGroup(grp, "scaling sweep BPE encode wave")
-        best = None
-        for _ in range(N_RUNS):
-            t0 = time.time()
-            bpe_encode_docs(docs_sf1, depth, vocab=vocab).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
+        best = min(time_query(
+            spark,
+            lambda s, _: bpe_encode_docs(docs_sf1, depth, vocab=vocab),
+            sf1_dir,
+            N_RUNS,
+        ))
         jobs = len(sc.statusTracker().getJobIdsForGroup(grp)) // N_RUNS
         n = bpe_encode_docs(docs_sf1, depth, vocab=vocab).count()
         enc_rows.append({"depth": depth, "sec": round(best, 2),
@@ -292,14 +285,7 @@ def main(sf1_dir: str, skew_dir: str | None = None) -> None:
             "events_value_anomalies_chunked",
             "events_value_anomalies_auto",
         ):
-            best = None
-            for _ in range(N_RUNS):
-                t0 = time.time()
-                qs[name](spark, sf10_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
+            best = min(time_query(spark, qs[name], sf10_dir, N_RUNS))
             n = qs[name](spark, sf10_dir).count()
             decade = best / results[name]["sf1"]
             sf10_rows.append(
@@ -345,14 +331,14 @@ def main(sf1_dir: str, skew_dir: str | None = None) -> None:
                 "overwrite"
             ).parquet(idx_dir)
             index = spark.read.parquet(idx_dir)
-            best = None
-            for _ in range(N_RUNS):
-                t0 = time.time()
-                dedup.minhash_match_index_md5(
+            best = min(time_query(
+                spark,
+                lambda s, _: dedup.minhash_match_index_md5(
                     new, index, old, "doc_id", jaccard_threshold=0.5
-                ).write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
+                ),
+                d,
+                N_RUNS,
+            ))
             probe_secs[label] = round(best, 3)
             print(f"probe-only {label}: {best:.3f}s", file=sys.stderr)
         sf10_rows.append(
@@ -408,15 +394,15 @@ def main(sf1_dir: str, skew_dir: str | None = None) -> None:
         for label, d in probe_dirs:
             docs = load_table(spark, d, "documents")
             n_docs = docs.count()
-            best = None
-            for _ in range(N_RUNS):
-                t0 = time.time()
-                _text.bpe_encode_docs(
+            best = min(time_query(
+                spark,
+                lambda s, _: _text.bpe_encode_docs(
                     docs, 0, vocab=oov_vocab, merges=oov_merges,
                     oov="subword",
-                ).write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
+                ),
+                d,
+                N_RUNS,
+            ))
             # segmentation step ALONE: the distinct corpus words not
             # in the frozen vocab, through the full rule chain
             vmap_words = oov_vocab.select(
@@ -429,14 +415,14 @@ def main(sf1_dir: str, skew_dir: str | None = None) -> None:
                 .join(vmap_words, "word", "left_anti")
             )
             n_oov = oovw.count()
-            best_seg = None
-            for _ in range(N_RUNS):
-                t0 = time.time()
-                _text.bpe_segment_words(
+            best_seg = min(time_query(
+                spark,
+                lambda s, _: _text.bpe_segment_words(
                     oovw, oov_merges, word_col="word"
-                ).write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                best_seg = dt if best_seg is None else min(best_seg, dt)
+                ),
+                d,
+                N_RUNS,
+            ))
             oov_rows.append({
                 "scale": label, "docs": n_docs,
                 "encode_sec": round(best, 3),

@@ -679,10 +679,9 @@ def stats_from_manifest(
 ) -> dict | None:
     """Key histogram from the table's MANIFEST POINTER — the
     production stats path key_rows_stats' docstring promises (r12,
-    judge ask #6): ``sinks.compact_parquet(via_manifest=True,
-    stats_keys=...)``
-    computes the three-number histogram while it is already rewriting
-    every row and stores it in the pointer JSON, so a steady-state
+    judge ask #6): ``sinks.compact_parquet(stats_keys=...)`` computes
+    the three-number histogram while it is already rewriting every row
+    and stores it in the pointer JSON, so a steady-state
     pipeline's dispatch reads ONE tiny object and issues ZERO probe
     jobs (statusTracker-pinned in tests).  Returns None when the table
     has no pointer or the pointer's stats were computed on different

@@ -337,9 +337,7 @@ def sessionize_events_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the key histogram while it is already rewriting every row
     tbl = os.path.join(staging_dir("auto_stats", sf_dir), "events")
     events.write.mode("overwrite").parquet(tbl)
-    sinks.compact_parquet(
-        spark, tbl, via_manifest=True, stats_keys=["user_id"]
-    )
+    sinks.compact_parquet(spark, tbl, stats_keys=["user_id"])
     decision: dict = {}
     sess = windows.sessionize_auto(
         read_current(spark, tbl), "user_id", "ts", 30 * 60,

@@ -1,13 +1,11 @@
-"""Manifest-pointer table layout: compaction for OBJECT STORES.
+"""Manifest-pointer table layout: the one compaction protocol.
 
-The direct compaction paths (`sinks.compact_parquet`,
-`streaming.pipelines.compact_rollup` with ``via_manifest=False``) swap
-the rewritten table in with two directory renames — correct on a local
-filesystem, but on s3a://-style object stores rename is copy+delete:
-non-atomic, O(data), and a crash mid-swap strands the table.  Both
-functions therefore refuse remote schemes and tell the user to "write
-a new prefix and flip the reader location".  This module makes that
-instruction REAL:
+``sinks.compact_parquet`` and ``streaming.pipelines.compact_rollup``
+never rename data files.  A compaction writes its output into a NEW
+immutable prefix and then flips one small pointer object, so the same
+protocol is safe on a local filesystem, HDFS and s3a://-style object
+stores (where rename is a non-atomic O(data) copy+delete).  Readers
+follow the pointer (``readers.read_current`` / ``read_rollup``):
 
 ``table_dir/``
   ``_current``       one small JSON object — THE pointer (see below)
@@ -49,9 +47,10 @@ compare-and-swap), so two concurrent compactions would both derive the
 same next generation, overwrite each other's data files mid-write, and
 the winner's cleanup could delete state the loser believes committed.
 Run one compactor per table (the same discipline every
-pointer-flipping maintenance job has); the compactors re-read the
-pointer AFTER their flip and fail loudly on a lost race
-(best-effort detection, not prevention).
+pointer-flipping maintenance job has).  ``commit`` re-reads the pointer
+AFTER its flip and raises :class:`ManifestRaceError` on a lost race
+before any cleanup (best-effort detection, not prevention);
+``retry_races`` re-runs a losing compaction from the winner's pointer.
 
 Remote paths go through Spark's Hadoop FileSystem (the s3a connector
 the cluster already has); local paths use plain Python I/O so the
@@ -223,11 +222,10 @@ def verify_pointer_generation(spark, table_dir: str, generation: int) -> None:
     contract: re-read the pointer and fail loudly if another writer
     flipped it past ``generation`` (see the module docstring — PUT is
     atomic but not compare-and-swap, so this detects a lost race
-    after the fact rather than preventing it).  Called by the
-    compactors between their flip and their cleanup, so a losing
-    compactor never deletes the winner's state; with
-    ``race_retries>0`` the compactors catch the
-    :class:`ManifestRaceError` and re-run from the fresh pointer."""
+    after the fact rather than preventing it).  ``commit`` calls it
+    between its flip and its cleanup, so a losing compactor never
+    deletes the winner's state; ``retry_races`` catches the
+    :class:`ManifestRaceError` and re-runs from the fresh pointer."""
     ptr = read_pointer(spark, table_dir)
     got = ptr.get("generation") if ptr else None
     if got != generation:
@@ -239,6 +237,50 @@ def verify_pointer_generation(spark, table_dir: str, generation: int) -> None:
             "winner's state is not deleted",
             seen=got,
         )
+
+
+def generation_name(generation: int) -> str:
+    return f"gen-{generation:06d}"
+
+
+def commit(
+    spark, table_dir: str, meta: dict, *, keep_generations: int = 0
+) -> None:
+    """The commit step of a compaction whose output already sits in
+    ``generation_name(meta["generation"])``: flip the pointer to
+    ``meta``, verify the flip was not lost to another compactor, then
+    age out superseded ``gen-`` prefixes.
+
+    Cleanup is DELETEs only and runs only after the lost-race check, so
+    a losing compactor never deletes the winner's state.  With
+    ``keep_generations=N`` the N newest superseded prefixes survive
+    (in-flight readers and ``read_at_generation`` time travel);
+    otherwise every superseded prefix goes.  A crash anywhere in here
+    leaves prefixes the pointer does not name: readers ignore them and
+    the next commit deletes them."""
+    generation = meta["generation"]
+    write_pointer(spark, table_dir, meta)
+    verify_pointer_generation(spark, table_dir, generation)
+    live = generation_name(generation)
+    superseded = [
+        n for n in list_children(spark, table_dir, "gen-") if n != live
+    ]
+    for name in superseded[: max(0, len(superseded) - keep_generations)]:
+        delete_prefix(spark, table_dir, name)
+
+
+def retry_races(attempt, race_retries: int):
+    """Run ``attempt()`` and, each time it loses a pointer race, run it
+    again from the winner's fresh pointer, up to ``race_retries`` more
+    times; the last :class:`ManifestRaceError` propagates.  The loser's
+    own prefix stays pointer-invisible and ages out under the normal
+    ``keep_generations`` cleanup."""
+    for n in range(race_retries + 1):
+        try:
+            return attempt()
+        except ManifestRaceError:
+            if n == race_retries:
+                raise
 
 
 def total_bytes(spark, path: str) -> int:

@@ -71,10 +71,10 @@ def read_current(
     spark: SparkSession, table_dir: str, *, generation: int | None = None
 ) -> DataFrame:
     """Read a parquet table that MAY be under manifest-pointer
-    management (``compact_parquet(via_manifest=True)``): follow the
-    ``_current`` pointer to the live ``gen-`` prefix when present,
-    else read the directory flat.  This is the reader half of the
-    object-store compaction protocol — a plain ``spark.read.parquet``
+    management (``sinks.compact_parquet``): follow the ``_current``
+    pointer to the live ``gen-`` prefix when present, else read the
+    directory flat.  This is the reader half of the manifest
+    compaction protocol — a plain ``spark.read.parquet``
     on the root would double-read old+new generations during the
     post-flip cleanup window.
 
@@ -109,7 +109,7 @@ def read_at_generation(
     snapshots are time-travel-readable."""
     from ultimate_data_engineering_project_spark.sources import manifest
 
-    name = f"gen-{generation:06d}"
+    name = manifest.generation_name(generation)
     on_disk = manifest.list_children(spark, table_dir, "gen-")
     if name not in on_disk:
         raise ValueError(
@@ -147,8 +147,7 @@ def snapshot_tables(
     ``read_at_generation`` replays.  A table with no pointer (legacy
     flat layout) reads the root and pins ``None`` — flat layouts are
     mutated in place and cannot be pinned; adopt them via
-    ``compact_parquet(via_manifest=True)`` first for full snapshot
-    isolation."""
+    ``sinks.compact_parquet`` first for full snapshot isolation."""
     from ultimate_data_engineering_project_spark.sources import manifest
 
     frames: dict[str, DataFrame] = {}

@@ -68,7 +68,6 @@ def compact_parquet(
     target_file_bytes: int = 128 * 1024 * 1024,
     partition_by: list[str] | None = None,
     sort_within_by: list[str] | None = None,
-    via_manifest: bool = False,
     keep_generations: int = 0,
     race_retries: int = 0,
     stats_keys: list[str] | None = None,
@@ -80,189 +79,66 @@ def compact_parquet(
     layer degrades into: thousands of KB-scale files per partition turn
     a 100 TB scan into a metadata storm (one task + one open per file,
     NameNode/liststore pressure) and defeat row-group-level skipping.
-    Compaction = read -> repartition to ceil(bytes/target) -> two-rename
-    swap.  ``sort_within_by`` additionally sorts rows inside each
-    output file (sortWithinPartitions — NO global shuffle) so min/max
-    row-group stats become selective for those columns: the cheap
-    cousin of Z-ordering for the single-column case.
+    Compaction = read -> repartition to ceil(bytes/target) -> commit
+    through the manifest protocol (sources/manifest.py).
+    ``partition_by`` hashes on the partition columns so each hive
+    directory's rows land in one task (one file per directory).
+    ``sort_within_by`` additionally sorts rows inside each output file
+    (sortWithinPartitions — NO global shuffle) so min/max row-group
+    stats become selective for those columns: the cheap cousin of
+    Z-ordering for the single-column case.
 
-    With ``via_manifest=False`` (default) the rewrite lands in
-    ``path + '.compact.tmp'`` and is swapped in via two LOCAL renames —
-    NOT atomic: a crash between them leaves the live path missing with
-    the data intact in ``.compact.old``.  That window is self-healing:
-    the next call (or a reader using this function) restores
-    ``.compact.old`` before doing anything else; remote scheme paths
-    (hdfs://, s3a://) are rejected up front (rename is copy+delete on
-    object stores).
+    The rewrite lands in a new immutable ``gen-NNNNNN`` prefix under
+    the table root, the ``_current`` pointer flips atomically (one
+    small PUT/rename), then superseded prefixes are DELETEd — no
+    data-file rename, so local paths and remote schemes (hdfs://,
+    s3a://) behave the same.  Readers MUST use ``readers.read_current``
+    (it follows the pointer; a plain ``spark.read.parquet`` on the root
+    would double-read during the cleanup window).  The first call on a
+    flat table ADOPTS it: data moves under ``gen-000001`` and the
+    superseded flat files are deleted.  A crash before the flip leaves
+    an orphan prefix the retry overwrites (the adoption source list
+    excludes ``gen-*`` children, so a crashed first adoption never
+    mixes into the flat read or its byte sizing); a crash after the
+    flip leaves relics that readers ignore and the next run deletes.
 
-    ``via_manifest=True`` is the OBJECT-STORE protocol
-    (sources/manifest.py): rewrite into a new immutable ``gen-NNNNNN``
-    prefix under the table root, atomically flip the ``_current``
-    pointer (one small PUT/rename), then DELETE superseded prefixes —
-    no data-file rename, so remote schemes are accepted.  Read the
-    table through ``readers.read_current`` (it follows the pointer;
-    a plain ``spark.read.parquet`` on the root would double-read
-    during the cleanup window).  First call on a legacy flat table
-    ADOPTS it: data moves under ``gen-000001`` and the superseded flat
-    files are deleted.  ``keep_generations=N`` ages superseded
-    prefixes instead of deleting immediately — the N newest are
-    retained, closing the in-flight-reader race (a reader that
-    resolved the pointer up to N flips ago still finds its files) and
-    enabling time travel via ``readers.read_at_generation``.
-    ``race_retries=N`` softens the single-compactor contract: a
-    compaction that LOSES a pointer race (detected by the post-flip
-    re-read) re-runs from the winner's fresh state up to N times
-    instead of aborting — both writers complete, the loser's orphan
-    prefixes stay pointer-invisible and age out under the normal
-    keep_generations cleanup.
+    ``keep_generations=N`` ages superseded prefixes instead of deleting
+    immediately — the N newest are retained, closing the
+    in-flight-reader race (a reader that resolved the pointer up to N
+    flips ago still finds its files) and enabling time travel via
+    ``readers.read_at_generation``.
+
+    Run a single compactor per table: the pointer is re-read after the
+    flip and a lost race raises ``manifest.ManifestRaceError`` before
+    cleanup.  ``race_retries=N`` instead re-runs a losing compaction
+    from the winner's fresh state up to N times — both writers
+    complete, and the loser's orphan prefix stays pointer-invisible
+    and ages out under the normal ``keep_generations`` cleanup.
+
+    ``stats_keys`` computes the three-number key histogram
+    (max_key_rows / total_rows / n_keys over these columns) on the
+    rewritten data and stores it in the pointer JSON: the compactor
+    already pays a full-table rewrite, so the stats cost one extra
+    keys-only aggregate and the auto window dispatchers
+    (``windows.stats_from_manifest``) dispatch with zero probe jobs.
 
     Input bytes are read from the filesystem listing, not estimated
     from row counts, so decompression ratio never skews the output
     sizing."""
-    import math
-    import os
-    import shutil
-    from urllib.parse import urlsplit
+    from ultimate_data_engineering_project_spark.sources import manifest
 
-    if via_manifest:
-        return _compact_parquet_via_manifest(
+    return manifest.retry_races(
+        lambda: _compact_parquet_attempt(
             spark,
             path,
             target_file_bytes=target_file_bytes,
             partition_by=partition_by,
             sort_within_by=sort_within_by,
             keep_generations=keep_generations,
-            race_retries=race_retries,
             stats_keys=stats_keys,
-        )
-    if keep_generations:
-        raise ValueError(
-            "keep_generations requires via_manifest=True (the rename-"
-            "swap path has no generation layout to retain)"
-        )
-    if stats_keys:
-        raise ValueError(
-            "stats_keys requires via_manifest=True (the key histogram "
-            "lives in the manifest pointer JSON)"
-        )
-
-    # sizing walks the local filesystem and the swap uses local renames
-    # — on hdfs://s3a:// the walk would see zero bytes (forcing a
-    # single-task rewrite) and the swap would fail AFTER the expensive
-    # rewrite, stranding a .compact.tmp directory.  urlsplit handles
-    # the forms a bare regex missed: case-insensitive schemes
-    # ('S3A://'), single-slash 'file:/x' URIs, and 'file://host/x'
-    # (a REMOTE host — also rejected).
-    parts = urlsplit(path)
-    scheme = parts.scheme.lower()
-    if scheme not in ("", "file") or (scheme == "file" and parts.netloc):
-        raise ValueError(
-            f"compact_parquet's rename swap operates on local paths only "
-            f"(got {path!r}); on object stores pass via_manifest=True "
-            "(new-prefix write + atomic pointer flip)"
-        )
-    if scheme == "file":
-        path = parts.path
-    old = path.rstrip("/") + ".compact.old"
-    if not os.path.exists(path) and os.path.exists(old):
-        # crash happened between the two swap renames of a previous
-        # run: the pre-compaction data is complete in .compact.old —
-        # restore it before reading
-        shutil.move(old, path)
-    base = spark.read.parquet(path)
-    total = sum(
-        os.path.getsize(os.path.join(dirpath, f))
-        for dirpath, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
+        ),
+        race_retries,
     )
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    if partition_by:
-        # hash on the partition columns: every hive directory's rows
-        # land in ONE task -> one compacted file per directory.  A
-        # single partition bigger than target_file_bytes would need a
-        # salt column here to split further — callers with that shape
-        # should compact partition-by-partition instead.
-        df = base.repartition(n_out, *partition_by)
-    else:
-        df = base.repartition(n_out)
-    if sort_within_by:
-        df = df.sortWithinPartitions(*sort_within_by)
-    tmp = path.rstrip("/") + ".compact.tmp"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(tmp)
-    if os.path.exists(old):
-        # leftover from a crash AFTER a previous swap completed but
-        # before its cleanup — the live path is intact, drop the relic
-        # (shutil.move into an existing dir would nest, not replace)
-        shutil.rmtree(old)
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
-    return sum(
-        1
-        for dirpath, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-
-
-def _compact_parquet_via_manifest(
-    spark,
-    path: str,
-    *,
-    target_file_bytes: int,
-    partition_by: list[str] | None,
-    sort_within_by: list[str] | None,
-    keep_generations: int = 0,
-    race_retries: int = 0,
-    stats_keys: list[str] | None = None,
-) -> int:
-    """Object-store-safe compaction (see compact_parquet's docstring):
-    read the current generation (or the legacy flat root on adoption),
-    rewrite into the next ``gen-`` prefix, flip the pointer, delete
-    superseded prefixes older than the ``keep_generations`` newest
-    (ageing: a reader that resolved the pointer up to N flips ago
-    still finds its files; ``readers.read_at_generation`` reads a
-    retained prefix back).  Crash windows self-heal exactly as in
-    ``_compact_rollup_via_manifest`` (the retry reclaims the orphan
-    generation by overwrite; relics are pointer-invisible and deleted
-    by the next run) — including a crash BEFORE the FIRST flip: the
-    adoption source list excludes gen-* children, so the retry never
-    mixes the orphan prefix into the flat read or its byte sizing.
-    Single-compactor contract: the pointer is re-read after the flip
-    and a lost race aborts before cleanup (manifest.py docstring) —
-    or, with ``race_retries``, re-runs from the winner's state.
-
-    ``stats_keys`` (r12, judge ask #6): compute the three-number key
-    histogram (max_key_rows / total_rows / n_keys over these columns)
-    on the data being rewritten and store it in the pointer JSON —
-    the compactor is already paying a full-table rewrite, so the stats
-    cost one extra keys-only aggregate and the auto window dispatchers
-    (``windows.stats_from_manifest``) then dispatch with ZERO probe
-    jobs in steady state, refreshed exactly when the data last
-    changed shape."""
-    from ultimate_data_engineering_project_spark.sources import manifest
-
-    for attempt in range(race_retries + 1):
-        try:
-            return _compact_parquet_attempt(
-                spark,
-                path,
-                target_file_bytes=target_file_bytes,
-                partition_by=partition_by,
-                sort_within_by=sort_within_by,
-                keep_generations=keep_generations,
-                stats_keys=stats_keys,
-            )
-        except manifest.ManifestRaceError:
-            if attempt == race_retries:
-                raise
-            # lost the race: the pointer now names the winner's state;
-            # loop to re-derive source + generation from it (our own
-            # written prefix stays pointer-invisible and ages out)
 
 
 def _compact_parquet_attempt(
@@ -272,8 +148,8 @@ def _compact_parquet_attempt(
     target_file_bytes: int,
     partition_by: list[str] | None,
     sort_within_by: list[str] | None,
-    keep_generations: int = 0,
-    stats_keys: list[str] | None = None,
+    keep_generations: int,
+    stats_keys: list[str] | None,
 ) -> int:
     import math
 
@@ -281,7 +157,7 @@ def _compact_parquet_attempt(
 
     ptr = manifest.read_pointer(spark, path)
     gen = (ptr["generation"] if ptr else 0) + 1
-    new_data = f"gen-{gen:06d}"
+    new_data = manifest.generation_name(gen)
     if ptr:
         src_list = [manifest.join(path, ptr["data"])]
         base = spark.read.parquet(*src_list)
@@ -296,6 +172,9 @@ def _compact_parquet_attempt(
     total = sum(manifest.total_bytes(spark, s) for s in src_list)
     n_out = max(1, math.ceil(total / target_file_bytes))
     if partition_by:
+        # a single partition bigger than target_file_bytes would need a
+        # salt column here to split further — callers with that shape
+        # should compact partition-by-partition instead
         df = base.repartition(n_out, *partition_by)
     else:
         df = base.repartition(n_out)
@@ -329,23 +208,7 @@ def _compact_parquet_attempt(
             "total_rows": int(srow["total"] or 0),
             "n_keys": int(srow["nk"] or 0),
         }
-    manifest.write_pointer(spark, path, meta)
-    # lost-race check BEFORE cleanup: a losing concurrent compactor
-    # must never delete the winner's state
-    manifest.verify_pointer_generation(spark, path, gen)
-    # post-flip cleanup: DELETEs only; age out generations older than
-    # the keep_generations newest superseded ones
-    superseded = sorted(
-        n for n in manifest.list_children(spark, path, "gen-")
-        if n != new_data
-    )
-    drop = (
-        superseded[: max(0, len(superseded) - keep_generations)]
-        if keep_generations
-        else superseded
-    )
-    for name in drop:
-        manifest.delete_prefix(spark, path, name)
+    manifest.commit(spark, path, meta, keep_generations=keep_generations)
     if ptr is None:
         manifest.delete_flat_children(spark, path)  # adoption
     return _count_parquet_files(spark, manifest.join(path, new_data))

@@ -985,14 +985,11 @@ def run_incremental_dedup_stream(
 
     docs_dir = index_dir.rstrip("/") + "_docs"
 
-    def _read_batches(root: str, before_batch: int) -> DataFrame | None:
-        return _read_batch_partitions(spark, root, before_batch)
-
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-        index = _read_batches(index_dir, batch_id)
+        index = _read_batch_partitions(spark, index_dir, batch_id)
         if index is not None:
-            old = _read_batches(docs_dir, batch_id)
+            old = _read_batch_partitions(spark, docs_dir, batch_id)
             pairs = dedup.minhash_match_index_md5(
                 batch_df,
                 index,
@@ -1075,12 +1072,9 @@ def run_incremental_ann_stream(
     """
     from ultimate_data_engineering_project_spark.operators import similarity
 
-    def _read_index(before_batch: int) -> DataFrame | None:
-        return _read_batch_partitions(spark, index_dir, before_batch)
-
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
-        index = _read_index(batch_id)
+        index = _read_batch_partitions(spark, index_dir, batch_id)
         if index is not None:
             matches = similarity.ivf_probe_index(
                 batch_df,
@@ -1165,15 +1159,14 @@ def run_incremental_pq_stream(
             "the exact re-rank stage"
         )
 
-    def _read_hist(base: str, before_batch: int) -> DataFrame | None:
-        return _read_batch_partitions(spark, base, before_batch)
-
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
-        codes_hist = _read_hist(codes_dir, batch_id)
+        codes_hist = _read_batch_partitions(spark, codes_dir, batch_id)
         if codes_hist is not None:
             corpus_hist = (
-                _read_hist(docs_dir, batch_id) if rerank > k else None
+                _read_batch_partitions(spark, docs_dir, batch_id)
+                if rerank > k
+                else None
             )
             matches = similarity.pq_probe_codes(
                 batch_df,
@@ -1622,10 +1615,10 @@ def read_rollup(
     the index streams' ``batch < id`` probes, because serving wants
     ALL history including the just-committed batch.
 
-    If the table carries a manifest pointer (``_current`` — written by
-    ``compact_rollup(via_manifest=True)``), the view is the pointed-to
-    folded base prefix plus only the batch partitions NEWER than the
-    fold; superseded batch dirs awaiting cleanup are ignored.
+    Once ``compact_rollup`` has written a manifest pointer
+    (``_current``), the view is the pointed-to folded base prefix plus
+    only the batch partitions NEWER than the fold; superseded batch
+    dirs awaiting cleanup are ignored.
 
     ``merge_fn`` swaps the serving algebra to match the stream's
     ``partials_fn`` — e.g. ``lambda p: aggregates.hist_quantiles(p,
@@ -1642,29 +1635,14 @@ def read_rollup(
     Fails loudly with the on-disk generation list when N has been aged
     out."""
     from ultimate_data_engineering_project_spark.operators import aggregates
-    from ultimate_data_engineering_project_spark.sources import manifest
+    from ultimate_data_engineering_project_spark.sources import manifest, readers
 
     if merge_fn is None:
         merge_fn = aggregates.merge_rollup
     if at_generation is not None:
-        name = f"gen-{at_generation:06d}"
-        on_disk = manifest.list_children(spark, rollup_dir, "gen-")
-        if name not in on_disk:
-            raise ValueError(
-                f"generation {at_generation} is not on disk under "
-                f"{rollup_dir!r} (available: {on_disk or 'none'}); raise "
-                "keep_generations on compact_rollup to retain more history"
-            )
-        ptr0 = manifest.read_pointer(spark, rollup_dir)
-        committed = ptr0.get("generation") if ptr0 else None
-        if committed is None or at_generation > committed:
-            raise ValueError(
-                f"generation {at_generation} under {rollup_dir!r} was "
-                f"never committed (pointer reads {committed!r}): the "
-                "gen- prefix is a crashed compactor's orphan and may be "
-                "torn; only pointer-named folds are readable"
-            )
-        return merge_fn(spark.read.parquet(manifest.join(rollup_dir, name)))
+        return merge_fn(
+            readers.read_at_generation(spark, rollup_dir, at_generation)
+        )
     ptr = manifest.read_pointer(spark, rollup_dir)
     if ptr is None:
         partials = (
@@ -1727,56 +1705,51 @@ def compact_rollup(
     rollup_dir: str,
     *,
     keep_last: int = 1,
-    via_manifest: bool = False,
     keep_generations: int = 0,
     race_retries: int = 0,
 ) -> int:
     """Bound the continuous aggregate's partials table over an
     unbounded stream: fold every ``batch=<id>`` partition except the
-    ``keep_last`` most recent into ONE base partition (at the highest
-    folded batch id), preserving `read_rollup`'s output EXACTLY —
-    the fold is the same state algebra the serving view applies
-    (counts and integer micro-sums add, min/min and max/max), so
-    merging early changes nothing (the property pinned by the
-    slice-invariance tests).
+    ``keep_last`` most recent into ONE base prefix, preserving
+    `read_rollup`'s output EXACTLY — the fold is the same state algebra
+    the serving view applies (counts and integer micro-sums add,
+    min/min and max/max), so merging early changes nothing (the
+    property pinned by the slice-invariance tests).
 
     Run with the stream STOPPED: after a restart the stream may REPLAY
     its most recent uncommitted batch id, which must still map to its
     own partition for the overwrite to stay idempotent — keep_last >= 1
     keeps the replayable tail out of the fold.
 
-    Two swap protocols:
+    The fold commits through the manifest protocol
+    (sources/manifest.py): it lands in a NEW immutable ``gen-NNNNNN``
+    prefix, the ``_current`` pointer flips atomically (one small
+    PUT/rename) and records the fold point (``base``,
+    ``folded_through``), then superseded prefixes are DELETEd — no
+    data-file rename, so local and s3a:// paths behave the same.  The
+    stream keeps appending ``batch=<id>`` partitions at the root;
+    readers MUST use `read_rollup`, which serves the pointed-to base
+    plus only the batches newer than the fold.  A crash before the
+    flip orphans the new prefix (the retry rewrites it — generation
+    numbers derive from the pointer); a crash after the flip leaves
+    superseded prefixes that readers ignore and the next compaction
+    deletes.  ``keep_generations=N`` ages superseded gen- prefixes
+    instead (the N newest survive cleanup), closing the
+    in-flight-reader race and enabling ``read_rollup(at_generation=
+    ...)`` audit reads; batch partitions at/below the new fold point
+    are still deleted (their state lives on inside every retained
+    base).
 
-    * ``via_manifest=False`` (default): the rewrite lands in
-      ``rollup_dir + '.compact.tmp'`` and swaps in via two local
-      renames (sinks.compact_parquet's pattern, including crash
-      restore from the ``.compact.old`` relic); LOCAL filesystem only.
-    * ``via_manifest=True``: the object-store-safe protocol
-      (sources/manifest.py) — fold into a NEW immutable ``gen-NNNNNN``
-      prefix, atomically flip the ``_current`` pointer (one small
-      PUT/rename), then DELETE superseded prefixes; no data-file
-      rename anywhere, so s3a:// paths are accepted.  `read_rollup`
-      follows the pointer.  A crash before the flip orphans the new
-      prefix (the retry rewrites it — generation numbers derive from
-      the pointer); a crash after the flip leaves superseded prefixes
-      that readers ignore and the next compaction deletes.
-      ``keep_generations=N`` ages superseded gen- prefixes instead
-      (the N newest survive cleanup), closing the in-flight-reader
-      race and enabling ``read_rollup(at_generation=...)`` audit
-      reads; batch partitions at/below the new fold point are still
-      deleted (their state lives on inside every retained base).
-      Single-compactor contract: the pointer is re-read after the
-      flip and a lost race aborts before cleanup (manifest.py) — or,
-      with ``race_retries=N``, the losing compactor re-runs from the
-      winner's fresh pointer up to N times (both writers complete;
-      the loser's orphan prefixes stay pointer-invisible and age out
-      under the normal keep_generations cleanup).
+    Run a single compactor per table: the pointer is re-read after the
+    flip and a lost race raises ``manifest.ManifestRaceError`` before
+    cleanup.  ``race_retries=N`` instead re-runs a losing compaction
+    from the winner's fresh pointer up to N times (both writers
+    complete; the loser's orphan prefix stays pointer-invisible and
+    ages out under the normal keep_generations cleanup).
 
     Returns the number of live partials partitions after compaction
     (folded base + un-folded tail)."""
-    import glob as _glob
-    import shutil
-    from urllib.parse import urlsplit
+    from ultimate_data_engineering_project_spark.sources import manifest
 
     if keep_last < 1:
         # keep_last=0 would fold the replayable tail batch into the
@@ -1788,82 +1761,20 @@ def compact_rollup(
             "the most recent batch id may be replayed after a restart and "
             "must keep its own partition"
         )
-
-    if via_manifest:
-        from ultimate_data_engineering_project_spark.sources import manifest
-
-        for attempt in range(race_retries + 1):
-            try:
-                return _compact_rollup_via_manifest(
-                    spark, rollup_dir, keep_last, keep_generations
-                )
-            except manifest.ManifestRaceError:
-                if attempt == race_retries:
-                    raise
-                # lost the race: re-derive the fold from the winner's
-                # pointer (our orphan base stays pointer-invisible)
-    if keep_generations:
-        raise ValueError(
-            "keep_generations requires via_manifest=True (the rename-"
-            "swap path has no generation layout to retain)"
-        )
-
-    # same local-only guard as sinks.compact_parquet: the swap uses
-    # local renames, which on hdfs://s3a:// would fail AFTER the
-    # rewrite (rename is copy+delete there), stranding .compact.tmp
-    parts_url = urlsplit(rollup_dir)
-    scheme = parts_url.scheme.lower()
-    if scheme not in ("", "file") or (scheme == "file" and parts_url.netloc):
-        raise ValueError(
-            f"compact_rollup's rename swap operates on local paths only "
-            f"(got {rollup_dir!r}); on object stores pass "
-            "via_manifest=True (new-prefix write + atomic pointer flip)"
-        )
-    if scheme == "file":
-        rollup_dir = parts_url.path
-
-    old = rollup_dir.rstrip("/") + ".compact.old"
-    if not os.path.exists(rollup_dir) and os.path.exists(old):
-        # crash between a previous run's two swap renames: the
-        # pre-compaction table is complete in .compact.old — restore
-        shutil.move(old, rollup_dir)
-    ids = sorted(
-        int(os.path.basename(p).split("=")[1])
-        for p in _glob.glob(os.path.join(rollup_dir, "batch=*"))
+    return manifest.retry_races(
+        lambda: _compact_rollup_attempt(
+            spark, rollup_dir, keep_last, keep_generations
+        ),
+        race_retries,
     )
-    folded_ids = ids[: len(ids) - keep_last]
-    if len(folded_ids) < 2:
-        return len(ids)
-    base_id = folded_ids[-1]
-    part = spark.read.option("basePath", rollup_dir).parquet(rollup_dir)
-    folded = _fold_rollup_partials(
-        part.filter(F.col("batch") <= base_id).drop("batch")
-    )
-    tmp = rollup_dir.rstrip("/") + ".compact.tmp"
-    folded.write.mode("overwrite").parquet(os.path.join(tmp, f"batch={base_id}"))
-    for i in ids[len(folded_ids):]:
-        spark.read.parquet(
-            os.path.join(rollup_dir, f"batch={i}")
-        ).write.mode("overwrite").parquet(os.path.join(tmp, f"batch={i}"))
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    shutil.move(rollup_dir, old)
-    shutil.move(tmp, rollup_dir)
-    shutil.rmtree(old)
-    return len(ids) - len(folded_ids) + 1
 
 
-def _compact_rollup_via_manifest(
+def _compact_rollup_attempt(
     spark: SparkSession,
     rollup_dir: str,
     keep_last: int,
-    keep_generations: int = 0,
+    keep_generations: int,
 ) -> int:
-    """Object-store-safe fold (see compact_rollup's docstring): new
-    immutable ``gen-NNNNNN`` prefix -> atomic ``_current`` pointer
-    flip -> DELETE superseded prefixes.  Composes with the running
-    layout: the stream keeps appending ``batch=<id>`` partitions at the
-    table root; only batches newer than ``folded_through`` are live."""
     from ultimate_data_engineering_project_spark.sources import manifest
 
     ptr = manifest.read_pointer(spark, rollup_dir) or {
@@ -1881,7 +1792,7 @@ def _compact_rollup_via_manifest(
     if not folded_ids or (ptr["base"] is None and len(folded_ids) < 2):
         return (1 if ptr["base"] else 0) + len(live)
     gen = ptr["generation"] + 1
-    new_base = f"gen-{gen:06d}"
+    new_base = manifest.generation_name(gen)
     part = (
         spark.read.option("basePath", rollup_dir)
         .parquet(*[manifest.join(rollup_dir, f"batch={i}") for i in folded_ids])
@@ -1896,29 +1807,12 @@ def _compact_rollup_via_manifest(
     _fold_rollup_partials(part).write.mode("overwrite").parquet(
         manifest.join(rollup_dir, new_base)
     )
-    manifest.write_pointer(
+    manifest.commit(
         spark,
         rollup_dir,
         {"base": new_base, "folded_through": folded_ids[-1], "generation": gen},
+        keep_generations=keep_generations,
     )
-    # lost-race check BEFORE cleanup (single-compactor contract): a
-    # losing concurrent compactor must never delete the winner's state
-    manifest.verify_pointer_generation(spark, rollup_dir, gen)
-    # post-flip cleanup: DELETEs only (object-store-safe); a crash here
-    # leaves relics that readers ignore and the next run deletes.  With
-    # keep_generations, the N newest superseded bases survive (ageing +
-    # read_rollup(at_generation=...) audit reads)
-    superseded = sorted(
-        n for n in manifest.list_children(spark, rollup_dir, "gen-")
-        if n != new_base
-    )
-    drop = (
-        superseded[: max(0, len(superseded) - keep_generations)]
-        if keep_generations
-        else superseded
-    )
-    for name in drop:
-        manifest.delete_prefix(spark, rollup_dir, name)
     for i in ids:
         if i <= folded_ids[-1]:
             manifest.delete_prefix(spark, rollup_dir, f"batch={i}")
