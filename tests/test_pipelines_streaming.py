@@ -1636,6 +1636,143 @@ def test_incremental_span_stream_matches_batch(spark, sf_dir, tmp_path):
     assert got == want and len(want) > 0
 
 
+def _three_file_batches(spark, frame, id_col, src):
+    """Stage ``frame`` as three files split by id thirds and return a
+    factory of streams that read them one file (one batch) at a time."""
+    n = frame.count()
+    third = n // 3
+    for i, (lo, hi) in enumerate([(0, third), (third, 2 * third), (2 * third, n)]):
+        frame.filter(
+            (F.col(id_col) >= lo) & (F.col(id_col) < hi)
+        ).coalesce(1).write.parquet(src + f"/b{i}")
+    return lambda: (
+        spark.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/b*")
+    )
+
+
+def test_incremental_dedup_stream_uri_paths(spark, sf_dir, tmp_path):
+    """History is listed through the manifest layer, so ``file://``
+    index, pairs and checkpoint dirs probe it exactly as plain paths
+    do: the same cross-batch pair set as the plain-path test."""
+    from ultimate_data_engineering_project_spark.operators import dedup
+    from ultimate_data_engineering_project_spark.sources.readers import load_table
+    from ultimate_data_engineering_project_spark.streaming.pipelines import (
+        run_incremental_dedup_stream,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    third = docs.count() // 3
+    stream = _three_file_batches(spark, docs, "doc_id", str(tmp_path / "src"))
+    uri = (tmp_path / "out").as_uri()
+    q = run_incremental_dedup_stream(
+        spark, stream(), uri + "/index", uri + "/pairs", uri + "/ckpt"
+    )
+    q.awaitTermination(300)
+    got = {
+        (r.new_id, r.old_id, r.jaccard)
+        for r in spark.read.parquet(uri + "/pairs").collect()
+    }
+
+    full = dedup.minhash_lsh_pairs_md5(docs, "doc_id", jaccard_threshold=0.5)
+    batch_of = lambda d: 0 if d < third else (1 if d < 2 * third else 2)
+    want = {
+        (r.id_b, r.id_a, r.jaccard)
+        for r in full.collect()
+        if batch_of(r.id_a) != batch_of(r.id_b)
+    }
+    assert got == want and len(want) > 0
+
+
+def _replay_case(spark, name, frame, root):
+    """(start(stream) -> query, the dirs it writes) for one of the
+    history-probing streams; config is built once so both runs share
+    it."""
+    from ultimate_data_engineering_project_spark.operators import similarity
+    from ultimate_data_engineering_project_spark.streaming import pipelines as sp
+
+    index, out, ckpt = root + "/index", root + "/out", root + "/ckpt"
+    if name == "dedup":
+        return (
+            lambda s: sp.run_incremental_dedup_stream(spark, s, index, out, ckpt),
+            [out, index, index + "_docs"],
+        )
+    if name == "ann":
+        centroids = similarity._train_centroids_numpy(
+            frame, "vec_id", "embedding", 8, 42
+        )
+        return (
+            lambda s: sp.run_incremental_ann_stream(
+                spark, s, index, out, ckpt, centroids, k=3, n_probe=2
+            ),
+            [out, index],
+        )
+    if name == "pq":
+        codebooks = similarity.pq_train(frame, m=4, n_codes=8, seed=42)
+        docs = root + "/docs"
+        return (
+            lambda s: sp.run_incremental_pq_stream(
+                spark, s, index, out, ckpt, codebooks,
+                docs_dir=docs, k=3, rerank=6,
+            ),
+            [out, index, docs],
+        )
+    return (
+        lambda s: sp.run_incremental_span_stream(
+            spark, s, index, out, ckpt, w=24, stride=4
+        ),
+        [out, index],
+    )
+
+
+@pytest.mark.parametrize("name", ["dedup", "ann", "pq", "span"])
+def test_incremental_stream_replay_after_uncommitted_batch(
+    spark, sf_dir, tmp_path, name
+):
+    """A crash between a batch's writes and its checkpoint commit: with
+    the last commit file gone, the restart replays exactly that batch,
+    which overwrites its own ``batch=<id>`` partitions and probes only
+    the earlier ones — every output row is unchanged as a multiset."""
+    from collections import Counter
+
+    from ultimate_data_engineering_project_spark.sources.readers import load_table
+
+    table, id_col = (
+        ("embeddings", "vec_id") if name in ("ann", "pq") else ("documents", "doc_id")
+    )
+    frame = load_table(spark, sf_dir, table)
+    stream = _three_file_batches(spark, frame, id_col, str(tmp_path / "src"))
+    root = str(tmp_path / name)
+    start, dirs = _replay_case(spark, name, frame, root)
+
+    def rows():
+        return {
+            d: Counter(repr(tuple(r)) for r in spark.read.parquet(d).collect())
+            for d in dirs
+        }
+
+    start(stream()).awaitTermination(300)
+    before = rows()
+    assert sum(before[dirs[0]].values()) > 0
+
+    commits = os.path.join(root, "ckpt", "commits")
+    n = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert n == 2
+    os.remove(os.path.join(commits, str(n)))
+    crc = os.path.join(commits, f".{n}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+    q = start(stream())
+    q.awaitTermination(300)
+    assert [p.batchId for p in q.recentProgress] == [n]
+    assert rows() == before
+    if name == "dedup":
+        pairs = spark.read.parquet(dirs[0])
+        assert pairs.filter(F.col("new_id") == F.col("old_id")).count() == 0
+
+
 def test_incremental_rollup_stream_matches_batch(spark, sf_dir, tmp_path):
     """The continuous aggregate maintained one micro-batch at a time
     (mergeable partials under batch=<id>) serves EXACTLY the direct
@@ -2047,7 +2184,7 @@ def test_compact_rollup_race_retry(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, read_rollup(spark, rollup_dir).collect())) == want
 
 
-def test_compact_rollup_via_manifest(spark, sf_dir, tmp_path):
+def test_compact_rollup_manifest_protocol(spark, sf_dir, tmp_path):
     """The OBJECT-STORE compaction protocol (r8 judge ask #4), driven
     on the local fs: fold into a new immutable gen- prefix, atomically
     flip the _current pointer, DELETE superseded prefixes — no data

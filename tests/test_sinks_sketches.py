@@ -195,7 +195,7 @@ def test_compact_parquet_small_files(spark, tmp_path):
     assert ids == sorted(ids)
 
 
-def test_compact_parquet_via_manifest(spark, tmp_path):
+def test_compact_parquet_manifest_protocol(spark, tmp_path):
     """The object-store compaction protocol for generic parquet tables
     (r8 judge ask #4): first call ADOPTS a legacy flat table into
     gen-000001 + pointer, later calls advance the generation, readers

@@ -12,9 +12,18 @@ exists.  Here the declared semantics are real Structured Streaming:
   T5  stateful fraud: stream-stream self-join under watermark
   T6  bronze append sink with checkpointing
 
+The incremental family keeps its cross-batch state on disk as
+``batch=<id>`` parquet partitions: ``run_incremental_dedup_stream``,
+``_ann_``, ``_pq_``, ``_bm25_``, ``_bpe_encode_``, ``_quality_model_``,
+``_span_`` and ``_rollup_stream``.  They and ``run_cdc_stream`` start
+through one micro-batch driver, ``_run_batches``, and supply only their
+per-batch body; its docstring states the replay-idempotence contract.
+
 Kafka itself isn't in this container, so sources are file/rate based;
 every transformation is source-agnostic (swap ``readStream.format``).
-Tests drive them with Trigger.AvailableNow against temp dirs.
+The queries this module starts run under Trigger.AvailableNow: they
+drain the backlog and stop.  Tests drive the frame builders the same
+way against temp dirs.
 """
 
 from __future__ import annotations
@@ -95,22 +104,19 @@ def stream_sessionized(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def write_bronze_stream(
-    df: DataFrame, path: str, checkpoint: str, available_now: bool = True
-):
+def write_bronze_stream(df: DataFrame, path: str, checkpoint: str):
     """T6: append stream to partitioned parquet with a checkpoint
-    (exactly-once file sink).  AvailableNow drains the backlog and
-    stops — the testable trigger; production uses processingTime."""
-    writer = (
+    (exactly-once file sink), run under AvailableNow: it drains the
+    backlog and stops."""
+    return (
         df.withColumn("_ingest_date", F.to_date("ts"))
         .writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .partitionBy("_ingest_date")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_dedup(
@@ -413,6 +419,71 @@ def cdc_bucket_expr(keys: list[str], n_buckets: int):
     ).cast("int")
 
 
+def _run_batches(frame: DataFrame, checkpoint: str, body, *, snapshot=None):
+    """The one micro-batch driver of the foreachBatch streams: start
+    ``frame`` under Trigger.AvailableNow with its checkpoint at
+    ``checkpoint`` and call ``body(batch_df, batch_id)`` per batch.
+
+    Replay idempotence.  A crash between a batch's writes and its
+    checkpoint commit replays the same batch id on restart, so every
+    body keeps three rules and the replay leaves no trace:
+      * overwrite ``batch=<id>``: each output lands under its
+        ``batch=<id>`` partition through `_write_batch`, so a replay
+        rewrites its own partition instead of duplicating rows;
+      * probe only ``batch < id``: history is read through
+        `_read_batch_partitions`, so a replay sees the exact pre-batch
+        state, never its own half-written rows;
+      * snapshot once: given ``snapshot`` columns, the batch is projected
+        to them and materialized with one eager ``localCheckpoint``, so
+        the probe and every write read the same rows from one scan.
+    The partitions ARE the cross-batch state — nothing lives in
+    executor memory, so a restart resumes with full history."""
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if snapshot is not None:
+            batch_df = batch_df.select(*snapshot).localCheckpoint(eager=True)
+        body(batch_df, batch_id)
+
+    return (
+        frame.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _write_batch(df: DataFrame, root: str, batch_id: int, *partition_by: str):
+    """Overwrite ``root/batch=<batch_id>`` with ``df`` (see
+    `_run_batches`), optionally partitioned by ``partition_by``."""
+    from ultimate_data_engineering_project_spark.sources import manifest
+
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(manifest.join(root, f"batch={batch_id}"))
+
+
+def _read_batch_partitions(
+    spark: SparkSession, root: str, before_batch: int
+) -> DataFrame | None:
+    """The ``batch=<id>`` history of ``root`` STRICTLY BEFORE
+    ``before_batch`` (see `_run_batches`), or None when it holds no
+    rows.  The partitions are listed through the manifest layer, so
+    local paths, URIs and object stores resolve alike; ``basePath``
+    keeps partition discovery rooted."""
+    from ultimate_data_engineering_project_spark.sources import manifest
+
+    hist = [
+        manifest.join(root, n)
+        for n in manifest.list_children(spark, root, "batch=")
+        if int(n.split("=", 1)[1]) < before_batch
+    ]
+    if not hist:
+        return None
+    df = spark.read.option("basePath", root).parquet(*hist).drop("batch")
+    return df if df.limit(1).count() else None
+
+
 def run_cdc_stream(
     spark: SparkSession,
     envelope_dir: str | None,
@@ -517,14 +588,10 @@ def run_cdc_stream(
                 batch_df, row_schema, materialize=True
             )
             if quarantined.head(1):
-                # batch-scoped overwrite, not a blind append: a crash-
-                # replayed micro-batch rewrites ITS partition instead
-                # of double-counting every quarantined frame (the same
-                # idempotence rule the incremental index streams use);
-                # the batch id doubles as DLQ provenance on read-back
-                quarantined.write.mode("overwrite").parquet(
-                    os.path.join(quarantine_dir, f"batch={batch_id}")
-                )
+                # a batch-scoped overwrite, not an append, so a replay
+                # cannot double-count (see _run_batches); the batch id
+                # doubles as DLQ provenance on read-back
+                _write_batch(quarantined, quarantine_dir, batch_id)
         else:
             changes = parse_debezium_envelope(batch_df, row_schema)
         import shutil
@@ -627,12 +694,7 @@ def run_cdc_stream(
             p = jvm.org.apache.hadoop.fs.Path(f"{table_dir}/__bucket={b}")
             p.getFileSystem(hconf).delete(p, True)
 
-    return (
-        raw.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(raw, checkpoint, apply_batch)
 
 
 def cdc_table_image(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -909,32 +971,6 @@ def cdc_apply_batch(
     return kept.unionByName(upserts).join(deletes, on=keys, how="left_anti")
 
 
-def _read_batch_partitions(
-    spark: SparkSession, root: str, before_batch: int
-) -> DataFrame | None:
-    """``batch=<id>``-partitioned history STRICTLY BEFORE the current
-    batch — the shared probe-side read of every incremental index
-    stream (dedup, IVF, PQ).  A REPLAYED batch (crash between partition
-    writes and checkpoint commit) would otherwise see its own rows in
-    the index and match against itself; excluding ``batch >=
-    before_batch`` restores the exact pre-batch history, keeping the
-    ``batch=<id>`` overwrite genuinely idempotent.  ``basePath`` keeps
-    partition discovery rooted; returns None when no history exists yet
-    (local filesystem layout — these streams persist their index on the
-    driver-visible store)."""
-    import glob
-
-    if not glob.glob(os.path.join(root, "batch=*", "*.parquet")):
-        return None
-    df = (
-        spark.read.option("basePath", root)
-        .parquet(root)
-        .filter(F.col("batch") < F.lit(before_batch))
-        .drop("batch")
-    )
-    return df if df.limit(1).count() else None
-
-
 def run_incremental_dedup_stream(
     spark: SparkSession,
     docs: DataFrame,
@@ -948,36 +984,22 @@ def run_incremental_dedup_stream(
     num_hashes: int = 16,
     bands: int = 4,
     jaccard_threshold: float = 0.5,
-    available_now: bool = True,
 ):
     """X1/X2 on a stream: near-dup dedup of an ARRIVING corpus against
     everything seen so far, via the persisted band index
     (operators/dedup.minhash_band_index_md5 layout).
 
-    Per micro-batch (foreachBatch — the cross-batch state is the index
-    table itself, exactly the CDC pattern of run_cdc_stream):
+    Per micro-batch (the cross-batch state is the index table itself):
       1. probe: batch docs banded and equi-joined against the on-disk
          index; candidates verify with exact Jaccard (old text re-read
          only for candidate ids) -> verified (new_id, old_id, jaccard)
-         pairs APPENDED to ``pairs_dir``;
+         pairs written to ``pairs_dir``;
       2. extend: the batch's own band rows + its (id, text) snapshot
-         append to the index, so later batches dedup against it.
+         join the index, so later batches dedup against it.
 
     Within-batch duplicates are handled by the batch pair path upstream
     (or a stream_dedup stage); this operator owns the batch-vs-history
-    half.  State never lives in executor memory: the index is parquet,
-    so a restart resumes from the checkpoint with full history intact.
-    Idempotence is WRITE-time: every output lands under a
-    ``batch=<id>`` subdirectory with overwrite, so a replayed batch
-    rewrites its own partition instead of duplicating rows — no
-    read-side dedup over the accumulated history (which would shuffle
-    the whole corpus every batch and void the incremental contract);
-    the pairs output is exactly-once for the same reason.  The probe
-    additionally reads only index/docs partitions with ``batch <
-    batch_id``, so a batch replayed after a crash-between-write-and-
-    commit sees the exact pre-batch history rather than its own
-    half-written band rows (which would self-match at jaccard 1.0).
-    At 100 TB the index is narrow band rows (partition by band_key
+    half.  At 100 TB the index is narrow band rows (partition by band_key
     range for co-located probes) — the corpus text is stored once in
     the companion ``_docs`` table and touched only per-candidate.
     """
@@ -986,7 +1008,6 @@ def run_incremental_dedup_stream(
     docs_dir = index_dir.rstrip("/") + "_docs"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
         index = _read_batch_partitions(spark, index_dir, batch_id)
         if index is not None:
             old = _read_batch_partitions(spark, docs_dir, batch_id)
@@ -1001,10 +1022,7 @@ def run_incremental_dedup_stream(
                 bands=bands,
                 jaccard_threshold=jaccard_threshold,
             )
-            # overwrite of THIS batch's partition = replay-idempotent
-            pairs.write.mode("overwrite").parquet(
-                os.path.join(pairs_dir, f"batch={batch_id}")
-            )
+            _write_batch(pairs, pairs_dir, batch_id)
         new_bands = dedup.minhash_band_index_md5(
             batch_df,
             id_col,
@@ -1013,19 +1031,12 @@ def run_incremental_dedup_stream(
             num_hashes=num_hashes,
             bands=bands,
         )
-        new_bands.write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
-        )
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(docs_dir, f"batch={batch_id}")
-        )
+        _write_batch(new_bands, index_dir, batch_id)
+        _write_batch(batch_df, docs_dir, batch_id)
 
-    writer = docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _run_batches(
+        docs, checkpoint, apply_batch, snapshot=(id_col, text_col)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_incremental_ann_stream(
@@ -1040,7 +1051,6 @@ def run_incremental_ann_stream(
     vec_col: str = "embedding",
     k: int = 5,
     n_probe: int = 4,
-    available_now: bool = True,
 ):
     """X3 on a stream: approximate-nearest-neighbor search of ARRIVING
     vectors against everything indexed so far, via a persisted IVF
@@ -1048,8 +1058,7 @@ def run_incremental_ann_stream(
     similarity-search twin of `run_incremental_dedup_stream`, giving
     ANN the same per-batch-cost incremental contract dedup has.
 
-    Per micro-batch (foreachBatch — cross-batch state IS the on-disk
-    index, never executor memory):
+    Per micro-batch (the cross-batch state is the on-disk index):
       1. probe: the batch's vectors expand to their n_probe nearest
          centroids and equi-join the index on the inverted-list id;
          exact cosine re-ranks to top-k (new vec x indexed history) ->
@@ -1062,18 +1071,13 @@ def run_incremental_ann_stream(
     — retraining per batch would silently re-key the inverted lists
     and invalidate history.  Per-batch cost is O(batch x probed-list
     occupancy), never O(corpus): the batch side broadcasts, the index
-    contributes only its probed lists.  Idempotence follows the dedup
-    stream's two rules: every write lands under ``batch=<id>`` with
-    overwrite, and the probe reads only index partitions with
-    ``batch < batch_id`` — a replayed batch sees the exact pre-batch
-    history instead of self-matching on its own half-written rows.
-    At 100 TB, partition the index by ``__cid`` range so each probe
-    touches only co-located inverted lists.
+    contributes only its probed lists.  At 100 TB, partition the index
+    by ``__cid`` range so each probe touches only co-located inverted
+    lists.
     """
     from ultimate_data_engineering_project_spark.operators import similarity
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
         index = _read_batch_partitions(spark, index_dir, batch_id)
         if index is not None:
             matches = similarity.ivf_probe_index(
@@ -1085,21 +1089,16 @@ def run_incremental_ann_stream(
                 k=k,
                 n_probe=n_probe,
             )
-            matches.write.mode("overwrite").parquet(
-                os.path.join(matches_dir, f"batch={batch_id}")
-            )
-        similarity.ivf_index_frame(
-            batch_df, centroids, id_col, vec_col
-        ).write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
+            _write_batch(matches, matches_dir, batch_id)
+        _write_batch(
+            similarity.ivf_index_frame(batch_df, centroids, id_col, vec_col),
+            index_dir,
+            batch_id,
         )
 
-    writer = vectors.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _run_batches(
+        vectors, checkpoint, apply_batch, snapshot=(id_col, vec_col)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_incremental_pq_stream(
@@ -1115,7 +1114,6 @@ def run_incremental_pq_stream(
     vec_col: str = "embedding",
     k: int = 5,
     rerank: int = 0,
-    available_now: bool = True,
 ):
     """X3's COMPRESSED scan on a stream: arriving vectors ADC-probe the
     PQ codes persisted so far, then append their own codes — the PQ
@@ -1123,8 +1121,7 @@ def run_incremental_pq_stream(
     contract for every X3 path (brute/LSH have batch twins, IVF and PQ
     stream).
 
-    Per micro-batch (foreachBatch — cross-batch state IS the on-disk
-    codes frame, never executor memory):
+    Per micro-batch (the cross-batch state is the on-disk codes frame):
       1. probe: the batch broadcasts with per-query ADC look-up tables
          and scans ONLY history codes partitions (``batch < batch_id``)
          at m array lookups per code row
@@ -1145,11 +1142,7 @@ def run_incremental_pq_stream(
     I/O before compression), so per-batch cost is O(batch x |codes
     history|) in CODE units — the cheapest full-coverage scan there
     is — while IVF's probe is cheaper still but only covers probed
-    lists.  Idempotence follows the dedup stream's two rules: every
-    write lands under ``batch=<id>`` with overwrite, and the probe
-    reads only ``batch < batch_id`` partitions, so a crash-replayed
-    batch sees the exact pre-batch history instead of matching its own
-    half-written rows.
+    lists.
     """
     from ultimate_data_engineering_project_spark.operators import similarity
 
@@ -1160,7 +1153,6 @@ def run_incremental_pq_stream(
         )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
         codes_hist = _read_batch_partitions(spark, codes_dir, batch_id)
         if codes_hist is not None:
             corpus_hist = (
@@ -1178,25 +1170,18 @@ def run_incremental_pq_stream(
                 corpus=corpus_hist,
                 rerank=rerank,
             )
-            matches.write.mode("overwrite").parquet(
-                os.path.join(matches_dir, f"batch={batch_id}")
-            )
-        similarity.pq_encode(
-            batch_df, codebooks, id_col, vec_col
-        ).write.mode("overwrite").parquet(
-            os.path.join(codes_dir, f"batch={batch_id}")
+            _write_batch(matches, matches_dir, batch_id)
+        _write_batch(
+            similarity.pq_encode(batch_df, codebooks, id_col, vec_col),
+            codes_dir,
+            batch_id,
         )
         if rerank > k:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(docs_dir, f"batch={batch_id}")
-            )
+            _write_batch(batch_df, docs_dir, batch_id)
 
-    writer = vectors.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _run_batches(
+        vectors, checkpoint, apply_batch, snapshot=(id_col, vec_col)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_heavy_hitters(
@@ -1286,7 +1271,6 @@ def run_incremental_bm25_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     shards: int | None = None,
-    available_now: bool = True,
 ):
     """The lexical-search face of the incremental contract (dedup, IVF,
     PQ have it — this closes the index family): arriving documents
@@ -1294,16 +1278,14 @@ def run_incremental_bm25_stream(
     workload probes an always-current index without EVER re-tokenizing
     the corpus.
 
-    Per batch (foreachBatch — cross-batch state IS the on-disk index):
-    the batch's postings (term, doc_id, tf, dl) land under
+    Per batch (the cross-batch state is the on-disk index): the batch's
+    postings (term, doc_id, tf, dl) land under
     ``index_dir/batch=<id>/shard=<hash(term) % shards>`` and its ONE
     stats row (n docs, total length) under ``stats_dir/batch=<id>``.
     Global statistics are never maintained in place — they are the SUM
-    of immutable per-batch partials, which is what makes the layout
-    replay-idempotent: a crash-replayed batch overwrites its own
-    ``batch=<id>`` partitions and nothing else (the dedup stream's
-    rule).  Probe cost: term-shard directory pruning keeps the scan at
-    |query terms|/shards of the index regardless of corpus size;
+    of immutable per-batch partials.  Probe cost: term-shard directory
+    pruning keeps the scan at |query terms|/shards of the index
+    regardless of corpus size;
     stats/lexicon derive from the pruned subset + the tiny partials.
 
     Query with operators/text.bm25_query_incremental; equality with a
@@ -1314,25 +1296,18 @@ def run_incremental_bm25_stream(
     n_shards = _text.INDEX_SHARDS if shards is None else shards
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
         postings, _, stats = _text.bm25_index(
             batch_df, id_col=id_col, text_col=text_col
         )
-        postings.withColumn(
-            "shard", F.pmod(F.xxhash64("term"), F.lit(n_shards)).cast("int")
-        ).write.mode("overwrite").partitionBy("shard").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
+        shard = F.pmod(F.xxhash64("term"), F.lit(n_shards)).cast("int")
+        _write_batch(
+            postings.withColumn("shard", shard), index_dir, batch_id, "shard"
         )
-        stats.write.mode("overwrite").parquet(
-            os.path.join(stats_dir, f"batch={batch_id}")
-        )
+        _write_batch(stats, stats_dir, batch_id)
 
-    writer = docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _run_batches(
+        docs, checkpoint, apply_batch, snapshot=(id_col, text_col)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_incremental_bpe_encode_stream(
@@ -1344,7 +1319,6 @@ def run_incremental_bpe_encode_stream(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
 ):
     """The TOKENIZER-SERVICE face of the BPE family (r12): a frozen
     tokenizer (``text.save_bpe_tokenizer`` — vocab + merge table +
@@ -1360,35 +1334,25 @@ def run_incremental_bpe_encode_stream(
     data, so the per-batch cost is one join wave + a tiny
     segmentation frame whatever the merge depth.
 
-    Per batch (foreachBatch): the encoded per-doc rows
-    ``(id, n_tokens, token_fingerprint)`` land under
-    ``out_dir/batch=<id>`` — immutable per-batch partitions, never
-    update-in-place, so a crash-replayed batch overwrites its own
-    partition and nothing else (the BM25/dedup-stream
-    replay-idempotence rule).  Equality with a one-shot
-    ``bpe_encode_docs(oov="subword")`` over the same documents is
+    Per batch: the encoded per-doc rows ``(id, n_tokens,
+    token_fingerprint)`` land under ``out_dir/batch=<id>`` — immutable
+    per-batch partitions, never update-in-place.  Equality with a
+    one-shot ``bpe_encode_docs(oov="subword")`` over the same documents is
     pinned by the stream test, checkpoint restart included."""
     from ultimate_data_engineering_project_spark.operators import text as _text
 
     merges, vocab, sep = _text.load_bpe_tokenizer(spark, tok_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, text_col).localCheckpoint(
-            eager=True
-        )
-        _text.bpe_encode_docs(
+        encoded = _text.bpe_encode_docs(
             batch_df, 0, id_col=id_col, text_col=text_col, sep=sep,
             vocab=vocab, merges=merges, oov="subword",
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
         )
+        _write_batch(encoded, out_dir, batch_id)
 
-    writer = docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _run_batches(
+        docs, checkpoint, apply_batch, snapshot=(id_col, text_col)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_incremental_quality_model_stream(
@@ -1400,7 +1364,6 @@ def run_incremental_quality_model_stream(
     *,
     dim: int | None = None,
     text_col: str = "text",
-    available_now: bool = True,
 ):
     """The CONTINUOUS-AGGREGATE face of the trained quality classifier
     (operators/classifier.py): arriving documents fold into the
@@ -1408,13 +1371,11 @@ def run_incremental_quality_model_stream(
     filter stays current without ever re-tokenizing history — the
     model is literally a mergeable aggregate, not a retrain.
 
-    Per batch (foreachBatch — cross-batch state IS the on-disk
-    partials): the batch's (feature, c_pos, c_neg) token counts land
-    under ``counts_dir/batch=<id>`` and its ONE doc-count row under
-    ``dstats_dir/batch=<id>``.  Immutable per-batch partials, never
-    update-in-place: a crash-replayed batch overwrites its own
-    ``batch=<id>`` partitions and nothing else (the BM25/dedup-stream
-    replay-idempotence rule).  classifier.nb_model_from_partials
+    Per batch (the cross-batch state is the on-disk partials): the
+    batch's (feature, c_pos, c_neg) token counts land under
+    ``counts_dir/batch=<id>`` and its ONE doc-count row under
+    ``dstats_dir/batch=<id>`` — immutable per-batch partials, never
+    update-in-place.  classifier.nb_model_from_partials
     derives weights from any prefix of batches — bit-identical to a
     one-shot train on the same documents (exact BIGINT statistics),
     pinned by the stream test.
@@ -1430,23 +1391,15 @@ def run_incremental_quality_model_stream(
     n_dim = _clf.DEFAULT_DIM if dim is None else dim
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(text_col).localCheckpoint(eager=True)
         label = _clf.integer_quality_label(text_col)
-        _clf.nb_token_counts(
-            batch_df, label, dim=n_dim, text_col=text_col
-        ).write.mode("overwrite").parquet(
-            os.path.join(counts_dir, f"batch={batch_id}")
+        _write_batch(
+            _clf.nb_token_counts(batch_df, label, dim=n_dim, text_col=text_col),
+            counts_dir,
+            batch_id,
         )
-        _clf.nb_doc_counts(batch_df, label).write.mode("overwrite").parquet(
-            os.path.join(dstats_dir, f"batch={batch_id}")
-        )
+        _write_batch(_clf.nb_doc_counts(batch_df, label), dstats_dir, batch_id)
 
-    writer = docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run_batches(docs, checkpoint, apply_batch, snapshot=(text_col,))
 
 
 def run_incremental_span_stream(
@@ -1463,7 +1416,6 @@ def run_incremental_span_stream(
     merge_gap: int | None = None,
     max_occ: int | None = None,
     min_anchors: int = 1,
-    available_now: bool = True,
 ):
     """Substring-span dedup on a stream (X1/X2 extension — the
     incremental face of operators/dedup.duplicated_spans): arriving
@@ -1471,15 +1423,13 @@ def run_incremental_span_stream(
     indexed so far, then their own anchors extend the index — the same
     per-batch-cost contract dedup/IVF/PQ/BM25 carry.
 
-    Per micro-batch (foreachBatch — cross-batch state IS the on-disk
-    anchor index):
+    Per micro-batch (the cross-batch state is the on-disk anchor index):
       1. probe: the batch's content-defined anchors equi-join the
-         HISTORY index (``batch < batch_id`` partitions only — the
-         replay-idempotence read) on the anchor hash; diagonal
-         islands-merge produces ``(doc_a=new, doc_b=old, a_start,
-         b_start, span_len, n_anchors)`` -> ``spans_dir/batch=<id>``;
+         HISTORY index on the anchor hash; diagonal islands-merge
+         produces ``(doc_a=new, doc_b=old, a_start, b_start, span_len,
+         n_anchors)`` -> ``spans_dir/batch=<id>``;
       2. extend: the batch's anchor frame lands under
-         ``index_dir/batch=<id>`` (overwrite — idempotent).
+         ``index_dir/batch=<id>``.
 
     ``max_occ`` here caps an anchor hash's occurrences within
     (history + batch) at probe time — a PER-PROBE boilerplate bound;
@@ -1493,7 +1443,6 @@ def run_incremental_span_stream(
     gap = 2 * w if merge_gap is None else merge_gap
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
         anchors = dedup.span_anchors(
             batch_df, w=w, stride=stride, id_col=id_col, text_col=text_col
         )
@@ -1516,21 +1465,15 @@ def run_incremental_span_stream(
                     (F.col("a.p") - F.col("b.p")).alias("diag"),
                 )
             )
-            dedup.merge_match_spans(
+            spans = dedup.merge_match_spans(
                 matches, w=w, merge_gap=gap, min_anchors=min_anchors
-            ).write.mode("overwrite").parquet(
-                os.path.join(spans_dir, f"batch={batch_id}")
             )
-        anchors.write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
-        )
+            _write_batch(spans, spans_dir, batch_id)
+        _write_batch(anchors, index_dir, batch_id)
 
-    writer = docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _run_batches(
+        docs, checkpoint, apply_batch, snapshot=(id_col, text_col)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_incremental_rollup_stream(
@@ -1543,7 +1486,6 @@ def run_incremental_rollup_stream(
     key_cols: tuple[str, ...] = ("event_type",),
     value_col: str = "value",
     bucket: str = "day",
-    available_now: bool = True,
     partials_fn=None,
 ):
     """Hypertable-style CONTINUOUS AGGREGATE on a stream (the driver
@@ -1553,12 +1495,9 @@ def run_incremental_rollup_stream(
     time-bucket rollup of an append-only event stream, touching ONLY
     the arriving rows per micro-batch.
 
-    Per micro-batch (foreachBatch): aggregate the batch into mergeable
-    partials (operators/aggregates.rollup_partials — counts, integer
-    micro-unit sum, min, max) and land them under
-    ``rollup_dir/batch=<id>`` with overwrite, the same replay-idempotent
-    layout every incremental index stream here uses: a batch replayed
-    after a crash rewrites its own partition instead of double-counting.
+    Per micro-batch: aggregate the batch into mergeable partials
+    (operators/aggregates.rollup_partials — counts, integer micro-unit
+    sum, min, max) and land them under ``rollup_dir/batch=<id>``.
     No read-modify-write of the rollup and no executor-held state — the
     partials table IS the state.
 
@@ -1590,16 +1529,9 @@ def run_incremental_rollup_stream(
             )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partials_fn(batch_df).write.mode("overwrite").parquet(
-            os.path.join(rollup_dir, f"batch={batch_id}")
-        )
+        _write_batch(partials_fn(batch_df), rollup_dir, batch_id)
 
-    writer = events.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run_batches(events, checkpoint, apply_batch)
 
 
 def read_rollup(
