@@ -16,6 +16,7 @@ from ultimate_data_engineering_project_spark.sources.kafka import (
 )
 from ultimate_data_engineering_project_spark.sources.readers import jdbc_url
 from ultimate_data_engineering_project_spark.streaming.pipelines import (
+    cdc_table_image,
     run_cdc_stream,
 )
 
@@ -517,7 +518,7 @@ def test_cdc_stream_accepts_injected_source(spark, tmp_path):
         str(tmp_path / "ckpt"), source=injected,
     )
     q.awaitTermination(120)
-    got = {r["k"]: r["v"] for r in spark.read.parquet(table_dir).collect()}
+    got = {r["k"]: r["v"] for r in cdc_table_image(spark, table_dir).collect()}
     assert got == {1: "a"}
 
 
@@ -538,7 +539,7 @@ def test_cdc_empty_table_dir_recovers_as_fresh(spark, tmp_path):
     )
     q.awaitTermination(120)
     assert q.exception() is None
-    got = {r["k"]: r["v"] for r in spark.read.parquet(str(table_dir)).collect()}
+    got = {r["k"]: r["v"] for r in cdc_table_image(spark, str(table_dir)).collect()}
     assert got == {1: "a"}
 
 

@@ -223,7 +223,7 @@ def test_cdc_stream_foreachbatch(spark, tmp_path):
     )
     q = run_cdc_stream(spark, str(env_dir), row_schema, ["k"], table_dir, ckpt)
     q.awaitTermination(120)
-    got = {r["k"]: r["v"] for r in spark.read.parquet(table_dir).collect()}
+    got = {r["k"]: r["v"] for r in cdc_table_image(spark, table_dir).collect()}
     assert got == {1: "a", 2: "x"}
 
     # second drop: update 1, delete 2, insert 3; restart from checkpoint
@@ -234,27 +234,8 @@ def test_cdc_stream_foreachbatch(spark, tmp_path):
     )
     q2 = run_cdc_stream(spark, str(env_dir), row_schema, ["k"], table_dir, ckpt)
     q2.awaitTermination(120)
-    got = {r["k"]: r["v"] for r in spark.read.parquet(table_dir).collect()}
+    got = {r["k"]: r["v"] for r in cdc_table_image(spark, table_dir).collect()}
     assert got == {1: "b", 3: "c"}
-
-    # crash-window recovery (r8): the whole-image write stages to .tmp
-    # then swaps via two renames.  Simulate dying between them — the
-    # live path gone, the full image in .old — and verify the next
-    # batch RESTORES it instead of reseeding an empty table from the
-    # PATH_NOT_FOUND branch (which silently lost all history before).
-    import shutil
-
-    shutil.move(table_dir, table_dir + ".old")
-    assert not os.path.exists(table_dir)
-    (env_dir / "batch3.jsonl").write_text(
-        '{"op":"c","ts_ms":6,"before":null,"after":"{\\"k\\":4,\\"v\\":\\"d\\"}"}\n'
-    )
-    q3 = run_cdc_stream(spark, str(env_dir), row_schema, ["k"], table_dir, ckpt)
-    q3.awaitTermination(120)
-    got = {r["k"]: r["v"] for r in spark.read.parquet(table_dir).collect()}
-    assert got == {1: "b", 3: "c", 4: "d"}  # history survived the crash
-    assert not os.path.exists(table_dir + ".old")
-    assert not os.path.exists(table_dir + ".tmp")
 
 
 def _env_line(op, ts_ms, before, after):
@@ -270,110 +251,109 @@ def _env_line(op, ts_ms, before, after):
     )
 
 
-def _snapshot_bucket(table_dir, bucket):
-    """{relative file path: md5 of bytes} for one bucket directory."""
+def _table_bytes(table_dir):
+    """{relative path: md5 of bytes} for every data file of a table."""
     import hashlib
     import pathlib
 
-    root = pathlib.Path(table_dir) / f"__bucket={bucket}"
+    root = pathlib.Path(table_dir)
     return {
         str(p.relative_to(root)): hashlib.md5(p.read_bytes()).hexdigest()
-        for p in sorted(root.rglob("*"))
-        if p.is_file() and not p.name.startswith(("_", "."))
+        for p in sorted(root.rglob("*.parquet"))
     }
+
+
+_KV = T.StructType(
+    [T.StructField("k", T.IntegerType()), T.StructField("v", T.StringType())]
+)
+
+
+def _land(env_dir, i, lines):
+    """Land envelope file ``i``; its mtime orders it after every file
+    with a smaller ``i``, so the stream reads the files in order."""
+    p = env_dir / f"b{i:03d}.jsonl"
+    p.write_text("\n".join(lines) + "\n")
+    os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def _drain_cdc(spark, env_dir, table_dir, ckpt, **kw):
+    """Run the CDC stream over ``env_dir`` one file per batch until it
+    is drained; returns the finished query."""
+    source = (
+        spark.readStream.format("text")
+        .option("maxFilesPerTrigger", 1)
+        .load(str(env_dir))
+    )
+    q = run_cdc_stream(
+        spark, None, _KV, ["k"], table_dir, ckpt, source=source, **kw
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    return q
+
+
+def _image(spark, table_dir):
+    return {r["k"]: r["v"] for r in cdc_table_image(spark, table_dir).collect()}
 
 
 def test_cdc_stream_bucketed_partition_scoped(spark, tmp_path):
-    """T1 at the 100 TB shape: n_buckets partitions the table image by
-    key hash, and a micro-batch rewrites ONLY the buckets its keys hash
-    into — untouched bucket files are byte-identical after the batch,
-    and a bucket whose keys are all deleted disappears from disk."""
-    import os
+    """T1 at the 100 TB shape: a micro-batch writes only its own
+    changes — every data file on disk before the batch is
+    byte-identical after it, and the one new delta holds the batch's
+    winners only.  Keys deleted in a delta never resurface, before the
+    fold or after it, and the folded base holds the bucket layout."""
+    from ultimate_data_engineering_project_spark.sources import manifest
+    from ultimate_data_engineering_project_spark.streaming.pipelines import (
+        CDC_FOLD_DELTAS,
+    )
 
     n_buckets = 8
-    row_schema = T.StructType(
-        [T.StructField("k", T.IntegerType()), T.StructField("v", T.StringType())]
-    )
-    # map candidate keys to their hash bucket so the test can pick keys
-    # per scenario deterministically
-    kb = {
-        r["k"]: r["b"]
-        for r in spark.createDataFrame([Row(k=i) for i in range(1, 60)])
-        .select("k", cdc_bucket_expr(["k"], n_buckets).alias("b"))
-        .collect()
-    }
-    by_bucket = {}
-    for k, b in kb.items():
-        by_bucket.setdefault(b, []).append(k)
-    buckets = [b for b, ks in sorted(by_bucket.items()) if len(ks) >= 2]
-    assert len(buckets) >= 3
-    b_untouched, b_deleted, b_updated = buckets[:3]
-    untouched_keys = by_bucket[b_untouched][:2]
-    deleted_keys = by_bucket[b_deleted][:2]
-    updated_key = by_bucket[b_updated][0]
-
     env_dir = tmp_path / "envelopes"
     env_dir.mkdir()
     table_dir = str(tmp_path / "table")
     ckpt = str(tmp_path / "ckpt")
-
-    seed_keys = untouched_keys + deleted_keys + [updated_key]
-    (env_dir / "batch1.jsonl").write_text(
-        "\n".join(
-            _env_line("c", i + 1, None, {"k": k, "v": f"v{k}"})
-            for i, k in enumerate(seed_keys)
-        )
-        + "\n"
-    )
-    q = run_cdc_stream(
-        spark, str(env_dir), row_schema, ["k"], table_dir, ckpt, n_buckets=n_buckets
-    )
-    q.awaitTermination(120)
-    assert {r["k"]: r["v"] for r in cdc_table_image(spark, table_dir).collect()} == {
-        k: f"v{k}" for k in seed_keys
-    }
-    # image hides the internal bucket column
-    assert "__bucket" not in cdc_table_image(spark, table_dir).columns
-    # only the three seeded buckets exist on disk
-    on_disk = {
-        int(d.split("=")[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("__bucket=")
-    }
-    assert on_disk == {b_untouched, b_deleted, b_updated}
-    before = _snapshot_bucket(table_dir, b_untouched)
+    seed_keys = list(range(1, 21))
+    _land(env_dir, 0, [_env_line("c", k, None, {"k": k, "v": f"v{k}"}) for k in seed_keys])
+    _drain_cdc(spark, env_dir, table_dir, ckpt, n_buckets=n_buckets)
+    assert _image(spark, table_dir) == {k: f"v{k}" for k in seed_keys}
+    # image hides the internal columns
+    assert cdc_table_image(spark, table_dir).columns == ["k", "v"]
+    before = _table_bytes(table_dir)
     assert before  # non-empty snapshot: the assertion below has teeth
 
-    # batch 2: update one key in b_updated, delete EVERY key in b_deleted
-    (env_dir / "batch2.jsonl").write_text(
-        "\n".join(
-            [_env_line("u", 100, {"k": updated_key, "v": f"v{updated_key}"},
-                       {"k": updated_key, "v": "updated"})]
-            + [
-                _env_line("d", 101 + i, {"k": k, "v": f"v{k}"}, None)
-                for i, k in enumerate(deleted_keys)
-            ]
-        )
-        + "\n"
-    )
-    q2 = run_cdc_stream(
-        spark, str(env_dir), row_schema, ["k"], table_dir, ckpt, n_buckets=n_buckets
-    )
-    q2.awaitTermination(120)
-
-    expected = {k: f"v{k}" for k in untouched_keys}
+    # batch 1: two changes to one key (the later wins), two deletes
+    deleted_keys, updated_key = [3, 4], 7
+    _land(env_dir, 1, [
+        _env_line("u", 100, {"k": updated_key, "v": "v7"}, {"k": updated_key, "v": "mid"}),
+        _env_line("u", 101, {"k": updated_key, "v": "mid"}, {"k": updated_key, "v": "updated"}),
+    ] + [_env_line("d", 102 + k, {"k": k, "v": f"v{k}"}, None) for k in deleted_keys])
+    _drain_cdc(spark, env_dir, table_dir, ckpt, n_buckets=n_buckets)
+    expected = {k: f"v{k}" for k in seed_keys if k not in deleted_keys}
     expected[updated_key] = "updated"
-    assert {r["k"]: r["v"] for r in cdc_table_image(spark, table_dir).collect()} == expected
-    # untouched bucket: every file byte-identical (dynamic overwrite
-    # never rewrote it)
-    assert _snapshot_bucket(table_dir, b_untouched) == before
-    # fully-deleted bucket: directory dropped, keys do not resurface
-    on_disk = {
-        int(d.split("=")[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("__bucket=")
-    }
-    assert on_disk == {b_untouched, b_updated}
+    assert _image(spark, table_dir) == expected
+    after = _table_bytes(table_dir)
+    # untouched data: every earlier file byte-identical, nothing removed
+    assert {p: after[p] for p in before} == before
+    new = [p for p in after if p not in before]
+    assert new and all(p.startswith("batch=1/") for p in new)
+    assert spark.read.parquet(table_dir + "/batch=1").count() == 3
+
+    # more batches until the fold; deleted keys stay gone across it
+    for i in range(2, CDC_FOLD_DELTAS):
+        _land(env_dir, i, [_env_line("c", 200 + i, None, {"k": 100 + i, "v": "n"})])
+        expected[100 + i] = "n"
+    _drain_cdc(spark, env_dir, table_dir, ckpt, n_buckets=n_buckets)
+    ptr = manifest.read_pointer(spark, table_dir)
+    assert ptr["deltas"] == [] and ptr["base"] == "gen-000001"
+    assert ptr["n_buckets"] == n_buckets
+    assert not manifest.list_children(spark, table_dir, "batch=")
+    assert _image(spark, table_dir) == expected
+    # the base is clustered by bucket: no bucket spans two files
+    base = spark.read.parquet(table_dir + "/gen-000001").select(
+        F.input_file_name().alias("f"),
+        cdc_bucket_expr(["k"], n_buckets).alias("b"),
+    ).distinct().collect()
+    assert len({r["b"] for r in base}) == len(base)
 
 
 def test_cdc_stream_bucket_mode_guards(spark, tmp_path):
@@ -429,6 +409,243 @@ def test_cdc_stream_bucket_mode_guards(spark, tmp_path):
         run_cdc_stream(
             spark, str(env_dir), bad_schema, ["k"], table_dir, str(tmp_path / "ck5")
         )
+
+
+def _churn_batches(n):
+    """``n`` batches of envelope lines, and the image they fold to.
+    Batch i upserts keys i and i+1 and deletes key i-2, so deletes hit
+    keys written by earlier batches."""
+    batches, image, ts_ms = [], {}, 0
+    for i in range(n):
+        lines = []
+        for k in (i, i + 1):
+            ts_ms += 1
+            before = {"k": k, "v": image[k]} if k in image else None
+            image[k] = f"{k}@{i}"
+            lines.append(_env_line("u" if before else "c", ts_ms, before,
+                                   {"k": k, "v": image[k]}))
+        if i >= 2:
+            ts_ms += 1
+            lines.append(_env_line("d", ts_ms, {"k": i - 2, "v": image.pop(i - 2)}, None))
+        batches.append(lines)
+    return batches, image
+
+
+def _uncommit_last_batch(ckpt):
+    """Delete the checkpoint's last commit record (a crash between the
+    batch's writes and its checkpoint commit); returns its batch id."""
+    commits = os.path.join(ckpt, "commits")
+    n = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(n)))
+    crc = os.path.join(commits, f".{n}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    return n
+
+
+@pytest.mark.parametrize("n_buckets", [None, 4])
+def test_cdc_stream_uri_table_dir(spark, tmp_path, n_buckets):
+    """A ``file://`` table_dir gives the same image as a plain path in
+    both modes, across a fold, and leaves no staging dir behind."""
+    from ultimate_data_engineering_project_spark.streaming.pipelines import (
+        CDC_FOLD_DELTAS,
+    )
+
+    env_dir = tmp_path / "env"
+    env_dir.mkdir()
+    batches, want = _churn_batches(CDC_FOLD_DELTAS + 1)
+    for i, lines in enumerate(batches):
+        _land(env_dir, i, lines)
+    plain, uri = str(tmp_path / "plain"), (tmp_path / "uri").as_uri()
+    _drain_cdc(spark, env_dir, plain, str(tmp_path / "ck1"), n_buckets=n_buckets)
+    _drain_cdc(spark, env_dir, uri, (tmp_path / "ck2").as_uri(), n_buckets=n_buckets)
+    assert _image(spark, uri) == _image(spark, plain) == want
+    assert sorted(os.listdir(tmp_path / "uri")) == ["_current", "batch=8", "gen-000001"]
+    assert not (tmp_path / "uri.tmp").exists()
+
+
+def test_cdc_replay_after_pointer_flip(spark, tmp_path):
+    """A crash after the pointer flip, before the checkpoint commit:
+    the replayed batch id is already named, so the replay writes
+    nothing — same image, every delta file byte-identical."""
+    env_dir = tmp_path / "env"
+    env_dir.mkdir()
+    batches, want = _churn_batches(3)
+    for i, lines in enumerate(batches):
+        _land(env_dir, i, lines)
+    table_dir, ckpt = str(tmp_path / "table"), str(tmp_path / "ckpt")
+    _drain_cdc(spark, env_dir, table_dir, ckpt)
+    assert _image(spark, table_dir) == want
+    files = _table_bytes(table_dir)
+    assert len([p for p in files if p.startswith("batch=")]) >= 3
+
+    n = _uncommit_last_batch(ckpt)
+    assert n == 2
+    q = _drain_cdc(spark, env_dir, table_dir, ckpt)
+    assert [p.batchId for p in q.recentProgress] == [n]
+    assert _image(spark, table_dir) == want
+    assert _table_bytes(table_dir) == files
+
+
+def test_cdc_crash_before_flip_ignores_orphan_delta(spark, tmp_path):
+    """A crash after a batch wrote ``batch=<id>`` but before the
+    pointer named it: readers ignore the orphan, and the replay
+    overwrites it and commits the right image."""
+    from ultimate_data_engineering_project_spark.sources import manifest
+
+    env_dir = tmp_path / "env"
+    env_dir.mkdir()
+    batches, want = _churn_batches(3)
+    table_dir, ckpt = str(tmp_path / "table"), str(tmp_path / "ckpt")
+    _land(env_dir, 0, batches[0])
+    _land(env_dir, 1, batches[1])
+    _drain_cdc(spark, env_dir, table_dir, ckpt)
+    two_batches = _image(spark, table_dir)
+    flipped_before = manifest.read_pointer(spark, table_dir)
+    _land(env_dir, 2, batches[2])
+    _drain_cdc(spark, env_dir, table_dir, ckpt)
+    assert _image(spark, table_dir) == want
+
+    # roll back to the moment before batch 2's flip, with a torn delta
+    manifest.write_pointer(spark, table_dir, flipped_before)
+    n = _uncommit_last_batch(ckpt)
+    torn = T.StructType(
+        _KV.fields
+        + [T.StructField("__cdc_deleted", T.BooleanType()),
+           T.StructField("__cdc_batch", T.LongType())]
+    )
+    spark.createDataFrame([(99, "torn", False, n)], torn).write.mode(
+        "overwrite"
+    ).parquet(f"{table_dir}/batch={n}")
+    assert _image(spark, table_dir) == two_batches
+
+    q = _drain_cdc(spark, env_dir, table_dir, ckpt)
+    assert [p.batchId for p in q.recentProgress] == [n]
+    assert _image(spark, table_dir) == want
+    assert manifest.read_pointer(spark, table_dir)["deltas"] == [0, 1, 2]
+
+
+def test_cdc_crash_inside_fold_orphan_generation(spark, tmp_path):
+    """A crash inside a fold leaves a ``gen-`` prefix the pointer does
+    not name: readers ignore it and the next fold writes it again.  A
+    key deleted in a folded delta stays absent from the new base, and
+    a delete after the fold removes a base key."""
+    from ultimate_data_engineering_project_spark.sources import manifest
+    from ultimate_data_engineering_project_spark.streaming.pipelines import (
+        CDC_FOLD_DELTAS,
+    )
+
+    env_dir = tmp_path / "env"
+    env_dir.mkdir()
+    batches, want = _churn_batches(CDC_FOLD_DELTAS + 1)
+    table_dir, ckpt = str(tmp_path / "table"), str(tmp_path / "ckpt")
+    for i in range(CDC_FOLD_DELTAS - 1):
+        _land(env_dir, i, batches[i])
+    _drain_cdc(spark, env_dir, table_dir, ckpt)
+    spark.createDataFrame([(99, "orphan")], _KV).write.parquet(
+        table_dir + "/gen-000001"
+    )
+    assert _image(spark, table_dir) == _churn_batches(CDC_FOLD_DELTAS - 1)[1]
+
+    # batch 7 folds the 8 deltas; batch 8 deletes a key of the new base
+    _land(env_dir, CDC_FOLD_DELTAS - 1, batches[CDC_FOLD_DELTAS - 1])
+    _land(env_dir, CDC_FOLD_DELTAS, batches[CDC_FOLD_DELTAS])
+    _drain_cdc(spark, env_dir, table_dir, ckpt)
+    ptr = manifest.read_pointer(spark, table_dir)
+    assert (ptr["generation"], ptr["base"], ptr["deltas"]) == (
+        1, "gen-000001", [CDC_FOLD_DELTAS]
+    )
+    base = {r["k"]: r["v"] for r in spark.read.parquet(table_dir + "/gen-000001").collect()}
+    assert base == _churn_batches(CDC_FOLD_DELTAS)[1]
+    deleted_in_delta = CDC_FOLD_DELTAS - 3
+    assert deleted_in_delta not in base
+    assert CDC_FOLD_DELTAS - 2 in base
+    assert _image(spark, table_dir) == want
+    assert CDC_FOLD_DELTAS - 2 not in want
+
+
+def test_cdc_new_checkpoint_folds_previous_deltas(spark, tmp_path):
+    """A stream with a fresh checkpoint numbers its batches from 0
+    again: it folds the previous stream's deltas first, so its batch 0
+    is neither mistaken for a replay nor written over theirs."""
+    from ultimate_data_engineering_project_spark.sources import manifest
+
+    env1, env2 = tmp_path / "env1", tmp_path / "env2"
+    env1.mkdir()
+    env2.mkdir()
+    table_dir = str(tmp_path / "table")
+    _land(env1, 0, [_env_line("c", 1, None, {"k": 1, "v": "a"})])
+    _land(env1, 1, [_env_line("c", 2, None, {"k": 2, "v": "b"})])
+    _drain_cdc(spark, env1, table_dir, str(tmp_path / "ck1"))
+    _land(env2, 0, [_env_line("u", 3, {"k": 1, "v": "a"}, {"k": 1, "v": "a2"})])
+    _drain_cdc(spark, env2, table_dir, str(tmp_path / "ck2"))
+    assert _image(spark, table_dir) == {1: "a2", 2: "b"}
+    ptr = manifest.read_pointer(spark, table_dir)
+    assert (ptr["base"], ptr["deltas"], ptr["stream"]) == (
+        "gen-000001", [0], str(tmp_path / "ck2")
+    )
+
+
+@pytest.mark.parametrize("n_buckets", [None, 4])
+def test_cdc_adopts_legacy_flat_table(spark, tmp_path, n_buckets):
+    """A table written by the flat layout of earlier versions (no
+    pointer) is adopted by the first batch as ``gen-000001``, and its
+    flat files are deleted."""
+    table_dir = str(tmp_path / "table")
+    legacy = spark.createDataFrame([(1, "a"), (2, "b"), (4, "d")], _KV)
+    if n_buckets is None:
+        legacy.write.parquet(table_dir)
+    else:
+        legacy.withColumn("__bucket", cdc_bucket_expr(["k"], n_buckets)).write.partitionBy(
+            "__bucket"
+        ).parquet(table_dir)
+    assert _image(spark, table_dir) == {1: "a", 2: "b", 4: "d"}
+
+    env_dir = tmp_path / "env"
+    env_dir.mkdir()
+    _land(env_dir, 0, [
+        _env_line("u", 1, {"k": 1, "v": "a"}, {"k": 1, "v": "a2"}),
+        _env_line("d", 2, {"k": 2, "v": "b"}, None),
+        _env_line("c", 3, None, {"k": 3, "v": "c"}),
+    ])
+    _drain_cdc(spark, env_dir, table_dir, str(tmp_path / "ckpt"), n_buckets=n_buckets)
+    assert _image(spark, table_dir) == {1: "a2", 3: "c", 4: "d"}
+    assert sorted(os.listdir(table_dir)) == ["_current", "batch=0", "gen-000001"]
+    adopted = spark.read.parquet(table_dir + "/gen-000001")
+    assert adopted.columns == ["k", "v"]
+    assert {r["k"]: r["v"] for r in adopted.collect()} == {1: "a", 2: "b", 4: "d"}
+
+
+def test_cdc_stream_jobs_per_batch(spark, tmp_path):
+    """A batch that does not fold runs at most 3 jobs (its per-key
+    reduction and its delta write); a folding batch, bucketed and onto
+    an existing base, runs at most 6.  No batch lists or probes the
+    base."""
+    from ultimate_data_engineering_project_spark.streaming.pipelines import (
+        CDC_FOLD_DELTAS,
+    )
+
+    env_dir = tmp_path / "env"
+    env_dir.mkdir()
+    batches, want = _churn_batches(2 * CDC_FOLD_DELTAS + 1)
+    table_dir, ckpt = str(tmp_path / "table"), str(tmp_path / "ckpt")
+    for i in range(2 * CDC_FOLD_DELTAS - 2):
+        _land(env_dir, i, batches[i])
+    _drain_cdc(spark, env_dir, table_dir, ckpt, n_buckets=4)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(i):
+        _land(env_dir, i, batches[i])
+        q = _drain_cdc(spark, env_dir, table_dir, ckpt, n_buckets=4)
+        assert [p.batchId for p in q.recentProgress] == [i]
+        return len(tracker.getJobIdsForGroup(str(q.runId)))
+
+    plain = jobs(2 * CDC_FOLD_DELTAS - 2)
+    folding = jobs(2 * CDC_FOLD_DELTAS - 1)
+    after_fold = jobs(2 * CDC_FOLD_DELTAS)
+    assert plain <= 3 and after_fold <= 3, (plain, after_fold)
+    assert folding <= 6, folding
+    assert _image(spark, table_dir) == want
 
 
 def test_stream_running_totals_stateful(spark, sf_dir, tmp_path):
@@ -762,7 +979,7 @@ def test_cdc_quarantine_routes_corrupt_envelopes(spark, tmp_path):
         str(tmp_path / "ckpt"), quarantine_dir=qdir,
     )
     q.awaitTermination(120)
-    img = spark.read.parquet(table_dir)
+    img = cdc_table_image(spark, table_dir)
     assert {(r.k, r.v) for r in img.collect()} == {(1, "a")}
     dlq = spark.read.parquet(qdir)
     # DLQ rows land under batch=<id> partitions (replay-idempotent
@@ -999,7 +1216,7 @@ def test_cdc_stream_avro_envelope_end_to_end(spark, tmp_path):
     q.awaitTermination(300)
     got = {
         r["id"]: (r["name"], r["amount"])
-        for r in spark.read.parquet(table_dir).collect()
+        for r in cdc_table_image(spark, table_dir).collect()
     }
     assert got == {
         1: ("alicia", Decimal("11.25")),
@@ -1107,7 +1324,7 @@ def test_cdc_stream_evolving_avro_envelope(spark, tmp_path):
     q.awaitTermination(300)
     got = {
         r["id"]: (r["name"], r["email"], r["tier"])
-        for r in spark.read.parquet(table_dir).collect()
+        for r in cdc_table_image(spark, table_dir).collect()
     }
     assert got == {
         1: ("a2", "a@x", "gold"),        # updated under v2
@@ -1687,8 +1904,7 @@ def test_incremental_dedup_stream_uri_paths(spark, sf_dir, tmp_path):
 
 def _replay_case(spark, name, frame, root):
     """(start(stream) -> query, the dirs it writes) for one of the
-    history-probing streams; config is built once so both runs share
-    it."""
+    incremental streams; config is built once so both runs share it."""
     from ultimate_data_engineering_project_spark.operators import similarity
     from ultimate_data_engineering_project_spark.streaming import pipelines as sp
 
@@ -1718,15 +1934,44 @@ def _replay_case(spark, name, frame, root):
             ),
             [out, index, docs],
         )
+    if name == "span":
+        return (
+            lambda s: sp.run_incremental_span_stream(
+                spark, s, index, out, ckpt, w=24, stride=4
+            ),
+            [out, index],
+        )
+    if name == "bm25":
+        return (
+            lambda s: sp.run_incremental_bm25_stream(spark, s, index, out, ckpt),
+            [index, out],
+        )
+    if name == "bpe_encode":
+        from ultimate_data_engineering_project_spark.operators import text
+
+        tok = root + "/tok"
+        text.save_bpe_tokenizer(frame, 6, tok, batch_pairs=4)
+        return (
+            lambda s: sp.run_incremental_bpe_encode_stream(spark, s, tok, out, ckpt),
+            [out],
+        )
+    if name == "quality_model":
+        return (
+            lambda s: sp.run_incremental_quality_model_stream(
+                spark, s, index, out, ckpt
+            ),
+            [index, out],
+        )
     return (
-        lambda s: sp.run_incremental_span_stream(
-            spark, s, index, out, ckpt, w=24, stride=4
-        ),
-        [out, index],
+        lambda s: sp.run_incremental_rollup_stream(spark, s, out, ckpt),
+        [out],
     )
 
 
-@pytest.mark.parametrize("name", ["dedup", "ann", "pq", "span"])
+@pytest.mark.parametrize(
+    "name",
+    ["dedup", "ann", "pq", "span", "bm25", "bpe_encode", "quality_model", "rollup"],
+)
 def test_incremental_stream_replay_after_uncommitted_batch(
     spark, sf_dir, tmp_path, name
 ):
@@ -1738,9 +1983,11 @@ def test_incremental_stream_replay_after_uncommitted_batch(
 
     from ultimate_data_engineering_project_spark.sources.readers import load_table
 
-    table, id_col = (
-        ("embeddings", "vec_id") if name in ("ann", "pq") else ("documents", "doc_id")
-    )
+    table, id_col = {
+        "ann": ("embeddings", "vec_id"),
+        "pq": ("embeddings", "vec_id"),
+        "rollup": ("events", "event_id"),
+    }.get(name, ("documents", "doc_id"))
     frame = load_table(spark, sf_dir, table)
     stream = _three_file_batches(spark, frame, id_col, str(tmp_path / "src"))
     root = str(tmp_path / name)

@@ -80,25 +80,6 @@ def _dist2_int(a: Column, b: Column) -> Column:
     )
 
 
-def _nearest(cents_lit: Column, qv: Column) -> Column:
-    """struct<dist2, cid> of the nearest centroid (ties -> lowest cid;
-    array_sort on struct<bigint,int> orders lexicographically).
-
-    Reference semantics — the hot path uses :func:`_dist_array_sql`
-    instead: higher-order functions (transform/aggregate/zip_with)
-    are ALWAYS interpreted in Spark (no whole-stage codegen), so this
-    per-centroid fold costs k·dim lambda evaluations per row; the
-    unrolled arithmetic expression compiles."""
-    return F.array_sort(
-        F.transform(
-            cents_lit,
-            lambda c, i: F.struct(
-                _dist2_int(qv, c).alias("dist2"), i.alias("cid")
-            ),
-        )
-    )[0]
-
-
 def _argmin_books(Q, books):
     """Per-book nearest centroid: book j covers the j-th ``d``-wide
     slice of each row of the int64 matrix ``Q`` (``d`` = the books'
@@ -374,15 +355,6 @@ def semantic_dedup_pairs(
     return assigned.groupBy("cluster_id").applyInPandas(
         pairs_fn,
         "cluster_id long, a_id long, b_id long, cosine_sim double",
-    )
-
-
-def cluster_summary(assigned: DataFrame) -> DataFrame:
-    """Per-cluster size + total inertia (decimal(38,0) so a trillion-row
-    cluster's dist² sum cannot wrap int64 — the fraud-trainer rule)."""
-    return assigned.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.sum(F.col("dist2").cast("decimal(38,0)")).alias("inertia"),
     )
 
 

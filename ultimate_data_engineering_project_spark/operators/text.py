@@ -51,10 +51,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def stopword_count(text: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    return F.size(F.filter(tokens(text), lambda t: t.isin(*stopwords)))
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document quality features: token count, char count, mean
     token length, stopword ratio, distinct-token ratio.  The standard

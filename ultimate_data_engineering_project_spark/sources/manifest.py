@@ -12,6 +12,13 @@ follow the pointer (``readers.read_current`` / ``read_rollup``):
   ``gen-000001/``    immutable data prefixes; a compaction writes a
   ``gen-000002/``    NEW generation and never touches an old one
 
+The CDC table of ``streaming.pipelines.run_cdc_stream`` is the second
+user of the pointer.  Its pointer also names the committed
+``batch=<id>`` deltas beside the base generation: every micro-batch
+writes one delta and flips the pointer through ``commit``, and a fold
+writes the next ``gen-`` prefix from the base and the deltas.  Its
+reader is ``cdc_table_image``.
+
 The pointer flip is the only mutation of shared state, and it is a
 single small-object write:
 
@@ -187,8 +194,11 @@ def list_flat_sources(spark, table_dir: str) -> list[str]:
     def keep(n: str) -> bool:
         # gen- prefixes are the new layout; "_"/"." children are
         # metadata Spark would skip in a directory read but would choke
-        # on in an explicit file list (_SUCCESS, .crc, _current*)
-        return not (n.startswith("gen-") or n.startswith(("_", ".")))
+        # on in an explicit file list (_SUCCESS, .crc, _current*).
+        # Spark's own rule keeps "_" names with "=": partition dirs
+        # such as __bucket=3
+        hidden = n.startswith(".") or (n.startswith("_") and "=" not in n)
+        return not (n.startswith("gen-") or hidden)
 
     if _is_local(table_dir):
         root = _local_path(table_dir)

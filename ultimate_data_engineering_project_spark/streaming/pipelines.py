@@ -28,12 +28,11 @@ way against temp dirs.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql import types as T
 
 from ultimate_data_engineering_project_spark.schemas import EVENTS
+from ultimate_data_engineering_project_spark.sources import manifest
 
 # Debezium-style change envelope (T1 — the payload Debezium would put on
 # Kafka for the OLTP tables; reference docker-compose.yaml:74-97).
@@ -455,8 +454,6 @@ def _run_batches(frame: DataFrame, checkpoint: str, body, *, snapshot=None):
 def _write_batch(df: DataFrame, root: str, batch_id: int, *partition_by: str):
     """Overwrite ``root/batch=<batch_id>`` with ``df`` (see
     `_run_batches`), optionally partitioned by ``partition_by``."""
-    from ultimate_data_engineering_project_spark.sources import manifest
-
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -471,8 +468,6 @@ def _read_batch_partitions(
     rows.  The partitions are listed through the manifest layer, so
     local paths, URIs and object stores resolve alike; ``basePath``
     keeps partition discovery rooted."""
-    from ultimate_data_engineering_project_spark.sources import manifest
-
     hist = [
         manifest.join(root, n)
         for n in manifest.list_children(spark, root, "batch=")
@@ -482,6 +477,15 @@ def _read_batch_partitions(
         return None
     df = spark.read.option("basePath", root).parquet(*hist).drop("batch")
     return df if df.limit(1).count() else None
+
+
+#: Internal columns of a CDC delta row: the delete flag, and the batch
+#: id that orders the deltas on read.
+CDC_DELETED = "__cdc_deleted"
+CDC_BATCH = "__cdc_batch"
+#: A CDC table folds its deltas into a new base generation once the
+#: pointer names this many.
+CDC_FOLD_DELTAS = 8
 
 
 def run_cdc_stream(
@@ -498,28 +502,48 @@ def run_cdc_stream(
 ):
     """T1 end-to-end: a streaming CDC pipeline.  Reads Debezium-style
     envelope JSON lines from a directory (the Kafka-topic stand-in),
-    parses them, and folds each micro-batch into the parquet table image
-    at ``table_dir`` via foreachBatch + cdc_apply_batch (last-writer-
-    wins upsert, op='d' deletes).
+    parses them, and applies each micro-batch to the table at
+    ``table_dir`` (last-writer-wins upsert, op='d' deletes).
 
-    With ``n_buckets`` set (the 100 TB form), the table image is
-    partitioned by a key-hash bucket (``__bucket=pmod(xxhash64(keys),
-    n)``) and each micro-batch rewrites ONLY the buckets its changed
-    keys hash into, via dynamic partition overwrite: partition pruning
-    limits the read to touched buckets and untouched bucket files are
-    never rewritten (asserted byte-identical in tests).  At scale this
-    makes per-batch write cost proportional to the churn, not the table
-    — the same partition-scoped shape a Delta/Iceberg MERGE produces.
-    ``n_buckets=None`` keeps the simple whole-image rewrite (fine for
-    small dimension tables).
+    Layout: merge-on-read under the manifest pointer
+    (sources/manifest.py).  ``table_dir/_current`` names the base
+    generation ``gen-NNNNNN/`` and the committed deltas
+    ``batch=<id>/``, and records the schema, keys and ``n_buckets``.
+    Each micro-batch reduces its changes to one winner per key (the
+    `cdc_apply_batch` rule), writes them as the delta ``batch=<id>``
+    through `_write_batch` (deletes carry a flag in an internal
+    column), and flips the pointer to name it.  A batch writes only its
+    own changes; the base is not read.  Once the pointer names
+    ``CDC_FOLD_DELTAS`` deltas, the batch folds them into the next base
+    generation, flips the pointer to it with no deltas, and deletes the
+    folded ``batch=`` prefixes.  `cdc_table_image` is the only
+    supported reader.
 
-    The foreachBatch body is the same pure function the batch tests
-    verify; with a transactional table format it becomes MERGE INTO.
+    Crash discipline, with the Structured Streaming recipe of an
+    idempotent write keyed by batch id plus one commit record:
+      * crash before the flip: the ``batch=<id>`` orphan is not named,
+        so readers ignore it, and the replay overwrites it;
+      * crash after the flip: the replayed batch id is already named,
+        so the replay writes nothing (if that batch also folded, the
+        replay writes its delta again over a base that holds it, and
+        the image is unchanged);
+      * crash inside a fold: the new ``gen-`` prefix is an orphan the
+        pointer does not name; it is deleted at the next commit and the
+        next fold writes it again.
+    A stream with a different ``checkpoint`` folds the deltas left by
+    the previous one before its first write, so its batch ids never
+    collide with theirs.  The table has a single writer.
 
-    ``__bucket`` is a reserved internal column name: a ``row_schema``
-    that already contains it is rejected up front, and a bucketed /
-    unbucketed mode mismatch against an existing table image raises a
-    configuration error instead of failing obscurely per-batch.
+    ``n_buckets`` clusters each base generation by key-hash bucket
+    (``pmod(xxhash64(keys), n)``): every base file holds whole buckets.
+    It is recorded in the pointer, and a bucketed / unbucketed mode
+    mismatch against an existing table raises a configuration error.
+    ``__bucket`` and the delta's internal column names are reserved: a
+    ``row_schema`` that contains one is rejected up front.
+
+    A ``table_dir`` with data files but no pointer was written by the
+    flat layout of earlier versions: the first batch adopts it as
+    ``gen-000001`` and deletes the flat files.
 
     ``quarantine_dir`` routes corrupt envelope frames (unparseable
     JSON, bad op, missing images) to a dead-letter parquet table with
@@ -546,9 +570,10 @@ def run_cdc_stream(
     ``strip_confluent_envelope(bad_magic='keep')``), so combining
     ``avro_schema`` with ``quarantine_dir`` is a config error.
     """
-    if "__bucket" in row_schema.fieldNames():
+    reserved = {"__bucket", CDC_DELETED, CDC_BATCH} & set(row_schema.fieldNames())
+    if reserved:
         raise ValueError(
-            "'__bucket' is reserved for internal CDC bucketing; "
+            f"{sorted(reserved)} are reserved for internal CDC columns; "
             "rename the column in row_schema"
         )
     if avro_schema is not None and quarantine_dir is not None:
@@ -579,8 +604,6 @@ def run_cdc_stream(
         )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         if avro_schema is not None:
             changes = parse_avro_envelope(batch_df, avro_schema, row_schema)
         elif quarantine_dir is not None:
@@ -594,114 +617,151 @@ def run_cdc_stream(
                 _write_batch(quarantined, quarantine_dir, batch_id)
         else:
             changes = parse_debezium_envelope(batch_df, row_schema)
-        import shutil
-
-        old = table_dir.rstrip("/") + ".old"
-        if not os.path.exists(table_dir) and os.path.exists(old):
-            # crash landed between the two swap renames below: the full
-            # pre-batch image is intact in .old — restore it instead of
-            # letting the PATH_NOT_FOUND branch reseed an empty table
-            shutil.move(old, table_dir)
-        try:
-            current = spark.read.parquet(table_dir)
-        except AnalysisException as ex:
-            # ONLY "no committed data" means "fresh table": a missing
-            # path, or an existing-but-empty dir (UNABLE_TO_INFER_SCHEMA
-            # — e.g. the first-ever batch crashed after the dir was
-            # created but before any file committed; refusing it would
-            # wedge restart forever).  Any other read failure (corrupt
-            # footer, permissions, transient FS error) must propagate —
-            # silently re-seeding an empty image there would masquerade
-            # data loss as a first run.
-            cond = ex.getCondition() if hasattr(ex, "getCondition") else None
-            if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-                raise
-            current = spark.createDataFrame([], row_schema)
-            if n_buckets is not None:
-                current = current.withColumn(
-                    "__bucket", cdc_bucket_expr(keys, n_buckets)
-                )
-        else:
-            table_bucketed = "__bucket" in current.columns
-            if table_bucketed and n_buckets is None:
-                raise ValueError(
-                    f"table at {table_dir} was written bucketed "
-                    "(__bucket partition present) but run_cdc_stream was "
-                    "called with n_buckets=None; pass the original n_buckets"
-                )
-            if not table_bucketed and n_buckets is not None:
-                raise ValueError(
-                    f"table at {table_dir} was written unbucketed but "
-                    f"run_cdc_stream was called with n_buckets={n_buckets}; "
-                    "rebuild the table image bucketed or pass n_buckets=None"
-                )
-        if n_buckets is None:
-            updated = cdc_apply_batch(current, changes, keys)
-            # stage-then-swap, never overwrite in place: an in-place
-            # mode('overwrite') deletes the live image before the job
-            # commits, so a crash mid-write left table_dir empty and
-            # the next restart's PATH_NOT_FOUND branch silently
-            # reseeded from nothing — the whole history gone (r8).
-            # Writing to .tmp also means the plan never reads the
-            # files it replaces, so no localCheckpoint staging needed.
-            tmp = table_dir.rstrip("/") + ".tmp"
-            updated.write.mode("overwrite").parquet(tmp)
-            if os.path.exists(old):
-                shutil.rmtree(old)  # relic of a completed prior swap
-            if os.path.exists(table_dir):
-                shutil.move(table_dir, old)
-            shutil.move(tmp, table_dir)
-            if os.path.exists(old):
-                shutil.rmtree(old)
-            return
-        # partition-scoped apply: the change keys determine the touched
-        # buckets; the collect is bounded by n_buckets (a config-sized
-        # int list, never data-sized).
-        touched = [
-            r["__bucket"]
-            for r in changes.select(
-                F.coalesce("after", "before").alias("img")
+        ptr = _cdc_pointer(spark, table_dir, row_schema, keys, n_buckets)
+        if ptr["stream"] != checkpoint and ptr["deltas"]:
+            # another stream's batch ids: fold them before reusing ids
+            ptr = _fold_cdc_deltas(spark, table_dir, ptr)
+        if batch_id not in ptr["deltas"]:  # else a replay after the flip
+            delta = _latest_change(changes, keys).select(
+                "img.*",
+                (F.col("op") == "d").alias(CDC_DELETED),
+                F.lit(batch_id).cast("long").alias(CDC_BATCH),
             )
-            .select(cdc_bucket_expr([f"img.{k}" for k in keys], n_buckets).alias("__bucket"))
-            .distinct()
-            .collect()
-        ]
-        if not touched:
-            return
-        # partition pruning: only touched bucket directories are read
-        current_slice = current.filter(F.col("__bucket").isin(touched))
-        updated = cdc_apply_batch(
-            current_slice.drop("__bucket"), changes, keys
-        ).withColumn("__bucket", cdc_bucket_expr(keys, n_buckets))
-        staged = updated.localCheckpoint(eager=True)
-        (
-            staged.repartition("__bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__bucket")
-            .parquet(table_dir)
-        )
-        # dynamic overwrite only replaces partitions PRESENT in the
-        # written data: a touched bucket left with zero rows (every key
-        # deleted) must have its directory dropped explicitly or the
-        # deleted rows resurface on the next read.
-        nonempty = {
-            r["__bucket"] for r in staged.select("__bucket").distinct().collect()
-        }
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        for b in set(touched) - nonempty:
-            p = jvm.org.apache.hadoop.fs.Path(f"{table_dir}/__bucket={b}")
-            p.getFileSystem(hconf).delete(p, True)
+            _write_batch(delta, table_dir, batch_id)
+            ptr = {**ptr, "stream": checkpoint, "deltas": ptr["deltas"] + [batch_id]}
+            manifest.commit(spark, table_dir, ptr)
+        if len(ptr["deltas"]) >= CDC_FOLD_DELTAS:
+            _fold_cdc_deltas(spark, table_dir, ptr)
 
     return _run_batches(raw, checkpoint, apply_batch)
 
 
+def _cdc_pointer(
+    spark: SparkSession,
+    table_dir: str,
+    row_schema: T.StructType,
+    keys: list[str],
+    n_buckets: int | None,
+) -> dict:
+    """The CDC table's pointer, checked against the stream's
+    configuration.  A table with no pointer starts empty or, when it
+    holds flat-layout data files, is adopted as its first base
+    generation."""
+    ptr = manifest.read_pointer(spark, table_dir)
+    if ptr is None:
+        ptr = {
+            "generation": 0, "base": None, "deltas": [], "stream": None,
+            "schema": row_schema.jsonValue(), "keys": list(keys),
+            "n_buckets": n_buckets,
+        }
+        sources = [
+            s for s in manifest.list_flat_sources(spark, table_dir)
+            if not s.rstrip("/").rsplit("/", 1)[-1].startswith("batch=")
+        ]
+        if not sources:
+            return ptr
+        # basePath keeps a bucketed table's __bucket partition column
+        legacy = spark.read.option("basePath", table_dir).parquet(*sources)
+        _check_cdc_buckets(table_dir, "__bucket" in legacy.columns, n_buckets)
+        ptr = _commit_cdc_base(
+            spark, table_dir, ptr, legacy.select(*row_schema.fieldNames())
+        )
+        manifest.delete_flat_children(spark, table_dir)
+        return ptr
+    _check_cdc_buckets(table_dir, ptr["n_buckets"] is not None, n_buckets)
+    written = T.StructType.fromJson(ptr["schema"])
+    if ptr["keys"] != list(keys) or written.simpleString() != row_schema.simpleString():
+        raise ValueError(
+            f"table at {table_dir} was written with keys {ptr['keys']} and "
+            f"schema {written.simpleString()}; run_cdc_stream was called "
+            f"with keys {list(keys)} and schema {row_schema.simpleString()}"
+        )
+    return {**ptr, "n_buckets": n_buckets}
+
+
+def _check_cdc_buckets(table_dir: str, bucketed: bool, n_buckets: int | None):
+    if bucketed != (n_buckets is not None):
+        raise ValueError(
+            f"table at {table_dir} was written "
+            f"{'bucketed' if bucketed else 'unbucketed'} but run_cdc_stream "
+            f"was called with n_buckets={n_buckets}; pass the n_buckets "
+            "mode the table was written with"
+        )
+
+
+def _commit_cdc_base(
+    spark: SparkSession, table_dir: str, ptr: dict, image: DataFrame
+) -> dict:
+    """Write ``image`` as the next base generation of a CDC table and
+    flip the pointer to it with no deltas; returns the new pointer."""
+    generation = ptr["generation"] + 1
+    meta = {
+        **ptr, "generation": generation,
+        "base": manifest.generation_name(generation), "deltas": [],
+    }
+    if ptr["n_buckets"] is not None:
+        # whole buckets per file; AQE sizes the number of files
+        image = image.repartition(cdc_bucket_expr(ptr["keys"], ptr["n_buckets"]))
+    image.write.mode("overwrite").parquet(manifest.join(table_dir, meta["base"]))
+    manifest.commit(spark, table_dir, meta)
+    return meta
+
+
+def _fold_cdc_deltas(spark: SparkSession, table_dir: str, ptr: dict) -> dict:
+    """Fold the deltas the pointer names into a new base generation,
+    then delete their ``batch=`` prefixes."""
+    meta = _commit_cdc_base(spark, table_dir, ptr, _cdc_image(spark, table_dir, ptr))
+    for batch_id in ptr["deltas"]:
+        manifest.delete_prefix(spark, table_dir, f"batch={batch_id}")
+    return meta
+
+
+def _cdc_image(spark: SparkSession, table_dir: str, ptr: dict) -> DataFrame:
+    """The image a CDC pointer names: per key the newest delta wins
+    and a delete drops the key; base rows no delta names pass through.
+    The base is read with the pointer's schema and never shuffled: it
+    is anti-joined against the broadcast delta keys."""
+    schema, keys = T.StructType.fromJson(ptr["schema"]), ptr["keys"]
+    base = (
+        spark.read.schema(schema).parquet(manifest.join(table_dir, ptr["base"]))
+        if ptr["base"] else None
+    )
+    if not ptr["deltas"]:
+        return base
+    deltas = spark.read.schema(
+        T.StructType(
+            schema.fields
+            + [T.StructField(CDC_DELETED, T.BooleanType()),
+               T.StructField(CDC_BATCH, T.LongType())]
+        )
+    ).parquet(*[manifest.join(table_dir, f"batch={b}") for b in ptr["deltas"]])
+    newest = Window.partitionBy(*keys).orderBy(F.col(CDC_BATCH).desc())
+    upserts = (
+        deltas.withColumn("__rn", F.row_number().over(newest))
+        .filter((F.col("__rn") == 1) & ~F.col(CDC_DELETED))
+        .select(*schema.fieldNames())
+    )
+    if base is None:
+        return upserts
+    kept = base.join(F.broadcast(deltas.select(*keys)), keys, "left_anti")
+    return kept.unionByName(upserts)
+
+
 def cdc_table_image(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Read back a CDC table image, hiding the internal bucket
-    partition column if present."""
-    df = spark.read.parquet(table_dir)
-    return df.drop("__bucket") if "__bucket" in df.columns else df
+    """The current image of a CDC table written by `run_cdc_stream`.
+
+    This is the only supported reader of a CDC table: the data files
+    under ``table_dir`` hold a base generation plus deltas with delete
+    flags, and only the pointer says which of them are live.  The
+    pointer is resolved once: a batch committed later is not seen, and
+    a fold committed later deletes the deltas this frame reads (the
+    reader race sources/manifest.py describes).  A table with no
+    pointer is read flat (the layout of earlier versions), hiding its
+    bucket column."""
+    ptr = manifest.read_pointer(spark, table_dir)
+    if ptr is None:
+        return spark.read.parquet(table_dir).drop("__bucket")
+    return _cdc_image(spark, table_dir, ptr)
 
 
 def parse_debezium_envelope(raw: DataFrame, row_schema: T.StructType) -> DataFrame:
@@ -917,16 +977,10 @@ def split_envelope_quarantine(
     return good, quarantined
 
 
-def cdc_apply_batch(
-    current: DataFrame, changes: DataFrame, keys: list[str]
-) -> DataFrame:
-    """T1 apply step: fold a micro-batch of parsed changes into the
-    current table image (the foreachBatch body).
-
-    Last-writer-wins per key by ts_ms; deletes (op='d') remove the key.
-    Pure DataFrame logic so it is unit-testable without Kafka and
-    becomes a Delta MERGE verbatim when a transactional table format is
-    available.
+def _latest_change(changes: DataFrame, keys: list[str]) -> DataFrame:
+    """The winning change per key of one batch of parsed changes, with
+    its row image (``after``, else ``before``) in ``img``: last writer
+    wins by ts_ms.
 
     ``ts_ms`` is millisecond-resolution, so two changes to one key in
     the same ms are routine; ``row_number`` over ts_ms alone would pick
@@ -937,10 +991,7 @@ def cdc_apply_batch(
     a content hash as the total-order fallback.  A real Debezium feed
     carries ``source.pos``/``lsn`` for true ordering; this minimal
     envelope omits it, so the tie-break is deterministic-by-convention
-    rather than log-accurate.
-    """
-    from pyspark.sql import Window
-
+    rather than log-accurate."""
     op_rank = (
         F.when(F.col("op") == "d", 3)
         .when(F.col("op") == "u", 2)
@@ -954,21 +1005,31 @@ def cdc_apply_batch(
         op_rank.desc(),
         F.xxhash64(F.to_json(F.col("img"))).desc(),
     )
-    latest = (
+    return (
         changes.withColumn("img", F.coalesce("after", "before"))
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
     )
-    upserts = latest.filter(F.col("op") != "d").select("img.*")
-    deletes = latest.filter(F.col("op") == "d").select(
-        *[F.col(f"img.{k}").alias(k) for k in keys]
-    )
+
+
+def cdc_apply_batch(
+    current: DataFrame, changes: DataFrame, keys: list[str]
+) -> DataFrame:
+    """T1 apply step: fold a micro-batch of parsed changes into the
+    current table image.
+
+    Last-writer-wins per key (`_latest_change`, the rule the stream's
+    deltas use); deletes (op='d') remove the key.  Pure DataFrame logic
+    so it is unit-testable without Kafka and becomes a Delta MERGE
+    verbatim when a transactional table format is available.
+    """
+    latest = _latest_change(changes, keys)
     kept = current.join(
         latest.select(*[F.col(f"img.{k}").alias(k) for k in keys]),
         on=keys,
         how="left_anti",
     )
-    return kept.unionByName(upserts).join(deletes, on=keys, how="left_anti")
+    return kept.unionByName(latest.filter(F.col("op") != "d").select("img.*"))
 
 
 def run_incremental_dedup_stream(
@@ -1567,7 +1628,7 @@ def read_rollup(
     Fails loudly with the on-disk generation list when N has been aged
     out."""
     from ultimate_data_engineering_project_spark.operators import aggregates
-    from ultimate_data_engineering_project_spark.sources import manifest, readers
+    from ultimate_data_engineering_project_spark.sources import readers
 
     if merge_fn is None:
         merge_fn = aggregates.merge_rollup
@@ -1681,8 +1742,6 @@ def compact_rollup(
 
     Returns the number of live partials partitions after compaction
     (folded base + un-folded tail)."""
-    from ultimate_data_engineering_project_spark.sources import manifest
-
     if keep_last < 1:
         # keep_last=0 would fold the replayable tail batch into the
         # base partition; a crash-replayed stream rewriting that batch
@@ -1707,8 +1766,6 @@ def _compact_rollup_attempt(
     keep_last: int,
     keep_generations: int,
 ) -> int:
-    from ultimate_data_engineering_project_spark.sources import manifest
-
     ptr = manifest.read_pointer(spark, rollup_dir) or {
         "base": None,
         "folded_through": -1,
