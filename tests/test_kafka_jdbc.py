@@ -1977,3 +1977,78 @@ def test_avro_evolution_enum_widened_inside_union(spark):
     # symbol REMOVED from the reader refuses at plan time
     with _pytest.raises(ValueError, match="changed layout"):
         avro_py.build_writer_aligners({1: v2, 2: v1}, v1)
+
+
+def _one_field(avro_type):
+    import json as _json
+
+    from ultimate_data_engineering_project_spark.sources import avro_py
+
+    return avro_py.parse_flat_schema(_json.dumps({
+        "type": "record", "name": "t",
+        "fields": [{"name": "x", "type": avro_type}]}))
+
+
+def test_avro_int_is_32_bit():
+    """Avro ``int`` is 32-bit: a wider value is refused on encode and an
+    out-of-range wire value on decode, instead of reaching a 32-bit
+    IntegerType column; ``long`` keeps its 64-bit range."""
+    from ultimate_data_engineering_project_spark.sources import avro_py
+
+    as_int, as_long = _one_field("int"), _one_field("long")
+    for bad in (2**40, 2**31, -(2**31) - 1):
+        with pytest.raises(ValueError, match="int range"):
+            avro_py.encode_record((bad,), as_int)
+        with pytest.raises(ValueError, match="32-bit"):
+            avro_py.decode_record(avro_py.encode_record((bad,), as_long), as_int)
+    for ok in (2**31 - 1, -(2**31)):
+        body = avro_py.encode_record((ok,), as_int)
+        assert avro_py.decode_record(body, as_int) == (ok,)
+    body = avro_py.encode_record((2**40,), as_long)
+    assert avro_py.decode_record(body, as_long) == (2**40,)
+    with pytest.raises(ValueError, match="long range"):
+        avro_py.encode_record((2**63,), as_long)
+    # the same check holds inside unions and containers
+    with pytest.raises(ValueError, match="int range"):
+        avro_py.encode_record((2**40,), _one_field(["null", "int"]))
+    arr = _one_field({"type": "array", "items": "int"})
+    wide = avro_py.encode_record(([2**40],), _one_field(
+        {"type": "array", "items": "long"}))
+    with pytest.raises(ValueError, match="32-bit"):
+        avro_py.decode_record(wide, arr)
+
+
+def test_avro_synthetic_type_names_refused():
+    """Only Avro type names parse: ``"decimal(5,2)"``, ``"array<long>"``
+    and a bare logical name such as ``"timestamp-micros"`` or ``"date"``
+    name no type, so they are refused at plan time, bare, as a union
+    branch or as array items.  A record NAMED like a logical type still
+    resolves by name."""
+    import json as _json
+
+    from ultimate_data_engineering_project_spark.sources import avro_py
+
+    for name in ("decimal(5,2)", "array<long>", "timestamp-micros", "date"):
+        for t in (name, ["null", name], {"type": "array", "items": name}):
+            with pytest.raises(ValueError, match="unsupported type"):
+                _one_field(t)
+    named = avro_py.parse_flat_schema(_json.dumps({
+        "type": "record", "name": "env", "fields": [
+            {"name": "d", "type": {"type": "record", "name": "date",
+             "fields": [{"name": "x", "type": "long"}]}},
+            {"name": "d2", "type": ["null", "date"]}]}))
+    assert named[1].value_type is named[0].type
+    assert avro_py.decode_record(b"\x02\x02\x04", named) == ({"x": 1}, {"x": 2})
+
+
+def test_avro_union_member_key_is_a_member_index():
+    """A multi-branch union value names its member as ``memberN`` with N
+    a non-null branch index; ``member-1`` must not wrap around to the
+    last branch the way a Python negative index would."""
+    from ultimate_data_engineering_project_spark.sources import avro_py
+
+    fields = _one_field(["null", "long", "string"])
+    assert avro_py.encode_record(({"member1": "a"},), fields) == b"\x04\x02a"
+    for key in ("member-1", "member2", "memberx", "value"):
+        with pytest.raises(ValueError, match="out of range"):
+            avro_py.encode_record(({key: "a"},), fields)

@@ -1614,6 +1614,114 @@ def test_stream_heavy_hitters_mg_guarantee(spark, sf_dir, tmp_path):
             assert true_n - bound <= got <= true_n, (key, got, true_n, bound)
 
 
+def _one_file_per_batch_events(spark, tmp_path, name, slices):
+    """Land each slice of (user_id, ts, value) rows as one parquet file
+    and stream them back one file per micro-batch."""
+    import time
+
+    from ultimate_data_engineering_project_spark.schemas import EVENTS
+
+    src = str(tmp_path / name)
+    for i, rows in enumerate(slices):
+        spark.createDataFrame(
+            [(1000 * i + j, t, u, "view", v, "{}") for j, (u, t, v) in enumerate(rows)],
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        ).coalesce(1).write.mode("append").parquet(src)
+        time.sleep(0.2)
+    return (
+        spark.readStream.schema(EVENTS)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    )
+
+
+def _state_rows_per_batch(q):
+    """(input rows, state rows) of every progress of a one-operator
+    stateful query, from StreamingQueryProgress.stateOperators."""
+    return [
+        (p.numInputRows, p.stateOperators[0].numRowsTotal)
+        for p in q.recentProgress
+        if p.stateOperators
+    ]
+
+
+def test_stream_heavy_hitters_state_bounded_by_shards(spark, tmp_path):
+    """Misra-Gries state is one row per shard: across micro-batches that
+    keep bringing new keys, the state store never holds more than
+    ``n_shards`` rows, however many distinct keys went through."""
+    import datetime
+
+    from ultimate_data_engineering_project_spark.streaming.pipelines import (
+        stream_heavy_hitters,
+    )
+
+    t0 = datetime.datetime(2024, 3, 1)
+    n_batches, n_shards = 5, 3
+    slices = [
+        [(100 * b + u, t0, 1.0) for u in range(40) for _ in range(1 + u % 3)]
+        for b in range(n_batches)
+    ]
+    items = _one_file_per_batch_events(spark, tmp_path, "hh_bounded", slices)
+    q = (
+        stream_heavy_hitters(items, "user_id", k=4, n_shards=n_shards)
+        .writeStream.format("memory")
+        .queryName("hh_bounded")
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    progress = _state_rows_per_batch(q)
+    data_batches = [rows for n_in, rows in progress if n_in]
+    assert len(data_batches) == n_batches  # one file per batch
+    assert all(rows <= n_shards for _, rows in progress), progress
+    assert data_batches[-1] == n_shards  # 200 keys, still one row a shard
+
+
+def test_stream_sessions_stateful_state_stops_growing(spark, tmp_path):
+    """The event-time timeout removes a session's state once the
+    watermark passes its last event + gap, so the store holds only the
+    users of the last two batches while new users keep arriving: state
+    rows stop growing once the watermark passes the first sessions."""
+    import datetime
+
+    from ultimate_data_engineering_project_spark.streaming.pipelines import (
+        stream_sessions_stateful,
+    )
+
+    t0 = datetime.datetime(2024, 3, 1)
+    n_batches, per_batch = 6, 3
+    slices = [
+        [(10 * b + u, t0 + datetime.timedelta(hours=b), 1.0) for u in range(per_batch)]
+        for b in range(n_batches)
+    ]
+    events = _one_file_per_batch_events(spark, tmp_path, "sess_bounded", slices)
+    q = (
+        stream_sessions_stateful(events, gap_seconds=600, watermark="0 seconds")
+        .writeStream.format("memory")
+        .queryName("sess_bounded")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    progress = _state_rows_per_batch(q)
+    data_batches = [rows for n_in, rows in progress if n_in]
+    assert len(data_batches) == n_batches
+    # batch b's watermark is batch b-1's events, which has passed every
+    # session of batch b-2: 3 users, then 6, then flat at 6 of 18 seen
+    assert data_batches == [per_batch] + [2 * per_batch] * (n_batches - 1)
+    # the trailing no-data batch applies the last watermark: only the
+    # last batch's sessions stay open, every other one was emitted
+    assert progress[-1] == (0, per_batch)
+    closed = spark.sql("SELECT user_id FROM sess_bounded").collect()
+    assert len(closed) == per_batch * (n_batches - 1)
+
+
 def test_incremental_bm25_stream_matches_batch(spark, sf_dir, tmp_path):
     """The incrementally-built BM25 index answers a query IDENTICALLY
     (scores and ranks, float for float) to a from-scratch bm25_topk

@@ -1,127 +1,67 @@
-"""Pure-Python Avro binary codec for Debezium-style change-event
-schemas (S13 — the payload half of the Confluent wire format).
+"""Pure-Python Avro binary codec for Debezium-style change events (S13,
+the payload half of the Confluent wire format).
 
-Reference parity: the reference's CDC stack serializes every Kafka
-message with the Schema Registry's AvroConverter (reference
-docker-compose.yaml:74-97); `sources.kafka.decode_confluent_avro`
-delegates to spark-avro's ``from_avro``, which needs the spark-avro
-package on the cluster.  This module makes that path EXECUTABLE with
-zero extra packages: a minimal Avro *binary* decoder/encoder covering
-the full Debezium change-event envelope — nested row-image records,
-``["null", T]`` unions, and Debezium's logical types — applied over
-Arrow batches via ``mapInPandas``.
+``sources.kafka.decode_confluent_avro`` decodes with spark-avro's
+``from_avro``, which needs the spark-avro package on the cluster.  This
+module decodes and encodes the same frames with no extra package, over
+Arrow batches via ``mapInPandas``, so the CDC path runs and is
+oracle-checked anywhere.
 
-Supported surface (everything a Debezium topic actually emits,
-reference docker-compose.yaml:74-97): record-typed fields and
-named-type references (``before``/``after`` as ``["null", "Value"]``
-with the row-image record defined at first use, plus the ``source``
-metadata record), ENUMS (Debezium's enum-typed ``op``/status columns;
-wire = symbol index, Spark = the symbol string), FIXED (raw
-``size``-byte values, plus the ``decimal`` logical annotation some
-connectors use for NUMERIC columns), unions of ANY arity — one
-non-null branch surfaces as a plain nullable column, several as
-spark-avro's public ``memberN`` struct with exactly the active member
-set (outbox payload unions) — union-typed array items and map values
-(nullable elements included), arrays (both count forms of the spec's
-block encoding decode; record items cover Debezium
-``transaction``-metadata ``data_collections`` blocks; nested
-containers compose), string-keyed maps (outbox-pattern
-header/attribute bags), the ``uuid`` string annotation, and the
-logical types Debezium emits for the reference's own column types
-(reference schemas.py:37,53 Numeric(15,2) -> ``bytes``+``decimal``;
-:59-60 DateTime -> ``long``+``timestamp-micros``/``millis``; Date ->
-``int``+``date``).  Unknown logical names follow the Avro spec's
-IGNORE rule — decode as the underlying wire type — which is what
-makes Debezium's default temporal mode decodable (it annotates plain
-int/long wires with custom ``io.debezium.time.*`` names).
+Supported surface: records (nested, and named types referenced by their
+short or namespace-qualified name, as Debezium's ``before``/``after``
+``["null", "Value"]`` do), enums (wire: symbol index; Spark: the symbol
+string), fixeds, unions of any arity (one non-null branch surfaces as a
+plain nullable column, several as spark-avro's ``memberN`` struct with
+exactly the active member set), arrays and string-keyed maps (union
+items and values included, both block-count forms decode), and the
+logical types ``decimal`` (over ``bytes`` or a fixed), ``timestamp-micros``,
+``timestamp-millis``, ``date`` and ``uuid``.  Unknown logical names are
+ignored per the spec and decode as their wire type, which is what makes
+Debezium's ``io.debezium.time.*`` annotations decodable.
 
-Schema EVOLUTION (r11): beyond identical layouts, the aligner accepts
-the Avro resolution rules' name-based cases — enums whose reader
-symbol set widened (Debezium ``ALTER TYPE ... ADD VALUE``; a symbol
-REMOVED from the reader still refuses loudly, the history may carry
-it), unions whose reader branch set is a superset of the writer's
-(reordering included; the surfaced memberN positions re-index to the
-reader's layout), non-union writers against reader unions containing
-their type, single-branch union wrappers (wire keeps the index
-varint), and — late r11 — the resolution rules' TYPE PROMOTIONS for
-plain primitives (int->long/float/double, long->float/double,
-float->double, string<->bytes; logical annotations deliberately do
-not promote) — and an enum widened INSIDE a multi-type union aligns
-by the same name/subset rule (the matcher pairs enum branches by
-name).  r12 extends resolution RECURSIVELY through containers and
-matched union branches (_branch_converter): an array<record> /
-map<record> whose ELEMENT record evolved aligns by the same
-name-based field rules as top-level records (the Debezium
-``data_collections`` ALTER TABLE case), container items/values
-follow the primitive promotions and enum widening, a matched
-union branch that evolved resolves through the same rules with the
-converter applied to the active member, and a plain-primitive writer
-branch with no same-type reader branch takes the spec's in-union
-resolution — the first PROMOTABLE reader branch in reader order.
-Union resolution is ONE shared implementation
-(_union_value_converter), used at field level and nested inside
-container elements alike.  r13 adds the spec's COMPOSITE field
-defaults for reader-added fields (_default_const): record defaults as
-JSON objects with absent fields taking their own defaults
-recursively (the Debezium "new struct column with a {} backfill"
-ALTER TABLE shape), array/map defaults element by element, enum
-symbol defaults with membership checked, nullable container elements
-— all converted to the decoded-value representation at PLAN time.
-r14 closes the defaults long tail: ``bytes``/``fixed`` defaults via
-the spec's latin-1 string encoding (code points 0-255 -> bytes;
-fixed length-checked against the declared size), and logical-type
-defaults on the underlying wire value — ``decimal`` defaults decode
-the latin-1 bytes as the two's-complement unscaled value (the
-Debezium ``NUMERIC(15,2) DEFAULT 0.00`` added-column shape, the
-reference's own ``balance`` column, reference schemas.py:37),
-``timestamp-micros``/``millis`` and ``date`` defaults take their JSON
-wire integers.  Per the spec's Default-values rule a union default is
-typed by the FIRST branch, so a non-null default on a ``["null", T]``
-field is refused loudly (declare ``[T, "null"]``), matching the Java
-Avro stack.  Remaining out-of-scope, loud at plan time: resized
-fixeds (the spec defines no fixed-size resolution), narrowing a
-multi-type union to a single branch (the surfaced shape would
-change), and non-null defaults on multi-branch unions (the surfaced
-memberN shape has no Debezium use).  For those, use the spark-avro
-package (the ``decode_confluent_avro`` path); this codec exists so
-the CDC pipeline is testable and oracle-checkable end to end in
-environments without it.
+One type tree: the parser turns each schema type into one node, once.
+A union is always an :class:`AvroUnion`; a logical type is a node
+(:class:`AvroDecimal` covers both decimal wires, :class:`AvroTemporal`
+the time types); a named reference resolves to the node it names; each
+:class:`AvroField` carries its node and its JSON ``default``.  Decode,
+encode, the Spark type, default conversion and schema resolution each
+dispatch on that node once: the codec compiles one reader and one
+writer closure per field.
 
-Design notes for 100 TB:
-  * decode is per-row Python — the documented "inexpressible kernel"
-    exception (SURVEY.md §2.11): binary varint parsing has no
-    `pyspark.sql.functions` form.  It rides mapInPandas (Arrow batch
-    transfer), never a row-at-a-time UDF, and parses straight off
-    ``bytes`` with zero object churn per field.
-  * the writer schema is CONFIG, passed by the caller after a registry
-    lookup of the stripped ``schema_id`` — never per-row state.
-  * tombstones (NULL payloads) decode to all-NULL fields, so the CDC
-    apply keeps seeing delete markers.
+Schema resolution (``build_writer_aligners``) follows the spec's rules
+over the surfaced shapes, at every depth: fields match by name, missing
+reader fields take their default (converted at plan time), else null
+when nullable, else the writer is refused; records align by name, enums
+widen, unions match branches by name or type (or the first promotable
+reader branch) and re-index their members, and plain primitives promote
+(int->long/float/double, long->float/double, float->double,
+string<->bytes).  Every refusal happens at plan time.
+
+Deviations from the spec, each refused loudly instead of guessed:
+known logical types with invalid parameters, resized fixeds, narrowing
+a multi-branch union to one branch, non-null defaults on multi-branch
+unions, and logical types that would need a promotion.  A union default
+is typed by its first branch, so a non-null default under a leading
+``"null"`` is refused, as the Java Avro stack does.  Recursive named
+types are not supported.  For those, use spark-avro.
+
+Decode is per-row Python (varint parsing has no Spark SQL form); the
+writer schema is config, never per-row state; NULL payloads
+(tombstones) decode to all-NULL fields.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as _dt
 import decimal as _decimal
+import functools
 import json
-import re
 import struct
-from dataclasses import dataclass
 from typing import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-_PRIMITIVES = {
-    "boolean",
-    "int",
-    "long",
-    "float",
-    "double",
-    "string",
-    "bytes",
-}
 
 _SPARK_TYPES = {
     "boolean": T.BooleanType(),
@@ -132,471 +72,402 @@ _SPARK_TYPES = {
     "string": T.StringType(),
     "bytes": T.BinaryType(),
 }
-
-# Logical types are carried as synthetic branch names so union indexing
-# (positional) and the rest of the codec stay untouched; the wire type
-# each one rides on is what the decoder actually reads.
-_DECIMAL_RE = re.compile(r"^decimal\((\d+),(\d+)\)$")
-# array of non-null scalars (embedding vectors in CDC feeds); the item
-# may itself be a logical branch name ("array<decimal(15,2)>")
-_ARRAY_RE = re.compile(r"^array<(.+)>$")
-#: logical name -> required Avro wire primitive (per the Avro spec /
-#: what Debezium's AvroConverter emits)
-_LOGICAL_WIRE = {
+_PRIMITIVES = frozenset(_SPARK_TYPES)
+_INT_RANGE = {"int": (-(2**31), 2**31 - 1), "long": (-(2**63), 2**63 - 1)}
+_TEMPORAL_WIRE = {
     "timestamp-micros": "long",
     "timestamp-millis": "long",
     "date": "int",
 }
 _EPOCH_UTC = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+_EPOCH_NAIVE = _dt.datetime(1970, 1, 1)
 _EPOCH_DATE = _dt.date(1970, 1, 1)
-# decimal(38,s) carries up to 38 significant digits; Python's DEFAULT
-# context is prec=28 and Decimal.scaleb ROUNDS to context precision, so
-# every scale shift must run under a context wide enough to stay exact.
+_ONE_US = _dt.timedelta(microseconds=1)
+# decimal(38,s) carries up to 38 significant digits; Python's default
+# context is prec=28 and Decimal.scaleb rounds to context precision, so
+# every scale shift runs under a context wide enough to stay exact.
 _DEC_EXACT = _decimal.Context(prec=77)
+_NO_DEFAULT = object()
 
 
-def _logical_name(ftype: dict, field_name: str) -> str:
-    """A ``{"type": prim, "logicalType": ...}`` dict -> synthetic branch
-    name, validating the (logical, wire) pairing loudly at plan time."""
-    prim = ftype.get("type")
-    logical = ftype.get("logicalType")
-    if logical == "decimal":
-        if prim != "bytes":
-            raise ValueError(
-                f"field {field_name!r}: decimal logical type is only "
-                f"supported over 'bytes', got wire type {prim!r}"
-            )
-        precision = ftype.get("precision")
-        scale = ftype.get("scale", 0)
-        if not isinstance(precision, int) or not isinstance(scale, int) or (
-            precision < 1 or precision > 38 or scale < 0 or scale > precision
-        ):
-            raise ValueError(
-                f"field {field_name!r}: bad decimal precision/scale "
-                f"({precision!r},{scale!r}); need 1<=p<=38, 0<=s<=p"
-            )
-        return f"decimal({precision},{scale})"
-    if logical in _LOGICAL_WIRE:
-        if prim != _LOGICAL_WIRE[logical]:
-            raise ValueError(
-                f"field {field_name!r}: logical type {logical!r} must ride "
-                f"on {_LOGICAL_WIRE[logical]!r}, got {prim!r}"
-            )
-        return logical
-    if logical == "uuid":
-        # Debezium's shape for UUID PK columns: annotated string — the
-        # annotation carries no wire semantics, decode as plain string
-        if prim != "string":
-            raise ValueError(
-                f"field {field_name!r}: uuid logical type must ride on "
-                f"'string', got {prim!r}"
-            )
-        return "string"
-    if logical is not None:
-        # Avro spec (Logical Types): an unknown logical type MUST be
-        # IGNORED and the underlying type used.  This is load-bearing
-        # for real Debezium topics: the default temporal mode
-        # (time.precision.mode=adaptive) annotates plain int/long
-        # wires with CUSTOM names (io.debezium.time.MicroTimestamp,
-        # .Date, .ZonedTimestamp, ...) rather than standard Avro
-        # logical types — those columns decode as their wire integers
-        # exactly as the Kafka Connect consumer sees them.  KNOWN
-        # names with invalid parameters (handled above) still fail
-        # loudly — a deliberate spec deviation, documented: a
-        # malformed decimal is a producer bug, and a plan-time error
-        # beats silently retyping money columns as raw bytes.
-        if isinstance(prim, str) and prim in _PRIMITIVES:
-            return prim
-        raise ValueError(
-            f"field {field_name!r}: logical type {logical!r} rides an "
-            f"unsupported wire type {prim!r} (use spark-avro)"
-        )
-    # a dict with no logicalType is just an inline type declaration
-    if isinstance(prim, str) and prim in _PRIMITIVES:
-        return prim
-    raise ValueError(
-        f"field {field_name!r}: nested/complex type {ftype!r} is not "
-        "supported by the pure-Python codec (use spark-avro)"
-    )
+# ---------------------------------------------------------------- nodes
 
 
-def _wire_type(branch) -> str:
-    """The Avro primitive a (possibly logical) branch reads/writes."""
-    if isinstance(branch, AvroArray):
-        return "array"
-    if isinstance(branch, AvroMap):
-        return "map"
-    if isinstance(branch, AvroEnum):
-        return "enum"
-    if isinstance(branch, AvroFixed):
-        return "fixed"
-    if isinstance(branch, AvroUnion):
-        return "union"
-    if not isinstance(branch, str):  # AvroRecord: no single wire type
-        return "record"
-    if _DECIMAL_RE.match(branch):
-        return "bytes"
-    return _LOGICAL_WIRE.get(branch, branch)
-
-
-def _spark_type_for_branch(branch) -> T.DataType:
-    if isinstance(branch, AvroUnion):
-        nn = branch.non_null
-        if len(nn) == 1:
-            return _spark_type_for_branch(nn[0])
-        # spark-avro's public mapping for multi-type unions: one
-        # struct with a memberN field per non-null branch in union
-        # order; exactly the active branch's member is set per value
-        return T.StructType(
-            [
-                T.StructField(f"member{i}", _spark_type_for_branch(b), True)
-                for i, b in enumerate(nn)
-            ]
-        )
-    if isinstance(branch, AvroArray):
-        item_nullable = (
-            isinstance(branch.item, AvroUnion) and "null" in branch.item.branches
-        )
-        return T.ArrayType(_spark_type_for_branch(branch.item), item_nullable)
-    if isinstance(branch, AvroMap):
-        # Avro map keys are always strings (spec)
-        value_nullable = (
-            isinstance(branch.value, AvroUnion) and "null" in branch.value.branches
-        )
-        return T.MapType(
-            T.StringType(), _spark_type_for_branch(branch.value), value_nullable
-        )
-    if isinstance(branch, AvroEnum):
-        return T.StringType()  # symbols surface as their names
-    if isinstance(branch, AvroFixed):
-        if branch.decimal is not None:
-            return T.DecimalType(*branch.decimal)
-        return T.BinaryType()
-    if not isinstance(branch, str):  # AvroRecord -> nested struct
-        return spark_schema_for(branch.fields)
-    am = _ARRAY_RE.match(branch)
-    if am:
-        return T.ArrayType(_spark_type_for_branch(am.group(1)), False)
-    m = _DECIMAL_RE.match(branch)
-    if m:
-        return T.DecimalType(int(m.group(1)), int(m.group(2)))
-    if branch in ("timestamp-micros", "timestamp-millis"):
-        return T.TimestampType()
-    if branch == "date":
-        return T.DateType()
-    return _SPARK_TYPES[branch]
-
-
-@dataclass(frozen=True)
+@dataclasses.dataclass(frozen=True)
 class AvroRecord:
-    """A (possibly nested) record branch — the shape of a Debezium
-    envelope's ``before``/``after``/``source`` sub-records."""
+    """A record: its fields in wire order."""
 
     name: str
-    fields: tuple["AvroField", ...]
+    fields: tuple
 
 
-@dataclass(frozen=True)
+@dataclasses.dataclass(frozen=True)
 class AvroArray:
-    """An array branch whose item may be a scalar/logical name, an
-    :class:`AvroRecord` (Debezium transaction-metadata
-    ``data_collections`` blocks are ``array<record>``), or a nested
-    container.  Items are non-null (union items route to spark-avro)."""
-
-    item: object  # str | AvroRecord | AvroArray | AvroMap
+    item: object
 
 
-@dataclass(frozen=True)
+@dataclasses.dataclass(frozen=True)
 class AvroMap:
-    """A map branch (string keys per the Avro spec; outbox-pattern
-    header/attribute bags are ``map<string>``).  A union-typed value
-    parses to an :class:`AvroUnion` (nullable values included)."""
+    """String keys per the spec."""
 
-    value: object  # str | AvroRecord | AvroArray | AvroMap | AvroEnum | AvroFixed | AvroUnion
+    value: object
 
 
-@dataclass(frozen=True)
+@dataclasses.dataclass(frozen=True)
 class AvroEnum:
-    """An enum branch (Debezium's ``op`` / status-column shape).
-    Wire format: the symbol's zero-based INDEX as a varint int;
-    surfaces in Spark as the symbol STRING."""
-
     name: str
-    symbols: tuple  # tuple[str, ...] in schema order (indexes are positional)
+    symbols: tuple
 
 
-@dataclass(frozen=True)
+@dataclasses.dataclass(frozen=True)
 class AvroFixed:
-    """A fixed branch: exactly ``size`` raw bytes, no length prefix.
-    With the ``decimal`` logical annotation (connectors emit
-    fixed-width decimals for NUMERIC columns) the bytes are the
-    two's-complement unscaled value and the branch surfaces as
-    DECIMAL(precision, scale); plain fixed surfaces as BINARY."""
-
     name: str
     size: int
-    decimal: tuple | None = None  # (precision, scale) when logicalType=decimal
 
 
-@dataclass(frozen=True)
+@dataclasses.dataclass(frozen=True)
+class AvroDecimal:
+    """``decimal(precision, scale)``: the two's-complement big-endian
+    unscaled value, in length-prefixed ``bytes`` (``size`` None) or in
+    the ``size`` bytes of the fixed named ``name``."""
+
+    precision: int
+    scale: int
+    size: int | None = None
+    name: str = ""
+
+    def value(self, raw: bytes) -> _decimal.Decimal:
+        unscaled = int.from_bytes(raw, "big", signed=True)
+        return _decimal.Decimal(unscaled).scaleb(-self.scale, _DEC_EXACT)
+
+    def wire_value(self, v, fname: str) -> bytes:
+        p, s = self.precision, self.scale
+        if isinstance(v, float):
+            raise ValueError(
+                f"field {fname!r}: refusing to encode a float as "
+                f"decimal({p},{s}) — binary floats are inexact; pass "
+                "decimal.Decimal, int, or str"
+            )
+        q = _decimal.Decimal(v).scaleb(s, _DEC_EXACT)
+        unscaled = int(q)
+        if q != unscaled:
+            raise ValueError(f"field {fname!r}: {v!r} does not fit scale {s}")
+        if len(str(abs(unscaled))) > p:
+            raise ValueError(f"field {fname!r}: {v!r} exceeds precision {p}")
+        if self.size is None:
+            # minimal two's complement: bias negatives by one so the
+            # -2^(8k-1) boundary values still fit in k bytes
+            size = (unscaled + (unscaled < 0)).bit_length() // 8 + 1
+            return unscaled.to_bytes(size, "big", signed=True)
+        try:
+            return unscaled.to_bytes(self.size, "big", signed=True)
+        except OverflowError:
+            raise ValueError(
+                f"field {fname!r}: unscaled {unscaled} does not fit "
+                f"fixed({self.size})"
+            ) from None
+
+
+@dataclasses.dataclass(frozen=True)
+class AvroTemporal:
+    """``timestamp-micros``/``timestamp-millis`` over ``long`` (tz-aware
+    UTC datetimes) or ``date`` over ``int`` (days since the epoch)."""
+
+    logical: str
+
+    @property
+    def wire(self) -> str:
+        return _TEMPORAL_WIRE[self.logical]
+
+    def value(self, v: int):
+        if self.logical == "date":
+            return _EPOCH_DATE + _dt.timedelta(days=v)
+        unit = 1000 if self.logical == "timestamp-millis" else 1
+        return _EPOCH_UTC + _dt.timedelta(microseconds=v * unit)
+
+    def wire_value(self, v, fname: str) -> int:
+        if self.logical == "date":
+            if isinstance(v, _dt.datetime) or not isinstance(v, _dt.date):
+                raise ValueError(
+                    f"field {fname!r}: expected datetime.date, got {type(v)}"
+                )
+            return (v - _EPOCH_DATE).days
+        if not isinstance(v, _dt.datetime):
+            raise ValueError(f"field {fname!r}: expected datetime, got {type(v)}")
+        # the session timezone is pinned to UTC (session.py), so a naive
+        # timestamp out of Spark is the UTC wall clock
+        us = (v - (_EPOCH_UTC if v.tzinfo is not None else _EPOCH_NAIVE)) // _ONE_US
+        if self.logical == "timestamp-micros":
+            return us
+        if us % 1000:
+            raise ValueError(
+                f"field {fname!r}: {v!r} has sub-millisecond precision; "
+                "use timestamp-micros"
+            )
+        return us // 1000
+
+
+@dataclasses.dataclass(frozen=True)
 class AvroUnion:
-    """A union in SCHEMA ORDER (indexes are positional, including any
-    ``"null"`` branch).  Appears as a field's resolved value type when
-    the field has >1 non-null branch, and as an array item / map value
-    type.  Multi-type unions surface in Spark as spark-avro's public
-    ``memberN`` struct."""
+    """A union in schema order (wire indexes are positional, ``"null"``
+    included).  A single-branch union keeps its index varint on the
+    wire."""
 
-    branches: tuple  # full union incl. "null", schema order
+    branches: tuple
 
     @property
     def non_null(self) -> tuple:
         return tuple(b for b in self.branches if b != "null")
-
-
-@dataclass(frozen=True)
-class AvroField:
-    name: str
-    # union branches in SCHEMA ORDER (Avro union indexes are
-    # positional); each is a type-name string or an AvroRecord; a
-    # non-union field has exactly one branch
-    branches: tuple  # tuple[str | AvroRecord, ...]
-
-    @property
-    def value_type(self):
-        nn = tuple(b for b in self.branches if b != "null")
-        if not nn:
-            raise ValueError(f"field {self.name!r} has no non-null branch")
-        if len(nn) == 1:
-            return nn[0]
-        # multi-type union: the value type is the union itself (the
-        # memberN struct in Spark terms)
-        return AvroUnion(self.branches)
 
     @property
     def nullable(self) -> bool:
         return "null" in self.branches
 
 
-def _register_named(obj, sch: dict, defined: dict) -> None:
-    """Register a named type (record/enum/fixed) under its short and
-    namespace-qualified names for later by-reference use."""
+def _nullable(node) -> bool:
+    return isinstance(node, AvroUnion) and node.nullable
+
+
+@dataclasses.dataclass(frozen=True)
+class AvroField:
+    """A record field: its type node and its JSON ``default`` (absent:
+    ``_NO_DEFAULT``), with its reader and writer compiled on first use."""
+
+    name: str
+    type: object
+    default: object = dataclasses.field(
+        default=_NO_DEFAULT, compare=False, repr=False
+    )
+
+    @property
+    def value_type(self):
+        """The non-null node of a ``["null", T]`` union, else the node."""
+        nn = self.type.non_null if isinstance(self.type, AvroUnion) else ()
+        return nn[0] if len(nn) == 1 else self.type
+
+    @property
+    def nullable(self) -> bool:
+        return _nullable(self.type)
+
+    @functools.cached_property
+    def _read(self):
+        return _decoder(self.type)
+
+    @functools.cached_property
+    def _write(self):
+        write = _encoder(self.type, self.name)
+        if isinstance(self.type, AvroUnion):
+            return write
+        name = self.name
+
+        def required(out, v):
+            if v is None:
+                raise ValueError(f"field {name!r} is not nullable, got None")
+            write(out, v)
+
+        return required
+
+
+# --------------------------------------------------------------- parser
+
+
+def _register_named(node, sch: dict, defined: dict) -> None:
+    """Register a named type under its short and namespace-qualified
+    names for later by-reference use."""
     name = sch.get("name")
     if name:
-        defined[name] = obj
-        ns = sch.get("namespace")
-        if ns:
-            defined[f"{ns}.{name}"] = obj
+        defined[name] = node
+        if sch.get("namespace"):
+            defined[f"{sch['namespace']}.{name}"] = node
 
 
-def _parse_union(branches: list, field_name: str, defined: dict) -> AvroUnion:
-    """A union (any arity, including the spec-legal single-branch
-    wrapper — its wire still carries the index varint) in schema
-    order.  The Avro spec forbids immediately-nested unions and
-    duplicate unnamed types; both would make the positional index
-    ambiguous, so they fail here at plan time."""
+def _branch_key(b):
+    """Union-branch identity: named types by name, containers by kind,
+    everything else by its node."""
+    if isinstance(b, (AvroRecord, AvroEnum, AvroFixed)):
+        return (type(b).__name__, b.name)
+    if isinstance(b, AvroDecimal) and b.size is not None:
+        return ("AvroFixed", b.name)
+    if isinstance(b, (AvroArray, AvroMap)):
+        return (type(b).__name__,)
+    return b
+
+
+def _parse_union(branches: list, where: str, defined: dict) -> AvroUnion:
+    """The spec forbids empty unions, immediately nested unions and two
+    branches of the same unnamed type (a logical type counts as its
+    wire type); each would make the positional index ambiguous."""
     if not branches:
-        raise ValueError(f"field {field_name!r}: empty union")
-    parsed = []
+        raise ValueError(f"field {where!r}: empty union")
+    parsed, seen = [], set()
     for b in branches:
         if isinstance(b, list):
             raise ValueError(
-                f"field {field_name!r}: unions may not immediately "
-                "contain other unions (Avro spec)"
+                f"field {where!r}: unions may not immediately contain "
+                "other unions (Avro spec)"
             )
-        parsed.append(_parse_branch(b, field_name, defined))
-    # duplicate-kind check: unnamed types may appear at most once per
-    # union (named types are distinguished by name)
-    seen: set = set()
-    for p in parsed:
-        if isinstance(p, str):
-            # keyed by WIRE type only: a logical type annotates its
-            # underlying type, and the spec forbids two schemas of the
-            # same (underlying) type in a union — ['bytes',
-            # bytes+decimal] or ['long', long+timestamp-micros] are
-            # invalid even though the annotations differ
-            kind = ("prim", _wire_type(p))
-        elif isinstance(p, AvroArray):
-            kind = ("array",)
-        elif isinstance(p, AvroMap):
-            kind = ("map",)
-        else:  # named types: record/enum/fixed — keyed by name
-            kind = (type(p).__name__, p.name)
-        if kind in seen:
+        p = _parse(b, where, defined)
+        key = _branch_key(p)
+        if isinstance(key, AvroDecimal):
+            key = "bytes"
+        elif isinstance(key, AvroTemporal):
+            key = key.wire
+        if key in seen:
             raise ValueError(
-                f"field {field_name!r}: union contains duplicate "
-                f"type {p!r} (Avro spec forbids it)"
+                f"field {where!r}: union contains duplicate type {p!r} "
+                "(Avro spec forbids it)"
             )
-        seen.add(kind)
+        seen.add(key)
+        parsed.append(p)
     return AvroUnion(tuple(parsed))
 
 
-def _parse_branch(b, field_name: str, defined: dict):
-    if isinstance(b, str):
-        if b == "null" or b in _PRIMITIVES:
-            return b
-        if b in defined:  # named-type reference ("after": ["null","Value"])
-            # checked BEFORE the synthetic logical names below so a
-            # schema that legitimately defines a record named "date"
-            # isn't shadowed by the date logical type
-            return defined[b]
-        if _DECIMAL_RE.match(b) or b in _LOGICAL_WIRE:
-            # synthetic branch names used by codec-internal callers
-            # (encode_record over pre-parsed fields); not legal Avro
-            # JSON, but harmless to accept when no named type claims it
-            return b
-        am = _ARRAY_RE.match(b)
-        if am:
-            # legacy synthetic form ("array<long>") from codec-internal
-            # callers — normalize to the structured branch
-            return AvroArray(_parse_branch(am.group(1), field_name, defined))
+def _parse_decimal(t: dict, where: str, size: int | None) -> AvroDecimal:
+    p, s = t.get("precision"), t.get("scale", 0)
+    if not isinstance(p, int) or not isinstance(s, int) or not (
+        1 <= p <= 38 and 0 <= s <= p
+    ):
         raise ValueError(
-            f"field {field_name!r}: unsupported type {b!r} "
+            f"field {where!r}: bad decimal precision/scale ({p!r},{s!r}); "
+            "Spark DecimalType needs 1<=p<=38, 0<=s<=p"
+        )
+    return AvroDecimal(p, s, size, str(t.get("name", "")) if size else "")
+
+
+def _parse(t, where: str, defined: dict):
+    """One schema type -> its node (primitives stay their name)."""
+    if isinstance(t, str):
+        if t == "null" or t in _PRIMITIVES:
+            return t
+        if t in defined:
+            return defined[t]
+        raise ValueError(
+            f"field {where!r}: unsupported type {t!r} "
             "(use spark-avro for non-primitive fields)"
         )
-    if isinstance(b, list):
-        return _parse_union(b, field_name, defined)
-    if isinstance(b, dict):
-        t = b.get("type")
-        if t == "record":
-            return _parse_record(b, defined)
-        if t == "enum":
-            symbols = b.get("symbols")
-            if (
-                not isinstance(symbols, list)
-                or not symbols
-                or not all(isinstance(s, str) for s in symbols)
-                or len(set(symbols)) != len(symbols)
-            ):
-                raise ValueError(
-                    f"field {field_name!r}: enum symbols must be a "
-                    f"non-empty list of distinct strings, got {symbols!r}"
-                )
-            enum = AvroEnum(str(b.get("name", "")), tuple(symbols))
-            _register_named(enum, b, defined)
-            return enum
-        if t == "fixed":
-            size = b.get("size")
-            if not isinstance(size, int) or size < 1:
-                raise ValueError(
-                    f"field {field_name!r}: fixed size must be a "
-                    f"positive int, got {size!r}"
-                )
-            dec = None
-            if b.get("logicalType") == "decimal":
-                precision = b.get("precision")
-                scale = b.get("scale", 0)
-                if not isinstance(precision, int) or not isinstance(scale, int) or (
-                    precision < 1 or precision > 38 or scale < 0 or scale > precision
-                ):
-                    raise ValueError(
-                        f"field {field_name!r}: bad fixed decimal "
-                        f"(precision={precision!r}, scale={scale!r}); "
-                        "Spark DecimalType needs 1<=p<=38, 0<=s<=p"
-                    )
-                dec = (precision, scale)
-            fixed = AvroFixed(str(b.get("name", "")), size, dec)
-            _register_named(fixed, b, defined)
-            return fixed
-        if t == "array":
-            if "items" not in b:
-                raise ValueError(
-                    f"field {field_name!r}: array schema has no items"
-                )
-            if isinstance(b["items"], list):
-                item: object = _parse_union(b["items"], field_name, defined)
-            else:
-                item = _parse_branch(b["items"], field_name, defined)
-                if item == "null":
-                    raise ValueError(
-                        f"field {field_name!r}: bare-null array items are "
-                        "not supported (wrap in a ['null', T] union)"
-                    )
-            return AvroArray(item)
-        if t == "map":
-            if "values" not in b:
-                raise ValueError(
-                    f"field {field_name!r}: map schema has no values"
-                )
-            if isinstance(b["values"], list):
-                value: object = _parse_union(b["values"], field_name, defined)
-            else:
-                value = _parse_branch(b["values"], field_name, defined)
-                if value == "null":
-                    raise ValueError(
-                        f"field {field_name!r}: bare-null map values are "
-                        "not supported (wrap in a ['null', T] union)"
-                    )
-            return AvroMap(value)
-        return _logical_name(b, field_name)
+    if isinstance(t, list):
+        return _parse_union(t, where, defined)
+    kind = t.get("type") if isinstance(t, dict) else None
+    logical = t.get("logicalType") if isinstance(t, dict) else None
+    if kind == "record":
+        return _parse_record(t, defined)
+    if kind == "enum":
+        symbols = t.get("symbols")
+        if (
+            not isinstance(symbols, list)
+            or not symbols
+            or not all(isinstance(s, str) for s in symbols)
+            or len(set(symbols)) != len(symbols)
+        ):
+            raise ValueError(
+                f"field {where!r}: enum symbols must be a non-empty list "
+                f"of distinct strings, got {symbols!r}"
+            )
+        node = AvroEnum(str(t.get("name", "")), tuple(symbols))
+        _register_named(node, t, defined)
+        return node
+    if kind == "fixed":
+        size = t.get("size")
+        if not isinstance(size, int) or size < 1:
+            raise ValueError(
+                f"field {where!r}: fixed size must be a positive int, "
+                f"got {size!r}"
+            )
+        node = (
+            _parse_decimal(t, where, size)
+            if logical == "decimal"
+            else AvroFixed(str(t.get("name", "")), size)
+        )
+        _register_named(node, t, defined)
+        return node
+    if kind in ("array", "map"):
+        key = "items" if kind == "array" else "values"
+        if key not in t:
+            raise ValueError(f"field {where!r}: {kind} schema has no {key}")
+        inner = _parse(t[key], where, defined)
+        if inner == "null":
+            raise ValueError(
+                f"field {where!r}: bare-null {kind} {key} are not "
+                "supported (wrap in a ['null', T] union)"
+            )
+        return AvroArray(inner) if kind == "array" else AvroMap(inner)
+    if logical == "decimal":
+        if kind != "bytes":
+            raise ValueError(
+                f"field {where!r}: decimal logical type is only supported "
+                f"over 'bytes' or a fixed, got wire type {kind!r}"
+            )
+        return _parse_decimal(t, where, None)
+    if logical in _TEMPORAL_WIRE or logical == "uuid":
+        wire = _TEMPORAL_WIRE.get(logical, "string")
+        if kind != wire:
+            raise ValueError(
+                f"field {where!r}: logical type {logical!r} must ride on "
+                f"{wire!r}, got {kind!r}"
+            )
+        return "string" if logical == "uuid" else AvroTemporal(logical)
+    # a plain inline primitive, or an unknown logical type, which the
+    # spec says to ignore (Debezium's io.debezium.time.* names)
+    if isinstance(kind, str) and kind in _PRIMITIVES:
+        return kind
     raise ValueError(
-        f"field {field_name!r}: nested/complex type {b!r} is not "
-        "supported by the pure-Python codec (use spark-avro)"
+        f"field {where!r}: type {t!r} is not supported by the pure-Python "
+        "codec (use spark-avro)"
     )
 
 
 def _parse_record(sch: dict, defined: dict) -> AvroRecord:
-    fields: list[AvroField] = []
+    fields = []
     for f in sch.get("fields", []):
-        name, ftype = f["name"], f["type"]
-        if isinstance(ftype, list):
-            # any-arity unions: the field keeps the FULL union in
-            # schema order (decode/encode index positionally); a
-            # single non-null branch surfaces as a plain nullable
-            # field, multiple as the memberN struct.  A SINGLE-branch
-            # union stays wrapped as one AvroUnion branch — its wire
-            # format still carries the index varint, so flattening it
-            # to the bare type would mis-decode by one byte.
-            u = _parse_union(ftype, name, defined)
-            if all(b == "null" for b in u.branches):
-                raise ValueError(f"field {name!r}: bare 'null' type")
-            branches = (u,) if len(u.branches) == 1 else u.branches
-        else:
-            branches = (_parse_branch(ftype, name, defined),)
-        if branches == ("null",):
-            raise ValueError(f"field {name!r}: bare 'null' type")
-        fields.append(AvroField(name, branches))
+        node = _parse(f["type"], f["name"], defined)
+        if node == "null" or (isinstance(node, AvroUnion) and not node.non_null):
+            raise ValueError(f"field {f['name']!r}: bare 'null' type")
+        fields.append(AvroField(f["name"], node, f.get("default", _NO_DEFAULT)))
     if not fields:
         raise ValueError("record schema has no fields")
     rec = AvroRecord(str(sch.get("name", "")), tuple(fields))
-    # register short and namespace-qualified names for later references
-    if rec.name:
-        defined[rec.name] = rec
-        ns = sch.get("namespace")
-        if ns:
-            defined[f"{ns}.{rec.name}"] = rec
+    _register_named(rec, sch, defined)
     return rec
 
 
 def parse_flat_schema(avro_schema_json: str) -> list[AvroField]:
-    """Parse a writer schema: flat records, plus RECORD-typed fields
-    and named-type references — exactly one Debezium envelope's worth
-    of structure (``before``/``after`` as ``["null", "Value"]`` where
-    ``Value`` is the row-image record defined at its first use, plus a
-    ``source`` metadata record; Debezium's AvroConverter emits this
-    shape for every table), enums, fixeds (incl. the decimal logical
-    annotation), unions of any arity (multi-type unions surface as the
-    ``memberN`` struct), arrays (scalar, record — Debezium
-    transaction-metadata ``data_collections`` — union-typed, or nested
-    container items), and string-keyed maps.  Whatever the codec can't
-    express (single-branch union wrappers, malformed schemas) still
-    fails HERE (plan time), not mid-decode on an executor — such a
-    schema must route to the spark-avro path instead of producing
-    garbage rows."""
+    """Parse a top-level record schema into its fields.  Anything the
+    codec cannot express fails here, at plan time, not mid-decode on an
+    executor."""
     sch = json.loads(avro_schema_json)
     if not isinstance(sch, dict) or sch.get("type") != "record":
-        raise ValueError(
-            f"only 'record' schemas are supported, got: {sch!r}"
-        )
+        raise ValueError(f"only 'record' schemas are supported, got: {sch!r}")
     return list(_parse_record(sch, {}).fields)
 
 
+def _spark_type(node) -> T.DataType:
+    if isinstance(node, AvroUnion):
+        nn = node.non_null
+        if len(nn) == 1:
+            return _spark_type(nn[0])
+        # spark-avro's mapping: one memberN field per non-null branch
+        return T.StructType(
+            [T.StructField(f"member{i}", _spark_type(b), True) for i, b in enumerate(nn)]
+        )
+    if isinstance(node, AvroRecord):
+        return spark_schema_for(node.fields)
+    if isinstance(node, AvroArray):
+        return T.ArrayType(_spark_type(node.item), _nullable(node.item))
+    if isinstance(node, AvroMap):
+        return T.MapType(T.StringType(), _spark_type(node.value), _nullable(node.value))
+    if isinstance(node, AvroEnum):
+        return T.StringType()
+    if isinstance(node, AvroFixed):
+        return T.BinaryType()
+    if isinstance(node, AvroDecimal):
+        return T.DecimalType(node.precision, node.scale)
+    if isinstance(node, AvroTemporal):
+        return T.DateType() if node.logical == "date" else T.TimestampType()
+    return _SPARK_TYPES[node]
+
+
 def spark_schema_for(fields) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(f.name, _spark_type_for_branch(f.value_type), True)
-            for f in fields
-        ]
-    )
+    return T.StructType([T.StructField(f.name, _spark_type(f.type), True) for f in fields])
 
 
 # ---------------------------------------------------------------- codec
@@ -611,9 +482,7 @@ def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
         if pos >= n:
             raise ValueError("truncated Avro payload (varint ran off end)")
         if shift > 63:
-            # Avro longs are at most 10 varint bytes; a longer run is
-            # corrupt data — fail in the codec's own ValueError family
-            # instead of overflowing int64 later at the Arrow boundary.
+            # a long is at most 10 varint bytes; a longer run is corrupt
             raise ValueError("malformed Avro varint (more than 10 bytes)")
         b = buf[pos]
         pos += 1
@@ -622,169 +491,184 @@ def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
             break
         shift += 7
     if acc > 0xFFFFFFFFFFFFFFFF:
-        # a 10-byte varint whose final byte carries more than the one
-        # bit an int64 has room for — without this, the oversized int
-        # escapes as an opaque Arrow/timedelta OverflowError on an
-        # executor instead of the codec's own ValueError family
+        # the 10th byte carries more than the one bit an int64 has left;
+        # refuse here rather than overflow later at the Arrow boundary
         raise ValueError("malformed Avro varint (exceeds 64 bits)")
     return (acc >> 1) ^ -(acc & 1), pos
 
 
-def _decode_item(buf: bytes, pos: int, item):
-    """One array item / map value: records decode to dicts (they
-    survive the Arrow object->struct conversion), unions through the
-    positional-index decoder, everything else through the
-    scalar/container decoder."""
-    if isinstance(item, AvroRecord):
-        vals, pos = _decode_fields(buf, pos, item.fields)
-        return {sf.name: v for sf, v in zip(item.fields, vals)}, pos
-    if isinstance(item, AvroUnion):
-        return _decode_union_branches(buf, pos, item.branches)
-    return _decode_value(buf, pos, item)
+def _read_int(buf: bytes, pos: int) -> tuple[int, int]:
+    v, pos = _read_long(buf, pos)
+    if not -(2**31) <= v < 2**31:
+        raise ValueError(f"Avro int {v} is outside the 32-bit range")
+    return v, pos
 
 
-def _decode_union_branches(buf: bytes, pos: int, branches):
-    """A union value: varint branch index, then the branch's value.
-    One non-null branch -> the plain value (nullable semantics);
-    several -> spark-avro's memberN dict with exactly the active
-    member set."""
-    idx, pos = _read_long(buf, pos)
-    if idx < 0 or idx >= len(branches):
-        raise ValueError(
-            f"union branch index {idx} out of range (union has "
-            f"{len(branches)} branches)"
-        )
-    b = branches[idx]
-    if b == "null":
-        return None, pos
-    nn_count = sum(1 for x in branches if x != "null")
-    v, pos = _decode_item(buf, pos, b)
-    if nn_count == 1:
-        return v, pos
-    member = sum(1 for x in branches[:idx] if x != "null")
-    return {f"member{member}": v}, pos
+def _read_bytes(buf: bytes, pos: int) -> tuple[bytes, int]:
+    ln, pos = _read_long(buf, pos)
+    end = pos + ln
+    if ln < 0 or end > len(buf):
+        raise ValueError("truncated Avro payload (bad length)")
+    return buf[pos:end], end
 
 
-def _decode_value(buf: bytes, pos: int, ftype):
-    if isinstance(ftype, str) and ftype in ("long", "int"):
-        return _read_long(buf, pos)
-    if isinstance(ftype, AvroEnum):
-        idx, pos = _read_long(buf, pos)
-        if idx < 0 or idx >= len(ftype.symbols):
-            raise ValueError(
-                f"enum {ftype.name!r}: symbol index {idx} out of range "
-                f"({len(ftype.symbols)} symbols)"
-            )
-        return ftype.symbols[idx], pos
-    if isinstance(ftype, AvroFixed):
-        if pos + ftype.size > len(buf):
+def _read_string(buf: bytes, pos: int) -> tuple[str, int]:
+    raw, pos = _read_bytes(buf, pos)
+    return raw.decode("utf-8"), pos
+
+
+def _read_boolean(buf: bytes, pos: int) -> tuple[bool, int]:
+    if pos >= len(buf):
+        raise ValueError("truncated Avro payload (boolean)")
+    return buf[pos] != 0, pos + 1
+
+
+def _read_double(buf: bytes, pos: int) -> tuple[float, int]:
+    if pos + 8 > len(buf):
+        raise ValueError("truncated Avro payload (double)")
+    return struct.unpack_from("<d", buf, pos)[0], pos + 8
+
+
+def _read_float(buf: bytes, pos: int) -> tuple[float, int]:
+    if pos + 4 > len(buf):
+        raise ValueError("truncated Avro payload (float)")
+    return struct.unpack_from("<f", buf, pos)[0], pos + 4
+
+
+_READERS = {
+    "boolean": _read_boolean,
+    "int": _read_int,
+    "long": _read_long,
+    "float": _read_float,
+    "double": _read_double,
+    "string": _read_string,
+    "bytes": _read_bytes,
+}
+
+
+def _read_fixed(size: int):
+    def read(buf, pos):
+        end = pos + size
+        if end > len(buf):
             raise ValueError("truncated Avro payload (fixed)")
-        raw = buf[pos : pos + ftype.size]
-        pos += ftype.size
-        if ftype.decimal is not None:
-            unscaled = int.from_bytes(raw, "big", signed=True)
-            return (
-                _decimal.Decimal(unscaled).scaleb(-ftype.decimal[1], _DEC_EXACT),
-                pos,
-            )
-        return bytes(raw), pos
-    if isinstance(ftype, AvroArray):
-        vals = []
-        while True:
-            cnt, pos = _read_long(buf, pos)
-            if cnt == 0:
-                break
-            if cnt < 0:
-                # negative count: the block's byte size follows (the
-                # spec's skippable-block form) — size is redundant for
-                # a sequential decode, read and discard it
-                cnt = -cnt
-                _, pos = _read_long(buf, pos)
-            for _ in range(cnt):
-                v, pos = _decode_item(buf, pos, ftype.item)
-                vals.append(v)
-        return vals, pos
-    if isinstance(ftype, AvroMap):
-        out = {}
-        while True:
-            cnt, pos = _read_long(buf, pos)
-            if cnt == 0:
-                break
-            if cnt < 0:  # skippable-block form, same as arrays
-                cnt = -cnt
-                _, pos = _read_long(buf, pos)
-            for _ in range(cnt):
-                k, pos = _decode_value(buf, pos, "string")
-                v, pos = _decode_item(buf, pos, ftype.value)
-                out[k] = v
-        return out, pos
-    m = _DECIMAL_RE.match(ftype)
-    if m:
-        raw, pos = _decode_value(buf, pos, "bytes")
-        unscaled = int.from_bytes(raw, "big", signed=True)
-        return (
-            _decimal.Decimal(unscaled).scaleb(-int(m.group(2)), _DEC_EXACT),
-            pos,
-        )
-    if ftype == "timestamp-micros" or ftype == "timestamp-millis":
-        v, pos = _read_long(buf, pos)
-        us = v if ftype == "timestamp-micros" else v * 1000
-        # tz-aware UTC instants: Arrow converts these to Spark
-        # TimestampType correctly whatever the session timezone is.
-        return _EPOCH_UTC + _dt.timedelta(microseconds=us), pos
-    if ftype == "date":
-        v, pos = _read_long(buf, pos)
-        return _EPOCH_DATE + _dt.timedelta(days=v), pos
-    if ftype == "string" or ftype == "bytes":
-        ln, pos = _read_long(buf, pos)
-        if ln < 0 or pos + ln > len(buf):
-            raise ValueError("truncated Avro payload (bad length)")
-        raw = buf[pos : pos + ln]
-        return (raw.decode("utf-8") if ftype == "string" else raw), pos + ln
-    if ftype == "boolean":
-        if pos >= len(buf):
-            raise ValueError("truncated Avro payload (boolean)")
-        return buf[pos] != 0, pos + 1
-    if ftype == "double":
-        if pos + 8 > len(buf):
-            raise ValueError("truncated Avro payload (double)")
-        return struct.unpack_from("<d", buf, pos)[0], pos + 8
-    if ftype == "float":
-        if pos + 4 > len(buf):
-            raise ValueError("truncated Avro payload (float)")
-        return struct.unpack_from("<f", buf, pos)[0], pos + 4
-    raise ValueError(f"unsupported Avro type {ftype!r}")
+        return buf[pos:end], end
+
+    return read
 
 
-def _decode_fields(buf: bytes, pos: int, fields) -> tuple[list, int]:
-    out = []
-    for f in fields:
-        if len(f.branches) >= 2:
-            val, pos = _decode_union_branches(buf, pos, f.branches)
-            out.append(val)
-            continue
-        ftype = f.branches[0]
-        if isinstance(ftype, AvroRecord):
-            vals, pos = _decode_fields(buf, pos, ftype.fields)
-            # dicts survive the Arrow object->struct conversion
-            out.append({sf.name: v for sf, v in zip(ftype.fields, vals)})
-            continue
-        if isinstance(ftype, AvroUnion):  # single-branch union wrapper
-            val, pos = _decode_union_branches(buf, pos, ftype.branches)
-            out.append(val)
-            continue
-        val, pos = _decode_value(buf, pos, ftype)
-        out.append(val)
-    return out, pos
+def _block_count(buf: bytes, pos: int) -> tuple[int, int]:
+    """One array/map block's item count; a negative count is followed by
+    the block's byte size, which a sequential read skips."""
+    cnt, pos = _read_long(buf, pos)
+    if cnt < 0:
+        _, pos = _read_long(buf, pos)
+        cnt = -cnt
+    return cnt, pos
+
+
+def _decoder(node):
+    """node -> read(buf, pos) -> (value, pos), built once per node."""
+    if isinstance(node, str):
+        return _READERS[node]
+    if isinstance(node, AvroRecord):
+        reads = [(f.name, f._read) for f in node.fields]
+
+        def read(buf, pos):
+            out = {}  # dicts survive the Arrow object -> struct conversion
+            for name, r in reads:
+                out[name], pos = r(buf, pos)
+            return out, pos
+
+        return read
+    if isinstance(node, AvroUnion):
+        reads = [None if b == "null" else _decoder(b) for b in node.branches]
+        n_nn = len(node.non_null)
+        keys, k = [], 0
+        for b in node.branches:
+            keys.append(None if b == "null" or n_nn == 1 else f"member{k}")
+            k += b != "null"
+
+        def read(buf, pos):
+            idx, pos = _read_long(buf, pos)
+            if not 0 <= idx < len(reads):
+                raise ValueError(
+                    f"union branch index {idx} out of range (union has "
+                    f"{len(reads)} branches)"
+                )
+            r = reads[idx]
+            if r is None:
+                return None, pos
+            v, pos = r(buf, pos)
+            return (v if keys[idx] is None else {keys[idx]: v}), pos
+
+        return read
+    if isinstance(node, AvroArray):
+        item = _decoder(node.item)
+
+        def read(buf, pos):
+            out = []
+            while True:
+                cnt, pos = _block_count(buf, pos)
+                if not cnt:
+                    return out, pos
+                for _ in range(cnt):
+                    v, pos = item(buf, pos)
+                    out.append(v)
+
+        return read
+    if isinstance(node, AvroMap):
+        value = _decoder(node.value)
+
+        def read(buf, pos):
+            out = {}
+            while True:
+                cnt, pos = _block_count(buf, pos)
+                if not cnt:
+                    return out, pos
+                for _ in range(cnt):
+                    k, pos = _read_string(buf, pos)
+                    out[k], pos = value(buf, pos)
+
+        return read
+    if isinstance(node, AvroEnum):
+        symbols = node.symbols
+
+        def read(buf, pos):
+            idx, pos = _read_long(buf, pos)
+            if not 0 <= idx < len(symbols):
+                raise ValueError(
+                    f"enum {node.name!r}: symbol index {idx} out of range "
+                    f"({len(symbols)} symbols)"
+                )
+            return symbols[idx], pos
+
+        return read
+    if isinstance(node, AvroFixed):
+        return _read_fixed(node.size)
+    # a logical node: read its wire value, then convert it
+    if isinstance(node, AvroDecimal):
+        wire = _read_bytes if node.size is None else _read_fixed(node.size)
+    else:
+        wire = _READERS[node.wire]
+    value = node.value
+
+    def read(buf, pos):
+        v, pos = wire(buf, pos)
+        return value(v), pos
+
+    return read
 
 
 def decode_record(payload: bytes, fields) -> tuple:
     """One Avro binary record body -> tuple of field values (nested
-    records decode to dicts).  Requires FULL consumption: the Confluent
-    payload is exactly one record, so leftover bytes mean a
-    writer-schema mismatch — fail loudly rather than return
-    silently-wrong rows."""
-    out, pos = _decode_fields(payload, 0, fields)
+    records decode to dicts).  The Confluent payload is exactly one
+    record, so leftover bytes mean a writer-schema mismatch: refuse
+    rather than return silently-wrong rows."""
+    out = []
+    pos = 0
+    for f in fields:
+        v, pos = f._read(payload, pos)
+        out.append(v)
     if pos != len(payload):
         raise ValueError(
             f"Avro payload has {len(payload) - pos} trailing byte(s): "
@@ -801,307 +685,227 @@ def _write_long(out: bytearray, v: int) -> None:
     out.append(z)
 
 
+def _write_bytes(out: bytearray, raw: bytes) -> None:
+    _write_long(out, len(raw))
+    out += raw
+
+
+_WRITERS = {
+    "boolean": lambda out, v: out.append(1 if v else 0),
+    "float": lambda out, v: out.extend(struct.pack("<f", float(v))),
+    "double": lambda out, v: out.extend(struct.pack("<d", float(v))),
+    "string": lambda out, v: _write_bytes(out, v.encode("utf-8")),
+    "bytes": lambda out, v: _write_bytes(out, bytes(v)),
+}
+
+
+def _integer_writer(kind: str, fname: str):
+    lo, hi = _INT_RANGE[kind]
+
+    def write(out, v):
+        if isinstance(v, float) and (not v.is_integer() or abs(v) >= 2.0**53):
+            # a nullable integer column reaches pandas as float64, which
+            # above 2^53 has already lost integer precision
+            raise ValueError(
+                f"field {fname!r}: {kind} value {v!r} arrived as a float64 "
+                "that cannot represent it exactly (nullable integer "
+                "columns pass through pandas as float64)"
+            )
+        v = int(v)
+        if not lo <= v <= hi:
+            raise ValueError(
+                f"field {fname!r}: {v} is outside the Avro {kind} range "
+                f"[{lo}, {hi}]"
+            )
+        _write_long(out, v)
+
+    return write
+
+
+def _encode_fields(out: bytearray, values, fields) -> None:
+    if len(values) != len(fields):
+        raise ValueError(f"expected {len(fields)} values, got {len(values)}")
+    for f, v in zip(fields, values):
+        f._write(out, v)
+
+
 def encode_record(values, fields) -> bytes:
-    """Tuple/list of field values -> Avro binary record body (the
-    encoder half: synthesizing test frames and Avro-framed sinks).
-    Record-typed fields accept a dict (by field name) or a
-    tuple/list/Row (positional, schema order)."""
+    """Tuple/list of field values -> Avro binary record body.  A record
+    value may be a dict (by field name) or a tuple/list/Row (positional);
+    a multi-branch union value is a memberN dict/Row/tuple with exactly
+    one member set."""
     out = bytearray()
     _encode_fields(out, values, fields)
     return bytes(out)
 
 
-def _encode_fields(out: bytearray, values, fields) -> None:
-    if len(values) != len(fields):
-        raise ValueError(
-            f"expected {len(fields)} values, got {len(values)}"
-        )
-    for v, f in zip(values, fields):
-        if len(f.branches) >= 2:
-            _encode_union_branches(out, v, f.branches, f.name)
-            continue
-        ftype = f.branches[0]
-        if v is None:
-            raise ValueError(f"field {f.name!r} is not nullable, got None")
-        _encode_item(out, v, ftype, f.name)
-
-
-def _encode_union_branches(out: bytearray, v, branches, fname: str) -> None:
-    """A union value: varint branch index, then the branch's value —
-    the dual of :func:`_decode_union_branches`.  With one non-null
-    branch the plain value selects it; with several, the value must be
-    a memberN dict/Row with EXACTLY one member set (anything else is
-    ambiguous and fails loudly)."""
-    if v is None:
-        if "null" not in branches:
-            raise ValueError(
-                f"field {fname!r}: union {branches!r} has no null "
-                "branch, got None"
-            )
-        _write_long(out, branches.index("null"))
-        return
-    nn = [(i, b) for i, b in enumerate(branches) if b != "null"]
-    if len(nn) == 1:
-        i, b = nn[0]
-        _write_long(out, i)
-        _encode_item(out, v, b, fname)
-        return
+def _union_member(v, members: list, fname: str):
+    """A multi-branch union value -> (wire index, writer, member value)."""
     if hasattr(v, "asDict"):  # pyspark Row
         v = v.asDict()
-    if isinstance(v, dict):
-        items = v
-    elif isinstance(v, (list, tuple)):  # positional member values
-        items = {f"member{k}": x for k, x in enumerate(v)}
-    else:
+    if isinstance(v, (list, tuple)):
+        v = {f"member{k}": x for k, x in enumerate(v)}
+    elif not isinstance(v, dict):
         raise ValueError(
-            f"field {fname!r}: multi-type union value must be a "
-            f"memberN dict/Row/tuple, got {type(v)}"
+            f"field {fname!r}: multi-type union value must be a memberN "
+            f"dict/Row/tuple, got {type(v)}"
         )
-    active = [(k, val) for k, val in items.items() if val is not None]
+    active = [(k, x) for k, x in v.items() if x is not None]
     if len(active) != 1:
         raise ValueError(
-            f"field {fname!r}: multi-type union value must set exactly "
-            f"one member, got {len(active)} of {len(nn)}"
+            f"field {fname!r}: multi-type union value must set exactly one "
+            f"member, got {len(active)} of {len(members)}"
         )
-    k, val = active[0]
-    if not (isinstance(k, str) and k.startswith("member")):
-        raise ValueError(
-            f"field {fname!r}: unknown union member key {k!r}"
-        )
-    try:
-        m = int(k[len("member"):])
-        i, b = nn[m]
-    except (ValueError, IndexError):
+    k, x = active[0]
+    m = k[len("member"):] if isinstance(k, str) and k.startswith("member") else ""
+    if not m.isdigit() or int(m) >= len(members):
         raise ValueError(
             f"field {fname!r}: union member {k!r} out of range "
-            f"({len(nn)} non-null branches)"
-        ) from None
-    _write_long(out, i)
-    _encode_item(out, val, b, fname)
+            f"({len(members)} non-null branches)"
+        )
+    return (*members[int(m)], x)
 
 
-def _encode_item(out: bytearray, v, item, fname: str) -> None:
-    """One non-null value of any branch type (shared by fields, array
-    items, and map values — the dual of :func:`_decode_item`): record
-    values accept a dict (by field name) or tuple/list/Row
-    (positional); unions recurse through the index encoder; enums take
-    the symbol string, fixeds raw bytes (or a decimal under the
-    logical annotation); containers recurse; scalars hit the scalar
-    encoder."""
-    if isinstance(item, AvroRecord):
-        if hasattr(v, "asDict"):  # pyspark Row
-            v = v.asDict()
-        if isinstance(v, dict):
-            sub = [v.get(sf.name) for sf in item.fields]
-        elif isinstance(v, (list, tuple)):
-            sub = list(v)
-        else:
-            raise ValueError(
-                f"field {fname!r}: expected dict or tuple for record "
-                f"item, got {type(v)}"
-            )
-        _encode_fields(out, sub, item.fields)
-    elif isinstance(item, AvroUnion):
-        _encode_union_branches(out, v, item.branches, fname)
-    elif isinstance(item, AvroEnum):
-        if v not in item.symbols:
-            raise ValueError(
-                f"field {fname!r}: {v!r} is not a symbol of enum "
-                f"{item.name!r} {item.symbols!r}"
-            )
-        _write_long(out, item.symbols.index(v))
-    elif isinstance(item, AvroFixed):
-        if item.decimal is not None:
-            precision, scale = item.decimal
-            if isinstance(v, float):
+def _encoder(node, fname: str):
+    """node -> write(out, v) for one non-null value, built once per field
+    (``fname`` names the field in error messages)."""
+    if isinstance(node, str):
+        if node in _INT_RANGE:
+            return _integer_writer(node, fname)
+        return _WRITERS[node]
+    if isinstance(node, AvroRecord):
+        fields = node.fields
+
+        def write(out, v):
+            if hasattr(v, "asDict"):  # pyspark Row
+                v = v.asDict()
+            if isinstance(v, dict):
+                v = [v.get(f.name) for f in fields]
+            elif not isinstance(v, (list, tuple)):
                 raise ValueError(
-                    f"field {fname!r}: refusing to encode a float as "
-                    f"fixed decimal({precision},{scale}) — binary floats "
-                    "are inexact; pass decimal.Decimal, int, or str"
+                    f"field {fname!r}: expected dict or tuple for a record "
+                    f"value, got {type(v)}"
                 )
-            d = v if isinstance(v, _decimal.Decimal) else _decimal.Decimal(v)
-            q = d.scaleb(scale, _DEC_EXACT)
-            unscaled = int(q)
-            if q != unscaled:
+            _encode_fields(out, v, fields)
+
+        return write
+    if isinstance(node, AvroUnion):
+        branches = node.branches
+        null_idx = branches.index("null") if node.nullable else None
+        members = [
+            (i, _encoder(b, fname)) for i, b in enumerate(branches) if b != "null"
+        ]
+
+        def write(out, v):
+            if v is None:
+                if null_idx is None:
+                    raise ValueError(
+                        f"field {fname!r}: union {branches!r} has no null "
+                        "branch, got None"
+                    )
+                _write_long(out, null_idx)
+                return
+            if len(members) == 1:
+                i, w = members[0]
+            else:
+                i, w, v = _union_member(v, members, fname)
+            _write_long(out, i)
+            w(out, v)
+
+        return write
+    if isinstance(node, AvroArray):
+        item, nullable = _encoder(node.item, fname), _nullable(node.item)
+
+        def write(out, v):
+            if isinstance(v, (str, bytes, dict)) or not hasattr(v, "__len__"):
                 raise ValueError(
-                    f"field {fname!r}: {v!r} does not fit scale {scale}"
+                    f"field {fname!r}: expected a sequence for array value, "
+                    f"got {type(v)}"
                 )
-            if len(str(abs(unscaled))) > precision:
+            if len(v):
+                _write_long(out, len(v))
+                for x in v:
+                    if x is None and not nullable:
+                        raise ValueError(
+                            f"field {fname!r}: array items are non-null "
+                            "(declare ['null', T] items for nullable)"
+                        )
+                    item(out, x)
+            out.append(0)
+
+        return write
+    if isinstance(node, AvroMap):
+        value, nullable = _encoder(node.value, fname), _nullable(node.value)
+
+        def write(out, v):
+            # Spark MapType values reach pandas as lists of (key, value)
+            if isinstance(v, dict):
+                pairs = list(v.items())
+            elif hasattr(v, "__len__") and not isinstance(v, (str, bytes)):
+                pairs = [tuple(p) for p in v]
+                if any(len(p) != 2 for p in pairs):
+                    raise ValueError(
+                        f"field {fname!r}: map value pairs must be (key, value)"
+                    )
+            else:
                 raise ValueError(
-                    f"field {fname!r}: {v!r} exceeds precision {precision}"
+                    f"field {fname!r}: expected a dict or (key, value) "
+                    f"sequence for map value, got {type(v)}"
                 )
-            try:
-                out += unscaled.to_bytes(item.size, "big", signed=True)
-            except OverflowError:
+            if pairs:
+                _write_long(out, len(pairs))
+                for k, x in pairs:
+                    if not isinstance(k, str):
+                        raise ValueError(
+                            f"field {fname!r}: map keys must be strings, "
+                            f"got {type(k)}"
+                        )
+                    _write_bytes(out, k.encode("utf-8"))
+                    if x is None and not nullable:
+                        raise ValueError(
+                            f"field {fname!r}: map values are non-null "
+                            "(declare ['null', T] values for nullable)"
+                        )
+                    value(out, x)
+            out.append(0)
+
+        return write
+    if isinstance(node, AvroEnum):
+        index = {s: i for i, s in enumerate(node.symbols)}
+
+        def write(out, v):
+            i = index.get(v) if isinstance(v, str) else None
+            if i is None:
                 raise ValueError(
-                    f"field {fname!r}: unscaled {unscaled} does not fit "
-                    f"fixed({item.size})"
-                ) from None
-        else:
+                    f"field {fname!r}: {v!r} is not a symbol of enum "
+                    f"{node.name!r} {node.symbols!r}"
+                )
+            _write_long(out, i)
+
+        return write
+    if isinstance(node, AvroFixed):
+
+        def write(out, v):
             raw = bytes(v)
-            if len(raw) != item.size:
+            if len(raw) != node.size:
                 raise ValueError(
-                    f"field {fname!r}: fixed {item.name!r} needs exactly "
-                    f"{item.size} bytes, got {len(raw)}"
+                    f"field {fname!r}: fixed {node.name!r} needs exactly "
+                    f"{node.size} bytes, got {len(raw)}"
                 )
             out += raw
-    elif isinstance(item, str) and _ARRAY_RE.match(item):
-        # legacy synthetic branch name from pre-parsed callers
-        _encode_container(
-            out, v, AvroArray(_ARRAY_RE.match(item).group(1)), fname
-        )
-    elif isinstance(item, (AvroArray, AvroMap)):
-        _encode_container(out, v, item, fname)
+
+        return write
+    # a logical node: convert to its wire value, then write that
+    if isinstance(node, AvroDecimal):
+        wire = _write_bytes if node.size is None else bytearray.extend
     else:
-        _encode_scalar(out, v, item, fname)
+        wire = _write_long
+    wire_value = node.wire_value
 
+    def write(out, v):
+        wire(out, wire_value(v, fname))
 
-def _encode_container(out: bytearray, v, ftype, fname: str) -> None:
-    """Array/map value -> Avro block encoding (single block + 0
-    terminator, the form every decoder accepts).  Map values accept a
-    dict OR a sequence of (key, value) pairs — Spark MapType columns
-    round-trip through pandas as lists of 2-tuples."""
-    if isinstance(ftype, AvroArray):
-        if isinstance(v, (str, bytes, dict)) or not hasattr(v, "__len__"):
-            raise ValueError(
-                f"field {fname!r}: expected a sequence for array "
-                f"value, got {type(v)}"
-            )
-        item_nullable = (
-            isinstance(ftype.item, AvroUnion) and "null" in ftype.item.branches
-        )
-        if len(v):
-            _write_long(out, len(v))
-            for iv in v:
-                if iv is None and not item_nullable:
-                    raise ValueError(
-                        f"field {fname!r}: array items are non-null "
-                        "(declare ['null', T] items for nullable)"
-                    )
-                _encode_item(out, iv, ftype.item, fname)
-        _write_long(out, 0)
-        return
-    # AvroMap
-    if isinstance(v, dict):
-        pairs = list(v.items())
-    elif hasattr(v, "__len__") and not isinstance(v, (str, bytes)):
-        pairs = [tuple(p) for p in v]
-        if any(len(p) != 2 for p in pairs):
-            raise ValueError(
-                f"field {fname!r}: map value pairs must be (key, value)"
-            )
-    else:
-        raise ValueError(
-            f"field {fname!r}: expected a dict or (key, value) sequence "
-            f"for map value, got {type(v)}"
-        )
-    value_nullable = (
-        isinstance(ftype.value, AvroUnion) and "null" in ftype.value.branches
-    )
-    if pairs:
-        _write_long(out, len(pairs))
-        for k, iv in pairs:
-            if not isinstance(k, str):
-                raise ValueError(
-                    f"field {fname!r}: map keys must be strings, got "
-                    f"{type(k)}"
-                )
-            _encode_scalar(out, k, "string", fname)
-            if iv is None and not value_nullable:
-                raise ValueError(
-                    f"field {fname!r}: map values are non-null "
-                    "(declare ['null', T] values for nullable)"
-                )
-            _encode_item(out, iv, ftype.value, fname)
-    _write_long(out, 0)
-
-
-def _encode_scalar(out: bytearray, v, ftype: str, fname: str) -> None:
-    m = _DECIMAL_RE.match(ftype)
-    if ftype in ("long", "int"):
-        if isinstance(v, float):
-            # a nullable long column round-trips Spark->pandas as
-            # float64; above 2^53 the float has already lost integer
-            # precision — fail loudly rather than encode a wrong id.
-            if not v.is_integer() or abs(v) >= 2.0**53:
-                raise ValueError(
-                    f"field {fname!r}: long value {v!r} arrived as a "
-                    "float64 that cannot represent it exactly (nullable "
-                    "long columns pass through pandas as float64)"
-                )
-        _write_long(out, int(v))
-    elif m:
-        scale = int(m.group(2))
-        if isinstance(v, float):
-            raise ValueError(
-                f"field {fname!r}: refusing to encode a float as "
-                f"decimal({m.group(1)},{scale}) — binary floats are "
-                "inexact; pass decimal.Decimal, int, or str"
-            )
-        d = v if isinstance(v, _decimal.Decimal) else _decimal.Decimal(v)
-        q = d.scaleb(scale, _DEC_EXACT)
-        unscaled = int(q)
-        if q != unscaled:
-            raise ValueError(
-                f"field {fname!r}: {v!r} does not fit scale {scale}"
-            )
-        if len(str(abs(unscaled))) > int(m.group(1)):
-            raise ValueError(
-                f"field {fname!r}: {v!r} exceeds precision {m.group(1)}"
-            )
-        # minimal two's-complement length: bias negatives by one so
-        # the -2^(8k-1) boundary values still fit in k bytes
-        nbytes = (
-            (unscaled + (1 if unscaled < 0 else 0)).bit_length() // 8
-        ) + 1
-        raw = unscaled.to_bytes(nbytes, "big", signed=True)
-        _write_long(out, len(raw))
-        out += raw
-    elif ftype in ("timestamp-micros", "timestamp-millis"):
-        if not isinstance(v, _dt.datetime):
-            raise ValueError(
-                f"field {fname!r}: expected datetime, got {type(v)}"
-            )
-        epoch = (
-            _EPOCH_UTC if v.tzinfo is not None
-            # session timezone is pinned to UTC (session.py), so a
-            # naive timestamp out of Spark IS the UTC wall clock.
-            else _dt.datetime(1970, 1, 1)
-        )
-        us = (v - epoch) // _dt.timedelta(microseconds=1)
-        if ftype == "timestamp-millis":
-            if us % 1000:
-                raise ValueError(
-                    f"field {fname!r}: {v!r} has sub-millisecond "
-                    "precision; use timestamp-micros"
-                )
-            _write_long(out, us // 1000)
-        else:
-            _write_long(out, us)
-    elif ftype == "date":
-        if isinstance(v, _dt.datetime) or not isinstance(v, _dt.date):
-            raise ValueError(
-                f"field {fname!r}: expected datetime.date, got {type(v)}"
-            )
-        _write_long(out, (v - _EPOCH_DATE).days)
-    elif ftype == "string":
-        raw = v.encode("utf-8")
-        _write_long(out, len(raw))
-        out += raw
-    elif ftype == "bytes":
-        raw = bytes(v)
-        _write_long(out, len(raw))
-        out += raw
-    elif ftype == "boolean":
-        out.append(1 if v else 0)
-    elif ftype == "double":
-        out += struct.pack("<d", float(v))
-    elif ftype == "float":
-        out += struct.pack("<f", float(v))
-    else:  # pragma: no cover - parse_flat_schema already rejected
-        raise ValueError(f"unsupported Avro type {ftype!r}")
-
-
+    return write
 
 
 # ------------------------------------------------------- Spark surface
@@ -1184,58 +988,11 @@ def decode_confluent_avro_py(
     )
 
 
-def _raw_record_fields(t, raw_defs: dict):
-    """Resolve a reader-JSON 'type' value to its raw record field list
-    (following null-unions and named references), registering inline
-    definitions for later by-name use.  None for non-record types."""
-    if isinstance(t, str):
-        return raw_defs.get(t)
-    if isinstance(t, list):
-        # walk EVERY branch for its registration side effects (a
-        # record defined inline in a later union branch must land in
-        # raw_defs for by-name references elsewhere — r12 review
-        # finding), returning the first record's fields as before
-        first = None
-        for b in t:
-            r = _raw_record_fields(b, raw_defs)
-            if first is None and r is not None:
-                first = r
-        return first
-    if isinstance(t, dict):
-        if t.get("type") == "record":
-            fields = t.get("fields", [])
-            name = t.get("name")
-            if name:
-                raw_defs[name] = fields
-                ns = t.get("namespace")
-                if ns:
-                    raw_defs[f"{ns}.{name}"] = fields
-            # recurse into every FIELD type for registration side
-            # effects: a record defined inline in one field and
-            # referenced BY NAME in a later field (or in another
-            # reader-added field's default) must land in raw_defs, or
-            # the composite-default converter silently backfills None
-            # for the named reference's subfield defaults (r13 review
-            # finding — the same class as the r12 union-branch fix)
-            for f in fields:
-                _raw_record_fields(f.get("type"), raw_defs)
-            return fields
-        # container types: register any ELEMENT record definitions for
-        # later by-name lookup (r12 container-element evolution — the
-        # aligner needs the reader element record's raw fields for
-        # defaults), but the container itself resolves to None
-        if t.get("type") == "array":
-            _raw_record_fields(t.get("items"), raw_defs)
-            return None
-        if t.get("type") == "map":
-            _raw_record_fields(t.get("values"), raw_defs)
-            return None
-        return None
-    return None
+# ---------------------------------------------------- schema resolution
 
 
-#: JSON default value types the aligner may backfill per Avro type.
-#: bool is an int subclass in Python — excluded explicitly below.
+#: JSON default value types per primitive; bool is an int subclass in
+#: Python, so it is excluded explicitly where it does not belong.
 _DEFAULT_OK = {
     "boolean": (bool,),
     "int": (int,),
@@ -1246,38 +1003,16 @@ _DEFAULT_OK = {
 }
 
 
-def _check_primitive_default(vt: str, default, where: str) -> None:
-    """Leaf gate for a primitive default: the const goes straight into
-    an Arrow column of the field's Spark type, so a type-mismatched
-    default (``"unknown"`` on a long field) must fail HERE at plan
-    time, not mid-batch on an executor."""
-    if vt not in _DEFAULT_OK:
-        raise ValueError(
-            f"reader field {where}: non-null defaults are not supported "
-            f"for type {vt!r}"
-        )
-    ok = _DEFAULT_OK[vt]
-    if not isinstance(default, ok) or (
-        bool not in ok and isinstance(default, bool)
-    ):
-        raise ValueError(
-            f"reader field {where}: default {default!r} does not match "
-            f"field type {vt!r}"
-        )
-
-
-def _latin1_default_bytes(default, where: str) -> bytes:
-    """Avro spec (Default values): ``bytes`` and ``fixed`` defaults
-    are JSON STRINGS whose Unicode code points 0-255 map one-to-one to
-    byte values — i.e. latin-1.  Code points above U+00FF have no byte
-    mapping and are a schema bug; refuse at plan time."""
-    if not isinstance(default, str):
+def _latin1_default(d, where: str) -> bytes:
+    """Spec: ``bytes`` and ``fixed`` defaults are JSON strings whose code
+    points 0-255 are the byte values (latin-1)."""
+    if not isinstance(d, str):
         raise ValueError(
             f"reader field {where}: bytes/fixed default must be a JSON "
-            f"string (the spec's latin-1 byte encoding), got {default!r}"
+            f"string (the spec's latin-1 byte encoding), got {d!r}"
         )
     try:
-        return default.encode("latin-1")
+        return d.encode("latin-1")
     except UnicodeEncodeError:
         raise ValueError(
             f"reader field {where}: bytes/fixed default contains a code "
@@ -1285,684 +1020,273 @@ def _latin1_default_bytes(default, where: str) -> bytes:
         ) from None
 
 
-def _check_plain_int_default(default, where: str, what: str) -> int:
-    """Logical types ride their WIRE integer in JSON defaults (the
-    spec defines defaults on the underlying type); bool is an int
-    subclass in Python — excluded."""
-    if not isinstance(default, int) or isinstance(default, bool):
-        raise ValueError(
-            f"reader field {where}: {what} default must be a JSON "
-            f"integer (the underlying wire value), got {default!r}"
-        )
-    return default
-
-
-def _refuse_null_first_union_default(rtype, where: str) -> None:
-    """Avro spec (Default values): a union field's default is typed by
-    the union's FIRST branch, so a non-null default on a
-    ``["null", T]`` field is spec-invalid — the Java Avro / spark-avro
-    stack rejects such schemas at parse time and this codec must not
-    quietly accept what the reference path would refuse.  Producers
-    that want a non-null default declare ``[T, "null"]`` (Kafka
-    Connect's AvroData does exactly this for defaulted optional
-    columns)."""
-    if isinstance(rtype, list) and rtype and rtype[0] == "null":
-        raise ValueError(
-            f"reader field {where}: non-null default on a union whose "
-            "first branch is 'null' is spec-invalid (a union default "
-            "is typed by the FIRST branch); declare the union as "
-            "[T, 'null'] or use a null default"
-        )
-
-
-def _raw_fields_of(rtype, raw_defs):
-    """The raw JSON field list of a record type declaration — inline
-    dict or a registered named reference; None when unavailable."""
-    if isinstance(rtype, dict) and rtype.get("type") == "record":
-        return rtype.get("fields", [])
-    if isinstance(rtype, str):
-        return raw_defs.get(rtype)
-    return None
-
-
-def _raw_nonnull_type(rtype):
-    """A raw field type declaration with any ``["null", T]`` wrapper
-    stripped — the single non-null branch's raw decl, or None when the
-    union is multi-branch (the caller refuses those)."""
-    if isinstance(rtype, list):
-        nn = [b for b in rtype if b != "null"]
-        return nn[0] if len(nn) == 1 else None
-    return rtype
-
-
-def _default_const(rf: AvroField, raw, raw_defs, where: str):
-    """A reader-only field's backfill constant from its JSON
-    ``default`` (Avro spec, Default values) — converted at PLAN time
-    into the decoded-Python representation the aligner emits, so the
-    Arrow conversion downstream sees exactly what a decoded row would
-    carry.  r13 (judge ask #5) extends this beyond primitives to the
-    spec's composite defaults: record defaults are JSON objects
-    (absent fields take their OWN defaults, recursively — the
-    Debezium "new struct column with a {} backfill" evolution), array
-    defaults are JSON lists of item defaults, map defaults are JSON
-    objects of value defaults, enum defaults are symbol strings
-    (membership checked).  r14 (judge ask #1) adds bytes/fixed
-    defaults via the spec's latin-1 string encoding and logical-type
-    defaults on the underlying wire value (decimal / timestamp /
-    date — the Debezium ``NUMERIC(15,2) DEFAULT 0.00`` added column
-    lands here).  Still refused loudly: non-null defaults on
-    multi-branch unions (the spec types a union default by its FIRST
-    branch; surfacing it would need one memberN set, a shape no
-    Debezium topic uses) and — spec-correct — non-null defaults on
-    ``["null", T]`` unions (typed by the first branch = null)."""
-    default = raw.get("default")
-    if default is None:
-        if not rf.nullable:
+def _default_value(node, d, where: str):
+    """A JSON default -> the value a decoded row of ``node`` would carry,
+    converted once at plan time so backfilled rows hash like written
+    ones.  ``where`` is the reader path, for error messages."""
+    if isinstance(node, AvroUnion):
+        if d is None:
+            if node.nullable:
+                return None
+        elif len(node.non_null) > 1:
             raise ValueError(
-                f"reader field {where}: null default on a required "
-                "(non-nullable) field"
+                f"reader field {where}: non-null default on a multi-branch "
+                "union is not supported (spec types it by the first "
+                "branch; use spark-avro)"
             )
-        return None
-    vt = rf.value_type
-    if isinstance(vt, AvroUnion):
-        raise ValueError(
-            f"reader field {where}: non-null default on a multi-branch "
-            "union is not supported (spec types it by the first "
-            "branch; use spark-avro)"
-        )
-    _refuse_null_first_union_default(raw.get("type"), where)
-    return _convert_default(
-        vt, _raw_nonnull_type(raw.get("type")), default, raw_defs, where
-    )
-
-
-def _convert_default(vt, rtype, default, raw_defs, where: str):
-    """Recursive JSON-default -> decoded-value conversion for one
-    non-null value of type ``vt`` (see :func:`_default_const`).
-    ``rtype`` is the matching RAW JSON type declaration — needed to
-    reach nested field defaults; may be None for the leaf types."""
-    if isinstance(vt, AvroEnum):
-        if not isinstance(default, str) or default not in vt.symbols:
+        elif node.branches[0] == "null":
+            # spec: a union default is typed by its FIRST branch
             raise ValueError(
-                f"reader field {where}: enum default {default!r} is not "
-                f"one of {vt.name!r}'s symbols"
+                f"reader field {where}: non-null default on a union whose "
+                "first branch is 'null' is spec-invalid (a union default is "
+                "typed by the FIRST branch); declare the union as "
+                "[T, 'null'] or use a null default"
             )
-        return default
-    if isinstance(vt, AvroRecord):
-        if not isinstance(default, dict):
+        else:
+            return _default_value(node.non_null[0], d, where)
+    if d is None:
+        raise ValueError(
+            f"reader field {where}: null default on a required "
+            "(non-nullable) value"
+        )
+    if isinstance(node, AvroRecord):
+        if not isinstance(d, dict):
             raise ValueError(
                 f"reader field {where}: record default must be a JSON "
-                f"object, got {default!r}"
+                f"object, got {d!r}"
             )
-        known = {f.name for f in vt.fields}
-        extra = set(default) - known
+        extra = set(d) - {f.name for f in node.fields}
         if extra:
             raise ValueError(
                 f"reader field {where}: record default names unknown "
                 f"field(s) {sorted(extra)!r}"
             )
-        raw_by = {
-            f.get("name"): f
-            for f in (_raw_fields_of(rtype, raw_defs) or [])
-        }
-        out = {}
-        for sf in vt.fields:
-            sraw = raw_by.get(sf.name, {})
-            w2 = f"{where}.{sf.name}"
-            if sf.name in default:
-                v = default[sf.name]
-                if v is None:
-                    if not sf.nullable:
-                        raise ValueError(
-                            f"reader field {w2}: null default value on "
-                            "a required (non-nullable) record field"
-                        )
-                    out[sf.name] = None
-                    continue
-                svt = sf.value_type
-                if isinstance(svt, AvroUnion):
-                    raise ValueError(
-                        f"reader field {w2}: non-null default on a "
-                        "multi-branch union is not supported (use "
-                        "spark-avro)"
-                    )
-                _refuse_null_first_union_default(sraw.get("type"), w2)
-                out[sf.name] = _convert_default(
-                    svt, _raw_nonnull_type(sraw.get("type")), v,
-                    raw_defs, w2,
-                )
-            else:
-                # spec: fields absent from a record default take their
-                # OWN defaults — recursively (null for plain nullable
-                # fields, loud refusal for required ones)
-                if "default" in sraw:
-                    out[sf.name] = _default_const(sf, sraw, raw_defs, w2)
-                elif sf.nullable:
-                    out[sf.name] = None
-                else:
-                    raise ValueError(
-                        f"reader field {w2}: required record field is "
-                        "missing and has no default of its own"
-                    )
-        return out
-    if isinstance(vt, AvroArray):
-        if not isinstance(default, list):
-            raise ValueError(
-                f"reader field {where}: array default must be a JSON "
-                f"list, got {default!r}"
-            )
-        items_raw = rtype.get("items") if isinstance(rtype, dict) else None
-        return [
-            _convert_default_item(
-                vt.item, items_raw, v, raw_defs, f"{where}[{i}]"
-            )
-            for i, v in enumerate(default)
-        ]
-    if isinstance(vt, AvroMap):
-        if not isinstance(default, dict):
-            raise ValueError(
-                f"reader field {where}: map default must be a JSON "
-                f"object, got {default!r}"
-            )
-        values_raw = rtype.get("values") if isinstance(rtype, dict) else None
+        # spec: fields absent from a record default take their own default
         return {
-            k: _convert_default_item(
-                vt.value, values_raw, v, raw_defs, f"{where}[{k!r}]"
-            )
-            for k, v in default.items()
+            f.name: _default_value(f.type, d[f.name], f"{where}.{f.name}")
+            if f.name in d
+            else _default_const(f, f"{where}.{f.name}")
+            for f in node.fields
         }
-    if isinstance(vt, AvroFixed):
-        # spec: fixed defaults use the same latin-1 string encoding as
-        # bytes, and must be exactly `size` bytes long
-        raw_bytes = _latin1_default_bytes(default, where)
-        if len(raw_bytes) != vt.size:
+    if isinstance(node, AvroArray):
+        if not isinstance(d, list):
             raise ValueError(
-                f"reader field {where}: fixed default is "
-                f"{len(raw_bytes)} bytes but {vt.name!r} declares size "
-                f"{vt.size}"
+                f"reader field {where}: array default must be a JSON list, "
+                f"got {d!r}"
             )
-        if vt.decimal is not None:
-            unscaled = int.from_bytes(raw_bytes, "big", signed=True)
-            return _decimal.Decimal(unscaled).scaleb(
-                -vt.decimal[1], _DEC_EXACT
+        return [_default_value(node.item, v, f"{where}[{i}]") for i, v in enumerate(d)]
+    if isinstance(node, AvroMap):
+        if not isinstance(d, dict):
+            raise ValueError(
+                f"reader field {where}: map default must be a JSON object, "
+                f"got {d!r}"
             )
-        return raw_bytes
-    if isinstance(vt, str):
-        # r14 (judge ask #1): the logical-type / bytes defaults a real
-        # Debezium evolution emits — the headline case is an added
-        # NUMERIC(15,2) DEFAULT 0.00 column (the reference's own
-        # `balance` shape, reference schemas.py:37), whose Avro default
-        # is the latin-1 string of the unscaled two's-complement bytes.
-        # Each converts to the exact decoded-value representation the
-        # wire path produces, so backfilled rows hash identically to
-        # written ones.
-        m = _DECIMAL_RE.match(vt)
-        if m:
-            raw_bytes = _latin1_default_bytes(default, where)
-            unscaled = int.from_bytes(raw_bytes, "big", signed=True)
-            return _decimal.Decimal(unscaled).scaleb(
-                -int(m.group(2)), _DEC_EXACT
+        return {k: _default_value(node.value, v, f"{where}[{k!r}]") for k, v in d.items()}
+    if isinstance(node, AvroEnum):
+        if not isinstance(d, str) or d not in node.symbols:
+            raise ValueError(
+                f"reader field {where}: enum default {d!r} is not one of "
+                f"{node.name!r}'s symbols"
             )
-        if vt == "bytes":
-            return _latin1_default_bytes(default, where)
-        if vt in ("timestamp-micros", "timestamp-millis"):
-            v = _check_plain_int_default(default, where, vt)
-            us = v if vt == "timestamp-micros" else v * 1000
-            return _EPOCH_UTC + _dt.timedelta(microseconds=us)
-        if vt == "date":
-            v = _check_plain_int_default(default, where, vt)
-            return _EPOCH_DATE + _dt.timedelta(days=v)
-        _check_primitive_default(vt, default, where)
-        return default
+        return d
+    if isinstance(node, (AvroFixed, AvroDecimal)) or node == "bytes":
+        raw = _latin1_default(d, where)
+        size = getattr(node, "size", None)
+        if size is not None and len(raw) != size:
+            raise ValueError(
+                f"reader field {where}: fixed default is {len(raw)} bytes "
+                f"but {node.name!r} declares size {size}"
+            )
+        return node.value(raw) if isinstance(node, AvroDecimal) else raw
+    if isinstance(node, AvroTemporal):
+        # logical defaults are the JSON wire integer
+        if not isinstance(d, int) or isinstance(d, bool):
+            raise ValueError(
+                f"reader field {where}: {node.logical} default must be a "
+                f"JSON integer (the underlying wire value), got {d!r}"
+            )
+        return node.value(d)
+    ok = _DEFAULT_OK[node]
+    if not isinstance(d, ok) or (bool not in ok and isinstance(d, bool)):
+        raise ValueError(
+            f"reader field {where}: default {d!r} does not match field "
+            f"type {node!r}"
+        )
+    return d
+
+
+def _default_const(f: AvroField, where: str):
+    """The value of a reader field the writer lacks: its default, else
+    null when nullable, else the writer is refused."""
+    if f.default is not _NO_DEFAULT:
+        return _default_value(f.type, f.default, where)
+    if f.nullable:
+        return None
     raise ValueError(
-        f"reader field {where}: non-null defaults are not supported "
-        f"for type {vt!r}"
+        f"required reader field {where!r} is missing and has no default"
     )
 
 
-def _convert_default_item(item_vt, item_raw, v, raw_defs, where: str):
-    """One array item / map value inside a composite default; handles
-    the nullable ``["null", T]`` item unions the containers allow."""
-    if isinstance(item_vt, AvroUnion):
-        nn = item_vt.non_null
-        if v is None:
-            if "null" in item_vt.branches:
-                return None
-            raise ValueError(
-                f"reader field {where}: null default item on a "
-                "non-nullable container element"
-            )
-        if len(nn) != 1:
-            raise ValueError(
-                f"reader field {where}: default on a multi-branch "
-                "union element is not supported (use spark-avro)"
-            )
-        return _convert_default(
-            nn[0], _raw_nonnull_type(item_raw), v, raw_defs, where
-        )
-    if v is None:
-        raise ValueError(
-            f"reader field {where}: null default item on a "
-            "non-nullable container element"
-        )
-    return _convert_default(item_vt, item_raw, v, raw_defs, where)
-
-
-def _make_dict_aligner(w_rec: AvroRecord, r_rec: AvroRecord,
-                       r_raw_fields, raw_defs, sid, path):
-    """Recursive aligner for an EVOLVED nested record: maps a
-    writer-layout dict to the reader's nested field set (NULL backfill,
-    defaults, discarded writer-only keys).  Built once per writer at
-    plan time; incompatibilities raise HERE, not per row."""
-    wmap = {f.name: f for f in w_rec.fields}
-    raw_by_name = {f.get("name"): f for f in (r_raw_fields or [])}
-    plans = []
-    for rf in r_rec.fields:
-        raw = raw_by_name.get(rf.name, {})
-        where = f"{path}{rf.name}"
-        wf = wmap.get(rf.name)
-        if wf is None:
-            if "default" in raw:
-                plans.append(
-                    ("const", rf.name,
-                     _default_const(rf, raw, raw_defs, where))
-                )
-            elif rf.nullable:
-                plans.append(("const", rf.name, None))
-            else:
-                raise ValueError(
-                    f"writer schema {sid}: required reader field "
-                    f"{where!r} is missing and has no default"
-                )
-            continue
-        plans.append(_field_plan(wf, rf, raw, raw_defs, sid, where,
-                                 key=rf.name))
-    def align(d):
-        if d is None:
-            return None
-        out = {}
-        for kind, name, arg in plans:
-            if kind == "const":
-                out[name] = arg
-            elif kind == "copy":
-                out[name] = d.get(arg)
-            else:  # map
-                out[name] = arg[1](d.get(arg[0]))
-        return out
-
-    return align
-
-
-def _branch_key(b):
-    """Union-branch identity for cross-version matching (the Avro
-    resolution rules match named types by NAME, unnamed by type):
-    record/enum/fixed key on (kind, name), containers on kind, and
-    primitives/logicals on their parsed form."""
-    if isinstance(b, AvroRecord):
-        return ("record", b.name)
-    if isinstance(b, AvroEnum):
-        return ("enum", b.name)
-    if isinstance(b, AvroFixed):
-        return ("fixed", b.name)
-    if isinstance(b, AvroArray):
-        return ("array",)
-    if isinstance(b, AvroMap):
-        return ("map",)
-    return ("prim", b)
-
-
-def _union_view(branches: tuple) -> tuple:
-    """Normalize a field's branch tuple to union semantics: the full
-    branch tuple (single-branch wrappers unwrapped — their wire-side
-    index is the WRITER decoder's concern, not the aligner's) and the
-    non-null branches in schema order.  A plain field is the 1-branch
-    view, which is exactly how the spec's resolution rules treat a
-    non-union schema against a union."""
-    if len(branches) == 1 and isinstance(branches[0], AvroUnion):
-        branches = branches[0].branches
-    return branches, tuple(b for b in branches if b != "null")
-
-
-#: Avro resolution-rule type promotions (spec "Schema Resolution"):
-#: writer primitive -> reader primitive, with the converter applied to
-#: the SURFACED value (None passes through — nullable fields).  Only
-#: PLAIN primitives promote; a logical annotation on either side keeps
-#: the strict equality path (promoting e.g. a timestamp-micros long to
-#: double would silently change semantics, not representation).
+#: Resolution-rule promotions between plain primitives, applied to the
+#: surfaced value (None passes through).  Logical types never promote:
+#: a timestamp long read as a double would change meaning, not width.
 _PROMOTIONS = {
-    ("int", "long"): lambda v: v,
+    ("int", "long"): None,
     ("int", "float"): lambda v: None if v is None else float(v),
     ("int", "double"): lambda v: None if v is None else float(v),
     ("long", "float"): lambda v: None if v is None else float(v),
     ("long", "double"): lambda v: None if v is None else float(v),
-    ("float", "double"): lambda v: v,  # decoded float32 is a Python float
+    ("float", "double"): None,  # a decoded float32 is a Python float
     ("string", "bytes"): lambda v: None if v is None else v.encode("utf-8"),
     ("bytes", "string"): lambda v: None if v is None else v.decode("utf-8"),
 }
 
 
-def _promotion(wb, rb):
-    """Converter for a writer->reader primitive promotion, or None.
-    Both sides must be PLAIN primitive strings (in _PRIMITIVES, no
-    logical annotation) — `int` is promotable, `date` (an int wire)
-    is not."""
-    if (
-        isinstance(wb, str) and isinstance(rb, str)
-        and wb in _PRIMITIVES and rb in _PRIMITIVES
-    ):
-        return _PROMOTIONS.get((wb, rb))
-    return None
+def _promotes(wb, rb) -> bool:
+    return isinstance(wb, str) and isinstance(rb, str) and (wb, rb) in _PROMOTIONS
 
 
-def _raw_record_for(raw_t, name: str, raw_defs: dict):
-    """Raw JSON field list for the named record within ``raw_t``
-    (digging union lists and container item/value types), falling back
-    to the by-name registry.  None means the reader's defaults are
-    unavailable for that record — which only matters when it ADDED a
-    required field that needs one, and the aligner then refuses with
-    the missing-default error (never silently)."""
-    if isinstance(raw_t, list):
-        for e in raw_t:
-            r = _raw_record_for(e, name, raw_defs)
-            if r is not None:
-                return r
-        return None
-    if isinstance(raw_t, dict):
-        t = raw_t.get("type")
-        if t == "record":
-            rn = raw_t.get("name")
-            ns = raw_t.get("namespace")
-            if rn == name or (ns and f"{ns}.{rn}" == name):
-                return _raw_record_fields(raw_t, raw_defs)
-            return None
-        if t == "array":
-            return _raw_record_for(raw_t.get("items"), name, raw_defs)
-        if t == "map":
-            return _raw_record_for(raw_t.get("values"), name, raw_defs)
-        return None
-    if isinstance(raw_t, str) and raw_t.split(".")[-1] == name.split(".")[-1]:
-        return raw_defs.get(raw_t)
-    return None
-
-
-def _branch_converter(wb, rb, raw_t, raw_defs, sid, where):
-    """Resolution for one matched writer/reader branch pair anywhere a
-    value can nest (r12): None when the surfaced writer value is
-    already valid for the reader, else a converter applied to the
-    surfaced value; refuses loudly at plan time otherwise.  Covers the
-    recursive cases the Avro resolution rules define:
-
-      * identical branches -> None;
-      * plain-primitive promotions (_PROMOTIONS);
-      * enums aligned by name with writer symbols ⊆ reader symbols
-        (symbol STRINGS surface, so no converter needed);
-      * records aligned by the same recursive name-based field rules
-        as top-level records (_make_dict_aligner) — the Debezium
-        array<record> ``data_collections`` ALTER TABLE case;
-      * array items / map values recursively (an element converter
-        lifts over the list / the dict's values);
-      * unions at any depth via _union_value_converter (the SAME
-        resolver _field_plan uses) — single-non-null unions surface
-        plain values, multi-branch unions re-index their memberN
-        dicts; writer-nullable vs reader-required and multi-to-single
-        narrowing still refuse.
-
-    Still refused here: resized fixeds (the spec defines no fixed-size
-    resolution)."""
+def _branch_converter(wb, rb, where: str):
+    """Writer node -> reader node: None when the surfaced writer value
+    is already valid for the reader, else a converter for it; refuses
+    loudly otherwise."""
     if wb == rb:
         return None
-    conv = _promotion(wb, rb)
-    if conv is not None:
-        return conv
+    if isinstance(wb, AvroUnion) or isinstance(rb, AvroUnion):
+        return _union_value_converter(wb, rb, where)
+    if _promotes(wb, rb):
+        return _PROMOTIONS[wb, rb]
     if isinstance(wb, AvroEnum) and isinstance(rb, AvroEnum):
         if wb.name == rb.name and set(wb.symbols) <= set(rb.symbols):
             return None
         raise ValueError(
-            f"writer schema {sid}: {where!r} enum mismatch — writer "
-            f"{wb.name!r} symbols {wb.symbols!r} are not a subset of "
-            f"reader {rb.name!r} symbols {rb.symbols!r} (a symbol "
-            "removed from the reader refuses: the history may carry it)"
+            f"{where!r} enum mismatch — writer {wb.name!r} symbols "
+            f"{wb.symbols!r} are not a subset of reader {rb.name!r} symbols "
+            f"{rb.symbols!r} (a symbol removed from the reader refuses: the "
+            "history may carry it)"
         )
     if isinstance(wb, AvroRecord) and isinstance(rb, AvroRecord):
         if wb.name != rb.name:
             raise ValueError(
-                f"writer schema {sid}: {where!r} record name mismatch "
-                f"({wb.name!r} vs {rb.name!r}); records align by name"
+                f"{where!r} record name mismatch ({wb.name!r} vs "
+                f"{rb.name!r}); records align by name"
             )
-        sub_raw = _raw_record_for(raw_t, rb.name, raw_defs)
-        return _make_dict_aligner(
-            wb, rb, sub_raw, raw_defs, sid, where + "."
-        )
+        return _record_aligner(wb.fields, rb.fields, where + ".", by_name=True)
     if isinstance(wb, AvroArray) and isinstance(rb, AvroArray):
-        inner = _branch_converter(
-            wb.item, rb.item,
-            raw_t, raw_defs, sid, where + "[]",
-        )
-        if inner is None:
-            return None
-
-        def conv_arr(v, _f=inner):
-            return None if v is None else [_f(x) for x in v]
-
-        return conv_arr
+        f = _branch_converter(wb.item, rb.item, where + "[]")
+        return None if f is None else lambda v: None if v is None else [f(x) for x in v]
     if isinstance(wb, AvroMap) and isinstance(rb, AvroMap):
-        inner = _branch_converter(
-            wb.value, rb.value,
-            raw_t, raw_defs, sid, where + "{}",
-        )
-        if inner is None:
-            return None
-
-        def conv_map(v, _f=inner):
-            return None if v is None else {k: _f(x) for k, x in v.items()}
-
-        return conv_map
-    if isinstance(wb, AvroUnion) or isinstance(rb, AvroUnion):
-        # full union resolution — shared with _field_plan, so unions
-        # evolve identically at field level and nested inside
-        # container elements (late r12).  A PLAIN branch on either
-        # side is the 1-branch union view (exactly how the spec's
-        # resolution rules treat a non-union schema against a union):
-        # writer "int" items vs reader ["null","int"] items is the
-        # canonical make-a-column-nullable ALTER and resolves here.
-        w_all = wb.branches if isinstance(wb, AvroUnion) else (wb,)
-        r_all = rb.branches if isinstance(rb, AvroUnion) else (rb,)
-        return _union_value_converter(
-            w_all, r_all, raw_t, raw_defs, sid, where
+        f = _branch_converter(wb.value, rb.value, where + "{}")
+        return (
+            None if f is None
+            else lambda v: None if v is None else {k: f(x) for k, x in v.items()}
         )
     raise ValueError(
-        f"writer schema {sid}: {where!r} type mismatch "
-        f"({wb!r} vs {rb!r}); identical layouts, name-aligned "
-        "records/enums, and primitive promotions only"
+        f"{where!r} type mismatch ({wb!r} vs {rb!r}); identical layouts, "
+        "name-aligned records/enums, and primitive promotions only"
     )
 
 
-def _union_value_converter(w_all, r_all, raw_t, raw_defs, sid, where):
-    """Resolution for a writer union VALUE against a reader union
-    (full branch tuples, null included): None when surfaced values are
-    already reader-valid, else a converter; loud refusal otherwise.
-    This is THE union logic — _field_plan delegates its union section
-    here, and _branch_converter routes nested unions (container
-    items/values) through it, so one implementation covers both
-    depths.  Semantics (the Avro resolution rules over spark-avro's
-    surfaced shapes):
+def _union_value_converter(wb, rb, where: str):
+    """Resolution where either side is a union (a plain node is the
+    one-branch view, as the spec treats it):
 
       * writer-nullable vs reader-required refuses;
-      * 1 vs 1 non-null branch: surfaced value is PLAIN — recurse into
-        the branch pair (identity, promotion, enum widening, evolved
-        record/container);
-      * >1 vs 1: refuses — the surfaced shape would change (memberN
-        struct -> plain value);
-      * 1 vs many: the plain value LIFTS into its reader member slot
-        (first identical branch by key, else the first promotable
-        reader branch in reader order), converted if needed;
-      * many vs many: reader branch set must cover the writer's (by
-        key or promotion); the surfaced memberN dict re-indexes to
-        reader positions with per-branch converters on the active
-        member.
-    """
-    w_nn = tuple(b for b in w_all if b != "null")
-    r_nn = tuple(b for b in r_all if b != "null")
+      * one non-null branch each: the surfaced values are plain, so the
+        branch pair resolves;
+      * several writer branches vs one reader branch refuses (the
+        memberN struct would become a plain value);
+      * otherwise each writer branch matches the reader branch of the
+        same name or type, else the first promotable one in reader
+        order, and the surfaced value moves to that member slot."""
+    w_all = wb.branches if isinstance(wb, AvroUnion) else (wb,)
+    r_all = rb.branches if isinstance(rb, AvroUnion) else (rb,)
+    w_nn = [b for b in w_all if b != "null"]
+    r_nn = [b for b in r_all if b != "null"]
     if "null" in w_all and "null" not in r_all:
         raise ValueError(
-            f"writer schema {sid}: field {where!r} is nullable in the "
-            "writer but required in the reader"
+            f"field {where!r} is nullable in the writer but required in "
+            "the reader"
         )
     if len(w_nn) == 1 and len(r_nn) == 1:
-        return _branch_converter(
-            w_nn[0], r_nn[0], raw_t, raw_defs, sid, where
-        )
-    if len(w_nn) > 1 and len(r_nn) == 1:
-        # narrowing a multi-type union to one branch would change the
-        # surfaced shape (memberN struct -> plain value); refuse at
-        # plan time like every other narrowing
+        return _branch_converter(w_nn[0], r_nn[0], where)
+    if len(r_nn) == 1:
         raise ValueError(
-            f"writer schema {sid}: field {where!r} type mismatch — "
-            f"multi-branch writer union {w_nn!r} cannot narrow to "
-            f"the single reader branch {r_nn!r}"
+            f"field {where!r} type mismatch — multi-branch writer union "
+            f"{w_nn!r} cannot narrow to the single reader branch {r_nn!r}"
         )
     r_pos = {}
     for j, b in enumerate(r_nn):
-        r_pos.setdefault(_branch_key(b), (j, b))
-    remap: dict[int, int] = {}
-    convs: dict[int, object] = {}
-    for k, b in enumerate(w_nn):
-        ent = r_pos.get(_branch_key(b))
-        if ent is None and isinstance(b, str) and b in _PRIMITIVES:
-            # spec resolution inside unions: a writer branch matches
-            # the FIRST reader branch it can resolve to — for a plain
-            # primitive with no same-type reader branch, that is the
-            # first promotable target in reader order
-            for j2, rb_c in enumerate(r_nn):
-                if (
-                    isinstance(rb_c, str)
-                    and _promotion(b, rb_c) is not None
-                ):
-                    ent = (j2, rb_c)
-                    break
-        if ent is None:
+        r_pos.setdefault(_branch_key(b), j)
+    slots = []  # per writer member: (reader member, converter)
+    for b in w_nn:
+        j = r_pos.get(_branch_key(b))
+        if j is None:
+            j = next((j for j, rb2 in enumerate(r_nn) if _promotes(b, rb2)), None)
+        if j is None:
             raise ValueError(
-                f"writer schema {sid}: field {where!r} type mismatch "
-                f"— writer union branch {b!r} is absent from the "
-                f"reader union {r_nn!r} (no identical or promotable "
-                "branch)"
+                f"field {where!r} type mismatch — writer union branch {b!r} "
+                f"is absent from the reader union {r_nn!r} (no identical or "
+                "promotable branch)"
             )
-        j, rb2 = ent
-        remap[k] = j
-        if b != rb2:
-            try:
-                convs[k] = _branch_converter(
-                    b, rb2, raw_t, raw_defs, sid, where
-                )
-            except ValueError as exc:
-                raise ValueError(
-                    f"writer schema {sid}: field {where!r} — matched "
-                    f"union branch changed layout and cannot resolve "
-                    f"({b!r} vs {rb2!r}): {exc}"
-                ) from exc
+        try:
+            slots.append((f"member{j}", _branch_converter(b, r_nn[j], where)))
+        except ValueError as exc:
+            raise ValueError(
+                f"field {where!r} — matched union branch changed layout and "
+                f"cannot resolve ({b!r} vs {r_nn[j]!r}): {exc}"
+            ) from exc
     if len(w_nn) == 1:
-        # reader union is wider: lift the plain surfaced value into
-        # its reader member slot (converted if the branch evolved)
-        j = remap[0]
-        conv0 = convs.get(0)
+        # the reader union is wider: lift the plain value into its slot
+        (key, f), = slots
 
-        def lift(v, _j=j, _c=conv0):
-            if v is None:
-                return None
-            return {f"member{_j}": v if _c is None else _c(v)}
+        def lift(v):
+            return None if v is None else {key: v if f is None else f(v)}
 
         return lift
-    if all(k == j for k, j in remap.items()) and not any(
-        c is not None for c in convs.values()
-    ):
+    if all(s == (f"member{k}", None) for k, s in enumerate(slots)):
         return None
-    entries = {
-        f"member{k}": (f"member{j}", convs.get(k))
-        for k, j in remap.items()
-    }
+    by_member = {f"member{k}": s for k, s in enumerate(slots)}
 
-    def remap_members(d, _e=entries):
+    def remap(d):
         if d is None:
             return None
         out = {}
         for k, v in d.items():
-            name, c = _e[k]
-            out[name] = v if c is None else c(v)
+            key, f = by_member[k]
+            out[key] = v if f is None else f(v)
         return out
 
-    return remap_members
+    return remap
 
 
-def _field_plan(wf: AvroField, rf: AvroField, raw, raw_defs, sid, where,
-                *, key):
-    """Resolution plan for one shared field (writer wf -> reader rf):
-    ("copy", key, source) when the SURFACED value is already valid for
-    the reader, ("map", key, (source, fn)) when it needs reshaping —
-    a nested record that evolved, or a union whose member positions
-    moved.  Evolution accepted per the Avro resolution rules:
+def _record_aligner(w_fields, r_fields, path: str, *, by_name: bool):
+    """One record's writer values -> the reader's: shared fields resolve,
+    reader-only fields take their default, writer-only fields drop.
+    Values are read by field name from a nested record's dict
+    (``by_name``) or by position from a top-level tuple, and come out in
+    the same shape."""
+    w_key = {f.name: (f.name if by_name else i, f) for i, f in enumerate(w_fields)}
+    plan = []  # (writer key or None, converter, constant)
+    for rf in r_fields:
+        where = path + rf.name
+        if rf.name not in w_key:
+            plan.append((None, None, _default_const(rf, where)))
+        else:
+            key, wf = w_key[rf.name]
+            plan.append((key, _branch_converter(wf.type, rf.type, where), None))
+    names = [rf.name for rf in r_fields]
 
-      * enums align by NAME with the writer's symbols a subset of the
-        reader's (Debezium ``ALTER TYPE ... ADD VALUE``); a symbol
-        REMOVED from the reader still refuses loudly — the writer's
-        history may contain it;
-      * unions align by branch name-set: the reader's branches must be
-        a superset of the writer's (reordering included), each matched
-        branch layout-identical; the surfaced plain value / memberN
-        dict is re-indexed to the reader's member positions;
-      * a non-union writer resolves against a reader union containing
-        its type (and vice versa for single-branch wrappers).
+    def align(vals):
+        if vals is None:
+            return None
+        out = [
+            const if key is None else vals[key] if f is None else f(vals[key])
+            for key, f, const in plan
+        ]
+        return dict(zip(names, out)) if by_name else out
 
-      * single plain-primitive branches follow the resolution rules'
-        TYPE PROMOTIONS (int->long/float/double, long->float/double,
-        float->double, string<->bytes) with the converter applied to
-        the surfaced value; logical annotations do NOT promote — the
-        wire would convert but the semantics would not;
-      * (r12) container item/value types and matched union branches
-        resolve RECURSIVELY through _branch_converter — evolved
-        array<record>/map<record> element records (Debezium
-        ``data_collections``), promotions and enum widening inside
-        containers, nested single-non-null unions.
-
-    Still refused: resized fixeds (no fixed-size resolution rule
-    exists) and multi-to-single union narrowing (the surfaced memberN
-    shape would change) — multi-branch unions nested inside container
-    elements resolve through the SAME _union_value_converter as
-    field-level unions (late r12)."""
-    wb, rb = wf.value_type, rf.value_type
-    if wf.branches == rf.branches or (
-        wf.branches == (rb,) and rf.nullable
-    ):
-        return ("copy", key, key)
-    if isinstance(wb, AvroRecord) and isinstance(rb, AvroRecord):
-        if wf.nullable and not rf.nullable:
-            raise ValueError(
-                f"writer schema {sid}: field {where!r} is nullable in the "
-                "writer but required in the reader"
-            )
-        sub_raw = _raw_record_fields(raw.get("type"), raw_defs)
-        sub = _make_dict_aligner(
-            wb, rb, sub_raw, raw_defs, sid, where + "."
-        )
-        return ("map", key, (key, sub))
-    w_all, w_nn = _union_view(wf.branches)
-    r_all, r_nn = _union_view(rf.branches)
-    if w_nn and r_nn:
-        # one union resolver for every depth (late r12): identity,
-        # promotions (including the spec's first-promotable-branch
-        # match inside multi-branch unions), enum widening, evolved
-        # records/containers, memberN re-index, nullable/narrowing
-        # refusals — shared verbatim with container-nested unions via
-        # _branch_converter
-        conv = _union_value_converter(
-            w_all, r_all, raw.get("type"), raw_defs, sid, where
-        )
-        if conv is None:
-            return ("copy", key, key)
-        return ("map", key, (key, conv))
-    raise ValueError(
-        f"writer schema {sid}: field {where!r} type mismatch "
-        f"({wf.branches!r} vs {rf.branches!r})"
-    )
+    return align
 
 
 def latest_writer_json(writer_schemas: dict) -> str:
@@ -1976,91 +1300,30 @@ def latest_writer_json(writer_schemas: dict) -> str:
 def build_writer_aligners(writer_schemas: dict[int, str],
                           reader_schema_json: str):
     """Plan-time half of :func:`decode_confluent_evolving`: parse the
-    reader, resolve every writer version against it (recursively, so an
-    evolved NESTED row-image record — Debezium's ALTER TABLE shape —
-    resolves too), and return (reader_fields, {id: (writer_fields,
-    align_fn)}).  align_fn maps a decoded writer tuple to reader field
-    order.  Raises on any incompatible historic version — call this at
-    stream START to fail before the first micro-batch.
-
-    Memoized on the (writer set, reader) pair: schemas are CONFIG, and
-    a foreachBatch loop that re-parses every historic version per
-    micro-batch would repeat pure driver work on the hot path."""
-    key = tuple(
-        sorted((int(sid), wjson) for sid, wjson in writer_schemas.items())
+    reader, resolve every writer version against it, and return
+    (reader_fields, {id: (writer_fields, align_fn)}).  align_fn maps a
+    decoded writer tuple to a list in reader field order.  Raises on any
+    incompatible historic version, so calling it at stream start fails
+    before the first micro-batch.  Memoized: schemas are config, and a
+    foreachBatch loop would otherwise re-resolve every version per
+    micro-batch."""
+    return _build_aligners(
+        tuple(sorted((int(sid), w) for sid, w in writer_schemas.items())),
+        reader_schema_json,
     )
-    return _aligners_cached(key, reader_schema_json)
 
 
-def _aligners_cached(writer_items: tuple, reader_schema_json: str):
-    import functools
-
-    # functools.cache on the module function itself would make the
-    # public dict signature unhashable; cache on the frozen tuple form
-    if not hasattr(_aligners_cached, "_cache"):
-        _aligners_cached._cache = functools.lru_cache(maxsize=64)(
-            _build_aligners_impl
-        )
-    return _aligners_cached._cache(writer_items, reader_schema_json)
-
-
-def _build_aligners_impl(writer_items: tuple, reader_schema_json: str):
-    writer_schemas = dict(writer_items)
+@functools.lru_cache(maxsize=64)
+def _build_aligners(writer_items: tuple, reader_schema_json: str):
     reader = parse_flat_schema(reader_schema_json)
-    raw_defs: dict[str, list] = {}
-    r_raw_fields = json.loads(reader_schema_json).get("fields", [])
-    for f in r_raw_fields:
-        _raw_record_fields(f.get("type"), raw_defs)
-    raw_by_name = {f.get("name"): f for f in r_raw_fields}
-    writers: dict[int, tuple] = {}
-    for sid, wjson in writer_schemas.items():
+    writers = {}
+    for sid, wjson in writer_items:
         wfields = parse_flat_schema(wjson)
-        wmap = {f.name: (i, f) for i, f in enumerate(wfields)}
-        plans = []
-        for rf in reader:
-            raw = raw_by_name.get(rf.name, {})
-            ent = wmap.get(rf.name)
-            if ent is None:
-                if "default" in raw:
-                    plans.append(
-                        ("const",
-                         _default_const(rf, raw, raw_defs, rf.name))
-                    )
-                elif rf.nullable:
-                    plans.append(("const", None))
-                else:
-                    raise ValueError(
-                        f"writer schema {sid}: required reader field "
-                        f"{rf.name!r} is missing and has no default"
-                    )
-                continue
-            i, wf = ent
-            kind, _, arg = _field_plan(
-                wf, rf, raw, raw_defs, sid, rf.name, key=i
-            )
-            if kind == "copy":
-                plans.append(("idx", i))
-            else:
-                plans.append(("map", arg))
-
-        def make_align(plans):
-            def align(vals):
-                out = []
-                for kind, arg in plans:
-                    if kind == "const":
-                        out.append(arg)
-                    elif kind == "idx":
-                        out.append(vals[arg])
-                    else:
-                        out.append(arg[1](vals[arg[0]]))
-                return out
-
-            return align
-
-        writers[int(sid)] = (wfields, make_align(plans))
+        try:
+            writers[sid] = (wfields, _record_aligner(wfields, reader, "", by_name=False))
+        except ValueError as exc:
+            raise ValueError(f"writer schema {sid}: {exc}") from exc
     return reader, writers
-
-
 def decode_confluent_evolving(
     df: DataFrame,
     writer_schemas: dict[int, str],
@@ -2079,24 +1342,12 @@ def decode_confluent_evolving(
 
     ``writer_schemas`` maps schema id -> writer schema JSON (the
     registry subset this topic used — CONFIG from a registry fetch,
-    never per-row state).  Resolution is the codec-subset of the Avro
-    spec, checked per writer at PLAN time so an incompatible historic
-    version fails before any row decodes:
-
-      * fields match by NAME (writer field order only drives decoding),
-        RECURSIVELY into record-typed fields — an evolved nested row
-        image (Debezium's ALTER TABLE ADD COLUMN changes the nested
-        ``Value`` record) resolves like the top level does;
-      * writer-only fields are decoded and discarded (the bytes must be
-        consumed to advance the buffer);
-      * reader-only fields take the reader's JSON ``default`` if
-        declared, else NULL when the reader field is nullable
-        (Debezium's added-column shape is nullable-with-null-default),
-        else the writer is rejected;
-      * matched fields must agree on type — identical branches, a
-        non-nullable writer narrowing into a nullable reader, or two
-        record types that recursively resolve; non-null ``default`` on
-        non-primitive fields is rejected (no typed-literal coercion).
+    never per-row state).  Every writer resolves against the reader at
+    PLAN time (:func:`build_writer_aligners`, rules in the module
+    docstring), so an incompatible historic version fails before any
+    row decodes.  Fields match by name at every depth: writer-only
+    fields are decoded and dropped, reader-only fields take their
+    default, else NULL when nullable (Debezium's added-column shape).
 
     ``unknown_id='null'`` turns rows whose id is not in the registry
     map into all-NULL field rows that KEEP their schema_id for
@@ -2208,7 +1459,7 @@ def encode_confluent_frames(
             if (
                 isinstance(v, float)
                 and not f.nullable
-                and _wire_type(f.value_type) in ("float", "double")
+                and f.value_type in ("float", "double")
             ):
                 return v
             return None
