@@ -18,7 +18,30 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
+
+
+def _put_checkout_on_worker_path() -> None:
+    """Python workers do not see the driver's ``sys.path``, so entries
+    that ship package functions to them need the checkout on the
+    workers' ``PYTHONPATH``.  It goes into this process's environment,
+    which a Spark JVM started later inherits, and into the running
+    context's ``environment``, which every Python function created from
+    now on hands to its workers."""
+    from pyspark import SparkContext
+
+    def with_root(path: str | None) -> str:
+        parts = [p for p in (path or "").split(os.pathsep) if p]
+        return os.pathsep.join(parts if _ROOT in parts else [_ROOT, *parts])
+
+    os.environ["PYTHONPATH"] = with_root(os.environ.get("PYTHONPATH"))
+    sc = SparkContext._active_spark_context
+    if sc is not None:
+        sc.environment["PYTHONPATH"] = with_root(sc.environment.get("PYTHONPATH"))
+
+
+_put_checkout_on_worker_path()
 
 import ultimate_data_engineering_project_spark.plans.catalog as _catalog
 

@@ -310,9 +310,9 @@ def test_incremental_model_stream_matches_batch(spark, sf_dir, tmp_path):
         .parquet(src + "/b*")
     )
     counts_dir = str(tmp_path / "nb_counts")
-    dstats_dir = str(tmp_path / "nb_dstats")
+    doc_counts_dir = str(tmp_path / "nb_dstats")
     q = run_incremental_quality_model_stream(
-        spark, stream, counts_dir, dstats_dir, str(tmp_path / "ckpt"),
+        spark, stream, counts_dir, doc_counts_dir, str(tmp_path / "ckpt"),
         dim=dim,
     )
     q.awaitTermination(300)
@@ -327,14 +327,14 @@ def test_incremental_model_stream_matches_batch(spark, sf_dir, tmp_path):
         )
 
     inc = classifier.nb_model_from_partials(
-        spark, counts_dir, dstats_dir, dim=dim
+        spark, counts_dir, doc_counts_dir, dim=dim
     )
     full = classifier.nb_train(docs, label, dim=dim)
     assert model_key(inc) == model_key(full)
 
     # time travel: model as of batch 1 == one-shot train on batch 0
     prefix = classifier.nb_model_from_partials(
-        spark, counts_dir, dstats_dir, dim=dim, before_batch=1
+        spark, counts_dir, doc_counts_dir, dim=dim, before_batch=1
     )
     first = classifier.nb_train(
         docs.filter(F.col("doc_id") < third), label, dim=dim
@@ -351,11 +351,11 @@ def test_incremental_model_stream_matches_batch(spark, sf_dir, tmp_path):
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/b*"),
-        counts_dir, dstats_dir, str(tmp_path / "ckpt"),
+        counts_dir, doc_counts_dir, str(tmp_path / "ckpt"),
         dim=dim,
     )
     q2.awaitTermination(300)
     replayed = classifier.nb_model_from_partials(
-        spark, counts_dir, dstats_dir, dim=dim
+        spark, counts_dir, doc_counts_dir, dim=dim
     )
     assert model_key(replayed) == model_key(full)

@@ -370,14 +370,37 @@ def test_anomaly_zero_variance_flatline(spark, sf_dir):
     assert out.filter(F.col("event_id") == 99).count() == 1
 
 
+def _hot_range(spark, n=60_000):
+    """``n`` rows, half on key 7 and the rest over 500 keys, one minute
+    apart: a hot key above the dispatch's ``MIN_ROWS`` floor."""
+    assert n >= windows.MIN_ROWS
+    return spark.range(n).select(
+        F.when(F.col("id") % 2 == 0, F.lit(7)).otherwise(F.col("id") % 500 + 1000)
+        .cast("long").alias("k"),
+        F.col("id").alias("seq"),
+        (
+            F.to_timestamp(F.lit("2024-01-01 00:00:00"))
+            + F.make_interval(mins=F.col("id").cast("int"))
+        ).alias("ts"),
+        (F.col("id") % 97).alias("v"),
+    )
+
+
+def _same_rows(a, b):
+    return a.exceptAll(b).count() + b.exceptAll(a).count() == 0
+
+
+def _plan(df):
+    return df._jdf.queryExecution().analyzed().toString()
+
+
 def test_skew_aware_window_dispatch(spark, sf_dir):
-    """r10 judge ask #2: the auto forms probe the key histogram and
-    pick plain at uniform data, chunked under a hot key — and the
-    dispatch can never change the ANSWER, only the plan (both branches
-    produce the exact plain-window result).  The decision rule itself
-    is pinned: absolute rows-per-task cap, scale-free share cap, and
-    the toy-frame floor; injected ``stats=`` skip the probe so
-    production callers can decide from table statistics."""
+    """The four ``*_auto`` forms probe the key histogram and pick plain
+    at uniform data, chunked under a hot key — and the dispatch can
+    never change the ANSWER, only the plan (both branches produce the
+    exact plain-window result).  The decision rule itself is pinned:
+    absolute rows-per-task cap, scale-free share cap, and the toy-frame
+    floor."""
     from pyspark.sql import functions as F
     from ultimate_data_engineering_project_spark.sources.readers import load_table
 
@@ -388,52 +411,34 @@ def test_skew_aware_window_dispatch(spark, sf_dir):
     assert windows.decide_window_form(mk(10_000, 60_000)) == "chunked"  # 17%
     assert windows.decide_window_form(mk(2_000, 60_000)) == "plain"  # 3%
     assert windows.decide_window_form(mk(900, 1_000)) == "plain"  # toy floor
-    assert windows.decide_window_form(
-        mk(900, 1_000), min_rows=100
-    ) == "chunked"
 
+    hot = _hot_range(spark)
+
+    # running_sum_auto: uniform orders -> plain, hot key -> chunked
     orders = load_table(spark, sf_dir, "orders")
     val = F.col("o_totalprice").cast("decimal(25,10)")
     plain = windows.running_sum(
         orders, ["o_custkey"], ["o_orderdate", "o_orderkey"], val,
         alias="running_spend",
     ).select("o_orderkey", "running_spend")
-
-    # uniform: probe sees no hot key -> plain form
     dec = {}
     got = windows.running_sum_auto(
         orders, ["o_custkey"], ["o_orderdate", "o_orderkey"], val,
         "o_orderdate", alias="running_spend", decision=dec,
     ).select("o_orderkey", "running_spend")
     assert dec["form"] == "plain" and dec["total_rows"] == orders.count()
-    assert plain.exceptAll(got).count() + got.exceptAll(plain).count() == 0
+    assert "__chunk" not in _plan(got)
+    assert _same_rows(plain, got)
 
-    # hot key: every row one customer -> chunked form, SAME result
-    hot = orders.withColumn("o_custkey", F.lit(7))
-    p2 = windows.running_sum(
-        hot, ["o_custkey"], ["o_orderdate", "o_orderkey"], val,
-        alias="running_spend",
-    ).select("o_orderkey", "running_spend")
-    dec2 = {}
-    c2 = windows.running_sum_auto(
-        hot, ["o_custkey"], ["o_orderdate", "o_orderkey"], val,
-        "o_orderdate", alias="running_spend",
-        chunk_seconds=90 * 86_400, min_rows=1_000, decision=dec2,
-    ).select("o_orderkey", "running_spend")
-    assert dec2["form"] == "chunked"
-    assert dec2["max_key_rows"] == dec2["total_rows"]
-    assert p2.exceptAll(c2).count() + c2.exceptAll(p2).count() == 0
-
-    # injected stats skip the probe and force the branch
-    dec3 = {}
-    forced = windows.running_sum_auto(
-        orders, ["o_custkey"], ["o_orderdate", "o_orderkey"], val,
-        "o_orderdate", alias="running_spend",
-        stats={"max_key_rows": 10**9, "total_rows": 10**10, "n_keys": 5},
-        decision=dec3,
-    ).select("o_orderkey", "running_spend")
-    assert dec3["form"] == "chunked" and dec3["max_key_rows"] == 10**9
-    assert plain.exceptAll(forced).count() + forced.exceptAll(plain).count() == 0
+    dec = {}
+    c1 = windows.running_sum_auto(
+        hot, ["k"], ["ts", "seq"], F.col("v"), "ts", decision=dec
+    )
+    assert dec["form"] == "chunked" and dec["max_key_rows"] == 30_000
+    assert "__chunk" in _plan(c1)
+    assert _same_rows(
+        c1, windows.running_sum(hot, ["k"], ["ts", "seq"], F.col("v"))
+    )
 
     # sessionize_auto: same dispatch, bit-identical session numbering
     ev = load_table(spark, sf_dir, "events").withColumn(
@@ -442,432 +447,126 @@ def test_skew_aware_window_dispatch(spark, sf_dir):
     sp = windows.sessionize(
         ev, "user_id", "ts", 1800, tiebreak="event_id"
     ).select("event_id", "session_id")
-    dec4 = {}
+    dec = {}
     sa = windows.sessionize_auto(
-        ev, "user_id", "ts", 1800, tiebreak="event_id", decision=dec4
+        ev, "user_id", "ts", 1800, tiebreak="event_id", decision=dec
     ).select("event_id", "session_id")
-    assert dec4["form"] == "plain"
-    assert sp.exceptAll(sa).count() + sa.exceptAll(sp).count() == 0
+    assert dec["form"] == "plain" and "__chunk" not in _plan(sa)
+    assert _same_rows(sp, sa)
 
-    hot_ev = ev.withColumn("user_id", F.lit(1).cast("long"))
-    sp2 = windows.sessionize(
-        hot_ev, "user_id", "ts", 1800, tiebreak="event_id"
-    ).select("event_id", "session_id")
-    dec5 = {}
+    # uneven gaps (10-110 min between a key's rows) so sessions both
+    # break and run across the one-day chunk boundaries
+    hot_ev = hot.withColumn(
+        "ts",
+        F.to_timestamp(F.lit("2024-01-01 00:00:00")) + F.make_interval(
+            mins=(F.col("seq") * 5 + (F.col("seq") % 11) * 10).cast("int")
+        ),
+    )
+    dec = {}
     sa2 = windows.sessionize_auto(
-        hot_ev, "user_id", "ts", 1800, tiebreak="event_id",
-        min_rows=100, decision=dec5,
-    ).select("event_id", "session_id")
-    assert dec5["form"] == "chunked"
-    assert sp2.exceptAll(sa2).count() + sa2.exceptAll(sp2).count() == 0
+        hot_ev, "k", "ts", 1800, tiebreak="seq", decision=dec
+    )
+    assert dec["form"] == "chunked" and "__chunk" in _plan(sa2)
+    assert _same_rows(
+        sa2, windows.sessionize(hot_ev, "k", "ts", 1800, tiebreak="seq")
+    )
 
-    # plan inspection: the dispatch really changes the PLAN — the
-    # chunked branch carries the (key, __chunk) recomposition join,
-    # the plain branch is the single-window form
-    plain_plan = sa._jdf.queryExecution().analyzed().toString()
-    chunk_plan = sa2._jdf.queryExecution().analyzed().toString()
-    assert "__chunk" not in plain_plan
-    assert "__chunk" in chunk_plan
-
-
-    # rolling_sums_auto: the third dispatcher — plain branch at toy
-    # scale, chunked under the inherent low-cardinality key, both
-    # equal to the plain window bit-for-bit
+    # rolling_sums_auto: identical schema from both branches
     cents = (F.col("o_totalprice") * 100).cast("long")
     plain_roll = windows.rolling_sums_plain(
         orders, ["o_custkey"], ["o_orderdate", "o_orderkey"],
         {"r": cents}, preceding=4,
     ).select("o_orderkey", "r", "win_n")
-    dec6 = {}
+    dec = {}
     auto_roll = windows.rolling_sums_auto(
         orders, ["o_custkey"], ["o_orderdate", "o_orderkey"],
-        {"r": cents}, "o_orderdate", preceding=4, decision=dec6,
+        {"r": cents}, "o_orderdate", preceding=4, decision=dec,
     ).select("o_orderkey", "r", "win_n")
-    assert dec6["form"] == "plain"
+    assert dec["form"] == "plain" and "__rn_lag" not in _plan(auto_roll)
     assert plain_roll.schema == auto_roll.schema
-    assert plain_roll.exceptAll(auto_roll).count() + \
-        auto_roll.exceptAll(plain_roll).count() == 0
-    hot_o = orders.withColumn("o_custkey", F.lit(3).cast("long"))
-    p3 = windows.rolling_sums_plain(
-        hot_o, ["o_custkey"], ["o_orderdate", "o_orderkey"],
-        {"r": cents}, preceding=4,
-    ).select("o_orderkey", "r", "win_n")
-    dec7 = {}
-    c3 = windows.rolling_sums_auto(
-        hot_o, ["o_custkey"], ["o_orderdate", "o_orderkey"],
-        {"r": cents}, "o_orderdate", preceding=4,
-        chunk_seconds=90 * 86_400, min_rows=1_000, decision=dec7,
-    ).select("o_orderkey", "r", "win_n")
-    assert dec7["form"] == "chunked"
-    assert p3.schema == c3.schema
-    assert p3.exceptAll(c3).count() + c3.exceptAll(p3).count() == 0
+    assert _same_rows(plain_roll, auto_roll)
 
-    # ledger_running_balance_auto: the dispatcher on the reference's
-    # own workload shape — probe over the signed LEGS, both branches
-    # equal bit-for-bit
+    dec = {}
+    c3 = windows.rolling_sums_auto(
+        hot, ["k"], ["ts", "seq"], {"r": F.col("v")}, "ts", preceding=4,
+        decision=dec,
+    )
+    p3 = windows.rolling_sums_plain(
+        hot, ["k"], ["ts", "seq"], {"r": F.col("v")}, preceding=4
+    )
+    # the chunked rolling form pins its prefix frame (localCheckpoint),
+    # so its plan shows the lagged-prefix join, not the chunk column
+    assert dec["form"] == "chunked" and "__rn_lag" in _plan(c3)
+    assert p3.schema == c3.schema
+    assert _same_rows(p3, c3)
+
+    # ledger_running_balance_auto: the probe runs over the signed LEGS
     tx = spark.read.parquet("fixtures/fakestream/transactions.parquet")
     sel = ["account_id", "transaction_id", "leg", "balance"]
-    pl = windows.ledger_running_balance(tx).select(*sel)
-    dec8 = {}
-    al = windows.ledger_running_balance_auto(tx, decision=dec8).select(*sel)
-    assert dec8["form"] == "plain"  # 2.3k legs < toy floor
-    assert pl.exceptAll(al).count() + al.exceptAll(pl).count() == 0
-    hot_tx = tx.withColumn("account_id", F.lit(1).cast("long")).withColumn(
-        "related_account_id", F.lit(None).cast("long")
+    dec = {}
+    al = windows.ledger_running_balance_auto(tx, decision=dec).select(*sel)
+    assert dec["form"] == "plain"  # 2.3k legs < toy floor
+    assert "__chunk" not in _plan(al)
+    assert _same_rows(windows.ledger_running_balance(tx).select(*sel), al)
+
+    kinds = F.array(*[F.lit(t) for t in (
+        "Deposit", "Withdrawal", "Transfer", "Payment", "Refund")])
+    hot_tx = hot.select(
+        F.col("seq").alias("transaction_id"),
+        F.col("k").alias("account_id"),
+        F.when(F.col("seq") % 3 == 0, F.col("seq") % 400 + 1000)
+        .cast("long").alias("related_account_id"),
+        F.element_at(kinds, (F.col("seq") % 5 + 1).cast("int"))
+        .alias("transaction_type"),
+        F.when(F.col("seq") % 10 == 0, "pending").otherwise("completed")
+        .alias("status"),
+        (F.col("v") + 1).cast("decimal(15,2)").alias("amount"),
+        F.col("ts").alias("transaction_date"),
     )
-    p4 = windows.ledger_running_balance(hot_tx).select(*sel)
-    dec9 = {}
-    c4 = windows.ledger_running_balance_auto(
-        hot_tx, min_rows=100, decision=dec9
-    ).select(*sel)
-    assert dec9["form"] == "chunked"
-    assert p4.exceptAll(c4).count() + c4.exceptAll(p4).count() == 0
+    dec = {}
+    c4 = windows.ledger_running_balance_auto(hot_tx, decision=dec)
+    assert dec["form"] == "chunked" and dec["total_rows"] >= windows.MIN_ROWS
+    assert "__chunk" in _plan(c4)
+    assert _same_rows(
+        windows.ledger_running_balance(hot_tx).select(*sel), c4.select(*sel)
+    )
 
     # the session-scoped stats cache: a repeated probe over the same
     # pruned lineage is a dict hit (catalog-statistics role); a stale
-    # or colliding entry can only change the FORM, never the answer —
-    # and cache=False bypasses it
+    # or colliding entry can only change the FORM, never the answer
     key = orders.select("o_custkey").semanticHash()
     assert key in windows._KEY_STATS_CACHE
     cached = windows.key_rows_stats(orders, ["o_custkey"])
     assert cached == windows._KEY_STATS_CACHE[key]
     windows._KEY_STATS_CACHE[key] = dict(cached, max_key_rows=10**9)
     assert windows.key_rows_stats(orders, ["o_custkey"])["max_key_rows"] == 10**9
-    fresh = windows.key_rows_stats(orders, ["o_custkey"], cache=False)
-    assert fresh["max_key_rows"] == cached["max_key_rows"]
     windows._KEY_STATS_CACHE.pop(key)
 
 
-def test_dispatcher_stats_from_manifest(spark, tmp_path):
-    """r12 judge ask #6: the dispatcher's production stats path is
-    WIRED, not just documented — compact_parquet(stats_keys=...)
-    persists the key histogram in the manifest pointer, and
-    running_sum_auto(stats_dir=...) reads it with ZERO probe jobs
-    (statusTracker-pinned: building the dispatched plan launches no
-    Spark job at all, the pointer is one small local JSON read).
-    After a skew-shifting append + recompaction the refreshed stats
-    flip the dispatch to chunked — still zero probe jobs — and both
-    regimes return the exact plain-window answer."""
-    from pyspark.sql import functions as F
-    from ultimate_data_engineering_project_spark.sources import sinks
-    from ultimate_data_engineering_project_spark.sources.readers import (
-        read_current,
-    )
+def test_window_dispatch_jobs(spark):
+    """Deciding the window form costs the key probe's jobs once per
+    input lineage: at most 3 on a lineage no dispatch has seen, none on
+    a repeat (the semantic-hash cache)."""
+    import uuid
 
-    table = str(tmp_path / "ledgerish")
-    base = (
-        spark.range(10_000)
-        .select(
-            (F.col("id") % 200).alias("k"),
-            F.col("id").alias("seq"),
-            F.to_timestamp(
-                F.lit("2024-01-01 00:00:00")
-            ).alias("ts"),
-            (F.col("id") % 97).cast("long").alias("v"),
-        )
-        .withColumn("ts", F.col("ts") + F.make_interval(secs=F.col("seq")))
-    )
-    base.write.parquet(table)
-    sinks.compact_parquet(
-        spark, table, stats_keys=["k"],
-        keep_generations=1,
-    )
-    st = windows.stats_from_manifest(spark, table, ["k"])
-    assert st == {"max_key_rows": 50, "total_rows": 10_000, "n_keys": 200}
-    # stats for OTHER keys refuse (fall back to the probe, never lie)
-    assert windows.stats_from_manifest(spark, table, ["seq"]) is None
+    # a literal unique to this run makes the lineage new to the cache
+    df = _hot_range(spark).withColumn("tag", F.lit(uuid.uuid4().hex))
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
 
-    df = read_current(spark, table)
-    sc = spark.sparkContext
-    dec = {}
-    sc.setJobGroup("mstats_run1", "steady-state dispatch")
-    try:
-        auto = windows.running_sum_auto(
-            df, ["k"], ["ts", "seq"], F.col("v"), "ts",
-            min_rows=1_000, stats_dir=table, decision=dec,
-        )
-    finally:
-        sc.setJobGroup("mstats_done", "clear")
-    assert dec["stats_source"] == "manifest" and dec["form"] == "plain"
-    # the load-bearing pin: ZERO jobs to decide (the probe would be one)
-    assert sc.statusTracker().getJobIdsForGroup("mstats_run1") == []
-    plain = windows.running_sum(
-        df, ["k"], ["ts", "seq"], F.col("v"), "running_sum"
-    )
-    assert auto.exceptAll(plain).count() + plain.exceptAll(auto).count() == 0
-
-    # skew-shifting append: one account goes hot, maintenance recompacts
-    from ultimate_data_engineering_project_spark.sources import manifest
-
-    ptr = manifest.read_pointer(spark, table)
-    hot = (
-        spark.range(5_000)
-        .select(
-            F.lit(7).cast("long").alias("k"),
-            (F.col("id") + 100_000).alias("seq"),
-            F.to_timestamp(F.lit("2024-02-01 00:00:00")).alias("ts"),
-            F.lit(1).cast("long").alias("v"),
-        )
-        .withColumn("ts", F.col("ts") + F.make_interval(secs=F.col("seq")))
-    )
-    hot.write.mode("append").parquet(manifest.join(table, ptr["data"]))
-    sinks.compact_parquet(
-        spark, table, stats_keys=["k"],
-        keep_generations=1,
-    )
-    st2 = windows.stats_from_manifest(spark, table, ["k"])
-    assert st2["max_key_rows"] == 5_050 and st2["total_rows"] == 15_000
-
-    df2 = read_current(spark, table)
-    dec2 = {}
-    sc.setJobGroup("mstats_run2", "post-append dispatch")
-    try:
-        auto2 = windows.running_sum_auto(
-            df2, ["k"], ["ts", "seq"], F.col("v"), "ts",
-            min_rows=1_000, chunk_seconds=14 * 86_400,
-            stats_dir=table, decision=dec2,
-        )
-    finally:
-        sc.setJobGroup("mstats_done2", "clear")
-    assert dec2["stats_source"] == "manifest" and dec2["form"] == "chunked"
-    assert sc.statusTracker().getJobIdsForGroup("mstats_run2") == []
-    plain2 = windows.running_sum(
-        df2, ["k"], ["ts", "seq"], F.col("v"), "running_sum"
-    )
-    assert (
-        auto2.exceptAll(plain2).count() + plain2.exceptAll(auto2).count() == 0
-    )
-
-
-def test_manifest_stats_staleness_guard(spark, tmp_path):
-    """r13 judge ask #4: manifest key-stats describe the table AS OF
-    the last compaction — a skew-shifting append INTO the current
-    generation between compactions must not let a stale "plain"
-    histogram mis-dispatch.  With ``stats_max_staleness`` set, the
-    guard compares the live generation's row count (parquet metadata
-    read) to the snapshot's total_rows and falls back to the probe on
-    >bound drift, so the dispatcher sees the hot key and picks
-    chunked; a small same-shape append stays inside the bound and
-    keeps the zero-probe manifest path."""
-    import pytest as _pytest
-
-    from pyspark.sql import functions as F
-    from ultimate_data_engineering_project_spark.sources import (
-        manifest,
-        sinks,
-    )
-    from ultimate_data_engineering_project_spark.sources.readers import (
-        read_current,
-    )
-
-    table = str(tmp_path / "drifty")
-    base = (
-        spark.range(10_000)
-        .select(
-            (F.col("id") % 200).alias("k"),
-            F.col("id").alias("seq"),
-            F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("ts"),
-            (F.col("id") % 97).cast("long").alias("v"),
-        )
-        .withColumn("ts", F.col("ts") + F.make_interval(secs=F.col("seq")))
-    )
-    base.write.parquet(table)
-    sinks.compact_parquet(
-        spark, table, stats_keys=["k"],
-        keep_generations=1,
-    )
-    # snapshot histogram: uniform -> plain
-    assert windows.stats_from_manifest(spark, table, ["k"]) == {
-        "max_key_rows": 50, "total_rows": 10_000, "n_keys": 200,
-    }
-
-    # skew-shifting append BETWEEN compactions: key 7 goes hot, 15k
-    # rows straight into the live generation (no compactor run)
-    ptr = manifest.read_pointer(spark, table)
-    hot = (
-        spark.range(15_000)
-        .select(
-            F.lit(7).cast("long").alias("k"),
-            (F.col("id") + 100_000).alias("seq"),
-            F.to_timestamp(F.lit("2024-02-01 00:00:00")).alias("ts"),
-            F.lit(1).cast("long").alias("v"),
-        )
-        .withColumn("ts", F.col("ts") + F.make_interval(secs=F.col("seq")))
-    )
-    hot.write.mode("append").parquet(manifest.join(table, ptr["data"]))
-
-    # without the guard the stale snapshot still answers (the r12
-    # zero-job contract, unchanged by default) ...
-    stale = windows.stats_from_manifest(spark, table, ["k"])
-    assert stale is not None and stale["total_rows"] == 10_000
-    # ... and with it, the 2.5x live/snapshot drift refuses
-    assert (
-        windows.stats_from_manifest(
-            spark, table, ["k"], max_staleness=2.0
-        )
-        is None
-    )
-
-    # dispatcher end to end: stale manifest would say plain; the
-    # guarded path falls back to the probe, sees key 7 at 60% of the
-    # table, and picks chunked — same answer as the plain window
-    df = read_current(spark, table)
-    dec = {}
-    auto = windows.running_sum_auto(
-        df, ["k"], ["ts", "seq"], F.col("v"), "ts",
-        min_rows=1_000, chunk_seconds=45 * 86_400,
-        stats_dir=table, stats_max_staleness=2.0, decision=dec,
-    )
-    assert dec["stats_source"] == "probe" and dec["form"] == "chunked"
-    dec_unguarded = {}
-    windows.running_sum_auto(
-        df, ["k"], ["ts", "seq"], F.col("v"), "ts",
-        min_rows=1_000, stats_dir=table, decision=dec_unguarded,
-    )
-    assert dec_unguarded["stats_source"] == "manifest"
-    assert dec_unguarded["form"] == "plain"  # the mis-dispatch the guard exists for
-    plain = windows.running_sum(
-        df, ["k"], ["ts", "seq"], F.col("v"), "running_sum"
-    )
-    assert auto.exceptAll(plain).count() + plain.exceptAll(auto).count() == 0
-
-    # a small append stays inside the bound: manifest path retained
-    small = hot.limit(500).withColumn("k", (F.col("seq") % 200))
-    # fresh table so the big append above doesn't contaminate
-    table2 = str(tmp_path / "steady")
-    base.write.parquet(table2)
-    sinks.compact_parquet(
-        spark, table2, stats_keys=["k"],
-        keep_generations=1,
-    )
-    ptr2 = manifest.read_pointer(spark, table2)
-    small.write.mode("append").parquet(manifest.join(table2, ptr2["data"]))
-    st = windows.stats_from_manifest(
-        spark, table2, ["k"], max_staleness=2.0
-    )
-    assert st is not None and st["total_rows"] == 10_000
-    dec2 = {}
-    windows.running_sum_auto(
-        read_current(spark, table2), ["k"], ["ts", "seq"], F.col("v"),
-        "ts", min_rows=1_000, stats_dir=table2,
-        stats_max_staleness=2.0, decision=dec2,
-    )
-    assert dec2["stats_source"] == "manifest" and dec2["form"] == "plain"
-
-    # bound below 1.0 is a contract error, loudly — even on a
-    # pointerless dir (validation is hoisted above the early returns,
-    # r13 review finding: the refusal must be deterministic, not
-    # dependent on the table happening to carry matching stats)
-    with _pytest.raises(ValueError, match="max_staleness"):
-        windows.stats_from_manifest(
-            spark, table2, ["k"], max_staleness=0.5
-        )
-    with _pytest.raises(ValueError, match="max_staleness"):
-        windows.stats_from_manifest(
-            spark, str(tmp_path / "no_pointer_here"), ["k"],
-            max_staleness=0.5,
-        )
-
-
-def test_staleness_guard_exception_triage(spark, tmp_path, monkeypatch):
-    """r14 (advisor): the guard's live-row count still degrades to the
-    probe on ANY failure (the probe recomputes truth), but only a REAL
-    racing-compactor cleanup stays silent — discriminated by re-reading
-    the pointer after a path-gone failure (a racing compactor flips the
-    pointer to its new generation BEFORE deleting the old one, so
-    pointer-moved means race).  A pointer that still names the missing
-    path (corrupt pointer, wrong stats_dir) or any non-path failure
-    (e.g. a corrupt footer) warns once per table so a persistently
-    broken manifest path is visible, not masked."""
-    import os
-    import warnings as _w
-
-    import pytest as _pytest
-
-    from ultimate_data_engineering_project_spark.sources import (
-        manifest,
-        sinks,
-    )
-
-    def _mk(table):
-        spark.range(1000).select(
-            (F.col("id") % 10).alias("k"), F.col("id").alias("v")
-        ).write.parquet(table)
-        sinks.compact_parquet(
-            spark, table, stats_keys=["k"]
-        )
-
-    # REAL race shape: the guard's first pointer read saw generation A,
-    # a concurrent compactor flipped to B and deleted A before the row
-    # count ran.  Simulate with a stateful pointer fake: first call
-    # hands back a stale pointer naming a deleted generation, re-reads
-    # delegate to the real (flipped) pointer -> silent None
-    raced = str(tmp_path / "raced")
-    _mk(raced)
-    real_ptr = manifest.read_pointer(spark, raced)
-    stale_ptr = dict(real_ptr, data="gen-deleted-by-compactor")
-    real_read = manifest.read_pointer
-    calls = {"n": 0}
-
-    def _racing_read(sess, table):
-        calls["n"] += 1
-        return stale_ptr if calls["n"] == 1 else real_read(sess, table)
-
-    monkeypatch.setattr(manifest, "read_pointer", _racing_read)
-    with _w.catch_warnings():
-        _w.simplefilter("error")  # any warning would fail the test
-        assert (
-            windows.stats_from_manifest(
-                spark, raced, ["k"], max_staleness=2.0
+    def jobs():
+        group = f"dispatch-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "window dispatch")
+        try:
+            windows.running_sum_auto(
+                df, ["k", "tag"], ["ts", "seq"], F.col("v"), "ts"
             )
-            is None
-        )
-    assert calls["n"] >= 2  # the triage actually re-read the pointer
-    monkeypatch.setattr(manifest, "read_pointer", real_read)
+        finally:
+            sc.setJobGroup("dispatch-done", "clear")
+        return len(tracker.getJobIdsForGroup(group))
 
-    # persistent shape: the generation the pointer names is GONE and
-    # the pointer has NOT moved -> None (probe fallback) + ONE warning
-    gone = str(tmp_path / "gone")
-    _mk(gone)
-    ptr = manifest.read_pointer(spark, gone)
-    gen = manifest.join(gone, ptr["data"])
-    import shutil
-
-    shutil.rmtree(gen)
-    with _pytest.warns(RuntimeWarning, match="persistently broken"):
-        assert (
-            windows.stats_from_manifest(
-                spark, gone, ["k"], max_staleness=2.0
-            )
-            is None
-        )
-
-    # unexpected shape: generation present but its parquet is corrupt
-    # -> None (probe fallback) + ONE RuntimeWarning naming the table
-    corrupt = str(tmp_path / "corrupt")
-    _mk(corrupt)
-    ptr = manifest.read_pointer(spark, corrupt)
-    gen = manifest.join(corrupt, ptr["data"])
-    for f in os.listdir(gen):
-        if f.endswith(".parquet"):
-            with open(os.path.join(gen, f), "wb") as fh:
-                fh.write(b"not a parquet file")
-    with _pytest.warns(RuntimeWarning, match="persistently broken"):
-        assert (
-            windows.stats_from_manifest(
-                spark, corrupt, ["k"], max_staleness=2.0
-            )
-            is None
-        )
-    # warn-once: the second call is silent
-    with _w.catch_warnings():
-        _w.simplefilter("error")
-        assert (
-            windows.stats_from_manifest(
-                spark, corrupt, ["k"], max_staleness=2.0
-            )
-            is None
-        )
+    first = jobs()
+    assert 1 <= first <= 3, first
+    assert jobs() == 0
 
 
 def test_rolling_sums_chunked_equals_plain(spark, sf_dir):

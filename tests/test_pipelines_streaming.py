@@ -1746,14 +1746,14 @@ def test_incremental_bm25_stream_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/b*")
     )
-    index_dir, stats_dir = str(tmp_path / "bm25_idx"), str(tmp_path / "bm25_st")
+    index_dir, totals_dir = str(tmp_path / "bm25_idx"), str(tmp_path / "bm25_st")
     q = run_incremental_bm25_stream(
-        spark, stream, index_dir, stats_dir, str(tmp_path / "ckpt")
+        spark, stream, index_dir, totals_dir, str(tmp_path / "ckpt")
     )
     q.awaitTermination(300)
 
     terms = ["hash", "join", "vector"]
-    inc = T.bm25_query_incremental(spark, index_dir, stats_dir, terms, k=10)
+    inc = T.bm25_query_incremental(spark, index_dir, totals_dir, terms, k=10)
     full = T.bm25_topk(docs, terms, k=10)
     assert [
         (r["doc_id"], r["score"], r["rank"]) for r in inc.collect()
@@ -1761,7 +1761,7 @@ def test_incremental_bm25_stream_matches_batch(spark, sf_dir, tmp_path):
 
     # replay view: index as of batch 1 == from-scratch over batch 0 docs
     prefix = T.bm25_query_incremental(
-        spark, index_dir, stats_dir, terms, k=10, before_batch=1
+        spark, index_dir, totals_dir, terms, k=10, before_batch=1
     )
     full0 = T.bm25_topk(docs.filter(F.col("doc_id") < third), terms, k=10)
     assert [

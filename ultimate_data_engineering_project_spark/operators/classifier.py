@@ -430,7 +430,7 @@ def nb_train(
 def nb_model_from_partials(
     spark,
     counts_dir: str,
-    dstats_dir: str,
+    doc_counts_dir: str,
     *,
     dim: int = DEFAULT_DIM,
     alpha: int = 1,
@@ -451,7 +451,7 @@ def nb_model_from_partials(
     batch < before_batch participate.
     """
     counts = spark.read.parquet(counts_dir)
-    dstats = spark.read.parquet(dstats_dir)
+    dstats = spark.read.parquet(doc_counts_dir)
     if before_batch is not None:
         counts = counts.filter(F.col("batch") < before_batch)
         dstats = dstats.filter(F.col("batch") < before_batch)

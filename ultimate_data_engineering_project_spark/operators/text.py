@@ -1031,7 +1031,7 @@ def char_entropy(
 def bm25_query_incremental(
     spark,
     index_dir: str,
-    stats_dir: str,
+    totals_dir: str,
     query_terms: list[str],
     *,
     shards: int = INDEX_SHARDS,
@@ -1043,7 +1043,7 @@ def bm25_query_incremental(
     """BM25 top-k against the INCREMENTALLY-built index
     (run_incremental_bm25_stream's on-disk layout:
     ``index_dir/batch=<id>/shard=<s>`` postings and
-    ``stats_dir/batch=<id>`` one-row partials).
+    ``totals_dir/batch=<id>`` one-row partials).
 
     The probe scans only the query terms' shard directories across all
     batch partitions (two-level pruning), derives each term's df by
@@ -1055,7 +1055,7 @@ def bm25_query_incremental(
     replays the index as of a batch boundary (the replay-idempotence
     view every incremental stream here exposes)."""
     post = spark.read.option("basePath", index_dir).parquet(index_dir)
-    stats_raw = spark.read.option("basePath", stats_dir).parquet(stats_dir)
+    stats_raw = spark.read.option("basePath", totals_dir).parquet(totals_dir)
     if before_batch is not None:
         post = post.where(F.col("batch") < before_batch)
         stats_raw = stats_raw.where(F.col("batch") < before_batch)

@@ -10,15 +10,7 @@ window plans: partition by the entity key, order by event time.
 
 from __future__ import annotations
 
-import warnings
-
-from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, Window, WindowSpec, functions as F
-
-#: tables whose staleness-guard row count already warned about an
-#: unexpected (non-path-race) failure — warn once per table, not per
-#: dispatch (stats_from_manifest).
-_STALENESS_GUARD_WARNED: set[str] = set()
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 def dedup_keep_latest(
@@ -300,6 +292,21 @@ def _prefix_sums_chunked(
     return out.select(*df.columns, *values.keys())
 
 
+def _check_rolling_args(
+    df: DataFrame, values: dict[str, "Column"], preceding: int, n_alias: str
+) -> None:
+    """The argument contract both rolling-sum forms share: a non-negative
+    frame and output names that do not shadow an input column (withColumn
+    would overwrite it silently)."""
+    if preceding < 0:
+        raise ValueError(f"preceding must be >= 0, got {preceding}")
+    clash = [n for n in [n_alias, *values] if n in df.columns]
+    if clash:
+        raise ValueError(
+            f"output column names collide with input columns: {clash}"
+        )
+
+
 def rolling_sums_chunked(
     df: DataFrame,
     partition_keys: list[str],
@@ -346,13 +353,7 @@ def rolling_sums_chunked(
     rolling sum over ROWS [-preceding, 0]) plus ``n_alias`` (rows in
     frame).  DOUBLE values regroup fp addition and are only equal up
     to ulps — pass exact types when bit-equality matters."""
-    if preceding < 0:
-        raise ValueError(f"preceding must be >= 0, got {preceding}")
-    if n_alias in df.columns or any(n in df.columns for n in values):
-        raise ValueError(
-            "output column names collide with input columns: "
-            f"{[n for n in [n_alias, *values] if n in df.columns]}"
-        )
+    _check_rolling_args(df, values, preceding, n_alias)
     w = preceding + 1
     pref = _prefix_sums_chunked(
         df,
@@ -409,13 +410,7 @@ def rolling_sums_plain(
     [-preceding, 0], plus ``n_alias``), computed by the plain
     partition-by-key window.  Exists so the skew-aware dispatcher has
     a plain branch with an IDENTICAL schema contract."""
-    if preceding < 0:
-        raise ValueError(f"preceding must be >= 0, got {preceding}")
-    if n_alias in df.columns or any(n in df.columns for n in values):
-        raise ValueError(
-            "output column names collide with input columns: "
-            f"{[n for n in [n_alias, *values] if n in df.columns]}"
-        )
+    _check_rolling_args(df, values, preceding, n_alias)
     win = (
         Window.partitionBy(*partition_keys)
         .orderBy(*order_by)
@@ -438,35 +433,20 @@ def rolling_sums_auto(
     preceding: int,
     chunk_seconds: int = 7 * 86_400,
     n_alias: str = "win_n",
-    task_rows_cap: int = 2_000_000,
-    share_cap: float = 0.05,
-    min_rows: int = 50_000,
-    stats: dict | None = None,
-    stats_dir: str | None = None,
-    stats_max_staleness: float | None = None,
     decision: dict | None = None,
 ) -> DataFrame:
-    """Skew-aware ROWS-bounded rolling sums — the third and last
-    dispatcher of the chunked window family (running/session/rolling).
-    The rolling shape is the one whose hot key is usually INHERENT,
-    not accidental: a low-cardinality partition key (five event types
-    over a 100 TB stream) puts a constant fraction of the table into
-    each unsplittable sort task at EVERY scale, so the share criterion
-    fires as soon as the data is big enough to matter — exactly the
-    regime the sf10 sweep measured (plain 11.9x decade and 3x slower
-    absolute vs the chunked recomposition).  Same probe/decide/cache
-    machinery as :func:`running_sum_auto`; both branches produce the
-    identical schema and hash-check against the SAME oracle."""
-    st, src = _resolve_stats(df, partition_keys, stats, stats_dir,
-                             stats_max_staleness)
-    form = decide_window_form(
-        st, task_rows_cap=task_rows_cap, share_cap=share_cap, min_rows=min_rows
-    )
-    if decision is not None:
-        decision.update({"form": form, "stats_source": src, **st,
-                         "task_rows_cap": task_rows_cap,
-                         "share_cap": share_cap, "min_rows": min_rows})
-    if form == "chunked":
+    """Skew-aware ROWS-bounded rolling sums: same probe and rule as
+    :func:`running_sum_auto`, choosing :func:`rolling_sums_plain` or
+    :func:`rolling_sums_chunked`.  The rolling shape is the one whose
+    hot key is usually INHERENT, not accidental: a low-cardinality
+    partition key (five event types over a 100 TB stream) puts a
+    constant fraction of the table into each unsplittable sort task at
+    EVERY scale, so the share criterion fires as soon as the data is
+    big enough to matter — the regime the sf10 sweep measured (plain
+    11.9x decade and 3x slower absolute vs the chunked recomposition).
+    Both branches produce the identical schema and hash-check against
+    the SAME oracle.  Pass ``decision={}`` to observe the choice."""
+    if _window_form(df, partition_keys, decision) == "chunked":
         return rolling_sums_chunked(
             df, partition_keys, order_by, values, ts,
             preceding=preceding, chunk_seconds=chunk_seconds,
@@ -615,42 +595,37 @@ def sessionize_chunked(
     )
 
 
+# Window-form thresholds (see decide_window_form).
+TASK_ROWS_CAP = 2_000_000
+SHARE_CAP = 0.05
+MIN_ROWS = 50_000
+
 # session-scoped key-histogram cache (the role a real engine's catalog
 # statistics play): keyed by the SEMANTIC hash of the pruned
 # (keys-only) plan, so repeated dispatches over the same input — a
 # dashboard re-run, a bench best-of-N, a backfill loop — pay the probe
 # once.  A hash collision or stale entry can only mis-pick the FORM,
 # never the answer: both branches are same-oracle-proven, so the cache
-# is a pure performance structure.  Bounded FIFO; ``cache=False`` or
-# an injected ``stats=`` bypass it.
+# is a pure performance structure.  Bounded FIFO.
 _KEY_STATS_CACHE: dict[int, dict] = {}
 _KEY_STATS_CACHE_MAX = 256
 
 
-def key_rows_stats(
-    df: DataFrame, partition_keys: list[str], *, cache: bool = True
-) -> dict:
+def key_rows_stats(df: DataFrame, partition_keys: list[str]) -> dict:
     """One cheap skew probe: per-key row counts, reduced to the three
-    numbers a window-form decision needs.  Map-side combined groupBy on
-    the (column-pruned) keys alone — at 100 TB only the key column
-    moves, and the exchange carries at most one row per key per task
-    (a few percent of the main window query's own full-width sort
-    shuffle; on toy-scale local data the fixed job-launch overhead
-    dominates instead, which is what the cache amortizes).  Production
-    callers have two zero-probe paths (r12, both wired): inject a
-    precomputed dict via ``stats=``, or pass ``stats_dir=`` so the
-    dispatcher reads the histogram the compactor persisted in the
-    manifest pointer (:func:`stats_from_manifest`;
-    ``sinks.compact_parquet(stats_keys=...)`` writes it).  The probe
-    exists so the decision is POSSIBLE without them, not to re-scan
-    the table gratuitously."""
+    numbers a window-form decision needs (``max_key_rows``,
+    ``total_rows``, ``n_keys``).  Map-side combined groupBy on the
+    (column-pruned) keys alone — at 100 TB only the key column moves,
+    and the exchange carries at most one row per key per task (a few
+    percent of the main window query's own full-width sort shuffle).
+    On small local data the fixed job-launch cost dominates instead,
+    which is what the cache amortizes: a repeat over the same lineage
+    runs no job."""
     pruned = df.select(*partition_keys)
-    ck = None
-    if cache:
-        ck = pruned.semanticHash()
-        hit = _KEY_STATS_CACHE.get(ck)
-        if hit is not None:
-            return dict(hit)
+    ck = pruned.semanticHash()
+    hit = _KEY_STATS_CACHE.get(ck)
+    if hit is not None:
+        return dict(hit)
     row = (
         pruned.groupBy(*partition_keys)
         .count()
@@ -666,155 +641,13 @@ def key_rows_stats(
         "total_rows": int(row["total_rows"] or 0),
         "n_keys": int(row["n_keys"] or 0),
     }
-    if cache:
-        if len(_KEY_STATS_CACHE) >= _KEY_STATS_CACHE_MAX:
-            _KEY_STATS_CACHE.pop(next(iter(_KEY_STATS_CACHE)))
-        _KEY_STATS_CACHE[ck] = dict(out)
+    if len(_KEY_STATS_CACHE) >= _KEY_STATS_CACHE_MAX:
+        _KEY_STATS_CACHE.pop(next(iter(_KEY_STATS_CACHE)))
+    _KEY_STATS_CACHE[ck] = dict(out)
     return out
 
 
-def stats_from_manifest(
-    spark, table_dir: str, partition_keys: list[str],
-    *, max_staleness: float | None = None,
-) -> dict | None:
-    """Key histogram from the table's MANIFEST POINTER — the
-    production stats path key_rows_stats' docstring promises (r12,
-    judge ask #6): ``sinks.compact_parquet(stats_keys=...)`` computes
-    the three-number histogram while it is already rewriting every row
-    and stores it in the pointer JSON, so a steady-state
-    pipeline's dispatch reads ONE tiny object and issues ZERO probe
-    jobs (statusTracker-pinned in tests).  Returns None when the table
-    has no pointer or the pointer's stats were computed on different
-    keys — the caller then falls back to the probe, so a missing or
-    foreign-keyed stats block can only cost a probe job, never pick a
-    wrong form for the wrong reason.  Stats refresh whenever the
-    compactor runs, which is also when the data (and its skew) last
-    changed shape.
-
-    STALENESS guard (r13, judge ask #4): the pointer's histogram
-    describes the table AS OF the last compaction — a large append
-    into the current generation between compactions can shift skew
-    while the pointer still says "plain".  Pass ``max_staleness``
-    (e.g. ``2.0``) to bound the drift: the guard counts the live
-    generation's rows (a parquet METADATA read — answered from
-    row-group footers, one cheap job, no data scan) and returns None
-    — fall back to the probe — when the live count has drifted more
-    than that factor from the snapshot's ``total_rows`` in either
-    direction.  The default ``None`` keeps the zero-job steady-state
-    contract for pipelines whose appends always go through the
-    compactor."""
-    from ultimate_data_engineering_project_spark.sources import manifest
-
-    # contract validation FIRST — before any early return — so an
-    # invalid bound refuses deterministically, not only on tables that
-    # happen to carry a pointer with matching stats (review finding)
-    if max_staleness is not None and max_staleness < 1.0:
-        raise ValueError(
-            f"max_staleness must be >= 1.0 (got {max_staleness!r}); "
-            "1.0 means 'refuse any drift at all'"
-        )
-    ptr = manifest.read_pointer(spark, table_dir)
-    if not ptr:
-        return None
-    ks = ptr.get("key_stats")
-    if not ks or list(ks.get("keys") or []) != list(partition_keys):
-        return None
-    try:
-        out = {
-            "max_key_rows": int(ks["max_key_rows"]),
-            "total_rows": int(ks["total_rows"]),
-            "n_keys": int(ks["n_keys"]),
-        }
-    except (KeyError, TypeError, ValueError):
-        return None  # malformed stats block: fall back to the probe
-    if max_staleness is not None:
-        snap = out["total_rows"]
-        try:
-            live = spark.read.parquet(
-                manifest.join(table_dir, ptr["data"])
-            ).count()
-        except Exception as exc:  # noqa: BLE001 — triaged below
-            # racing compactor cleanup: the pointer we read named a
-            # generation a concurrent flip just deleted — every other
-            # unusable-stats path here falls back to the probe rather
-            # than crashing the window job, so this one must too (the
-            # probe re-resolves the table through read_current).
-            # r14 (advisor): only a REAL race stays silent; anything
-            # else still degrades to the probe — the probe recomputes
-            # truth, so correctness never depends on this read — but
-            # is WARNED once per table so a persistently broken
-            # manifest path stops masquerading as a benign race.  The
-            # discriminator: a racing compactor flips the pointer to
-            # its NEW generation before cleaning up the old one, so on
-            # a path-gone failure we re-read the pointer — moved means
-            # race (silent), unchanged means the pointer itself names
-            # a missing path (corrupt pointer, wrong stats_dir,
-            # mis-mounted storage: persistent, warn).
-            msg = str(exc)
-            path_gone = isinstance(exc, AnalysisException) or any(
-                s in msg
-                for s in (
-                    "FileNotFoundException",
-                    "PATH_NOT_FOUND",
-                    "Path does not exist",
-                )
-            )
-            expected = False
-            if path_gone:
-                try:
-                    ptr2 = manifest.read_pointer(spark, table_dir)
-                except Exception:  # noqa: BLE001 — pointer unreadable
-                    ptr2 = None
-                expected = bool(ptr2) and ptr2.get("data") != ptr["data"]
-            if not expected and table_dir not in _STALENESS_GUARD_WARNED:
-                _STALENESS_GUARD_WARNED.add(table_dir)
-                warnings.warn(
-                    f"stats_from_manifest: staleness-guard row count on "
-                    f"{table_dir!r} failed with an UNEXPECTED error "
-                    f"(falling back to the key probe, answer unaffected); "
-                    f"the manifest path may be persistently broken: "
-                    f"{type(exc).__name__}: {msg[:300]}",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-            return None
-        if snap <= 0 or live > max_staleness * snap or (
-            live * max_staleness < snap
-        ):
-            return None  # drifted: the histogram describes old data
-    return out
-
-
-def _resolve_stats(
-    df: DataFrame,
-    partition_keys: list[str],
-    stats: dict | None,
-    stats_dir: str | None,
-    stats_max_staleness: float | None = None,
-) -> tuple[dict, str]:
-    """Stats resolution chain for the auto dispatchers: injected dict >
-    manifest pointer (drift-bounded when ``stats_max_staleness`` is
-    set — see :func:`stats_from_manifest`) > probe.  Returns
-    (stats, source) so decision observers can see which path paid."""
-    if stats is not None:
-        return stats, "injected"
-    if stats_dir is not None:
-        st = stats_from_manifest(
-            df.sparkSession, stats_dir, partition_keys,
-            max_staleness=stats_max_staleness,
-        )
-        if st is not None:
-            return st, "manifest"
-    return key_rows_stats(df, partition_keys), "probe"
-
-
-def decide_window_form(
-    stats: dict,
-    *,
-    task_rows_cap: int = 2_000_000,
-    share_cap: float = 0.05,
-    min_rows: int = 50_000,
-) -> str:
+def decide_window_form(stats: dict) -> str:
     """Pick ``"plain"`` or ``"chunked"`` from a key histogram summary.
 
     The plain window is 2-4x faster at uniform data (SCALING.md's
@@ -822,22 +655,33 @@ def decide_window_form(
     unsplittable sort task; the chunked recomposition bounds every task
     by construction.  Escalate to chunked when either:
 
-      * the hottest key exceeds ``task_rows_cap`` rows — the absolute
+      * the hottest key exceeds ``TASK_ROWS_CAP`` rows — the absolute
         criterion: more rows than one window sort task should hold
         regardless of what fraction of the table they are; or
-      * the hottest key owns more than ``share_cap`` of the table (and
-        the table is at least ``min_rows`` — toy frames never need the
+      * the hottest key owns more than ``SHARE_CAP`` of the table (and
+        the table is at least ``MIN_ROWS`` — toy frames never need the
         escalation): a key holding 5% of a 100 TB table serializes 5%
         of the job in one task no matter the cluster size — the
         share criterion is scale-free, so the decision made on a
         sampled or historical histogram transfers to the full data.
     """
     mx, total = stats["max_key_rows"], stats["total_rows"]
-    if mx > task_rows_cap:
+    if mx > TASK_ROWS_CAP:
         return "chunked"
-    if total >= min_rows and mx > share_cap * total:
+    if total >= MIN_ROWS and mx > SHARE_CAP * total:
         return "chunked"
     return "plain"
+
+
+def _window_form(df: DataFrame, keys: list[str], decision: dict | None) -> str:
+    """The one dispatch step of the four ``*_auto`` forms: probe the key
+    histogram of ``df`` (cached), decide, and record the form and the
+    histogram in ``decision`` when the caller passed one."""
+    stats = key_rows_stats(df, keys)
+    form = decide_window_form(stats)
+    if decision is not None:
+        decision.update({"form": form, **stats})
+    return form
 
 
 def running_sum_auto(
@@ -849,17 +693,9 @@ def running_sum_auto(
     *,
     alias: str = "running_sum",
     chunk_seconds: int = 7 * 86_400,
-    task_rows_cap: int = 2_000_000,
-    share_cap: float = 0.05,
-    min_rows: int = 50_000,
-    stats: dict | None = None,
-    stats_dir: str | None = None,
-    stats_max_staleness: float | None = None,
     decision: dict | None = None,
 ) -> DataFrame:
-    """Skew-aware running total: take injected ``stats``, else read
-    the manifest pointer's histogram (``stats_dir`` — zero probe jobs
-    in steady state, r12), else probe the key histogram; dispatch to
+    """Skew-aware running total: probe the key histogram and run
     :func:`running_sum` (uniform data — single shuffle, fastest) or
     :func:`running_sum_chunked` (hot key — splittable, same result).
     Both forms hash-check against the SAME oracle, so the dispatch can
@@ -868,16 +704,7 @@ def running_sum_auto(
     account appears mid-stream and a static choice loses one regime.
 
     Pass ``decision={}`` to observe what was chosen and why."""
-    st, src = _resolve_stats(df, partition_keys, stats, stats_dir,
-                             stats_max_staleness)
-    form = decide_window_form(
-        st, task_rows_cap=task_rows_cap, share_cap=share_cap, min_rows=min_rows
-    )
-    if decision is not None:
-        decision.update({"form": form, "stats_source": src, **st,
-                         "task_rows_cap": task_rows_cap,
-                         "share_cap": share_cap, "min_rows": min_rows})
-    if form == "chunked":
+    if _window_form(df, partition_keys, decision) == "chunked":
         return running_sum_chunked(
             df, partition_keys, order_by, value, ts,
             alias=alias, chunk_seconds=chunk_seconds,
@@ -893,30 +720,14 @@ def sessionize_auto(
     *,
     chunk_seconds: int = 86_400,
     tiebreak: str | None = None,
-    task_rows_cap: int = 2_000_000,
-    share_cap: float = 0.05,
-    min_rows: int = 50_000,
-    stats: dict | None = None,
-    stats_dir: str | None = None,
-    stats_max_staleness: float | None = None,
     decision: dict | None = None,
 ) -> DataFrame:
-    """Skew-aware sessionizer: same dispatch rule (and stats
-    resolution chain — injected > manifest > probe) as
+    """Skew-aware sessionizer: same probe and rule as
     :func:`running_sum_auto`, choosing :func:`sessionize` (single
     shuffle) or :func:`sessionize_chunked` (two-phase, skew-safe,
     bit-identical numbering).  Pass ``decision={}`` to observe the
     choice."""
-    st, src = _resolve_stats(df, [key], stats, stats_dir,
-                             stats_max_staleness)
-    form = decide_window_form(
-        st, task_rows_cap=task_rows_cap, share_cap=share_cap, min_rows=min_rows
-    )
-    if decision is not None:
-        decision.update({"form": form, "stats_source": src, **st,
-                         "task_rows_cap": task_rows_cap,
-                         "share_cap": share_cap, "min_rows": min_rows})
-    if form == "chunked":
+    if _window_form(df, [key], decision) == "chunked":
         return sessionize_chunked(
             df, key, ts, gap_seconds,
             chunk_seconds=chunk_seconds, tiebreak=tiebreak,
@@ -1003,12 +814,6 @@ def ledger_running_balance_auto(
     *,
     clamped: bool = False,
     chunk_seconds: int = 7 * 86_400,
-    task_rows_cap: int = 2_000_000,
-    share_cap: float = 0.05,
-    min_rows: int = 50_000,
-    stats: dict | None = None,
-    stats_dir: str | None = None,
-    stats_max_staleness: float | None = None,
     decision: dict | None = None,
 ) -> DataFrame:
     """Skew-aware X7 ledger — the dispatcher applied to the
@@ -1019,21 +824,10 @@ def ledger_running_balance_auto(
     :func:`ledger_running_balance_chunked` (splittable).  The probe
     runs over the signed LEGS (a Transfer contributes a row to BOTH
     accounts — the histogram that actually feeds the window), and both
-    branches hash-check against the same oracle.  ``stats_dir``
-    manifest stats are computed on the RAW table's account_id (at most
-    2x under the leg count for an all-transfer account) — close enough
-    for a form decision that can only cost time, never correctness."""
-    legs_keys = _ledger_legs(transactions)
-    st, src = _resolve_stats(legs_keys, ["account_id"], stats, stats_dir,
-                             stats_max_staleness)
-    form = decide_window_form(
-        st, task_rows_cap=task_rows_cap, share_cap=share_cap, min_rows=min_rows
-    )
-    if decision is not None:
-        decision.update({"form": form, "stats_source": src, **st,
-                         "task_rows_cap": task_rows_cap,
-                         "share_cap": share_cap, "min_rows": min_rows})
-    if form == "chunked":
+    branches hash-check against the same oracle.  Pass
+    ``decision={}`` to observe the choice."""
+    legs = _ledger_legs(transactions)
+    if _window_form(legs, ["account_id"], decision) == "chunked":
         return ledger_running_balance_chunked(
             transactions, clamped=clamped, chunk_seconds=chunk_seconds
         )
@@ -1054,7 +848,7 @@ def _ledger_legs(transactions: DataFrame) -> DataFrame:
         )
         .otherwise(F.lit(0))
     )
-    # r14 (guide §2.3/§2.4): ONE pass emits both legs via explode
+    # ONE pass emits both legs via explode
     # instead of unionByName(outflow, inflow) — the union form scanned
     # the transactions source twice (once per branch; Catalyst performs
     # no cross-branch scan reuse), doubling the ledger family's input

@@ -841,8 +841,7 @@ def events_value_anomalies_chunked(spark: SparkSession, sf_dir: str) -> DataFram
 @register("events_value_anomalies_auto", oracle=_ANOMALY_SQL)
 def events_value_anomalies_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SKEW-AWARE rolling z-score dispatch
-    (windows.rolling_sums_auto — the third dispatcher, completing the
-    family across running/session/rolling).  The rolling shape's hot
+    (windows.rolling_sums_auto).  The rolling shape's hot
     key is INHERENT: event_type has five values, so each key owns ~20%
     of the table at every scale and the scale-free share criterion
     escalates to the chunked recomposition as soon as the corpus

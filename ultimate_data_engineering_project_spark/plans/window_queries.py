@@ -78,16 +78,16 @@ def running_total_by_customer_chunked(spark: SparkSession, sf_dir: str) -> DataF
 
 @register("running_total_by_customer_auto", oracle=_RUNNING_SPEND_SQL)
 def running_total_by_customer_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SKEW-AWARE dispatcher (windows.running_sum_auto, r11 judge
-    ask #2): one cheap key-histogram probe picks the plain single-
-    window form at uniform data and the chunked-prefix-sum form under
-    a hot key — the choice a production caller shouldn't have to make
-    in advance (the reference's balance loop, oltp_seeder.py:483-487,
-    is exactly where a hot account appears mid-stream).  The oracle is
-    IDENTICAL to both siblings': whichever branch the probe picks, the
-    DuckDB hash check proves the answer unchanged — the dispatch moves
-    only the plan.  Swept at uniform sf1 (picks plain) AND hot-key
-    sf1skew (picks chunked) in SCALING.md."""
+    """The SKEW-AWARE dispatcher (windows.running_sum_auto): one cheap
+    key-histogram probe picks the plain single-window form at uniform
+    data and the chunked-prefix-sum form under a hot key — the choice
+    a production caller shouldn't have to make in advance (the
+    reference's balance loop, oltp_seeder.py:483-487, is exactly where
+    a hot account appears mid-stream).  The oracle is IDENTICAL to
+    both siblings': whichever branch the probe picks, the DuckDB hash
+    check proves the answer unchanged — the dispatch moves only the
+    plan.  Swept at uniform sf1 (picks plain) AND hot-key sf1skew
+    (picks chunked) in SCALING.md."""
     orders = load_table(spark, sf_dir, "orders")
     out = windows.running_sum_auto(
         orders,
@@ -300,25 +300,18 @@ def sessionize_events_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("sessionize_events_auto", oracle=_SESSIONIZE_SQL)
 def sessionize_events_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SKEW-AWARE sessionizer dispatch (windows.sessionize_auto,
-    r11 judge ask #2): a key-histogram picks the single-window form at
-    uniform data and the two-phase chunked form under a hot user.  The
-    oracle is IDENTICAL to both siblings' — whichever branch is
-    picked, the hash check proves the sessions unchanged.  Swept at
-    uniform sf1 (picks plain) AND hot-key sf1skew (picks chunked) in
-    SCALING.md.
+    """The SKEW-AWARE sessionizer dispatch (windows.sessionize_auto):
+    a key-histogram probe picks the single-window form at uniform data
+    and the two-phase chunked form under a hot user.  The oracle is
+    IDENTICAL to both siblings' — whichever branch is picked, the hash
+    check proves the sessions unchanged.  Swept at uniform sf1 (picks
+    plain) AND hot-key sf1skew (picks chunked) in SCALING.md.
 
-    r14 (judge ask #8): this entry now runs the full PRODUCTION stats
-    path end to end under the driver's hash gate — the events table is
-    staged as a manifest table whose compaction wrote the user_id key
-    histogram into the pointer (sinks.compact_parquet(stats_keys=...)),
-    and the dispatch reads that histogram with the r13 STALENESS GUARD
-    active (``stats_max_staleness=2.0``, the recommended production
-    setting: tolerate up to 2x row drift in the live generation before
-    distrusting the snapshot histogram and re-probing).  The entry
-    RAISES if the dispatch did not come from the manifest — a broken
-    pointer/stats/guard path turns into a red driver row, not a silent
-    probe fallback."""
+    The events table is staged as a manifest table first (flat write,
+    adopted by ``sinks.compact_parquet``) and read back through
+    ``read_current``: this entry is the oracle gate's end-to-end run of
+    the manifest compactor, so a broken pointer or adoption path fails
+    a hash check here."""
     import os
 
     from ultimate_data_engineering_project_spark.plans.catalog import (
@@ -332,24 +325,14 @@ def sessionize_events_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     # session-unique per-fixture staging dir (overwritten each run
     # within a process, collision-free across processes and across
-    # same-basename fixture trees — see catalog.staging_dir); the flat
-    # write is then ADOPTED by the manifest compactor, which computes
-    # the key histogram while it is already rewriting every row
-    tbl = os.path.join(staging_dir("auto_stats", sf_dir), "events")
+    # same-basename fixture trees — see catalog.staging_dir)
+    tbl = os.path.join(staging_dir("sessionize_auto", sf_dir), "events")
     events.write.mode("overwrite").parquet(tbl)
-    sinks.compact_parquet(spark, tbl, stats_keys=["user_id"])
-    decision: dict = {}
+    sinks.compact_parquet(spark, tbl)
     sess = windows.sessionize_auto(
         read_current(spark, tbl), "user_id", "ts", 30 * 60,
         chunk_seconds=6 * 3600, tiebreak="event_id",
-        stats_dir=tbl, stats_max_staleness=2.0, decision=decision,
     )
-    if decision.get("stats_source") != "manifest":
-        raise RuntimeError(
-            "sessionize_events_auto: dispatch did not read the manifest "
-            f"key histogram (got {decision.get('stats_source')!r}) — the "
-            "pointer/stats/staleness-guard path is broken"
-        )
     return sess.groupBy(
         "user_id", F.col("session_id").cast("long").alias("session_id")
     ).agg(

@@ -70,7 +70,6 @@ def compact_parquet(
     sort_within_by: list[str] | None = None,
     keep_generations: int = 0,
     race_retries: int = 0,
-    stats_keys: list[str] | None = None,
 ) -> int:
     """Compact a parquet directory's small files to ~``target_file_bytes``
     outputs; returns the number of files written.
@@ -115,12 +114,10 @@ def compact_parquet(
     complete, and the loser's orphan prefix stays pointer-invisible
     and ages out under the normal ``keep_generations`` cleanup.
 
-    ``stats_keys`` computes the three-number key histogram
-    (max_key_rows / total_rows / n_keys over these columns) on the
-    rewritten data and stores it in the pointer JSON: the compactor
-    already pays a full-table rewrite, so the stats cost one extra
-    keys-only aggregate and the auto window dispatchers
-    (``windows.stats_from_manifest``) dispatch with zero probe jobs.
+    The pointer names only the data prefix and its generation, not key
+    statistics: computing them here would re-read the new generation on
+    every compaction, while the window dispatchers' cached key probe
+    (``windows.key_rows_stats``) pays once per input lineage.
 
     Input bytes are read from the filesystem listing, not estimated
     from row counts, so decompression ratio never skews the output
@@ -135,7 +132,6 @@ def compact_parquet(
             partition_by=partition_by,
             sort_within_by=sort_within_by,
             keep_generations=keep_generations,
-            stats_keys=stats_keys,
         ),
         race_retries,
     )
@@ -149,7 +145,6 @@ def _compact_parquet_attempt(
     partition_by: list[str] | None,
     sort_within_by: list[str] | None,
     keep_generations: int,
-    stats_keys: list[str] | None,
 ) -> int:
     import math
 
@@ -184,31 +179,10 @@ def _compact_parquet_attempt(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(manifest.join(path, new_data))
-    meta = {"data": new_data, "generation": gen}
-    if stats_keys:
-        # keys-only histogram over the data just rewritten (one extra
-        # map-side-combined aggregate on top of a full-table rewrite) —
-        # read back from the NEW prefix so the stats describe exactly
-        # the bytes the pointer is about to name
-        srow = (
-            spark.read.parquet(manifest.join(path, new_data))
-            .select(*stats_keys)
-            .groupBy(*stats_keys)
-            .count()
-            .agg(
-                F.max("count").alias("mx"),
-                F.sum("count").alias("total"),
-                F.count(F.lit(1)).alias("nk"),
-            )
-            .first()
-        )
-        meta["key_stats"] = {
-            "keys": list(stats_keys),
-            "max_key_rows": int(srow["mx"] or 0),
-            "total_rows": int(srow["total"] or 0),
-            "n_keys": int(srow["nk"] or 0),
-        }
-    manifest.commit(spark, path, meta, keep_generations=keep_generations)
+    manifest.commit(
+        spark, path, {"data": new_data, "generation": gen},
+        keep_generations=keep_generations,
+    )
     if ptr is None:
         manifest.delete_flat_children(spark, path)  # adoption
     return _count_parquet_files(spark, manifest.join(path, new_data))

@@ -1326,7 +1326,7 @@ def run_incremental_bm25_stream(
     spark: SparkSession,
     docs: DataFrame,
     index_dir: str,
-    stats_dir: str,
+    totals_dir: str,
     checkpoint: str,
     *,
     id_col: str = "doc_id",
@@ -1342,7 +1342,7 @@ def run_incremental_bm25_stream(
     Per batch (the cross-batch state is the on-disk index): the batch's
     postings (term, doc_id, tf, dl) land under
     ``index_dir/batch=<id>/shard=<hash(term) % shards>`` and its ONE
-    stats row (n docs, total length) under ``stats_dir/batch=<id>``.
+    stats row (n docs, total length) under ``totals_dir/batch=<id>``.
     Global statistics are never maintained in place — they are the SUM
     of immutable per-batch partials.  Probe cost: term-shard directory
     pruning keeps the scan at |query terms|/shards of the index
@@ -1364,7 +1364,7 @@ def run_incremental_bm25_stream(
         _write_batch(
             postings.withColumn("shard", shard), index_dir, batch_id, "shard"
         )
-        _write_batch(stats, stats_dir, batch_id)
+        _write_batch(stats, totals_dir, batch_id)
 
     return _run_batches(
         docs, checkpoint, apply_batch, snapshot=(id_col, text_col)
@@ -1420,7 +1420,7 @@ def run_incremental_quality_model_stream(
     spark: SparkSession,
     docs: DataFrame,
     counts_dir: str,
-    dstats_dir: str,
+    doc_counts_dir: str,
     checkpoint: str,
     *,
     dim: int | None = None,
@@ -1435,7 +1435,7 @@ def run_incremental_quality_model_stream(
     Per batch (the cross-batch state is the on-disk partials): the
     batch's (feature, c_pos, c_neg) token counts land under
     ``counts_dir/batch=<id>`` and its ONE doc-count row under
-    ``dstats_dir/batch=<id>`` — immutable per-batch partials, never
+    ``doc_counts_dir/batch=<id>`` — immutable per-batch partials, never
     update-in-place.  classifier.nb_model_from_partials
     derives weights from any prefix of batches — bit-identical to a
     one-shot train on the same documents (exact BIGINT statistics),
@@ -1458,7 +1458,7 @@ def run_incremental_quality_model_stream(
             counts_dir,
             batch_id,
         )
-        _write_batch(_clf.nb_doc_counts(batch_df, label), dstats_dir, batch_id)
+        _write_batch(_clf.nb_doc_counts(batch_df, label), doc_counts_dir, batch_id)
 
     return _run_batches(docs, checkpoint, apply_batch, snapshot=(text_col,))
 
