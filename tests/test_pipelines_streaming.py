@@ -303,8 +303,8 @@ def test_cdc_stream_bucketed_partition_scoped(spark, tmp_path):
     winners only.  Keys deleted in a delta never resurface, before the
     fold or after it, and the folded base holds the bucket layout."""
     from ultimate_data_engineering_project_spark.sources import manifest
-    from ultimate_data_engineering_project_spark.streaming.pipelines import (
-        CDC_FOLD_DELTAS,
+    from ultimate_data_engineering_project_spark.sources.manifest import (
+        FOLD_DELTAS as CDC_FOLD_DELTAS,
     )
 
     n_buckets = 8
@@ -447,8 +447,8 @@ def _uncommit_last_batch(ckpt):
 def test_cdc_stream_uri_table_dir(spark, tmp_path, n_buckets):
     """A ``file://`` table_dir gives the same image as a plain path in
     both modes, across a fold, and leaves no staging dir behind."""
-    from ultimate_data_engineering_project_spark.streaming.pipelines import (
-        CDC_FOLD_DELTAS,
+    from ultimate_data_engineering_project_spark.sources.manifest import (
+        FOLD_DELTAS as CDC_FOLD_DELTAS,
     )
 
     env_dir = tmp_path / "env"
@@ -531,8 +531,8 @@ def test_cdc_crash_inside_fold_orphan_generation(spark, tmp_path):
     key deleted in a folded delta stays absent from the new base, and
     a delete after the fold removes a base key."""
     from ultimate_data_engineering_project_spark.sources import manifest
-    from ultimate_data_engineering_project_spark.streaming.pipelines import (
-        CDC_FOLD_DELTAS,
+    from ultimate_data_engineering_project_spark.sources.manifest import (
+        FOLD_DELTAS as CDC_FOLD_DELTAS,
     )
 
     env_dir = tmp_path / "env"
@@ -616,13 +616,37 @@ def test_cdc_adopts_legacy_flat_table(spark, tmp_path, n_buckets):
     assert {r["k"]: r["v"] for r in adopted.collect()} == {1: "a", 2: "b", 4: "d"}
 
 
+def test_compact_parquet_refuses_stream_tables(spark, tmp_path):
+    """``compact_parquet`` does not know a stream table's merge rule, so
+    it refuses a pointer that carries merge keys (CDC) or names
+    deltas, and leaves the table as it was."""
+    from ultimate_data_engineering_project_spark.sources import manifest
+    from ultimate_data_engineering_project_spark.sources.sinks import compact_parquet
+
+    env_dir = tmp_path / "env"
+    env_dir.mkdir()
+    batches, want = _churn_batches(3)
+    for i, lines in enumerate(batches):
+        _land(env_dir, i, lines)
+    cdc_dir = str(tmp_path / "cdc")
+    _drain_cdc(spark, env_dir, cdc_dir, str(tmp_path / "ckpt"))
+    grows = str(tmp_path / "grows")
+    manifest.commit_batch(spark, grows, 0, "s", lambda: spark.range(5))
+    for table_dir in (cdc_dir, grows):
+        files = _table_bytes(table_dir)
+        with pytest.raises(ValueError, match="stream's table"):
+            compact_parquet(spark, table_dir)
+        assert _table_bytes(table_dir) == files
+    assert _image(spark, cdc_dir) == want
+
+
 def test_cdc_stream_jobs_per_batch(spark, tmp_path):
     """A batch that does not fold runs at most 3 jobs (its per-key
     reduction and its delta write); a folding batch, bucketed and onto
     an existing base, runs at most 6.  No batch lists or probes the
     base."""
-    from ultimate_data_engineering_project_spark.streaming.pipelines import (
-        CDC_FOLD_DELTAS,
+    from ultimate_data_engineering_project_spark.sources.manifest import (
+        FOLD_DELTAS as CDC_FOLD_DELTAS,
     )
 
     env_dir = tmp_path / "env"
@@ -2128,6 +2152,261 @@ def test_incremental_stream_replay_after_uncommitted_batch(
         assert pairs.filter(F.col("new_id") == F.col("old_id")).count() == 0
 
 
+def _id_slices(spark, frame, id_col, src, n):
+    """Split ``frame`` into ``n`` id-range slices.  Returns ``(land,
+    stream, cuts)``: ``land(i)`` stages slice ``i`` as one file, which
+    the next ``stream()`` query reads as one micro-batch."""
+    total = frame.count()
+    cuts = [total * i // n for i in range(n + 1)]
+
+    def land(i):
+        frame.filter(
+            (F.col(id_col) >= cuts[i]) & (F.col(id_col) < cuts[i + 1])
+        ).coalesce(1).write.parquet(f"{src}/b{i:02d}")
+
+    def stream():
+        return (
+            spark.readStream.schema(frame.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src + "/b*")
+        )
+
+    return land, stream, cuts
+
+
+@pytest.mark.parametrize(
+    "name, bound", [("dedup", 21), ("ann", 5), ("pq", 8), ("span", 5)]
+)
+def test_incremental_stream_jobs_per_batch(spark, sf_dir, tmp_path, name, bound):
+    """A batch that does not fold reads each history table with its
+    stored schema and runs no Spark job for the read.  Its jobs, counted
+    in the stream's job group, stay at or below ``bound``: dedup and pq
+    read two history tables, ann and span one, and a listed,
+    schema-inferred, emptiness-probed history read costs 3 jobs more
+    per table."""
+    from ultimate_data_engineering_project_spark.sources.readers import load_table
+
+    table, id_col = {
+        "ann": ("embeddings", "vec_id"),
+        "pq": ("embeddings", "vec_id"),
+    }.get(name, ("documents", "doc_id"))
+    frame = load_table(spark, sf_dir, table)
+    land, stream, _ = _id_slices(spark, frame, id_col, str(tmp_path / "src"), 3)
+    start, _ = _replay_case(spark, name, frame, str(tmp_path / name))
+    for i in range(3):
+        land(i)
+        q = start(stream())
+        q.awaitTermination(300)
+        assert q.exception() is None
+    assert [p.batchId for p in q.recentProgress] == [2]
+    tracker = spark.sparkContext.statusTracker()
+    jobs = len(tracker.getJobIdsForGroup(str(q.runId)))
+    assert 0 < jobs <= bound, jobs
+
+
+@pytest.mark.parametrize("name", ["dedup", "bm25"])
+def test_stream_restart_adopts_legacy_batch_layout(spark, sf_dir, tmp_path, name):
+    """Tables left by earlier versions' streams hold bare ``batch=<id>``
+    prefixes and no pointer.  A restart on them, replaying its last
+    batch, reads the earlier prefixes as history and commits them as
+    deltas, rewriting the replayed one: every table ends as a run that
+    never stopped leaves it."""
+    from collections import Counter
+
+    from ultimate_data_engineering_project_spark.sources import manifest
+    from ultimate_data_engineering_project_spark.sources.readers import (
+        load_table,
+        read_current,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+
+    def run(root, stops):
+        land, stream, _ = _id_slices(spark, docs, "doc_id", root + "/src", 3)
+        start, dirs = _replay_case(spark, name, docs, root)
+        for part in stops:
+            for i in part:
+                land(i)
+            q = start(stream())
+            q.awaitTermination(300)
+            assert q.exception() is None
+            yield dirs
+
+    def tables(dirs):
+        return {
+            d.rsplit("/", 1)[1]: (
+                Counter(repr(tuple(r)) for r in read_current(spark, d).collect()),
+                manifest.read_pointer(spark, d)["deltas"],
+            )
+            for d in dirs
+        }
+
+    (whole,) = run(str(tmp_path / "whole"), [range(3)])
+    legacy = run(str(tmp_path / "legacy"), [range(2), [2]])
+    dirs = next(legacy)
+    for d in dirs:
+        os.remove(os.path.join(d, "_current"))
+    assert _uncommit_last_batch(str(tmp_path / "legacy" / "ckpt")) == 1
+    next(legacy)
+    assert tables(dirs) == tables(whole)
+    assert sum(sum(c.values()) for c, _ in tables(dirs).values()) > 0
+
+
+def test_dedup_stream_past_fold_and_replay_of_folded_batch(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The dedup stream runs past ``FOLD_DELTAS`` batches.
+
+    Replay of the folding batch after ``pairs`` and ``index`` committed
+    it (``index`` folding it into its base) but before ``docs`` did:
+    the replay raises nothing, never builds its probe, leaves ``pairs``
+    and ``index`` byte-identical and commits ``docs``.  Later batches
+    probe a folded base plus deltas, and the pairs read through the one
+    reader equal the batch operator's cross-batch pairs as a multiset.
+    A history read before a folded batch raises, naming ``through``."""
+    import shutil
+    from collections import Counter
+
+    from ultimate_data_engineering_project_spark.operators import dedup
+    from ultimate_data_engineering_project_spark.sources import manifest
+    from ultimate_data_engineering_project_spark.sources.readers import (
+        load_table,
+        read_current,
+    )
+
+    fold_at = manifest.FOLD_DELTAS - 1  # the batch whose commits fold
+    n = manifest.FOLD_DELTAS + 2
+    docs = load_table(spark, sf_dir, "documents")
+    land, stream, cuts = _id_slices(spark, docs, "doc_id", str(tmp_path / "src"), n)
+    root = str(tmp_path / "dedup")
+    start, (pairs_dir, index_dir, docs_dir) = _replay_case(spark, "dedup", docs, root)
+
+    def run(batches):
+        for i in batches:
+            land(i)
+        q = start(stream())
+        q.awaitTermination(300)
+        assert q.exception() is None
+        return q
+
+    def state(table_dir):
+        with open(os.path.join(table_dir, "_current")) as fh:
+            return _table_bytes(table_dir), fh.read()
+
+    run(range(fold_at))
+    shutil.copytree(docs_dir, str(tmp_path / "docs_before"))
+    run([fold_at])
+    index_ptr = manifest.read_pointer(spark, index_dir)
+    assert (index_ptr["deltas"], index_ptr["through"]) == ([], fold_at)
+    assert manifest.read_pointer(spark, pairs_dir)["deltas"] == list(
+        range(1, fold_at + 1)
+    )
+    committed = {d: state(d) for d in (pairs_dir, index_dir)}
+
+    # roll docs back to before the folding batch, then replay that batch
+    shutil.rmtree(docs_dir)
+    shutil.copytree(str(tmp_path / "docs_before"), docs_dir)
+    assert _uncommit_last_batch(root + "/ckpt") == fold_at
+
+    def no_probe(*args, **kwargs):
+        raise AssertionError("the replay built its probe")
+
+    monkeypatch.setattr(dedup, "minhash_match_index_md5", no_probe)
+    q = run([])
+    monkeypatch.undo()
+    assert [p.batchId for p in q.recentProgress] == [fold_at]
+    assert {d: state(d) for d in (pairs_dir, index_dir)} == committed
+    docs_ptr = manifest.read_pointer(spark, docs_dir)
+    assert (docs_ptr["deltas"], docs_ptr["through"]) == ([], fold_at)
+    assert read_current(spark, docs_dir).count() == cuts[fold_at + 1]
+
+    run(range(fold_at + 1, n))
+    got = Counter(
+        (r.new_id, r.old_id, r.jaccard)
+        for r in read_current(spark, pairs_dir).collect()
+    )
+    full = dedup.minhash_lsh_pairs_md5(docs, "doc_id", jaccard_threshold=0.5)
+
+    def batch_of(d):
+        return max(i for i in range(n) if cuts[i] <= d)
+
+    want = Counter(
+        (r.id_b, r.id_a, r.jaccard)
+        for r in full.collect()
+        if batch_of(r.id_a) != batch_of(r.id_b)
+    )
+    assert got == want and len(want) > 0
+    assert manifest.read_pointer(spark, index_dir)["deltas"] == [fold_at + 1, n - 1]
+    with pytest.raises(ValueError, match=f"through={fold_at}"):
+        manifest.read_table(spark, index_dir, before_batch=3)
+
+
+def test_compact_rollup_folds_every_batch_replay_is_noop(spark, sf_dir, tmp_path):
+    """``compact_rollup`` folds every committed batch, the last one
+    included.  A restart that replays that batch finds it at or below
+    the pointer's ``through``: it writes nothing, and `read_rollup`
+    serves the same rows."""
+    from ultimate_data_engineering_project_spark.sources import manifest
+    from ultimate_data_engineering_project_spark.sources.readers import load_table
+    from ultimate_data_engineering_project_spark.streaming.pipelines import (
+        compact_rollup,
+        read_rollup,
+    )
+
+    events = load_table(spark, sf_dir, "events")
+    stream = _three_file_batches(spark, events, "event_id", str(tmp_path / "src"))
+    root = str(tmp_path / "rollup")
+    start, (rollup_dir,) = _replay_case(spark, "rollup", events, root)
+    start(stream()).awaitTermination(300)
+    want = sorted(map(tuple, read_rollup(spark, rollup_dir).collect()))
+
+    assert compact_rollup(spark, rollup_dir) == 1
+    ptr = manifest.read_pointer(spark, rollup_dir)
+    assert (ptr["base"], ptr["deltas"], ptr["through"]) == ("gen-000001", [], 2)
+    files = _table_bytes(rollup_dir)
+    assert all(p.startswith("gen-000001/") for p in files)
+
+    assert _uncommit_last_batch(root + "/ckpt") == 2
+    q = start(stream())
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert [p.batchId for p in q.recentProgress] == [2]
+    assert _table_bytes(rollup_dir) == files
+    assert manifest.read_pointer(spark, rollup_dir) == ptr
+    assert sorted(map(tuple, read_rollup(spark, rollup_dir).collect())) == want
+
+
+def test_read_table_base_plus_deltas_runs_no_job(spark, tmp_path):
+    """The one reader builds its frame over a folded base plus two
+    deltas from the stored schema: no listing, no inference, no
+    emptiness probe, so no Spark job runs until the frame is used."""
+    import uuid
+
+    from ultimate_data_engineering_project_spark.sources import manifest
+
+    table = str(tmp_path / "grows")
+    for i in range(5):
+        manifest.commit_batch(
+            spark, table, i, "s", lambda: spark.range(10 * i, 10 * i + 10)
+        )
+        if i == 2:
+            manifest.fold(spark, table, manifest.read_pointer(spark, table))
+    ptr = manifest.read_pointer(spark, table)
+    assert (ptr["base"], ptr["deltas"], ptr["through"]) == ("gen-000001", [3, 4], 2)
+
+    sc = spark.sparkContext
+    group = f"read-table-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one reader")
+    try:
+        full = manifest.read_table(spark, table)
+        hist = manifest.read_table(spark, table, before_batch=4, stream="s")
+    finally:
+        sc.setJobGroup(f"{group}-done", "clear")
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert sorted(r.id for r in full.collect()) == list(range(50))
+    assert sorted(r.id for r in hist.collect()) == list(range(40))
+
+
 def test_incremental_rollup_stream_matches_batch(spark, sf_dir, tmp_path):
     """The continuous aggregate maintained one micro-batch at a time
     (mergeable partials under batch=<id>) serves EXACTLY the direct
@@ -2184,33 +2463,25 @@ def test_incremental_rollup_stream_matches_batch(spark, sf_dir, tmp_path):
     )
     assert rows(read_rollup(spark, rollup_dir)) == want
 
-    # compaction: folding batches 0-1 into one base partition preserves
-    # the serving view exactly (state algebra == serving algebra) and
-    # keeps the replayable tail partition intact
+    # compaction: folding every batch into one base partition preserves
+    # the serving view exactly (state algebra == serving algebra)
     from ultimate_data_engineering_project_spark.streaming.pipelines import (
         compact_rollup,
     )
 
-    n_parts = compact_rollup(spark, rollup_dir, keep_last=1)
-    assert n_parts == 2
-    # the folded batches live on only inside the gen-000001 base; the
-    # replayable tail partition stays at the root
+    n_parts = compact_rollup(spark, rollup_dir)
+    assert n_parts == 1
+    # the folded batches live on only inside the gen-000001 base
     assert sorted(
         os.path.basename(p) for p in _glob.glob(rollup_dir + "/batch=*")
-    ) == ["batch=2"]
+    ) == []
     assert sorted(
         os.path.basename(p) for p in _glob.glob(rollup_dir + "/gen-*")
     ) == ["gen-000001"]
     assert rows(read_rollup(spark, rollup_dir)) == want
     # idempotent when nothing left to fold
-    assert compact_rollup(spark, rollup_dir, keep_last=1) == 2
+    assert compact_rollup(spark, rollup_dir) == 1
     assert rows(read_rollup(spark, rollup_dir)) == want
-
-    # keep_last=0 would fold the replayable tail batch into the base —
-    # a crash-replayed stream rewriting that id would overwrite the
-    # whole folded history.  Refuse loudly (r8 advice).
-    with pytest.raises(ValueError, match="keep_last must be >= 1"):
-        compact_rollup(spark, rollup_dir, keep_last=0)
 
 
 def test_incremental_hist_rollup_stream_and_compaction(spark, sf_dir, tmp_path):
@@ -2225,6 +2496,7 @@ def test_incremental_hist_rollup_stream_and_compaction(spark, sf_dir, tmp_path):
     import glob as _glob
 
     from ultimate_data_engineering_project_spark.operators import aggregates
+    from ultimate_data_engineering_project_spark.sources import manifest
     from ultimate_data_engineering_project_spark.sources.readers import load_table
     from ultimate_data_engineering_project_spark.streaming.pipelines import (
         compact_rollup,
@@ -2262,7 +2534,7 @@ def test_incremental_hist_rollup_stream_and_compaction(spark, sf_dir, tmp_path):
     assert len(_glob.glob(rollup_dir + "/batch=*")) == 3
 
     # the first compaction folds bins exactly (count addition)
-    assert compact_rollup(spark, rollup_dir, keep_last=1) == 2
+    assert compact_rollup(spark, rollup_dir) == 1
     assert rows(read_rollup(spark, rollup_dir, merge_fn=serve)) == want
 
     # land one more batch so batch 2 leaves the replayable tail, then
@@ -2271,7 +2543,8 @@ def test_incremental_hist_rollup_stream_and_compaction(spark, sf_dir, tmp_path):
     s0 = events.where(
         F.pmod(F.coalesce(F.col("event_id"), F.lit(0)), F.lit(3)) == 0
     )
-    aggregates.hist_partials(s0).write.parquet(rollup_dir + "/batch=3")
+    manifest.commit_batch(spark, rollup_dir, 3, str(tmp_path / "hist_ckpt"),
+                          lambda: aggregates.hist_partials(s0))
     want2 = rows(
         serve(
             aggregates.hist_partials(events).unionByName(
@@ -2279,7 +2552,7 @@ def test_incremental_hist_rollup_stream_and_compaction(spark, sf_dir, tmp_path):
             )
         )
     )
-    assert compact_rollup(spark, rollup_dir) == 2
+    assert compact_rollup(spark, rollup_dir) == 1
     import json as _json
 
     assert _json.load(open(rollup_dir + "/_current"))["base"] == "gen-000002"
@@ -2295,6 +2568,7 @@ def test_hist_rollup_time_travel(spark, sf_dir, tmp_path):
     import functools
 
     from ultimate_data_engineering_project_spark.operators import aggregates
+    from ultimate_data_engineering_project_spark.sources import manifest
     from ultimate_data_engineering_project_spark.sources.readers import load_table
     from ultimate_data_engineering_project_spark.streaming.pipelines import (
         compact_rollup,
@@ -2310,8 +2584,9 @@ def test_hist_rollup_time_travel(spark, sf_dir, tmp_path):
     ]
     rollup_dir = str(tmp_path / "hist_tt")
     for i in range(3):
-        aggregates.hist_partials(slices[i]).write.parquet(
-            rollup_dir + f"/batch={i}"
+        manifest.commit_batch(
+            spark, rollup_dir, i, "slices",
+            lambda: aggregates.hist_partials(slices[i]),
         )
     serve = functools.partial(aggregates.hist_quantiles, qs=(50, 95))
 
@@ -2324,16 +2599,16 @@ def test_hist_rollup_time_travel(spark, sf_dir, tmp_path):
             df = df.unionByName(s)
         return rows(serve(aggregates.hist_partials(df)))
 
-    # gen1 folds batches 0-1 (keep_last=1); then batch 3 arrives and
-    # gen2 folds through batch 2
+    # gen1 folds batches 0-2; then batch 3 arrives and gen2 folds it
     compact_rollup(spark, rollup_dir, keep_generations=2)
-    aggregates.hist_partials(slices[3]).write.parquet(rollup_dir + "/batch=3")
+    manifest.commit_batch(spark, rollup_dir, 3, "slices",
+                          lambda: aggregates.hist_partials(slices[3]))
     compact_rollup(spark, rollup_dir, keep_generations=2)
 
     assert rows(read_rollup(spark, rollup_dir, merge_fn=serve,
-                            at_generation=1)) == direct(2)
+                            at_generation=1)) == direct(3)
     assert rows(read_rollup(spark, rollup_dir, merge_fn=serve,
-                            at_generation=2)) == direct(3)
+                            at_generation=2)) == direct(4)
     assert rows(read_rollup(spark, rollup_dir, merge_fn=serve)) == direct(4)
 
 
@@ -2350,6 +2625,7 @@ def test_compact_rollup_generation_ageing_time_travel(spark, sf_dir, tmp_path):
 
     import pytest
     from ultimate_data_engineering_project_spark.operators import aggregates
+    from ultimate_data_engineering_project_spark.sources import manifest
     from ultimate_data_engineering_project_spark.sources.readers import load_table
     from ultimate_data_engineering_project_spark.streaming.pipelines import (
         compact_rollup,
@@ -2375,34 +2651,88 @@ def test_compact_rollup_generation_ageing_time_travel(spark, sf_dir, tmp_path):
         return rows(aggregates.merge_rollup(aggregates.rollup_partials(df)))
 
     for i in range(4):
-        aggregates.rollup_partials(slices[i]).write.parquet(
-            rollup_dir + f"/batch={i}"
+        manifest.commit_batch(
+            spark, rollup_dir, i, "slices",
+            lambda: aggregates.rollup_partials(slices[i]),
         )
-    # gen1 folds batches 0-2
+    # gen1 folds batches 0-3
     compact_rollup(spark, rollup_dir, keep_generations=2)
-    aggregates.rollup_partials(slices[4]).write.parquet(rollup_dir + "/batch=4")
-    # gen2 folds through batch 3; gen1 retained by ageing
+    manifest.commit_batch(spark, rollup_dir, 4, "slices",
+                          lambda: aggregates.rollup_partials(slices[4]))
+    # gen2 folds through batch 4; gen1 retained by ageing
     compact_rollup(spark, rollup_dir, keep_generations=2)
     assert _json.load(open(rollup_dir + "/_current"))["base"] == "gen-000002"
     assert _os.path.exists(rollup_dir + "/gen-000001")
 
     # time travel: generation N serves the aggregate as of its fold
-    assert rows(read_rollup(spark, rollup_dir, at_generation=1)) == arrived(3)
-    assert rows(read_rollup(spark, rollup_dir, at_generation=2)) == arrived(4)
-    # current view = fold + live tail
+    assert rows(read_rollup(spark, rollup_dir, at_generation=1)) == arrived(4)
+    assert rows(read_rollup(spark, rollup_dir, at_generation=2)) == arrived(5)
+    # current view = the fold
     assert rows(read_rollup(spark, rollup_dir)) == arrived(5)
 
     # gen3: with keep_generations=1, gen1 ages out, gen2 survives
-    aggregates.rollup_partials(slices[5]).write.parquet(rollup_dir + "/batch=5")
+    manifest.commit_batch(spark, rollup_dir, 5, "slices",
+                          lambda: aggregates.rollup_partials(slices[5]))
     compact_rollup(spark, rollup_dir, keep_generations=1)
     gens = sorted(
         _os.path.basename(p) for p in _glob.glob(rollup_dir + "/gen-*")
     )
     assert gens == ["gen-000002", "gen-000003"]
-    assert rows(read_rollup(spark, rollup_dir, at_generation=3)) == arrived(5)
+    assert rows(read_rollup(spark, rollup_dir, at_generation=3)) == arrived(6)
     with pytest.raises(ValueError, match="gen-000002"):
         read_rollup(spark, rollup_dir, at_generation=1)
     assert rows(read_rollup(spark, rollup_dir)) == arrived(6)
+
+
+def test_stream_fold_keeps_compactor_generations(spark, sf_dir, tmp_path):
+    """A stream's own fold (every ``FOLD_DELTAS`` batches) keeps as many
+    superseded generations as ``compact_rollup(keep_generations=2)``
+    left on disk: the two newest stay time-travel-readable."""
+    import glob as _glob
+
+    from ultimate_data_engineering_project_spark.operators import aggregates
+    from ultimate_data_engineering_project_spark.sources import manifest
+    from ultimate_data_engineering_project_spark.sources.readers import load_table
+    from ultimate_data_engineering_project_spark.streaming.pipelines import (
+        compact_rollup,
+        read_rollup,
+    )
+
+    n = 3 + manifest.FOLD_DELTAS
+    events = load_table(spark, sf_dir, "events")
+    slices = [
+        events.where(F.pmod(F.coalesce(F.col("event_id"), F.lit(0)), F.lit(n)) == i)
+        for i in range(n)
+    ]
+    rollup_dir = str(tmp_path / "rollup")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def arrived(k):
+        df = slices[0]
+        for s in slices[1:k]:
+            df = df.unionByName(s)
+        return rows(aggregates.merge_rollup(aggregates.rollup_partials(df)))
+
+    def commit(i):
+        manifest.commit_batch(
+            spark, rollup_dir, i, "slices",
+            lambda: aggregates.rollup_partials(slices[i]),
+        )
+
+    for i in range(3):  # gen-1..3, two retained
+        commit(i)
+        compact_rollup(spark, rollup_dir, keep_generations=2)
+    for i in range(3, n):  # the last commit folds into gen-4
+        commit(i)
+    ptr = manifest.read_pointer(spark, rollup_dir)
+    assert (ptr["base"], ptr["deltas"], ptr["through"]) == ("gen-000004", [], n - 1)
+    gens = sorted(os.path.basename(p) for p in _glob.glob(rollup_dir + "/gen-*"))
+    assert gens == ["gen-000002", "gen-000003", "gen-000004"]
+    assert rows(read_rollup(spark, rollup_dir, at_generation=2)) == arrived(2)
+    assert rows(read_rollup(spark, rollup_dir, at_generation=3)) == arrived(3)
+    assert rows(read_rollup(spark, rollup_dir)) == arrived(n)
 
 
 def test_compact_rollup_ageing_rampup_and_orphan(spark, sf_dir, tmp_path):
@@ -2418,6 +2748,7 @@ def test_compact_rollup_ageing_rampup_and_orphan(spark, sf_dir, tmp_path):
 
     import pytest
     from ultimate_data_engineering_project_spark.operators import aggregates
+    from ultimate_data_engineering_project_spark.sources import manifest
     from ultimate_data_engineering_project_spark.sources.readers import load_table
     from ultimate_data_engineering_project_spark.streaming.pipelines import (
         compact_rollup,
@@ -2433,15 +2764,18 @@ def test_compact_rollup_ageing_rampup_and_orphan(spark, sf_dir, tmp_path):
     ]
     rollup_dir = str(tmp_path / "rollup_rampup")
     for i in range(4):
-        aggregates.rollup_partials(slices[i]).write.parquet(
-            rollup_dir + f"/batch={i}"
+        manifest.commit_batch(
+            spark, rollup_dir, i, "slices",
+            lambda: aggregates.rollup_partials(slices[i]),
         )
     # three folds at keep_generations=3: 2 superseded < 3 kept — the
     # ramp-up window must retain every generation
     compact_rollup(spark, rollup_dir, keep_generations=3)
-    aggregates.rollup_partials(slices[4]).write.parquet(rollup_dir + "/batch=4")
+    manifest.commit_batch(spark, rollup_dir, 4, "slices",
+                          lambda: aggregates.rollup_partials(slices[4]))
     compact_rollup(spark, rollup_dir, keep_generations=3)
-    aggregates.rollup_partials(slices[5]).write.parquet(rollup_dir + "/batch=5")
+    manifest.commit_batch(spark, rollup_dir, 5, "slices",
+                          lambda: aggregates.rollup_partials(slices[5]))
     compact_rollup(spark, rollup_dir, keep_generations=3)
     assert sorted(
         _os.path.basename(p) for p in _glob.glob(rollup_dir + "/gen-*")
@@ -2485,12 +2819,14 @@ def test_compact_rollup_race_retry(spark, sf_dir, tmp_path):
     ]
     rollup_dir = str(tmp_path / "rollup_race")
     for i in range(4):
-        aggregates.rollup_partials(slices[i]).write.parquet(
-            rollup_dir + f"/batch={i}"
+        manifest.commit_batch(
+            spark, rollup_dir, i, "slices",
+            lambda: aggregates.rollup_partials(slices[i]),
         )
     compact_rollup(spark, rollup_dir,
-                   keep_generations=1)  # gen-1, folded through 2
-    aggregates.rollup_partials(slices[4]).write.parquet(rollup_dir + "/batch=4")
+                   keep_generations=1)  # gen-1, folded through 3
+    manifest.commit_batch(spark, rollup_dir, 4, "slices",
+                          lambda: aggregates.rollup_partials(slices[4]))
     want = sorted(map(tuple, read_rollup(spark, rollup_dir).collect()))
 
     real_write = manifest.write_pointer
@@ -2514,9 +2850,8 @@ def test_compact_rollup_race_retry(spark, sf_dir, tmp_path):
         # retry path: batch 5 arrives; A folds batch 4 into gen-4 and
         # loses to a winner flipping gen-5; the retry re-runs from the
         # winner's state and completes
-        aggregates.rollup_partials(slices[0]).write.parquet(
-            rollup_dir + "/batch=5"
-        )
+        manifest.commit_batch(spark, rollup_dir, 5, "slices",
+            lambda: aggregates.rollup_partials(slices[0]))
         want = sorted(map(tuple, read_rollup(spark, rollup_dir).collect()))
 
         def hooked2(spark_, table_dir, meta):
@@ -2552,6 +2887,7 @@ def test_compact_rollup_manifest_protocol(spark, sf_dir, tmp_path):
     import os as _os
 
     from ultimate_data_engineering_project_spark.operators import aggregates
+    from ultimate_data_engineering_project_spark.sources import manifest
     from ultimate_data_engineering_project_spark.sources.readers import load_table
     from ultimate_data_engineering_project_spark.streaming.pipelines import (
         compact_rollup,
@@ -2567,8 +2903,9 @@ def test_compact_rollup_manifest_protocol(spark, sf_dir, tmp_path):
     ]
     rollup_dir = str(tmp_path / "rollup_m")
     for i in range(4):  # batches 0..3 as the stream would land them
-        aggregates.rollup_partials(slices[i]).write.parquet(
-            rollup_dir + f"/batch={i}"
+        manifest.commit_batch(
+            spark, rollup_dir, i, "slices",
+            lambda: aggregates.rollup_partials(slices[i]),
         )
 
     def rows(df):
@@ -2580,33 +2917,37 @@ def test_compact_rollup_manifest_protocol(spark, sf_dir, tmp_path):
             df = df.unionByName(s)
         return rows(aggregates.merge_rollup(aggregates.rollup_partials(df)))
 
-    # fold batches 0-2 into gen-000001; batch=3 is the replayable tail
-    assert compact_rollup(spark, rollup_dir) == 2
+    # fold batches 0-3 into gen-000001
+    assert compact_rollup(spark, rollup_dir) == 1
     ptr = _json.load(open(rollup_dir + "/_current"))
-    assert ptr == {"base": "gen-000001", "folded_through": 2, "generation": 1}
+    assert ptr.pop("schema")["type"] == "struct"
+    assert ptr == {"generation": 1, "base": "gen-000001", "through": 3,
+                   "stream": "slices", "deltas": []}
     assert sorted(
         _os.path.basename(p) for p in _glob.glob(rollup_dir + "/batch=*")
-    ) == ["batch=3"]
+    ) == []
     assert rows(read_rollup(spark, rollup_dir)) == arrived(4)
 
     # the stream keeps appending at the table root, untouched
-    aggregates.rollup_partials(slices[4]).write.parquet(rollup_dir + "/batch=4")
+    manifest.commit_batch(spark, rollup_dir, 4, "slices",
+                          lambda: aggregates.rollup_partials(slices[4]))
     assert rows(read_rollup(spark, rollup_dir)) == arrived(5)
 
-    # second fold: base + batches 3-? merge into gen-000002, old gen
+    # second fold: base + batch 4 merge into gen-000002, old gen
     # deleted; nothing-to-fold rerun is a no-op with the same count
-    assert compact_rollup(spark, rollup_dir) == 2
+    assert compact_rollup(spark, rollup_dir) == 1
     assert _json.load(open(rollup_dir + "/_current"))["base"] == "gen-000002"
     assert not _os.path.exists(rollup_dir + "/gen-000001")
     assert rows(read_rollup(spark, rollup_dir)) == arrived(5)
-    assert compact_rollup(spark, rollup_dir) == 2
+    assert compact_rollup(spark, rollup_dir) == 1
 
     # crash AFTER flip, before cleanup: a stale superseded batch dir
     # reappears — readers ignore it (pointer-driven), next run deletes
     aggregates.rollup_partials(slices[0]).write.parquet(rollup_dir + "/batch=0")
     assert rows(read_rollup(spark, rollup_dir)) == arrived(5)
-    aggregates.rollup_partials(slices[5]).write.parquet(rollup_dir + "/batch=5")
-    assert compact_rollup(spark, rollup_dir) == 2
+    manifest.commit_batch(spark, rollup_dir, 5, "slices",
+                          lambda: aggregates.rollup_partials(slices[5]))
+    assert compact_rollup(spark, rollup_dir) == 1
     assert not _os.path.exists(rollup_dir + "/batch=0")
     assert rows(read_rollup(spark, rollup_dir)) == arrived(6)
 
@@ -2619,8 +2960,9 @@ def test_compact_rollup_manifest_protocol(spark, sf_dir, tmp_path):
         rollup_dir + "/" + orphan
     )  # garbage the crashed run left
     assert rows(read_rollup(spark, rollup_dir)) == arrived(6)
-    aggregates.rollup_partials(slices[0]).write.parquet(rollup_dir + "/batch=6")
-    assert compact_rollup(spark, rollup_dir) == 2
+    manifest.commit_batch(spark, rollup_dir, 6, "slices",
+                          lambda: aggregates.rollup_partials(slices[0]))
+    assert compact_rollup(spark, rollup_dir) == 1
     got = _json.load(open(rollup_dir + "/_current"))
     assert got["base"] == orphan and got["generation"] == cur["generation"] + 1
     want7 = rows(

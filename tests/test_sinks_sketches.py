@@ -195,6 +195,32 @@ def test_compact_parquet_small_files(spark, tmp_path):
     assert ids == sorted(ids)
 
 
+def test_compact_parquet_feeds_sessionize_auto(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """End to end through the manifest compactor: the events table
+    written flat, adopted by ``compact_parquet`` and read back through
+    the one reader gives the ``sessionize_events_auto`` entry
+    (``windows.sessionize_auto`` and its aggregate) the same sessions
+    as the fixture read directly."""
+    from ultimate_data_engineering_project_spark.plans import window_queries
+    from ultimate_data_engineering_project_spark.sources.readers import read_current
+    from ultimate_data_engineering_project_spark.sources.sinks import compact_parquet
+
+    def sessions():
+        return sorted(
+            map(tuple, window_queries.sessionize_events_auto(spark, sf_dir).collect())
+        )
+
+    tbl = str(tmp_path / "events")
+    load_table(spark, sf_dir, "events").write.parquet(tbl)
+    assert compact_parquet(spark, tbl) == 1
+    staged = read_current(spark, tbl)
+    want = sessions()
+    monkeypatch.setattr(window_queries, "load_table", lambda *_: staged)
+    assert sessions() == want and len(want) > 0
+
+
 def test_compact_parquet_manifest_protocol(spark, tmp_path):
     """The object-store compaction protocol for generic parquet tables
     (r8 judge ask #4): first call ADOPTS a legacy flat table into
@@ -223,7 +249,9 @@ def test_compact_parquet_manifest_protocol(spark, tmp_path):
     )
     assert n == 1
     ptr = json.load(open(path + "/_current"))
-    assert ptr == {"data": "gen-000001", "generation": 1}
+    assert ptr.pop("schema")["type"] == "struct"
+    assert ptr == {"generation": 1, "base": "gen-000001", "through": -1,
+                   "stream": None, "deltas": []}
     assert not glob.glob(f"{path}/*.parquet")  # flat files gone
     assert sorted(r["id"] for r in read_current(spark, path).collect()) == want
     # read_current on a NON-manifest table still reads flat
@@ -235,7 +263,7 @@ def test_compact_parquet_manifest_protocol(spark, tmp_path):
     assert compact_parquet(
         spark, path, target_file_bytes=1 << 30
     ) == 1
-    assert json.load(open(path + "/_current"))["data"] == "gen-000002"
+    assert json.load(open(path + "/_current"))["base"] == "gen-000002"
     assert not os.path.exists(path + "/gen-000001")
     assert sorted(r["id"] for r in read_current(spark, path).collect()) == want
 
@@ -247,7 +275,7 @@ def test_compact_parquet_manifest_protocol(spark, tmp_path):
         spark, path, target_file_bytes=1 << 30
     ) == 1
     got = json.load(open(path + "/_current"))
-    assert got == {"data": "gen-000003", "generation": 3}
+    assert (got["base"], got["generation"], got["deltas"]) == ("gen-000003", 3, [])
     assert sorted(r["id"] for r in read_current(spark, path).collect()) == want
     assert not os.path.exists(path + "/gen-000002")
 
@@ -532,7 +560,9 @@ def test_manifest_adoption_crash_and_writer_race_guard(spark, tmp_path):
     )
     assert n == 1
     ptr = json.load(open(path + "/_current"))
-    assert ptr == {"data": "gen-000001", "generation": 1}
+    assert ptr.pop("schema")["type"] == "struct"
+    assert ptr == {"generation": 1, "base": "gen-000001", "through": -1,
+                   "stream": None, "deltas": []}
     got = {r["id"] for r in read_current(spark, path).collect()}
     assert got == want  # garbage overwritten, flat rows only
 

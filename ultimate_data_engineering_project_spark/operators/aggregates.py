@@ -197,7 +197,7 @@ def hist_partials(
 
     At 100 TB the partials table is bucket x key x bins cardinality —
     ``bins`` multiplies the ROLLUP's footprint, not the corpus scan —
-    and the partials land in the same ``batch=<id>`` layout the
+    and the partials land in the same per-batch delta layout the
     incremental rollup stream and ``compact_rollup`` already manage."""
     width = (hi - lo) / bins
     b = F.floor((F.col(value_col) - F.lit(lo)) / F.lit(width))

@@ -63,6 +63,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ultimate_data_engineering_project_spark.operators import text as text_ops
+from ultimate_data_engineering_project_spark.sources import manifest
 
 #: Hashed feature space: md5's first 12 hex chars mod DIM — portable
 #: (DuckDB: ('0x' || substr(md5(t), 1, 12))::BIGINT % DIM, the
@@ -438,8 +439,8 @@ def nb_model_from_partials(
     check_sizing: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Derive the model from the per-batch partials a
-    run_incremental_quality_model_stream left on disk (immutable
-    ``batch=<id>`` partitions — the incremental-BM25 layout): merge
+    run_incremental_quality_model_stream left on disk (read through
+    ``manifest.read_table`` — the incremental-BM25 layout): merge
     the token-count partials (one groupBy), sum the doc-count
     partials, hand both to nb_model.  Because the statistics are
     exact BIGINT sums, the result is BIT-IDENTICAL to training on the
@@ -450,11 +451,8 @@ def nb_model_from_partials(
     BM25 ``before_batch`` time-travel contract): only partials with
     batch < before_batch participate.
     """
-    counts = spark.read.parquet(counts_dir)
-    dstats = spark.read.parquet(doc_counts_dir)
-    if before_batch is not None:
-        counts = counts.filter(F.col("batch") < before_batch)
-        dstats = dstats.filter(F.col("batch") < before_batch)
+    counts = manifest.read_table(spark, counts_dir, before_batch=before_batch)
+    dstats = manifest.read_table(spark, doc_counts_dir, before_batch=before_batch)
     token_counts = counts.groupBy("feature").agg(
         F.sum("c_pos").alias("c_pos"), F.sum("c_neg").alias("c_neg")
     )

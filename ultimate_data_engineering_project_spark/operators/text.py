@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ultimate_data_engineering_project_spark import tuning
+from ultimate_data_engineering_project_spark.sources import manifest
 
 # Tiny function-word lists per language for the n-gram/marker heuristic
 # language ID.  Deliberately small and public-knowledge (closed-class
@@ -1041,9 +1042,9 @@ def bm25_query_incremental(
     before_batch: int | None = None,
 ) -> DataFrame:
     """BM25 top-k against the INCREMENTALLY-built index
-    (run_incremental_bm25_stream's on-disk layout:
-    ``index_dir/batch=<id>/shard=<s>`` postings and
-    ``totals_dir/batch=<id>`` one-row partials).
+    (run_incremental_bm25_stream's two tables in the one layout of
+    sources/manifest.py: postings partitioned by ``shard=<s>`` and
+    one-row stats partials, one delta per batch).
 
     The probe scans only the query terms' shard directories across all
     batch partitions (two-level pruning), derives each term's df by
@@ -1053,12 +1054,10 @@ def bm25_query_incremental(
     is IDENTICAL, float for float, to a from-scratch bm25_topk over
     the full corpus (pinned by the stream test).  ``before_batch``
     replays the index as of a batch boundary (the replay-idempotence
-    view every incremental stream here exposes)."""
-    post = spark.read.option("basePath", index_dir).parquet(index_dir)
-    stats_raw = spark.read.option("basePath", totals_dir).parquet(totals_dir)
-    if before_batch is not None:
-        post = post.where(F.col("batch") < before_batch)
-        stats_raw = stats_raw.where(F.col("batch") < before_batch)
+    view every incremental stream here exposes; a boundary already
+    folded into the base raises)."""
+    post = manifest.read_table(spark, index_dir, before_batch=before_batch)
+    stats_raw = manifest.read_table(spark, totals_dir, before_batch=before_batch)
     wanted = (
         spark.createDataFrame([(t,) for t in query_terms], "term string")
         .select(F.pmod(F.xxhash64("term"), F.lit(shards)).cast("int").alias("s"))

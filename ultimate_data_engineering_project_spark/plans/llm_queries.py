@@ -2964,9 +2964,10 @@ def docs_quality_model_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTINUOUS-AGGREGATE face of the trained quality model under
     the hash gate (r14, extending judge ask #7's gate-visibility): the
     corpus is split into three doc_id-range batches, each batch's
-    sufficient statistics land as immutable ``batch=<id>`` parquet
-    partials (exactly what run_incremental_quality_model_stream writes
-    per micro-batch), and the model is re-derived from the merged
+    sufficient statistics are committed as that batch's delta through
+    ``manifest.commit_batch`` (exactly what
+    run_incremental_quality_model_stream writes per micro-batch), and
+    the model is re-derived from the merged
     partials with classifier.nb_model_from_partials.  The oracle is
     the SAME full-train weights SQL as `docs_quality_model_weights` —
     the hash match IS the proof that batch-folded BIGINT statistics
@@ -2975,27 +2976,30 @@ def docs_quality_model_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle capped at dim rows; the merge reads |batches| x <=dim
     partial rows — independent of corpus size."""
     import os
+    import shutil
 
     from ultimate_data_engineering_project_spark.plans.catalog import (
         staging_dir,
     )
+    from ultimate_data_engineering_project_spark.sources import manifest
 
     docs = load_table(spark, sf_dir, "documents")
     label = classifier.integer_quality_label()
     base = staging_dir("nb_partials", sf_dir)
     # three deterministic id-range batches (same rows every run within
-    # a process; the session-unique dir is overwritten so sweeps never
-    # accumulate and concurrent sessions never race — catalog.staging_dir)
+    # a process; the session-unique dir is cleared first, so a re-run
+    # commits the batches again instead of finding them committed, and
+    # concurrent sessions never race — catalog.staging_dir)
+    shutil.rmtree(base, ignore_errors=True)
     n = docs.agg(F.max("doc_id")).first()[0] + 1
     cuts = [0, n // 3, 2 * n // 3, n]
     for i, (lo, hi) in enumerate(zip(cuts, cuts[1:])):
         batch = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        classifier.nb_token_counts(batch, label, dim=_NB_DIM).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base, "counts", f"batch={i}"))
-        classifier.nb_doc_counts(batch, label).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base, "dstats", f"batch={i}"))
+        for table, build in (
+            ("counts", lambda: classifier.nb_token_counts(batch, label, dim=_NB_DIM)),
+            ("dstats", lambda: classifier.nb_doc_counts(batch, label)),
+        ):
+            manifest.commit_batch(spark, os.path.join(base, table), i, base, build)
     weights, _ = classifier.nb_model_from_partials(
         spark,
         os.path.join(base, "counts"),

@@ -305,32 +305,9 @@ def sessionize_events_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the two-phase chunked form under a hot user.  The oracle is
     IDENTICAL to both siblings' — whichever branch is picked, the hash
     check proves the sessions unchanged.  Swept at uniform sf1 (picks
-    plain) AND hot-key sf1skew (picks chunked) in SCALING.md.
-
-    The events table is staged as a manifest table first (flat write,
-    adopted by ``sinks.compact_parquet``) and read back through
-    ``read_current``: this entry is the oracle gate's end-to-end run of
-    the manifest compactor, so a broken pointer or adoption path fails
-    a hash check here."""
-    import os
-
-    from ultimate_data_engineering_project_spark.plans.catalog import (
-        staging_dir,
-    )
-    from ultimate_data_engineering_project_spark.sources import sinks
-    from ultimate_data_engineering_project_spark.sources.readers import (
-        read_current,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    # session-unique per-fixture staging dir (overwritten each run
-    # within a process, collision-free across processes and across
-    # same-basename fixture trees — see catalog.staging_dir)
-    tbl = os.path.join(staging_dir("sessionize_auto", sf_dir), "events")
-    events.write.mode("overwrite").parquet(tbl)
-    sinks.compact_parquet(spark, tbl)
+    plain) AND hot-key sf1skew (picks chunked) in SCALING.md."""
     sess = windows.sessionize_auto(
-        read_current(spark, tbl), "user_id", "ts", 30 * 60,
+        load_table(spark, sf_dir, "events"), "user_id", "ts", 30 * 60,
         chunk_seconds=6 * 3600, tiebreak="event_id",
     )
     return sess.groupBy(
@@ -450,7 +427,7 @@ def events_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     over all events: the hash match IS the proof that slicing doesn't
     change the result — the property that makes incremental maintenance
     exact.  Streaming face: streaming/pipelines.run_incremental_rollup_
-    stream (replay-idempotent batch=<id> partial layout)."""
+    stream (replay-idempotent per-batch partials, sources/manifest.py)."""
     events = load_table(spark, sf_dir, "events")
     parts = None
     for i in range(3):
@@ -507,7 +484,7 @@ def events_rollup_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram proves BOTH that slicing cannot change the served
     quantiles AND that the whole quantile path is engine-exact —
     approximation lives only in the documented one-bin-width bound.
-    Streaming face: the partials land in the same batch=<id> layout
+    Streaming face: the partials land in the same per-batch layout
     run_incremental_rollup_stream and compact_rollup manage."""
     events = load_table(spark, sf_dir, "events")
     parts = None

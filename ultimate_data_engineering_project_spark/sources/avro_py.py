@@ -556,6 +556,11 @@ def _read_fixed(size: int):
     return read
 
 
+#: struct codes and widths of the fixed-width scalars: an array of them
+#: packs and unpacks one block per call
+_PACKED = {"float": ("f", 4), "double": ("d", 8)}
+
+
 def _block_count(buf: bytes, pos: int) -> tuple[int, int]:
     """One array/map block's item count; a negative count is followed by
     the block's byte size, which a sequential read skips."""
@@ -604,6 +609,7 @@ def _decoder(node):
         return read
     if isinstance(node, AvroArray):
         item = _decoder(node.item)
+        packed = _PACKED.get(node.item) if isinstance(node.item, str) else None
 
         def read(buf, pos):
             out = []
@@ -611,7 +617,11 @@ def _decoder(node):
                 cnt, pos = _block_count(buf, pos)
                 if not cnt:
                     return out, pos
-                for _ in range(cnt):
+                if packed and pos + cnt * packed[1] <= len(buf):
+                    out.extend(struct.unpack_from(f"<{cnt}{packed[0]}", buf, pos))
+                    pos += cnt * packed[1]
+                    continue
+                for _ in range(cnt):  # a truncated block raises from its item
                     v, pos = item(buf, pos)
                     out.append(v)
 
@@ -815,6 +825,7 @@ def _encoder(node, fname: str):
         return write
     if isinstance(node, AvroArray):
         item, nullable = _encoder(node.item, fname), _nullable(node.item)
+        packed = _PACKED.get(node.item) if isinstance(node.item, str) else None
 
         def write(out, v):
             if isinstance(v, (str, bytes, dict)) or not hasattr(v, "__len__"):
@@ -824,6 +835,12 @@ def _encoder(node, fname: str):
                 )
             if len(v):
                 _write_long(out, len(v))
+                if packed:
+                    try:  # a rejected block takes the item loop for its error
+                        out += struct.pack(f"<{len(v)}{packed[0]}", *v)
+                        v = ()
+                    except (struct.error, TypeError, OverflowError):
+                        pass
                 for x in v:
                     if x is None and not nullable:
                         raise ValueError(

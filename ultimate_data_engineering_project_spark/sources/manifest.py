@@ -1,23 +1,53 @@
-"""Manifest-pointer table layout: the one compaction protocol.
+"""Manifest-pointer table layout: the one layout of every table that
+grows batch by batch, and the one compaction protocol.
 
-``sinks.compact_parquet`` and ``streaming.pipelines.compact_rollup``
-never rename data files.  A compaction writes its output into a NEW
-immutable prefix and then flips one small pointer object, so the same
-protocol is safe on a local filesystem, HDFS and s3a://-style object
-stores (where rename is a non-atomic O(data) copy+delete).  Readers
-follow the pointer (``readers.read_current`` / ``read_rollup``):
+This module is the only code that knows the layout.  The streams of
+``streaming.pipelines`` (CDC, its quarantine, dedup, ann, pq, bm25,
+bpe_encode, quality_model, span and rollup), ``compact_rollup`` and
+``sinks.compact_parquet`` write through `commit_batch` and `fold`;
+``readers.read_current``, ``cdc_table_image``, ``read_rollup`` and the
+streams' history probes read through `read_table`.
 
 ``table_dir/``
   ``_current``       one small JSON object — THE pointer (see below)
-  ``gen-000001/``    immutable data prefixes; a compaction writes a
-  ``gen-000002/``    NEW generation and never touches an old one
+  ``gen-000001/``    the base: immutable data prefixes; a fold writes
+  ``gen-000002/``    a NEW generation and never touches an old one
+  ``batch=<id>/``    the deltas: one prefix per committed batch
 
-The CDC table of ``streaming.pipelines.run_cdc_stream`` is the second
-user of the pointer.  Its pointer also names the committed
-``batch=<id>`` deltas beside the base generation: every micro-batch
-writes one delta and flips the pointer through ``commit``, and a fold
-writes the next ``gen-`` prefix from the base and the deltas.  Its
-reader is ``cdc_table_image``.
+The pointer is ``{generation, base, through, stream, deltas, schema}``
+(a CDC table adds ``keys`` and ``n_buckets``): ``base`` names the live
+``gen-`` prefix (or None), ``deltas`` the committed batch ids beside
+it, ``schema`` the stored schema every read uses (no inference, no
+listing; directory-partition columns carry a ``partition`` mark in
+their metadata), ``stream`` the writer the deltas belong to and ``through``
+the highest batch id of ``stream`` the base holds (-1 if none).
+
+Rules of `commit_batch(table, batch_id, stream, build)`:
+  * membership: a batch id the pointer names, or one at or below
+    ``through`` of the same ``stream``, is a no-op and ``build`` is
+    never called — a replay after the flip or after a fold leaves no
+    trace;
+  * otherwise the frame lands in ``batch=<id>`` (overwriting a crashed
+    attempt's orphan) and the pointer flips to name it;
+  * fold after ``FOLD_DELTAS``: once the pointer names that many
+    deltas, they fold with the base into ``gen-(g+1)`` through the
+    table's merge rule (append: union; rollup partials: their
+    algebra; CDC: last writer wins) and ``through`` becomes the
+    highest id folded;
+  * stream switch: a pointer written by another ``stream`` (batch ids
+    restart with a new checkpoint) first has its deltas folded, and
+    ``through`` resets;
+  * probe output first: a stream body commits the output of its
+    history probe before it extends the tables its probe reads, so a
+    replay that still has to build its probe never finds its own batch
+    in a history table (`read_table(before_batch=)` refuses a boundary
+    that is already folded);
+  * adoption: a table with no pointer whose bare ``batch=<id>``
+    prefixes an earlier version's stream left is read, and committed
+    to, with the ids below the batch as deltas of the stream (see
+    `_resolve`);
+  * a stream's own fold keeps as many superseded generations as it
+    finds, so it never undoes a compactor's ``keep_generations``.
 
 The pointer flip is the only mutation of shared state, and it is a
 single small-object write:
@@ -30,14 +60,14 @@ single small-object write:
   after the flip — no data-file rename anywhere in the protocol.
 
 Crash discipline (pinned by tests):
-  * crash BEFORE the flip: the new generation prefix is an orphan; the
-    pointer still names the old one, readers are unaffected, and the
-    next compaction run rewrites the same next-generation name
-    (generation numbers derive from the pointer, so the retry
-    overwrites the orphan).
+  * crash BEFORE the flip: the new ``gen-`` or ``batch=`` prefix is an
+    orphan; the pointer still names the old state, readers are
+    unaffected, and the retry rewrites the same name (generation
+    numbers derive from the pointer, batch ids from the checkpoint).
   * crash AFTER the flip, before cleanup: superseded prefixes linger;
-    readers ignore them (they follow the pointer) and the next
-    compaction deletes them.
+    readers ignore them (they follow the pointer), the next commit
+    deletes superseded ``gen-`` prefixes and the next fold every
+    ``batch=`` prefix its pointer does not name.
   * in-flight readers that resolved the pointer before a flip may
     still be scanning the old prefix while cleanup deletes it — the
     same race every snapshot-pointer table format has.  The answer is
@@ -141,37 +171,45 @@ def write_pointer(spark, table_dir: str, meta: dict) -> None:
         out.close()
 
 
-def list_children(spark, table_dir: str, prefix: str) -> list[str]:
-    """Child directory NAMES under ``table_dir`` starting with
-    ``prefix`` (scheme-agnostic; used to find batch=/gen- prefixes)."""
+def _children(spark, table_dir: str) -> list[tuple[str, bool]]:
+    """``(name, is_dir)`` of every child of ``table_dir``, sorted by
+    name; [] when it does not exist (scheme-agnostic)."""
     if _is_local(table_dir):
         root = _local_path(table_dir)
         if not os.path.isdir(root):
             return []
-        return sorted(
-            n for n in os.listdir(root)
-            if n.startswith(prefix) and os.path.isdir(os.path.join(root, n))
-        )
+        return [
+            (n, os.path.isdir(os.path.join(root, n)))
+            for n in sorted(os.listdir(root))
+        ]
     fs, jpath, _ = _hadoop_fs(spark, table_dir)
     if not fs.exists(jpath):
         return []
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(prefix):
-            out.append(name)
-    return sorted(out)
+    return sorted(
+        (st.getPath().getName(), st.isDirectory()) for st in fs.listStatus(jpath)
+    )
+
+
+def list_children(spark, table_dir: str, prefix: str) -> list[str]:
+    """Child directory NAMES under ``table_dir`` starting with
+    ``prefix`` (used to find batch=/gen- prefixes)."""
+    return [
+        n for n, is_dir in _children(spark, table_dir)
+        if is_dir and n.startswith(prefix)
+    ]
 
 
 def delete_prefix(spark, table_dir: str, name: str) -> None:
-    """Delete one child prefix (post-flip cleanup; a DELETE, never a
-    rename, so it is object-store-safe)."""
+    """Delete one child prefix or file (post-flip cleanup; a DELETE,
+    never a rename, so it is object-store-safe)."""
     if _is_local(table_dir):
         import shutil
 
         p = os.path.join(_local_path(table_dir), name)
-        if os.path.exists(p):
+        if os.path.isdir(p):
             shutil.rmtree(p)
+        elif os.path.exists(p):
+            os.remove(p)
         return
     fs, jpath, jvm = _hadoop_fs(spark, table_dir)
     child = jvm.org.apache.hadoop.fs.Path(jpath, name)
@@ -183,14 +221,18 @@ def join(table_dir: str, name: str) -> str:
     return table_dir.rstrip("/") + "/" + name
 
 
-def list_flat_sources(spark, table_dir: str) -> list[str]:
+def list_flat_sources(
+    spark, table_dir: str, *, skip_deltas: bool = False
+) -> list[str]:
     """Root-level data sources for ADOPTION of a legacy flat table:
     every child EXCEPT ``gen-*`` prefixes, the pointer, and metadata
     files.  A crashed first adoption (gen written, pointer flip never
     happened) leaves an orphan ``gen-`` dir beside the flat files — a
     bare ``spark.read.parquet(root)`` would then mix the two layouts
     (conflicting-directory failure) and double-count bytes, so the
-    retry must read exactly this list."""
+    retry must read exactly this list.  ``skip_deltas`` also leaves
+    out ``batch=`` prefixes: in a table that grows batch by batch, one
+    with no pointer is the orphan of a crashed first commit."""
     def keep(n: str) -> bool:
         # gen- prefixes are the new layout; "_"/"." children are
         # metadata Spark would skip in a directory read but would choke
@@ -198,23 +240,10 @@ def list_flat_sources(spark, table_dir: str) -> list[str]:
         # Spark's own rule keeps "_" names with "=": partition dirs
         # such as __bucket=3
         hidden = n.startswith(".") or (n.startswith("_") and "=" not in n)
-        return not (n.startswith("gen-") or hidden)
+        orphan = skip_deltas and n.startswith("batch=")
+        return not (n.startswith("gen-") or hidden or orphan)
 
-    if _is_local(table_dir):
-        root = _local_path(table_dir)
-        if not os.path.isdir(root):
-            return []
-        return [
-            os.path.join(root, n) for n in sorted(os.listdir(root)) if keep(n)
-        ]
-    fs, jpath, _ = _hadoop_fs(spark, table_dir)
-    if not fs.exists(jpath):
-        return []
-    return sorted(
-        st.getPath().toString()
-        for st in fs.listStatus(jpath)
-        if keep(st.getPath().getName())
-    )
+    return [join(table_dir, n) for n, _ in _children(spark, table_dir) if keep(n)]
 
 
 class ManifestRaceError(RuntimeError):
@@ -293,22 +322,23 @@ def retry_races(attempt, race_retries: int):
                 raise
 
 
-def total_bytes(spark, path: str) -> int:
-    """Recursive data size of a prefix (compaction output sizing) —
-    parquet bytes from the local walk, or the filesystem's content
-    summary on remote schemes."""
+def parquet_sizes(spark, path: str) -> list[int]:
+    """Byte sizes of the parquet data files under a prefix, or of the
+    prefix itself when it is one file (adoption lists root-level files
+    too): compaction output sizing and its written-file count."""
     if _is_local(path):
         root = _local_path(path)
-        if os.path.isfile(root):  # adoption lists root-level files too
-            return os.path.getsize(root) if root.endswith(".parquet") else 0
-        return sum(
-            os.path.getsize(os.path.join(dirpath, f))
-            for dirpath, _, files in os.walk(root)
-            for f in files
-            if f.endswith(".parquet")
-        )
+        files = [root] if os.path.isfile(root) else [
+            os.path.join(d, f) for d, _, names in os.walk(root) for f in names
+        ]
+        return [os.path.getsize(f) for f in files if f.endswith(".parquet")]
     fs, jpath, _ = _hadoop_fs(spark, path)
-    return int(fs.getContentSummary(jpath).getLength())
+    it, sizes = fs.listFiles(jpath, True), []
+    while it.hasNext():
+        st = it.next()
+        if st.getPath().getName().endswith(".parquet"):
+            sizes.append(st.getLen())
+    return sizes
 
 
 def delete_flat_children(spark, table_dir: str) -> None:
@@ -316,22 +346,221 @@ def delete_flat_children(spark, table_dir: str) -> None:
     into its first ``gen-`` prefix and the pointer flipped, delete the
     superseded flat files/partition dirs at the root (everything except
     ``gen-*`` prefixes and the pointer).  DELETEs only."""
-    if _is_local(table_dir):
-        import shutil
+    for name, _ in _children(spark, table_dir):
+        if not (name.startswith("gen-") or name.startswith(POINTER_NAME)):
+            delete_prefix(spark, table_dir, name)
 
-        root = _local_path(table_dir)
-        for n in os.listdir(root):
-            if n.startswith("gen-") or n.startswith(POINTER_NAME):
-                continue
-            p = os.path.join(root, n)
-            if os.path.isdir(p):
-                shutil.rmtree(p)
-            else:
-                os.remove(p)
-        return
-    fs, jpath, _ = _hadoop_fs(spark, table_dir)
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if name.startswith("gen-") or name.startswith(POINTER_NAME):
-            continue
-        fs.delete(st.getPath(), True)
+
+
+#: A table folds its deltas into the next base generation once its
+#: pointer names this many.
+FOLD_DELTAS = 8
+
+
+def batch_name(batch_id: int) -> str:
+    return f"batch={batch_id}"
+
+
+def new_pointer(schema: dict | None = None, **extra) -> dict:
+    """The pointer of a table no batch has been committed to."""
+    return {
+        "generation": 0, "base": None, "through": -1, "stream": None,
+        "deltas": [], "schema": schema, **extra,
+    }
+
+
+def named_paths(table_dir: str, ptr: dict) -> list[str]:
+    """The base prefix (if any), then every delta prefix ``ptr`` names."""
+    names = [ptr["base"]] if ptr["base"] else []
+    return [join(table_dir, n) for n in names + [batch_name(b) for b in ptr["deltas"]]]
+
+
+def union(base, deltas):
+    """The append tables' merge rule: every row of base and deltas."""
+    if base is None or deltas is None:
+        return deltas if base is None else base
+    return base.unionByName(deltas)
+
+
+def _stored(schema, partition_cols) -> dict:
+    """``schema`` as the pointer stores it: the directory-partition
+    columns carry the mark `read_table` looks for."""
+    stored = schema.jsonValue()
+    for field in stored["fields"]:
+        if field["name"] in partition_cols:
+            field["metadata"] = {**field["metadata"], "partition": True}
+    return stored
+
+
+def _write(frame, path: str, partition_by) -> dict:
+    """Write ``frame`` to ``path``; returns its schema to store."""
+    writer = frame.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    return _stored(frame.schema, partition_by or ())
+
+
+def _resolve(spark, table_dir: str, below: int | None, stream=None) -> dict | None:
+    """The table's pointer, or None for a table with none.  A table
+    with no pointer but bare ``batch=<id>`` prefixes (the layout the
+    streams of earlier versions left) is adopted: its ids below
+    ``below`` become deltas of ``stream``, read with the schema they
+    carry.  An id at or above ``below`` is not history: the batch being
+    replayed, which its commit rewrites, or a crashed first commit's
+    orphan."""
+    ptr = read_pointer(spark, table_dir)
+    if ptr is not None:
+        return ptr
+    ids = sorted(int(n.split("=", 1)[1]) for n in list_children(spark, table_dir, "batch="))
+    ids = [b for b in ids if below is None or b < below]
+    if not ids:
+        return None
+    paths = [join(table_dir, batch_name(b)) for b in ids]
+    inner = {n.split("=")[0] for p in paths for n in list_children(spark, p, "") if "=" in n}
+    found = spark.read.option("basePath", table_dir).parquet(*paths).drop("batch")
+    return {**new_pointer(_stored(found.schema, inner)), "stream": stream, "deltas": ids}
+
+
+def read_table(
+    spark,
+    table_dir: str,
+    *,
+    ptr: dict | None = None,
+    before_batch: int | None = None,
+    stream: str | None = None,
+    merge=union,
+):
+    """The one reader: ``merge(base, deltas)`` over what the pointer
+    names, both read with the stored schema.  It lists nothing, infers
+    nothing and probes no emptiness, so building the frame runs no
+    Spark job.  Returns None only when the pointer names nothing.
+
+    ``ptr`` serves a pointer the caller already resolved (a consistent
+    snapshot); otherwise the pointer is read once here.  A table with
+    no pointer holds no committed batch: its bare ``batch=`` prefixes,
+    if any, are read as `_resolve` adopts them; else a full read serves
+    it flat (a table written by plain ``df.write``) and a
+    ``before_batch`` read returns None.
+
+    ``before_batch=b`` keeps only the deltas with a lower id: the view
+    a (replayed) batch ``b`` probes.  A boundary the base already
+    holds (``b <= through``) cannot be served and raises.  With
+    ``stream`` given and the pointer written by another stream, every
+    delta precedes the boundary (the stream-switch rule)."""
+    from pyspark.sql import types as T
+
+    if ptr is None:
+        ptr = _resolve(spark, table_dir, before_batch, stream)
+        if ptr is None:
+            if before_batch is not None:
+                return None
+            return spark.read.parquet(table_dir)
+    if before_batch is not None and stream in (None, ptr["stream"]):
+        if before_batch <= ptr["through"]:
+            raise ValueError(
+                f"batch {before_batch} of {table_dir!r} is already folded "
+                f"into its base (through={ptr['through']}); the base "
+                "cannot serve the history before it"
+            )
+        ptr = {**ptr, "deltas": [b for b in ptr["deltas"] if b < before_batch]}
+    if ptr["base"] is None and not ptr["deltas"]:
+        return None
+    schema = T.StructType.fromJson(ptr["schema"])
+    reader = spark.read.schema(schema)
+    if any(f.metadata.get("partition") for f in schema):
+        # a partitioned table's deltas are sibling roots: root their
+        # partition discovery at the table (the select drops the batch
+        # column this adds)
+        reader = reader.option("basePath", table_dir)
+    paths, n_base = named_paths(table_dir, ptr), int(ptr["base"] is not None)
+    base, deltas = (
+        reader.parquet(*p).select(*schema.fieldNames()) if p else None
+        for p in (paths[:n_base], paths[n_base:])
+    )
+    return merge(base, deltas)
+
+
+def fold(
+    spark,
+    table_dir: str,
+    ptr: dict,
+    *,
+    merge=union,
+    frame=None,
+    partition_by=(),
+    keep_generations: int | None = None,
+) -> dict:
+    """Write the base and every delta ``ptr`` names, merged by the
+    table's rule, into ``gen-(g+1)`` (or ``frame``, when the caller
+    built the new base, e.g. adopting a flat table), flip the pointer
+    to it with no deltas and ``through`` at the highest id folded,
+    then delete every ``batch=`` prefix.  Returns the new pointer.
+
+    ``keep_generations`` is passed to `commit`.  Left None (a stream's
+    own fold), it keeps as many superseded generations as are on disk
+    below the base, so the retention a compactor set is never reduced
+    and a table no compactor aged keeps none.
+
+    A crash before the flip leaves an orphan ``gen-`` prefix the retry
+    overwrites; a crash after it leaves folded deltas no pointer names,
+    which readers ignore and the next fold deletes."""
+    if frame is None:
+        frame = read_table(spark, table_dir, ptr=ptr, merge=merge)
+    if keep_generations is None:
+        keep_generations = sum(
+            n < (ptr["base"] or "") for n in list_children(spark, table_dir, "gen-")
+        )
+    generation = ptr["generation"] + 1
+    meta = {
+        **ptr,
+        "generation": generation,
+        "base": generation_name(generation),
+        "deltas": [],
+        "through": max([ptr["through"], *ptr["deltas"]]),
+    }
+    schema = _write(frame, join(table_dir, meta["base"]), partition_by)
+    meta["schema"] = ptr["schema"] or schema
+    commit(spark, table_dir, meta, keep_generations=keep_generations)
+    for name in list_children(spark, table_dir, "batch="):
+        delete_prefix(spark, table_dir, name)
+    return meta
+
+
+def commit_batch(
+    spark,
+    table_dir: str,
+    batch_id: int,
+    stream: str,
+    build,
+    *,
+    ptr: dict | None = None,
+    merge=union,
+    partition_by=(),
+) -> dict:
+    """The one commit step of a table that grows batch by batch (the
+    rules are in the module docstring): unless the pointer already
+    holds ``batch_id`` of ``stream``, write ``build()`` as
+    ``batch=<batch_id>`` and flip the pointer to name it; then fold
+    once the pointer names ``FOLD_DELTAS`` deltas.  ``build`` returning
+    None commits nothing (a probe with no history).  ``ptr`` is the
+    pointer when the caller already read and checked it; otherwise a
+    table of an earlier version's bare ``batch=`` prefixes is adopted
+    (`_resolve`).  Returns the pointer."""
+    if ptr is None:
+        ptr = _resolve(spark, table_dir, batch_id, stream) or new_pointer()
+    if ptr["stream"] != stream:
+        if ptr["deltas"]:
+            ptr = fold(spark, table_dir, ptr, merge=merge, partition_by=partition_by)
+        ptr = {**ptr, "stream": stream, "through": -1}
+    if batch_id not in ptr["deltas"] and batch_id > ptr["through"]:
+        frame = build()
+        if frame is not None:
+            schema = _write(frame, join(table_dir, batch_name(batch_id)), partition_by)
+            ptr = {**ptr, "deltas": ptr["deltas"] + [batch_id], "schema": schema}
+            # no generation is superseded: retained ones stay retained
+            write_pointer(spark, table_dir, ptr)
+            verify_pointer_generation(spark, table_dir, ptr["generation"])
+    if len(ptr["deltas"]) >= FOLD_DELTAS:
+        ptr = fold(spark, table_dir, ptr, merge=merge, partition_by=partition_by)
+    return ptr

@@ -71,11 +71,12 @@ def read_current(
     spark: SparkSession, table_dir: str, *, generation: int | None = None
 ) -> DataFrame:
     """Read a parquet table that MAY be under manifest-pointer
-    management (``sinks.compact_parquet``): follow the ``_current``
-    pointer to the live ``gen-`` prefix when present, else read the
-    directory flat.  This is the reader half of the manifest
-    compaction protocol — a plain ``spark.read.parquet``
-    on the root would double-read old+new generations during the
+    management (``sinks.compact_parquet``, or a stream's output table):
+    follow the ``_current`` pointer to the live base and the deltas it
+    names, read with the stored schema by ``manifest.read_table``,
+    when present, else read the directory flat.  This is the reader
+    half of the manifest protocol — a plain ``spark.read.parquet`` on
+    the root would double-read old+new generations during the
     post-flip cleanup window.
 
     ``generation=N`` TIME-TRAVELS to a retained prior snapshot
@@ -88,10 +89,7 @@ def read_current(
 
     if generation is not None:
         return read_at_generation(spark, table_dir, generation)
-    ptr = manifest.read_pointer(spark, table_dir)
-    if ptr is None:
-        return spark.read.parquet(table_dir)
-    return spark.read.parquet(manifest.join(table_dir, ptr["data"]))
+    return manifest.read_table(spark, table_dir)
 
 
 def read_at_generation(
@@ -144,7 +142,9 @@ def snapshot_tables(
     pinned prefix (NOT the live pointer — re-resolving per access is
     exactly the tear this function exists to prevent), and
     ``generations[name]`` records the pinned generation for audit /
-    ``read_at_generation`` replays.  A table with no pointer (legacy
+    ``read_at_generation`` replays.  A stream table's frame also reads
+    the deltas its pinned pointer names; those survive until the next
+    fold only.  A table with no pointer (legacy
     flat layout) reads the root and pins ``None`` — flat layouts are
     mutated in place and cannot be pinned; adopt them via
     ``sinks.compact_parquet`` first for full snapshot isolation."""
@@ -154,14 +154,8 @@ def snapshot_tables(
     gens: dict[str, int | None] = {}
     for name, table_dir in table_dirs.items():
         ptr = manifest.read_pointer(spark, table_dir)
-        if ptr is None:
-            frames[name] = spark.read.parquet(table_dir)
-            gens[name] = None
-        else:
-            frames[name] = spark.read.parquet(
-                manifest.join(table_dir, ptr["data"])
-            )
-            gens[name] = ptr["generation"]
+        frames[name] = manifest.read_table(spark, table_dir, ptr=ptr)
+        gens[name] = ptr["generation"] if ptr else None
     return frames, gens
 
 

@@ -87,19 +87,23 @@ def compact_parquet(
     stats become selective for those columns: the cheap cousin of
     Z-ordering for the single-column case.
 
-    The rewrite lands in a new immutable ``gen-NNNNNN`` prefix under
-    the table root, the ``_current`` pointer flips atomically (one
-    small PUT/rename), then superseded prefixes are DELETEd — no
-    data-file rename, so local paths and remote schemes (hdfs://,
-    s3a://) behave the same.  Readers MUST use ``readers.read_current``
-    (it follows the pointer; a plain ``spark.read.parquet`` on the root
-    would double-read during the cleanup window).  The first call on a
-    flat table ADOPTS it: data moves under ``gen-000001`` and the
-    superseded flat files are deleted.  A crash before the flip leaves
-    an orphan prefix the retry overwrites (the adoption source list
-    excludes ``gen-*`` children, so a crashed first adoption never
-    mixes into the flat read or its byte sizing); a crash after the
-    flip leaves relics that readers ignore and the next run deletes.
+    The table is in the one layout of sources/manifest.py: the rewrite
+    is a ``manifest.fold`` that lands in a new immutable ``gen-NNNNNN``
+    prefix, the ``_current`` pointer flips atomically (one small
+    PUT/rename) to that base with no deltas, then superseded prefixes
+    are DELETEd — no data-file rename, so local paths and remote
+    schemes (hdfs://, s3a://) behave the same.  A stream's table whose
+    pointer names deltas or merge keys is refused: only its stream
+    (or `compact_rollup`) knows its merge rule.  Readers MUST use
+    ``readers.read_current`` (it follows the pointer and reads with the
+    stored schema; a plain ``spark.read.parquet`` on the root would
+    double-read during the cleanup window).  The first call on a flat
+    table ADOPTS it: data moves under ``gen-000001`` and the superseded
+    flat files are deleted.  A crash before the flip leaves an orphan
+    prefix the retry overwrites (the adoption source list excludes
+    ``gen-*`` children, so a crashed first adoption never mixes into
+    the flat read or its byte sizing); a crash after the flip leaves
+    relics that readers ignore and the next run deletes.
 
     ``keep_generations=N`` ages superseded prefixes instead of deleting
     immediately — the N newest are retained, closing the
@@ -151,11 +155,14 @@ def _compact_parquet_attempt(
     from ultimate_data_engineering_project_spark.sources import manifest
 
     ptr = manifest.read_pointer(spark, path)
-    gen = (ptr["generation"] if ptr else 0) + 1
-    new_data = manifest.generation_name(gen)
+    if ptr and (ptr["deltas"] or "keys" in ptr):
+        raise ValueError(
+            f"{path!r} is a stream's table (its pointer names deltas or "
+            "merge keys); fold it with its stream or compact_rollup"
+        )
     if ptr:
-        src_list = [manifest.join(path, ptr["data"])]
-        base = spark.read.parquet(*src_list)
+        src_list = manifest.named_paths(path, ptr)
+        base = manifest.read_table(spark, path, ptr=ptr)
     else:
         # adoption: explicit flat-source list, never the bare root — a
         # crashed first attempt leaves an orphan gen- dir that a root
@@ -164,7 +171,7 @@ def _compact_parquet_attempt(
         if not src_list:
             raise ValueError(f"no data to adopt under {path!r}")
         base = spark.read.option("basePath", path).parquet(*src_list)
-    total = sum(manifest.total_bytes(spark, s) for s in src_list)
+    total = sum(sum(manifest.parquet_sizes(spark, s)) for s in src_list)
     n_out = max(1, math.ceil(total / target_file_bytes))
     if partition_by:
         # a single partition bigger than target_file_bytes would need a
@@ -175,39 +182,13 @@ def _compact_parquet_attempt(
         df = base.repartition(n_out)
     if sort_within_by:
         df = df.sortWithinPartitions(*sort_within_by)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(manifest.join(path, new_data))
-    manifest.commit(
-        spark, path, {"data": new_data, "generation": gen},
-        keep_generations=keep_generations,
+    meta = manifest.fold(
+        spark, path, ptr or manifest.new_pointer(), frame=df,
+        partition_by=partition_by, keep_generations=keep_generations,
     )
     if ptr is None:
         manifest.delete_flat_children(spark, path)  # adoption
-    return _count_parquet_files(spark, manifest.join(path, new_data))
-
-
-def _count_parquet_files(spark, path: str) -> int:
-    from ultimate_data_engineering_project_spark.sources import manifest as _m
-
-    if _m._is_local(path):
-        import os
-
-        root = _m._local_path(path)
-        return sum(
-            1
-            for dirpath, _, files in os.walk(root)
-            for f in files
-            if f.endswith(".parquet")
-        )
-    fs, jpath, _ = _m._hadoop_fs(spark, path)
-    it = fs.listFiles(jpath, True)
-    n = 0
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            n += 1
-    return n
+    return len(manifest.parquet_sizes(spark, manifest.join(path, meta["base"])))
 
 
 def shuffled_export(

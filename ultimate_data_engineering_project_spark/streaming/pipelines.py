@@ -12,12 +12,14 @@ exists.  Here the declared semantics are real Structured Streaming:
   T5  stateful fraud: stream-stream self-join under watermark
   T6  bronze append sink with checkpointing
 
-The incremental family keeps its cross-batch state on disk as
-``batch=<id>`` parquet partitions: ``run_incremental_dedup_stream``,
-``_ann_``, ``_pq_``, ``_bm25_``, ``_bpe_encode_``, ``_quality_model_``,
-``_span_`` and ``_rollup_stream``.  They and ``run_cdc_stream`` start
-through one micro-batch driver, ``_run_batches``, and supply only their
-per-batch body; its docstring states the replay-idempotence contract.
+The incremental family keeps its cross-batch state on disk in tables
+that grow batch by batch, in the one layout of sources/manifest.py (a
+pointer naming a base generation and per-batch deltas):
+``run_incremental_dedup_stream``, ``_ann_``, ``_pq_``, ``_bm25_``,
+``_bpe_encode_``, ``_quality_model_``, ``_span_`` and ``_rollup_stream``.
+They and ``run_cdc_stream`` start through one micro-batch driver,
+``_run_batches``, and supply only their per-batch body; its docstring
+states the replay-idempotence contract.
 
 Kafka itself isn't in this container, so sources are file/rate based;
 every transformation is source-agnostic (swap ``readStream.format``).
@@ -424,19 +426,26 @@ def _run_batches(frame: DataFrame, checkpoint: str, body, *, snapshot=None):
     ``checkpoint`` and call ``body(batch_df, batch_id)`` per batch.
 
     Replay idempotence.  A crash between a batch's writes and its
-    checkpoint commit replays the same batch id on restart, so every
-    body keeps three rules and the replay leaves no trace:
-      * overwrite ``batch=<id>``: each output lands under its
-        ``batch=<id>`` partition through `_write_batch`, so a replay
-        rewrites its own partition instead of duplicating rows;
-      * probe only ``batch < id``: history is read through
-        `_read_batch_partitions`, so a replay sees the exact pre-batch
-        state, never its own half-written rows;
-      * snapshot once: given ``snapshot`` columns, the batch is projected
-        to them and materialized with one eager ``localCheckpoint``, so
-        the probe and every write read the same rows from one scan.
-    The partitions ARE the cross-batch state — nothing lives in
-    executor memory, so a restart resumes with full history."""
+    checkpoint commit replays the same batch id on restart.  Every
+    body writes each output through ``manifest.commit_batch`` with the
+    checkpoint as its stream id, and reads history through
+    ``manifest.read_table(before_batch=batch_id, stream=checkpoint)``
+    (the layout and its rules are in sources/manifest.py), so the
+    replay leaves no trace:
+      * a table the pointer already holds the batch for is skipped
+        without building its frame; any other is written again;
+      * a probe sees only the batches before its own, read with the
+        stored schema (no listing, no Spark job);
+      * probe output first: a body commits its probe's output before
+        it extends the tables its probe reads, and builds the probe
+        inside that commit, so a replay that still has to build its
+        probe never finds its own batch in a history table;
+      * snapshot once: given ``snapshot`` columns, the batch is
+        projected to them and materialized with one eager
+        ``localCheckpoint``, so the probe and every write read the
+        same rows from one scan.
+    The tables ARE the cross-batch state — nothing lives in executor
+    memory, so a restart resumes with full history."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if snapshot is not None:
@@ -451,41 +460,10 @@ def _run_batches(frame: DataFrame, checkpoint: str, body, *, snapshot=None):
     )
 
 
-def _write_batch(df: DataFrame, root: str, batch_id: int, *partition_by: str):
-    """Overwrite ``root/batch=<batch_id>`` with ``df`` (see
-    `_run_batches`), optionally partitioned by ``partition_by``."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(manifest.join(root, f"batch={batch_id}"))
-
-
-def _read_batch_partitions(
-    spark: SparkSession, root: str, before_batch: int
-) -> DataFrame | None:
-    """The ``batch=<id>`` history of ``root`` STRICTLY BEFORE
-    ``before_batch`` (see `_run_batches`), or None when it holds no
-    rows.  The partitions are listed through the manifest layer, so
-    local paths, URIs and object stores resolve alike; ``basePath``
-    keeps partition discovery rooted."""
-    hist = [
-        manifest.join(root, n)
-        for n in manifest.list_children(spark, root, "batch=")
-        if int(n.split("=", 1)[1]) < before_batch
-    ]
-    if not hist:
-        return None
-    df = spark.read.option("basePath", root).parquet(*hist).drop("batch")
-    return df if df.limit(1).count() else None
-
-
 #: Internal columns of a CDC delta row: the delete flag, and the batch
 #: id that orders the deltas on read.
 CDC_DELETED = "__cdc_deleted"
 CDC_BATCH = "__cdc_batch"
-#: A CDC table folds its deltas into a new base generation once the
-#: pointer names this many.
-CDC_FOLD_DELTAS = 8
 
 
 def run_cdc_stream(
@@ -505,31 +483,27 @@ def run_cdc_stream(
     parses them, and applies each micro-batch to the table at
     ``table_dir`` (last-writer-wins upsert, op='d' deletes).
 
-    Layout: merge-on-read under the manifest pointer
-    (sources/manifest.py).  ``table_dir/_current`` names the base
-    generation ``gen-NNNNNN/`` and the committed deltas
-    ``batch=<id>/``, and records the schema, keys and ``n_buckets``.
-    Each micro-batch reduces its changes to one winner per key (the
-    `cdc_apply_batch` rule), writes them as the delta ``batch=<id>``
-    through `_write_batch` (deletes carry a flag in an internal
-    column), and flips the pointer to name it.  A batch writes only its
-    own changes; the base is not read.  Once the pointer names
-    ``CDC_FOLD_DELTAS`` deltas, the batch folds them into the next base
-    generation, flips the pointer to it with no deltas, and deletes the
-    folded ``batch=`` prefixes.  `cdc_table_image` is the only
-    supported reader.
+    Layout: merge-on-read under the manifest pointer, the one layout
+    of sources/manifest.py.  ``table_dir/_current`` names the base
+    generation ``gen-NNNNNN/`` and the committed deltas, and records
+    the schema, keys and ``n_buckets``.  Each micro-batch reduces its
+    changes to one winner per key (the `cdc_apply_batch` rule) and
+    commits them as its delta through ``manifest.commit_batch``
+    (deletes carry a flag in an internal column).  A batch writes only
+    its own changes; the base is not read.  Once the pointer names
+    ``manifest.FOLD_DELTAS`` deltas, the batch folds them into the
+    next base generation, last writer wins.  `cdc_table_image` is the
+    only supported reader.
 
     Crash discipline, with the Structured Streaming recipe of an
     idempotent write keyed by batch id plus one commit record:
-      * crash before the flip: the ``batch=<id>`` orphan is not named,
-        so readers ignore it, and the replay overwrites it;
+      * crash before the flip: the delta is an orphan the pointer does
+        not name, so readers ignore it, and the replay overwrites it;
       * crash after the flip: the replayed batch id is already named,
-        so the replay writes nothing (if that batch also folded, the
-        replay writes its delta again over a base that holds it, and
-        the image is unchanged);
+        or at or below the pointer's ``through`` once folded, so the
+        replay writes nothing and never builds its delta;
       * crash inside a fold: the new ``gen-`` prefix is an orphan the
-        pointer does not name; it is deleted at the next commit and the
-        next fold writes it again.
+        pointer does not name, and the next fold writes it again.
     A stream with a different ``checkpoint`` folds the deltas left by
     the previous one before its first write, so its batch ids never
     collide with theirs.  The table has a single writer.
@@ -546,9 +520,10 @@ def run_cdc_stream(
     ``gen-000001`` and deletes the flat files.
 
     ``quarantine_dir`` routes corrupt envelope frames (unparseable
-    JSON, bad op, missing images) to a dead-letter parquet table with
-    their raw bytes + reason instead of silently dropping them
-    (split_envelope_quarantine); None keeps the lenient parse.
+    JSON, bad op, missing images) to a dead-letter table in the same
+    layout (read it with ``readers.read_current``), raw bytes + reason,
+    instead of silently dropping them (split_envelope_quarantine);
+    None keeps the lenient parse.
 
     ``source`` injects an alternative streaming frame carrying the
     envelope in a ``value`` column — e.g. ``kafka_source(spark,
@@ -610,28 +585,22 @@ def run_cdc_stream(
             changes, quarantined = split_envelope_quarantine(
                 batch_df, row_schema, materialize=True
             )
-            if quarantined.head(1):
-                # a batch-scoped overwrite, not an append, so a replay
-                # cannot double-count (see _run_batches); the batch id
-                # doubles as DLQ provenance on read-back
-                _write_batch(quarantined, quarantine_dir, batch_id)
+            manifest.commit_batch(
+                spark, quarantine_dir, batch_id, checkpoint,
+                lambda: quarantined if quarantined.head(1) else None,
+            )
         else:
             changes = parse_debezium_envelope(batch_df, row_schema)
-        ptr = _cdc_pointer(spark, table_dir, row_schema, keys, n_buckets)
-        if ptr["stream"] != checkpoint and ptr["deltas"]:
-            # another stream's batch ids: fold them before reusing ids
-            ptr = _fold_cdc_deltas(spark, table_dir, ptr)
-        if batch_id not in ptr["deltas"]:  # else a replay after the flip
-            delta = _latest_change(changes, keys).select(
+        manifest.commit_batch(
+            spark, table_dir, batch_id, checkpoint,
+            lambda: _latest_change(changes, keys).select(
                 "img.*",
                 (F.col("op") == "d").alias(CDC_DELETED),
                 F.lit(batch_id).cast("long").alias(CDC_BATCH),
-            )
-            _write_batch(delta, table_dir, batch_id)
-            ptr = {**ptr, "stream": checkpoint, "deltas": ptr["deltas"] + [batch_id]}
-            manifest.commit(spark, table_dir, ptr)
-        if len(ptr["deltas"]) >= CDC_FOLD_DELTAS:
-            _fold_cdc_deltas(spark, table_dir, ptr)
+            ),
+            ptr=_cdc_pointer(spark, table_dir, row_schema, keys, n_buckets),
+            merge=_cdc_merge(keys, n_buckets),
+        )
 
     return _run_batches(raw, checkpoint, apply_batch)
 
@@ -647,34 +616,35 @@ def _cdc_pointer(
     configuration.  A table with no pointer starts empty or, when it
     holds flat-layout data files, is adopted as its first base
     generation."""
+    deltas = T.StructType(
+        row_schema.fields
+        + [T.StructField(CDC_DELETED, T.BooleanType()),
+           T.StructField(CDC_BATCH, T.LongType())]
+    )
     ptr = manifest.read_pointer(spark, table_dir)
     if ptr is None:
-        ptr = {
-            "generation": 0, "base": None, "deltas": [], "stream": None,
-            "schema": row_schema.jsonValue(), "keys": list(keys),
-            "n_buckets": n_buckets,
-        }
-        sources = [
-            s for s in manifest.list_flat_sources(spark, table_dir)
-            if not s.rstrip("/").rsplit("/", 1)[-1].startswith("batch=")
-        ]
+        ptr = manifest.new_pointer(
+            deltas.jsonValue(), keys=list(keys), n_buckets=n_buckets
+        )
+        sources = manifest.list_flat_sources(spark, table_dir, skip_deltas=True)
         if not sources:
             return ptr
         # basePath keeps a bucketed table's __bucket partition column
         legacy = spark.read.option("basePath", table_dir).parquet(*sources)
         _check_cdc_buckets(table_dir, "__bucket" in legacy.columns, n_buckets)
-        ptr = _commit_cdc_base(
-            spark, table_dir, ptr, legacy.select(*row_schema.fieldNames())
+        image = _cdc_merge(keys, n_buckets)(
+            legacy.select(*row_schema.fieldNames()), None
         )
+        ptr = manifest.fold(spark, table_dir, ptr, frame=image)
         manifest.delete_flat_children(spark, table_dir)
         return ptr
     _check_cdc_buckets(table_dir, ptr["n_buckets"] is not None, n_buckets)
     written = T.StructType.fromJson(ptr["schema"])
-    if ptr["keys"] != list(keys) or written.simpleString() != row_schema.simpleString():
+    if ptr["keys"] != list(keys) or written.simpleString() != deltas.simpleString():
         raise ValueError(
             f"table at {table_dir} was written with keys {ptr['keys']} and "
             f"schema {written.simpleString()}; run_cdc_stream was called "
-            f"with keys {list(keys)} and schema {row_schema.simpleString()}"
+            f"with keys {list(keys)} and schema {deltas.simpleString()}"
         )
     return {**ptr, "n_buckets": n_buckets}
 
@@ -689,62 +659,37 @@ def _check_cdc_buckets(table_dir: str, bucketed: bool, n_buckets: int | None):
         )
 
 
-def _commit_cdc_base(
-    spark: SparkSession, table_dir: str, ptr: dict, image: DataFrame
-) -> dict:
-    """Write ``image`` as the next base generation of a CDC table and
-    flip the pointer to it with no deltas; returns the new pointer."""
-    generation = ptr["generation"] + 1
-    meta = {
-        **ptr, "generation": generation,
-        "base": manifest.generation_name(generation), "deltas": [],
-    }
-    if ptr["n_buckets"] is not None:
-        # whole buckets per file; AQE sizes the number of files
-        image = image.repartition(cdc_bucket_expr(ptr["keys"], ptr["n_buckets"]))
-    image.write.mode("overwrite").parquet(manifest.join(table_dir, meta["base"]))
-    manifest.commit(spark, table_dir, meta)
-    return meta
+def _cdc_merge(keys: list[str], n_buckets: int | None = None):
+    """The CDC tables' merge rule, ``merge(base, deltas) -> image``:
+    per key the newest delta wins and a delete drops the key; base rows
+    no delta names pass through.  The base is never shuffled: it is
+    anti-joined against the broadcast delta keys.  With ``n_buckets``
+    (the fold) the image is clustered by key-hash bucket, so every base
+    file holds whole buckets."""
 
+    def merge(base: DataFrame | None, deltas: DataFrame | None) -> DataFrame:
+        internal = (CDC_DELETED, CDC_BATCH)
+        fields = [
+            c for c in (base if deltas is None else deltas).columns
+            if c not in internal
+        ]
+        image = None if base is None else base.select(*fields)
+        if deltas is not None:
+            newest = Window.partitionBy(*keys).orderBy(F.col(CDC_BATCH).desc())
+            upserts = (
+                deltas.withColumn("__rn", F.row_number().over(newest))
+                .filter((F.col("__rn") == 1) & ~F.col(CDC_DELETED))
+                .select(*fields)
+            )
+            image = upserts if image is None else image.join(
+                F.broadcast(deltas.select(*keys)), keys, "left_anti"
+            ).unionByName(upserts)
+        if n_buckets is not None:
+            # whole buckets per file; AQE sizes the number of files
+            image = image.repartition(cdc_bucket_expr(keys, n_buckets))
+        return image
 
-def _fold_cdc_deltas(spark: SparkSession, table_dir: str, ptr: dict) -> dict:
-    """Fold the deltas the pointer names into a new base generation,
-    then delete their ``batch=`` prefixes."""
-    meta = _commit_cdc_base(spark, table_dir, ptr, _cdc_image(spark, table_dir, ptr))
-    for batch_id in ptr["deltas"]:
-        manifest.delete_prefix(spark, table_dir, f"batch={batch_id}")
-    return meta
-
-
-def _cdc_image(spark: SparkSession, table_dir: str, ptr: dict) -> DataFrame:
-    """The image a CDC pointer names: per key the newest delta wins
-    and a delete drops the key; base rows no delta names pass through.
-    The base is read with the pointer's schema and never shuffled: it
-    is anti-joined against the broadcast delta keys."""
-    schema, keys = T.StructType.fromJson(ptr["schema"]), ptr["keys"]
-    base = (
-        spark.read.schema(schema).parquet(manifest.join(table_dir, ptr["base"]))
-        if ptr["base"] else None
-    )
-    if not ptr["deltas"]:
-        return base
-    deltas = spark.read.schema(
-        T.StructType(
-            schema.fields
-            + [T.StructField(CDC_DELETED, T.BooleanType()),
-               T.StructField(CDC_BATCH, T.LongType())]
-        )
-    ).parquet(*[manifest.join(table_dir, f"batch={b}") for b in ptr["deltas"]])
-    newest = Window.partitionBy(*keys).orderBy(F.col(CDC_BATCH).desc())
-    upserts = (
-        deltas.withColumn("__rn", F.row_number().over(newest))
-        .filter((F.col("__rn") == 1) & ~F.col(CDC_DELETED))
-        .select(*schema.fieldNames())
-    )
-    if base is None:
-        return upserts
-    kept = base.join(F.broadcast(deltas.select(*keys)), keys, "left_anti")
-    return kept.unionByName(upserts)
+    return merge
 
 
 def cdc_table_image(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -753,15 +698,18 @@ def cdc_table_image(spark: SparkSession, table_dir: str) -> DataFrame:
     This is the only supported reader of a CDC table: the data files
     under ``table_dir`` hold a base generation plus deltas with delete
     flags, and only the pointer says which of them are live.  The
-    pointer is resolved once: a batch committed later is not seen, and
-    a fold committed later deletes the deltas this frame reads (the
-    reader race sources/manifest.py describes).  A table with no
-    pointer is read flat (the layout of earlier versions), hiding its
-    bucket column."""
+    pointer is resolved once and read through ``manifest.read_table``
+    with the last-writer-wins rule: a batch committed later is not
+    seen, and a fold committed later deletes the deltas this frame
+    reads (the reader race sources/manifest.py describes).  A table
+    with no pointer is read flat (the layout of earlier versions),
+    hiding its bucket column."""
     ptr = manifest.read_pointer(spark, table_dir)
     if ptr is None:
         return spark.read.parquet(table_dir).drop("__bucket")
-    return _cdc_image(spark, table_dir, ptr)
+    return manifest.read_table(
+        spark, table_dir, ptr=ptr, merge=_cdc_merge(ptr["keys"])
+    )
 
 
 def parse_debezium_envelope(raw: DataFrame, row_schema: T.StructType) -> DataFrame:
@@ -1069,13 +1017,16 @@ def run_incremental_dedup_stream(
     docs_dir = index_dir.rstrip("/") + "_docs"
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        index = _read_batch_partitions(spark, index_dir, batch_id)
-        if index is not None:
-            old = _read_batch_partitions(spark, docs_dir, batch_id)
-            pairs = dedup.minhash_match_index_md5(
+        def probe() -> DataFrame | None:
+            index = manifest.read_table(spark, index_dir, before_batch=batch_id, stream=checkpoint)
+            if index is None:
+                return None
+            return dedup.minhash_match_index_md5(
                 batch_df,
                 index,
-                old,
+                manifest.read_table(
+                    spark, docs_dir, before_batch=batch_id, stream=checkpoint
+                ),
                 id_col,
                 text_col,
                 shingle_n=shingle_n,
@@ -1083,17 +1034,20 @@ def run_incremental_dedup_stream(
                 bands=bands,
                 jaccard_threshold=jaccard_threshold,
             )
-            _write_batch(pairs, pairs_dir, batch_id)
-        new_bands = dedup.minhash_band_index_md5(
-            batch_df,
-            id_col,
-            text_col,
-            shingle_n=shingle_n,
-            num_hashes=num_hashes,
-            bands=bands,
-        )
-        _write_batch(new_bands, index_dir, batch_id)
-        _write_batch(batch_df, docs_dir, batch_id)
+
+        def bands_frame() -> DataFrame:
+            return dedup.minhash_band_index_md5(
+                batch_df,
+                id_col,
+                text_col,
+                shingle_n=shingle_n,
+                num_hashes=num_hashes,
+                bands=bands,
+            )
+
+        manifest.commit_batch(spark, pairs_dir, batch_id, checkpoint, probe)
+        manifest.commit_batch(spark, index_dir, batch_id, checkpoint, bands_frame)
+        manifest.commit_batch(spark, docs_dir, batch_id, checkpoint, lambda: batch_df)
 
     return _run_batches(
         docs, checkpoint, apply_batch, snapshot=(id_col, text_col)
@@ -1139,9 +1093,11 @@ def run_incremental_ann_stream(
     from ultimate_data_engineering_project_spark.operators import similarity
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        index = _read_batch_partitions(spark, index_dir, batch_id)
-        if index is not None:
-            matches = similarity.ivf_probe_index(
+        def probe() -> DataFrame | None:
+            index = manifest.read_table(spark, index_dir, before_batch=batch_id, stream=checkpoint)
+            if index is None:
+                return None
+            return similarity.ivf_probe_index(
                 batch_df,
                 index,
                 centroids,
@@ -1150,11 +1106,11 @@ def run_incremental_ann_stream(
                 k=k,
                 n_probe=n_probe,
             )
-            _write_batch(matches, matches_dir, batch_id)
-        _write_batch(
-            similarity.ivf_index_frame(batch_df, centroids, id_col, vec_col),
-            index_dir,
-            batch_id,
+
+        manifest.commit_batch(spark, matches_dir, batch_id, checkpoint, probe)
+        manifest.commit_batch(
+            spark, index_dir, batch_id, checkpoint,
+            lambda: similarity.ivf_index_frame(batch_df, centroids, id_col, vec_col),
         )
 
     return _run_batches(
@@ -1184,11 +1140,11 @@ def run_incremental_pq_stream(
 
     Per micro-batch (the cross-batch state is the on-disk codes frame):
       1. probe: the batch broadcasts with per-query ADC look-up tables
-         and scans ONLY history codes partitions (``batch < batch_id``)
+         and scans ONLY the history codes (the batches before this one)
          at m array lookups per code row
          (operators/similarity.pq_probe_codes) -> ``matches_dir``;
-      2. extend: the batch's own ``(id, pq_codes)`` rows land under
-         ``codes_dir/batch=<id>`` so later batches scan them.
+      2. extend: the batch's own ``(id, pq_codes)`` rows are committed
+         to ``codes_dir`` so later batches scan them.
 
     The codebooks are CONFIG (train once with similarity.pq_train and
     pass them in) — retraining per batch would re-key every historical
@@ -1214,31 +1170,32 @@ def run_incremental_pq_stream(
         )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        codes_hist = _read_batch_partitions(spark, codes_dir, batch_id)
-        if codes_hist is not None:
-            corpus_hist = (
-                _read_batch_partitions(spark, docs_dir, batch_id)
-                if rerank > k
-                else None
-            )
-            matches = similarity.pq_probe_codes(
+        def probe() -> DataFrame | None:
+            codes = manifest.read_table(spark, codes_dir, before_batch=batch_id, stream=checkpoint)
+            if codes is None:
+                return None
+            return similarity.pq_probe_codes(
                 batch_df,
-                codes_hist,
+                codes,
                 codebooks,
                 id_col,
                 vec_col,
                 k=k,
-                corpus=corpus_hist,
+                corpus=manifest.read_table(
+                    spark, docs_dir, before_batch=batch_id, stream=checkpoint
+                ) if rerank > k else None,
                 rerank=rerank,
             )
-            _write_batch(matches, matches_dir, batch_id)
-        _write_batch(
-            similarity.pq_encode(batch_df, codebooks, id_col, vec_col),
-            codes_dir,
-            batch_id,
+
+        manifest.commit_batch(spark, matches_dir, batch_id, checkpoint, probe)
+        manifest.commit_batch(
+            spark, codes_dir, batch_id, checkpoint,
+            lambda: similarity.pq_encode(batch_df, codebooks, id_col, vec_col),
         )
         if rerank > k:
-            _write_batch(batch_df, docs_dir, batch_id)
+            manifest.commit_batch(
+                spark, docs_dir, batch_id, checkpoint, lambda: batch_df
+            )
 
     return _run_batches(
         vectors, checkpoint, apply_batch, snapshot=(id_col, vec_col)
@@ -1340,9 +1297,9 @@ def run_incremental_bm25_stream(
     the corpus.
 
     Per batch (the cross-batch state is the on-disk index): the batch's
-    postings (term, doc_id, tf, dl) land under
-    ``index_dir/batch=<id>/shard=<hash(term) % shards>`` and its ONE
-    stats row (n docs, total length) under ``totals_dir/batch=<id>``.
+    postings (term, doc_id, tf, dl), partitioned by
+    ``shard=<hash(term) % shards>``, are committed to ``index_dir`` and
+    its ONE stats row (n docs, total length) to ``totals_dir``.
     Global statistics are never maintained in place — they are the SUM
     of immutable per-batch partials.  Probe cost: term-shard directory
     pruning keeps the scan at |query terms|/shards of the index
@@ -1361,10 +1318,12 @@ def run_incremental_bm25_stream(
             batch_df, id_col=id_col, text_col=text_col
         )
         shard = F.pmod(F.xxhash64("term"), F.lit(n_shards)).cast("int")
-        _write_batch(
-            postings.withColumn("shard", shard), index_dir, batch_id, "shard"
+        manifest.commit_batch(
+            spark, index_dir, batch_id, checkpoint,
+            lambda: postings.withColumn("shard", shard),
+            partition_by=("shard",),
         )
-        _write_batch(stats, totals_dir, batch_id)
+        manifest.commit_batch(spark, totals_dir, batch_id, checkpoint, lambda: stats)
 
     return _run_batches(
         docs, checkpoint, apply_batch, snapshot=(id_col, text_col)
@@ -1396,8 +1355,8 @@ def run_incremental_bpe_encode_stream(
     segmentation frame whatever the merge depth.
 
     Per batch: the encoded per-doc rows ``(id, n_tokens,
-    token_fingerprint)`` land under ``out_dir/batch=<id>`` — immutable
-    per-batch partitions, never update-in-place.  Equality with a
+    token_fingerprint)`` are committed to ``out_dir`` — immutable
+    per-batch deltas, never update-in-place.  Equality with a
     one-shot ``bpe_encode_docs(oov="subword")`` over the same documents is
     pinned by the stream test, checkpoint restart included."""
     from ultimate_data_engineering_project_spark.operators import text as _text
@@ -1405,11 +1364,13 @@ def run_incremental_bpe_encode_stream(
     merges, vocab, sep = _text.load_bpe_tokenizer(spark, tok_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        encoded = _text.bpe_encode_docs(
-            batch_df, 0, id_col=id_col, text_col=text_col, sep=sep,
-            vocab=vocab, merges=merges, oov="subword",
+        manifest.commit_batch(
+            spark, out_dir, batch_id, checkpoint,
+            lambda: _text.bpe_encode_docs(
+                batch_df, 0, id_col=id_col, text_col=text_col, sep=sep,
+                vocab=vocab, merges=merges, oov="subword",
+            ),
         )
-        _write_batch(encoded, out_dir, batch_id)
 
     return _run_batches(
         docs, checkpoint, apply_batch, snapshot=(id_col, text_col)
@@ -1433,12 +1394,12 @@ def run_incremental_quality_model_stream(
     model is literally a mergeable aggregate, not a retrain.
 
     Per batch (the cross-batch state is the on-disk partials): the
-    batch's (feature, c_pos, c_neg) token counts land under
-    ``counts_dir/batch=<id>`` and its ONE doc-count row under
-    ``doc_counts_dir/batch=<id>`` — immutable per-batch partials, never
-    update-in-place.  classifier.nb_model_from_partials
-    derives weights from any prefix of batches — bit-identical to a
-    one-shot train on the same documents (exact BIGINT statistics),
+    batch's (feature, c_pos, c_neg) token counts are committed to
+    ``counts_dir`` and its ONE doc-count row to ``doc_counts_dir`` —
+    immutable per-batch partials, never update-in-place.
+    classifier.nb_model_from_partials derives weights from any prefix
+    of batches — bit-identical to a one-shot train on the same
+    documents (exact BIGINT statistics),
     pinned by the stream test.
 
     Scale: each batch pays one map-side-combined shuffle capped at
@@ -1453,12 +1414,16 @@ def run_incremental_quality_model_stream(
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         label = _clf.integer_quality_label(text_col)
-        _write_batch(
-            _clf.nb_token_counts(batch_df, label, dim=n_dim, text_col=text_col),
-            counts_dir,
-            batch_id,
+        manifest.commit_batch(
+            spark, counts_dir, batch_id, checkpoint,
+            lambda: _clf.nb_token_counts(
+                batch_df, label, dim=n_dim, text_col=text_col
+            ),
         )
-        _write_batch(_clf.nb_doc_counts(batch_df, label), doc_counts_dir, batch_id)
+        manifest.commit_batch(
+            spark, doc_counts_dir, batch_id, checkpoint,
+            lambda: _clf.nb_doc_counts(batch_df, label),
+        )
 
     return _run_batches(docs, checkpoint, apply_batch, snapshot=(text_col,))
 
@@ -1488,9 +1453,9 @@ def run_incremental_span_stream(
       1. probe: the batch's content-defined anchors equi-join the
          HISTORY index on the anchor hash; diagonal islands-merge
          produces ``(doc_a=new, doc_b=old, a_start, b_start, span_len,
-         n_anchors)`` -> ``spans_dir/batch=<id>``;
-      2. extend: the batch's anchor frame lands under
-         ``index_dir/batch=<id>``.
+         n_anchors)`` -> ``spans_dir``;
+      2. extend: the batch's anchor frame is committed to
+         ``index_dir``.
 
     ``max_occ`` here caps an anchor hash's occurrences within
     (history + batch) at probe time — a PER-PROBE boilerplate bound;
@@ -1507,8 +1472,11 @@ def run_incremental_span_stream(
         anchors = dedup.span_anchors(
             batch_df, w=w, stride=stride, id_col=id_col, text_col=text_col
         )
-        hist = _read_batch_partitions(spark, index_dir, batch_id)
-        if hist is not None:
+
+        def probe() -> DataFrame | None:
+            hist = manifest.read_table(spark, index_dir, before_batch=batch_id, stream=checkpoint)
+            if hist is None:
+                return None
             new_a, old_a = anchors, hist
             if max_occ is not None:
                 both = new_a.select("h").union(old_a.select("h"))
@@ -1526,11 +1494,12 @@ def run_incremental_span_stream(
                     (F.col("a.p") - F.col("b.p")).alias("diag"),
                 )
             )
-            spans = dedup.merge_match_spans(
+            return dedup.merge_match_spans(
                 matches, w=w, merge_gap=gap, min_anchors=min_anchors
             )
-            _write_batch(spans, spans_dir, batch_id)
-        _write_batch(anchors, index_dir, batch_id)
+
+        manifest.commit_batch(spark, spans_dir, batch_id, checkpoint, probe)
+        manifest.commit_batch(spark, index_dir, batch_id, checkpoint, lambda: anchors)
 
     return _run_batches(
         docs, checkpoint, apply_batch, snapshot=(id_col, text_col)
@@ -1558,7 +1527,8 @@ def run_incremental_rollup_stream(
 
     Per micro-batch: aggregate the batch into mergeable partials
     (operators/aggregates.rollup_partials — counts, integer micro-unit
-    sum, min, max) and land them under ``rollup_dir/batch=<id>``.
+    sum, min, max) and commit them to ``rollup_dir`` as the batch's
+    delta.
     No read-modify-write of the rollup and no executor-held state — the
     partials table IS the state.
 
@@ -1568,9 +1538,9 @@ def run_incremental_rollup_stream(
     algebra is order-free, so the view converges to the direct
     aggregate over everything that arrived (pinned vs the batch twin in
     tests).  At 100 TB the partials table stays bucket x key x batch
-    cardinality; `compact_rollup` folds old batch partitions into one
-    base partition when batch count grows, preserving the merge result
-    by the same algebra.
+    cardinality; the stream folds its deltas into one base every
+    ``manifest.FOLD_DELTAS`` batches, and `compact_rollup` folds them on
+    demand, preserving the merge result by the same algebra.
 
     ``partials_fn`` swaps the mergeable state: pass e.g.
     ``lambda df: aggregates.hist_partials(df, ...)`` to maintain the
@@ -1590,7 +1560,10 @@ def run_incremental_rollup_stream(
             )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _write_batch(partials_fn(batch_df), rollup_dir, batch_id)
+        manifest.commit_batch(
+            spark, rollup_dir, batch_id, checkpoint,
+            lambda: partials_fn(batch_df), merge=_rollup_merge,
+        )
 
     return _run_batches(events, checkpoint, apply_batch)
 
@@ -1602,16 +1575,12 @@ def read_rollup(
     merge_fn=None,
     at_generation: int | None = None,
 ) -> DataFrame:
-    """The continuous aggregate's serving view: merge every batch's
-    partials into final per-bucket rows (see run_incremental_rollup_
-    stream).  Reads the whole partials table — intentionally, unlike
-    the index streams' ``batch < id`` probes, because serving wants
-    ALL history including the just-committed batch.
-
-    Once ``compact_rollup`` has written a manifest pointer
-    (``_current``), the view is the pointed-to folded base prefix plus
-    only the batch partitions NEWER than the fold; superseded batch
-    dirs awaiting cleanup are ignored.
+    """The continuous aggregate's serving view: merge every committed
+    batch's partials into final per-bucket rows (see
+    run_incremental_rollup_stream).  It reads the folded base and every
+    delta the pointer names through ``manifest.read_table``, including
+    the just-committed batch; prefixes the pointer does not name
+    (crash orphans, folded batches awaiting cleanup) are ignored.
 
     ``merge_fn`` swaps the serving algebra to match the stream's
     ``partials_fn`` — e.g. ``lambda p: aggregates.hist_quantiles(p,
@@ -1620,13 +1589,12 @@ def read_rollup(
 
     ``at_generation=N`` TIME-TRAVELS to a retained fold (compactions
     run with ``keep_generations>0``): the view is generation N's base
-    prefix ALONE — the aggregate as of that fold point
-    (``folded_through(N)``).  Batches newer than the fold are NOT
-    appended: those at/below the CURRENT fold have been deleted (their
-    state lives on only inside newer bases), so mixing a surviving
-    tail into an old base would serve a state no pointer ever named.
-    Fails loudly with the on-disk generation list when N has been aged
-    out."""
+    prefix ALONE — the aggregate as of that fold, through the batch
+    its pointer's ``through`` named.  Deltas committed after it are
+    NOT appended: those folded since live on only inside newer bases,
+    so mixing them into an old base would serve a state no pointer
+    ever named.  Fails loudly with the on-disk generation list when N
+    has been aged out."""
     from ultimate_data_engineering_project_spark.operators import aggregates
     from ultimate_data_engineering_project_spark.sources import readers
 
@@ -1636,27 +1604,7 @@ def read_rollup(
         return merge_fn(
             readers.read_at_generation(spark, rollup_dir, at_generation)
         )
-    ptr = manifest.read_pointer(spark, rollup_dir)
-    if ptr is None:
-        partials = (
-            spark.read.option("basePath", rollup_dir)
-            .parquet(rollup_dir)
-            .drop("batch")
-        )
-        return merge_fn(partials)
-    partials = spark.read.parquet(manifest.join(rollup_dir, ptr["base"]))
-    tail = [
-        n
-        for n in manifest.list_children(spark, rollup_dir, "batch=")
-        if int(n.split("=")[1]) > ptr["folded_through"]
-    ]
-    if tail:
-        partials = partials.unionByName(
-            spark.read.option("basePath", rollup_dir)
-            .parquet(*[manifest.join(rollup_dir, n) for n in tail])
-            .drop("batch")
-        )
-    return merge_fn(partials)
+    return merge_fn(manifest.read_table(spark, rollup_dir))
 
 
 def _fold_rollup_partials(part: DataFrame) -> DataFrame:
@@ -1693,45 +1641,46 @@ def _fold_rollup_partials(part: DataFrame) -> DataFrame:
     )
 
 
+def _rollup_merge(base: DataFrame | None, deltas: DataFrame | None) -> DataFrame:
+    """The rollup tables' merge rule for a fold: the partials algebra."""
+    return _fold_rollup_partials(manifest.union(base, deltas))
+
+
 def compact_rollup(
     spark: SparkSession,
     rollup_dir: str,
     *,
-    keep_last: int = 1,
     keep_generations: int = 0,
     race_retries: int = 0,
 ) -> int:
     """Bound the continuous aggregate's partials table over an
-    unbounded stream: fold every ``batch=<id>`` partition except the
-    ``keep_last`` most recent into ONE base prefix, preserving
+    unbounded stream: fold every delta the pointer names into ONE base
+    prefix (``manifest.fold`` with the partials algebra), preserving
     `read_rollup`'s output EXACTLY — the fold is the same state algebra
     the serving view applies (counts and integer micro-sums add,
     min/min and max/max), so merging early changes nothing (the
-    property pinned by the slice-invariance tests).
+    property pinned by the slice-invariance tests).  The stream itself
+    folds the same way every ``manifest.FOLD_DELTAS`` batches.
 
-    Run with the stream STOPPED: after a restart the stream may REPLAY
-    its most recent uncommitted batch id, which must still map to its
-    own partition for the overwrite to stay idempotent — keep_last >= 1
-    keeps the replayable tail out of the fold.
+    Run with the stream STOPPED (the table has a single writer).  A
+    restart may replay its last batch; the pointer's ``through`` then
+    holds that batch id, so the replay is a no-op and the view is
+    unchanged.
 
     The fold commits through the manifest protocol
     (sources/manifest.py): it lands in a NEW immutable ``gen-NNNNNN``
     prefix, the ``_current`` pointer flips atomically (one small
-    PUT/rename) and records the fold point (``base``,
-    ``folded_through``), then superseded prefixes are DELETEd — no
-    data-file rename, so local and s3a:// paths behave the same.  The
-    stream keeps appending ``batch=<id>`` partitions at the root;
-    readers MUST use `read_rollup`, which serves the pointed-to base
-    plus only the batches newer than the fold.  A crash before the
-    flip orphans the new prefix (the retry rewrites it — generation
+    PUT/rename) with no deltas and ``through`` at the highest batch
+    folded, then superseded prefixes are DELETEd — no data-file
+    rename, so local and s3a:// paths behave the same.  A crash before
+    the flip orphans the new prefix (the retry rewrites it — generation
     numbers derive from the pointer); a crash after the flip leaves
-    superseded prefixes that readers ignore and the next compaction
-    deletes.  ``keep_generations=N`` ages superseded gen- prefixes
-    instead (the N newest survive cleanup), closing the
-    in-flight-reader race and enabling ``read_rollup(at_generation=
-    ...)`` audit reads; batch partitions at/below the new fold point
-    are still deleted (their state lives on inside every retained
-    base).
+    superseded prefixes that readers ignore and the next fold deletes.
+    ``keep_generations=N`` ages superseded gen- prefixes instead (the N
+    newest survive cleanup), closing the in-flight-reader race and
+    enabling ``read_rollup(at_generation=...)`` audit reads; the folded
+    deltas are still deleted (their state lives on inside every
+    retained base).
 
     Run a single compactor per table: the pointer is re-read after the
     flip and a lost race raises ``manifest.ManifestRaceError`` before
@@ -1740,69 +1689,16 @@ def compact_rollup(
     complete; the loser's orphan prefix stays pointer-invisible and
     ages out under the normal keep_generations cleanup).
 
-    Returns the number of live partials partitions after compaction
-    (folded base + un-folded tail)."""
-    if keep_last < 1:
-        # keep_last=0 would fold the replayable tail batch into the
-        # base partition; a crash-replayed stream rewriting that batch
-        # id would then overwrite the ENTIRE folded history with one
-        # batch's partials — silent data loss, so fail loudly.
-        raise ValueError(
-            f"keep_last must be >= 1 for replay safety (got {keep_last}); "
-            "the most recent batch id may be replayed after a restart and "
-            "must keep its own partition"
-        )
-    return manifest.retry_races(
-        lambda: _compact_rollup_attempt(
-            spark, rollup_dir, keep_last, keep_generations
-        ),
-        race_retries,
-    )
+    Returns the number of live partials prefixes after compaction: 1
+    (the base), or 0 for a table no batch was committed to."""
 
+    def attempt() -> int:
+        ptr = manifest.read_pointer(spark, rollup_dir)
+        if ptr and ptr["deltas"]:
+            ptr = manifest.fold(
+                spark, rollup_dir, ptr, merge=_rollup_merge,
+                keep_generations=keep_generations,
+            )
+        return int(bool(ptr and ptr["base"]))
 
-def _compact_rollup_attempt(
-    spark: SparkSession,
-    rollup_dir: str,
-    keep_last: int,
-    keep_generations: int,
-) -> int:
-    ptr = manifest.read_pointer(spark, rollup_dir) or {
-        "base": None,
-        "folded_through": -1,
-        "generation": 0,
-    }
-    ids = sorted(
-        int(n.split("=")[1])
-        for n in manifest.list_children(spark, rollup_dir, "batch=")
-    )
-    live = [i for i in ids if i > ptr["folded_through"]]
-    folded_ids = live[: len(live) - keep_last]
-    # folding a single batch with no base to merge it into buys nothing
-    if not folded_ids or (ptr["base"] is None and len(folded_ids) < 2):
-        return (1 if ptr["base"] else 0) + len(live)
-    gen = ptr["generation"] + 1
-    new_base = manifest.generation_name(gen)
-    part = (
-        spark.read.option("basePath", rollup_dir)
-        .parquet(*[manifest.join(rollup_dir, f"batch={i}") for i in folded_ids])
-        .drop("batch")
-    )
-    if ptr["base"]:
-        part = spark.read.parquet(
-            manifest.join(rollup_dir, ptr["base"])
-        ).unionByName(part)
-    # a crash-before-flip retry lands on the same gen number (it
-    # derives from the pointer), so overwrite reclaims the orphan
-    _fold_rollup_partials(part).write.mode("overwrite").parquet(
-        manifest.join(rollup_dir, new_base)
-    )
-    manifest.commit(
-        spark,
-        rollup_dir,
-        {"base": new_base, "folded_through": folded_ids[-1], "generation": gen},
-        keep_generations=keep_generations,
-    )
-    for i in ids:
-        if i <= folded_ids[-1]:
-            manifest.delete_prefix(spark, rollup_dir, f"batch={i}")
-    return 1 + (len(live) - len(folded_ids))
+    return manifest.retry_races(attempt, race_retries)
