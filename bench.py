@@ -162,17 +162,27 @@ CANARY_TIMEOUT_SENTINEL_SEC = 9999.0
 PAR_DRIFT_BOUND = 2.5
 
 
-def time_query(spark, fn, sf_dir: str, n_runs: int = N_RUNS) -> list[float]:
+def time_query(
+    spark, fn, sf_dir: str, n_runs: int = N_RUNS, compiles: list | None = None
+) -> list[float]:
     """Wall seconds of ``n_runs`` build -> noop-write runs of one catalog
     query.  Each run re-plans and re-reads the parquet, nothing is
     cached; callers report the min (the first run pays one-time
     JIT/codegen class loading, and single runs on a busy host carry
-    multi-second scheduler/GC noise)."""
+    multi-second scheduler/GC noise).  When given, ``compiles`` gets
+    each run's count of generated classes compiled, a figure that does
+    not drift with host load (a warm run of a repeated plan compiles
+    about none)."""
+    from ultimate_data_engineering_project_spark.session import codegen_compiles
+
     samples = []
     for _ in range(n_runs):
+        before = codegen_compiles(spark) if compiles is not None else 0
         start = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         samples.append(time.perf_counter() - start)
+        if compiles is not None:
+            compiles.append(codegen_compiles(spark) - before)
     return samples
 
 
@@ -393,9 +403,11 @@ def main() -> None:
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
 
     timings: dict[str, float] = {}
+    compiles: dict[str, list[int]] = {}
     for name in HEADLINE:
         fn = qs[name]
-        timings[name] = round(min(time_query(spark, fn, sf_dir)), 3)
+        compiles[name] = []
+        timings[name] = round(min(time_query(spark, fn, sf_dir, compiles=compiles[name])), 3)
         n = fn(spark, sf_dir).count()  # untimed sanity row count
         print(f"# {name}: {timings[name]:.3f}s ({n} rows)", file=sys.stderr)
 
@@ -612,6 +624,9 @@ def main() -> None:
     }
     full = dict(payload)
     full["comparability_note"] = comparability_note
+    # generated classes compiled in each timed run, per query: counts,
+    # not times, so a contended sweep still compares run for run
+    full["query_compiles"] = compiles
     here = os.path.dirname(os.path.abspath(__file__))
     # r14 (judge ask #3): the full payload lands in BENCH_LAST_RUN.json
     # (untracked) on EVERY run; the tracked band reference

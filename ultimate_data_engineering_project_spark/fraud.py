@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ultimate_data_engineering_project_spark.sources import readers
+
 
 def circular_transfer_pairs(transactions: DataFrame) -> DataFrame:
     """A→B and B→A transfers on the same day (J5).
@@ -256,7 +258,7 @@ def trained_fraud_scores(transactions: DataFrame, *, steps: int = 4) -> DataFram
     MODEL itself is hash-checked, not just the scores."""
     labeled = fraud_training_frame(transactions).localCheckpoint()
     spark = labeled.sparkSession
-    w = spark.createDataFrame([(0, 0, 0)], "w0 long, w1 long, w2 long")
+    w = readers.local_frame(spark, [(0, 0, 0)], "w0 long, w1 long, w2 long")
 
     def dot():
         return (

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ultimate_data_engineering_project_spark import tuning
+from ultimate_data_engineering_project_spark.sources import readers
 
 # Mersenne prime 2^31-1: universal-hash modulus for MinHash permutations.
 # 31-bit so a*x stays below 2^63 (Spark ANSI mode errors on long overflow).
@@ -1066,9 +1067,10 @@ def connected_components(
     same bounded-collect contract as the IVF centroid trainer.  Driver
     cost at the 200k default is a few tens of MB of Python objects
     (Rows + the parent dict), so size the threshold to the driver, not
-    to the wire bytes.  The gate is a LIMIT-bounded probe over the
-    already-checkpointed frame — it scans at most threshold+1 rows, so
-    a billion-edge graph pays nothing to learn it is big.  The
+    to the wire bytes.  The gate is one LIMIT-bounded collect over the
+    already-checkpointed frame — it fetches at most threshold+1 rows,
+    which are the small graph's edges when it fits, so a billion-edge
+    graph pays nothing to learn it is big.  The
     distributed path is unchanged for anything bigger, and both paths
     are asserted identical in tests.  Pass 0 to force the distributed
     path.
@@ -1086,10 +1088,9 @@ def connected_components(
     loops = raw.filter(F.col("u") == F.col("v")).select(
         F.col("u").alias("id"), F.col("u").alias("component")
     )
-    if (
-        small_graph_threshold
-        and e.limit(small_graph_threshold + 1).count() <= small_graph_threshold
-    ):
+    # one bounded collect both probes the size and fetches a small graph
+    small = e.limit(small_graph_threshold + 1).collect() if small_graph_threshold else []
+    if small_graph_threshold and len(small) <= small_graph_threshold:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -1100,7 +1101,7 @@ def connected_components(
                 parent[x], x = root, parent[x]
             return root
 
-        for r in e.collect():
+        for r in small:
             u, v = r["u"], r["v"]
             parent.setdefault(u, u)
             parent.setdefault(v, v)
@@ -1112,8 +1113,8 @@ def connected_components(
                 else:
                     parent[ru] = rv
         out = [(x, find(x)) for x in parent]
-        local = edges.sparkSession.createDataFrame(
-            out, "id long, component long"
+        local = readers.local_frame(
+            edges.sparkSession, out, "id long, component long"
         )
         return (
             local.unionByName(loops)

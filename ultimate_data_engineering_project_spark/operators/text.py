@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ultimate_data_engineering_project_spark import tuning
-from ultimate_data_engineering_project_spark.sources import manifest
+from ultimate_data_engineering_project_spark.sources import manifest, readers
 
 # Tiny function-word lists per language for the n-gram/marker heuristic
 # language ID.  Deliberately small and public-knowledge (closed-class
@@ -900,7 +900,7 @@ def read_posting_shards(spark, path: str, query_terms: list[str], *, shards: int
     """Read back ONLY the shards the query terms hash into (partition
     pruning), then re-filter to the exact terms."""
     wanted = (
-        spark.createDataFrame([(t,) for t in query_terms], "term string")
+        readers.local_frame(spark, [(t,) for t in query_terms], "term string")
         .select(F.pmod(F.xxhash64("term"), F.lit(shards)).cast("int").alias("s"))
         .distinct()
         .collect()
@@ -1059,7 +1059,7 @@ def bm25_query_incremental(
     post = manifest.read_table(spark, index_dir, before_batch=before_batch)
     stats_raw = manifest.read_table(spark, totals_dir, before_batch=before_batch)
     wanted = (
-        spark.createDataFrame([(t,) for t in query_terms], "term string")
+        readers.local_frame(spark, [(t,) for t in query_terms], "term string")
         .select(F.pmod(F.xxhash64("term"), F.lit(shards)).cast("int").alias("s"))
         .distinct()
         .collect()
@@ -1125,8 +1125,8 @@ def bpe_merges(
     merges, _ = _bpe_loop(
         df, n_merges, text_col=text_col, sep=sep, batch_pairs=batch_pairs
     )
-    return spark.createDataFrame(
-        merges, "step long, sym1 string, sym2 string, merged string, pair_n long"
+    return readers.local_frame(
+        spark, merges, "step long, sym1 string, sym2 string, merged string, pair_n long"
     )
 
 
@@ -1447,11 +1447,13 @@ def save_bpe_tokenizer(
         batch_pairs=batch_pairs,
     )
     vocab.write.mode("overwrite").parquet(f"{tok_dir}/vocab")
-    spark.createDataFrame(
+    readers.local_frame(
+        spark,
         merges,
         "step long, sym1 string, sym2 string, merged string, pair_n long",
     ).write.mode("overwrite").parquet(f"{tok_dir}/merges")
-    spark.createDataFrame(
+    readers.local_frame(
+        spark,
         [(
             sep,
             n_merges,

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from ultimate_data_engineering_project_spark import schemas
 from ultimate_data_engineering_project_spark.session import configure_session
 
 FIXTURE_TABLES = (
@@ -55,12 +56,44 @@ def _normalize_events(df: DataFrame) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table as a DataFrame (S1 analog)."""
+    """Load one fixture table as a DataFrame (S1 analog).
+
+    A table in ``schemas.FIXTURE_SCHEMAS`` reads with its registered
+    schema, so the read runs no footer-inference job (about 80 ms warm
+    each).  ``events`` and unknown names infer: ``events.ts`` is stored
+    as TIMESTAMP(MICROS) in the sf0.001-sf0.1 fixtures but as
+    TIMESTAMP(NANOS) by other writers of the same table (read as long
+    under ``nanosAsLong``, see ``_normalize_events``), and no one
+    requested schema reads both."""
     configure_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    reader = spark.read
+    if name in schemas.FIXTURE_SCHEMAS and name != "events":
+        reader = reader.schema(schemas.FIXTURE_SCHEMAS[name])
+    df = reader.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = _normalize_events(df)
     return df
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | T.StructType
+) -> DataFrame:
+    """Rows the driver already holds, as a frame planned as a
+    ``LocalRelation``.  ``createDataFrame(<list>, schema)`` plans a
+    ``LogicalRDD`` over a Python RDD, whose execution runs Python-worker
+    tasks only to ship those rows back; an Arrow table with the same
+    schema gives the same columns, types, nullability and nulls."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names=FIXTURE_TABLES) -> dict[str, DataFrame]:
