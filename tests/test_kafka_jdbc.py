@@ -130,22 +130,6 @@ def test_confluent_keep_mode_distinguishes_tombstones_from_corrupt(spark):
     assert len(deletes) == 1 and deletes[0]["value"] is None
 
 
-def test_decode_confluent_avro_needs_spark_avro(spark):
-    """decode_confluent_avro composes the strip with from_avro; without
-    the spark-avro package (this container) Spark raises its own
-    AVRO_NOT_LOADED error at analysis — the strip half stays fully
-    covered by the tests above and the oracle-checked
-    confluent_envelope_roundtrip catalog entry."""
-    from ultimate_data_engineering_project_spark.sources.kafka import (
-        decode_confluent_avro,
-    )
-
-    df = spark.createDataFrame([(_frame(b"\x02", 1),)], "value binary")
-    schema = '{"type":"record","name":"t","fields":[{"name":"x","type":"long"}]}'
-    with pytest.raises(Exception, match="(?i)avro"):
-        decode_confluent_avro(df, schema).collect()
-
-
 _AVRO_SCHEMA = """
 {"type": "record", "name": "row", "fields": [
   {"name": "id", "type": "long"},

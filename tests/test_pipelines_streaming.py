@@ -18,8 +18,8 @@ from ultimate_data_engineering_project_spark.streaming.pipelines import (
     cdc_bucket_expr,
     cdc_table_image,
     events_file_stream,
-    parse_debezium_envelope,
     run_cdc_stream,
+    split_envelope_quarantine,
     stream_daily_volume,
     stream_dedup,
     stream_purchase_after_click,
@@ -81,7 +81,7 @@ def test_cdc_parse_and_apply(spark):
             Row(value='{"op":"c","ts_ms":4,"before":null,"after":"{\\"k\\":3,\\"v\\":\\"c\\"}"}'),
         ]
     )
-    changes = parse_debezium_envelope(raw, row_schema)
+    changes = split_envelope_quarantine(raw, row_schema)[0]
     current = spark.createDataFrame([Row(k=1, v="stale"), Row(k=2, v="x")])
     out = cdc_apply_batch(current, changes, keys=["k"])
     got = {r["k"]: r["v"] for r in out.collect()}
@@ -1019,6 +1019,70 @@ def test_cdc_quarantine_routes_corrupt_envelopes(spark, tmp_path):
     bad_schema = T.StructType([T.StructField("_corrupt_record", T.StringType())])
     with _pytest.raises(ValueError, match="reserved"):
         split_envelope_quarantine(raw, bad_schema)
+
+
+def test_cdc_stream_applies_only_valid_envelopes(spark, tmp_path):
+    """Without ``quarantine_dir`` the stream still validates every
+    frame: a corrupt image, a bad op and a garbage line are dropped,
+    never applied as a NULL-key row or an upsert."""
+    import json as _json
+
+    row_schema = T.StructType(
+        [T.StructField("k", T.IntegerType()), T.StructField("v", T.IntegerType())]
+    )
+    lines = [
+        _json.dumps({"op": "c", "ts_ms": 1, "before": None, "after": '{"k":1,"v":10}'}),
+        _json.dumps({"op": "c", "ts_ms": 2, "before": None, "after": "{broken json"}),
+        _json.dumps({"op": "x", "ts_ms": 3, "before": None, "after": '{"k":2,"v":5}'}),
+        "garbage {",
+    ]
+    env_dir = str(tmp_path / "env")
+    os.makedirs(env_dir)
+    with open(os.path.join(env_dir, "batch0.jsonl"), "w") as f:
+        f.write("\n".join(lines))
+    table_dir = str(tmp_path / "table")
+    q = run_cdc_stream(
+        spark, env_dir, row_schema, ["k"], table_dir, str(tmp_path / "ckpt")
+    )
+    q.awaitTermination(120)
+    img = cdc_table_image(spark, table_dir)
+    assert {(r.k, r.v) for r in img.collect()} == {(1, 10)}
+
+
+@pytest.mark.parametrize(
+    "old, missing",
+    [
+        # compact_parquet before the one layout
+        ({"data": "gen-000001", "generation": 1},
+         ["base", "through", "stream", "deltas", "schema"]),
+        # compact_rollup before the one layout
+        ({"base": "gen-000002", "folded_through": 4, "generation": 2},
+         ["through", "stream", "deltas", "schema"]),
+        # run_cdc_stream before the pointer carried `through`
+        ({"generation": 1, "base": "gen-000001", "deltas": [2], "stream": "c",
+          "schema": {}, "keys": ["k"], "n_buckets": None},
+         ["through"]),
+    ],
+    ids=["compact_parquet", "compact_rollup", "cdc"],
+)
+def test_earlier_pointer_shapes_fail_with_missing_keys(spark, tmp_path, old, missing):
+    """A pointer an earlier version wrote fails on read with a
+    ValueError naming the table and the keys it lacks, not a KeyError
+    deep in a reader."""
+    import json as _json
+    import re
+
+    from ultimate_data_engineering_project_spark.sources import manifest
+
+    table_dir = str(tmp_path / "table")
+    os.makedirs(table_dir)
+    with open(os.path.join(table_dir, manifest.POINTER_NAME), "w") as f:
+        _json.dump(old, f)
+    want = re.escape(table_dir) + ".*" + re.escape(str(missing))
+    with pytest.raises(ValueError, match=want):
+        manifest.read_table(spark, table_dir)
+    with pytest.raises(ValueError, match=want):
+        cdc_table_image(spark, table_dir)
 
 
 def test_resize_images_shapes_and_determinism(spark, sf_dir):

@@ -1,36 +1,9 @@
-"""Sinks (S5), DDL registry (S9), approximate sketches, fuzzy join."""
+"""Sinks (S5), DDL registry (S9), approximate sketches."""
 
-from pyspark.sql import Row, functions as F
+from pyspark.sql import functions as F
 
 from ultimate_data_engineering_project_spark import schemas
-from ultimate_data_engineering_project_spark.operators.relational import fuzzy_pairs
 from ultimate_data_engineering_project_spark.sources.readers import load_table
-from ultimate_data_engineering_project_spark.sources.sinks import write_csv, write_parquet
-
-
-def test_csv_and_parquet_sinks(spark, tmp_path):
-    df = spark.createDataFrame([Row(a=1, b="x"), Row(a=2, b="y")])
-    write_csv(df, str(tmp_path / "csv"), mode="overwrite")
-    back = spark.read.option("header", True).csv(str(tmp_path / "csv"))
-    assert back.count() == 2 and set(back.columns) == {"a", "b"}
-    write_parquet(df, str(tmp_path / "pq"), mode="overwrite")
-    assert spark.read.parquet(str(tmp_path / "pq")).count() == 2
-
-
-def test_union_evolving_schemas(spark):
-    """Bronze batches with added/dropped columns union by name; missing
-    columns become NULL, order differences are irrelevant."""
-    from ultimate_data_engineering_project_spark.operators.relational import (
-        union_evolving,
-    )
-
-    b1 = spark.createDataFrame([Row(id=1, v="a")])
-    b2 = spark.createDataFrame([Row(v="b", id=2, extra=9)])  # reordered + new col
-    b3 = spark.createDataFrame([Row(id=3)])  # dropped column
-    out = union_evolving(b1, b2, b3).orderBy("id").collect()
-    assert [r["id"] for r in out] == [1, 2, 3]
-    assert [r["v"] for r in out] == ["a", "b", None]
-    assert [r["extra"] for r in out] == [None, 9, None]
 
 
 def test_csv_json_schema_read_with_quarantine(spark, tmp_path):
@@ -102,36 +75,6 @@ def test_approx_sketches_within_tolerance(spark, sf_dir):
     qs = li.approxQuantile("l_quantity", [0.5, 0.9], 0.01)
     ex = li.select(F.expr("percentile(l_quantity, array(0.5, 0.9))").alias("p")).first()["p"]
     assert abs(qs[0] - ex[0]) <= 1.0 and abs(qs[1] - ex[1]) <= 1.0
-
-
-def test_fuzzy_pairs_blocked(spark):
-    df = spark.createDataFrame(
-        [
-            Row(id=1, name="cold widget"),
-            Row(id=2, name="bold widget"),   # distance 1
-            Row(id=3, name="small widget"),  # distance > 2 from both
-            Row(id=4, name="blue rod"),      # different block
-        ]
-    )
-    out = fuzzy_pairs(
-        df, "id", "name", F.regexp_extract(F.col("name"), r"([a-z]+)$", 1), 2
-    )
-    got = {(r["id_a"], r["id_b"]): r["distance"] for r in out.collect()}
-    assert got == {(1, 2): 1}
-
-
-def test_fuzzy_pairs_max_block_size_cap(spark):
-    """Degenerate-canopy cap: an over-full block is dropped ENTIRELY
-    (deterministic, no sampling), other blocks are untouched."""
-    rows = [Row(id=i, name=f"w{i} widget") for i in range(5)]  # one block of 5
-    rows += [Row(id=10, name="blue rod"), Row(id=11, name="blme rod")]
-    df = spark.createDataFrame(rows)
-    block = F.regexp_extract(F.col("name"), r"([a-z]+)$", 1)
-    capped = fuzzy_pairs(df, "id", "name", block, 2, max_block_size=4)
-    got = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-    assert got == {(10, 11)}  # widget block (5 > 4) dropped whole
-    uncapped = fuzzy_pairs(df, "id", "name", block, 2)
-    assert {(r["id_a"], r["id_b"]) for r in uncapped.collect()} > got
 
 
 def test_hll_rollup_merges_instead_of_rescanning(spark, sf_dir):

@@ -441,7 +441,7 @@ def nb_model_from_partials(
     """Derive the model from the per-batch partials a
     run_incremental_quality_model_stream left on disk (read through
     ``manifest.read_table`` — the incremental-BM25 layout): merge
-    the token-count partials (one groupBy), sum the doc-count
+    the token-count partials (`merge_nb_counts`), sum the doc-count
     partials, hand both to nb_model.  Because the statistics are
     exact BIGINT sums, the result is BIT-IDENTICAL to training on the
     full corpus in one batch — the stream buys incrementality for
@@ -453,9 +453,7 @@ def nb_model_from_partials(
     """
     counts = manifest.read_table(spark, counts_dir, before_batch=before_batch)
     dstats = manifest.read_table(spark, doc_counts_dir, before_batch=before_batch)
-    token_counts = counts.groupBy("feature").agg(
-        F.sum("c_pos").alias("c_pos"), F.sum("c_neg").alias("c_neg")
-    )
+    token_counts = merge_nb_counts(counts)
     doc_counts = dstats.agg(
         F.sum("n_pos_docs").alias("n_pos_docs"),
         F.sum("n_neg_docs").alias("n_neg_docs"),

@@ -43,7 +43,7 @@ asks for (see SURVEY.md §2.10).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 #: Quantization scale shared with the engine-portable LSH twin
 #: (similarity._int_planes oracle): round(x * 1e6) on IEEE doubles

@@ -615,29 +615,6 @@ def _md5_band_candidates(
     )
 
 
-def minhash_lsh_candidates_md5(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    *,
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """The raw banded-minhash CANDIDATE pair set (before the Jaccard
-    verify) of :func:`minhash_lsh_pairs_md5` — exposed so the recall
-    of the approximate stage itself is auditable cross-engine: joined
-    against the exact shingle-Jaccard truth set, every true pair the
-    bands missed (and every false candidate the verify discards) is a
-    visible, hash-checkable row (r11 judge ask #7)."""
-    if num_hashes % bands:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
-        )
-    sets = _md5_shingle_sets(df, id_col, text_col, shingle_n)
-    return _md5_band_candidates(sets, num_hashes=num_hashes, bands=bands)
-
-
 def minhash_lsh_pairs_md5(
     df: DataFrame,
     id_col: str,

@@ -65,83 +65,6 @@ def self_pairs(
     return a.join(b, on=cond, how="inner")
 
 
-def fuzzy_pairs(
-    df: DataFrame,
-    id_col: str,
-    name_col: str,
-    block_expr: Column,
-    max_distance: int = 2,
-    max_block_size: int | None = None,
-) -> DataFrame:
-    """Fuzzy-duplicate pairs via blocked Levenshtein (J6 — the
-    reference's declared 'deduplicate customers (fuzzy matching)',
-    polished_transactions.py:507).
-
-    The equi-join on ``block_expr`` (a cheap canopy: prefix, phonetic
-    code, last token, ...) bounds the candidate set; the edit-distance
-    theta predicate runs only within blocks — the standard blocking
-    pattern that keeps fuzzy dedup out of O(n²) at 100 TB.  For
-    token-level fuzziness over long text use MinHash (operators.dedup)
-    instead.
-
-    ``max_block_size`` caps degenerate canopies: blocks with more
-    members than the cap are dropped entirely (deterministic — no
-    sampling), the same contract as the degenerate-bucket cap in
-    timeseries block joins.  Within-block work is quadratic, so one
-    popular key must not be allowed to own the runtime (cap semantics
-    pinned in tests/test_sinks_sketches.py).  For row-level dedup of a
-    heavily duplicated column, prefer :func:`fuzzy_vocab_pairs` —
-    capping treats the symptom, distinct-first removes it.
-    """
-    slim = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(name_col).alias("__name"),
-        block_expr.alias("__block"),
-        F.length(F.col(name_col)).alias("__len"),
-    )
-    if max_block_size is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("__block")
-        slim = (
-            slim.withColumn("__bn", F.count(F.lit(1)).over(w))
-            .filter(F.col("__bn") <= max_block_size)
-            .drop("__bn")
-        )
-    a = slim.alias("a")
-    b = slim.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.__block") == F.col("b.__block"),
-                F.col("a.__id") < F.col("b.__id"),
-                # length band: |len(a)-len(b)| is a Levenshtein lower
-                # bound, so this prunes in-block pairs BEFORE the DP
-                # without changing the result
-                F.abs(F.col("a.__len") - F.col("b.__len"))
-                <= F.lit(max_distance),
-            ],
-        )
-        .withColumn(
-            # thresholded Levenshtein: the DP early-exits once the
-            # distance provably exceeds max_distance (banded O(d*n)
-            # instead of O(n^2) per pair, -1 when over) — the dominant
-            # cost in a weak-canopy block where most pairs are far
-            "distance",
-            F.levenshtein(F.col("a.__name"), F.col("b.__name"), max_distance),
-        )
-        .filter(F.col("distance") >= 0)
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.col("a.__name").alias("name_a"),
-            F.col("b.__name").alias("name_b"),
-            F.col("distance").cast("long").alias("distance"),
-        )
-    )
-
-
 def fuzzy_vocab_pairs(
     df: DataFrame,
     name_col: str,
@@ -341,18 +264,6 @@ def union_distinct(*dfs: DataFrame) -> DataFrame:
     for df in dfs[1:]:
         out = out.unionByName(df)
     return out.distinct()
-
-
-def union_evolving(*dfs: DataFrame) -> DataFrame:
-    """Append bronze batches whose schemas evolved (§2.7 — the
-    reference's CSV drops gain/lose columns over time,
-    psql_connector.py:146-156): name-based union, absent columns
-    NULL-filled.  Column ORDER never matters, only names — positional
-    union is how type-sheared bronze tables are born."""
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
-    return out
 
 
 def except_distinct(left: DataFrame, right: DataFrame) -> DataFrame:

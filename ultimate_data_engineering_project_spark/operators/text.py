@@ -170,21 +170,6 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.drop(*[f"__score_{lang}" for lang in langs])
 
 
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Document fingerprints: md5 content hash (cross-engine stable) and
-    a 64-bit rolling polynomial token hash (xxhash64-seeded, Spark-side
-    dedup key)."""
-    t = tokens(F.col(text_col))
-    rolling = F.aggregate(
-        F.transform(t, lambda x: F.xxhash64(x)),
-        F.lit(0).cast("long"),
-        lambda acc, h: acc * F.lit(31) + h,
-    )
-    return df.withColumn("fp_md5", F.md5(F.col(text_col))).withColumn(
-        "fp_rolling", rolling
-    )
-
-
 def _grams(tv: Column, k: int) -> Column:
     """k-grams as strings over the BOUND token array ``tv`` (tokens are
     whitespace-free, so ' '-joined k-grams are collision-free); empty

@@ -458,24 +458,6 @@ def rolling_sums_auto(
     )
 
 
-def rolling(
-    df: DataFrame,
-    order_by: list[str],
-    value: Column,
-    preceding: int,
-    agg: str = "avg",
-    partition_keys: list[str] | None = None,
-    alias: str = "rolling",
-) -> DataFrame:
-    """Rows-based rolling aggregate (W3 — acquisition-trend dashboards,
-    README.md:37)."""
-    w = Window.partitionBy(*(partition_keys or [])).orderBy(*order_by).rowsBetween(
-        -preceding, 0
-    )
-    fn = getattr(F, agg)
-    return df.withColumn(alias, fn(value).over(w))
-
-
 def sessionize(
     df: DataFrame,
     key: str,

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ultimate_data_engineering_project_spark import quality
 from ultimate_data_engineering_project_spark.fraud import circular_transfer_pairs, velocity_alerts
-from ultimate_data_engineering_project_spark.functions.scalar import dsum
 from ultimate_data_engineering_project_spark.operators.windows import (
     dedup_keep_latest,
     scd2,

@@ -607,7 +607,7 @@ def confluent_envelope_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle builds the identical frames and strips them in hex-string
     space, so the id extraction and payload slicing are hash-checked
     value-for-value, not just pytest-pinned.  On a cluster the stripped
-    payload feeds `from_avro` (decode_confluent_avro)."""
+    payload feeds `avro_py.decode_confluent_avro_py`."""
     from ultimate_data_engineering_project_spark.sources.kafka import (
         strip_confluent_envelope,
     )

@@ -260,9 +260,7 @@ def docs_reputation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def docs_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content fingerprinting (X4 — md5 is engine-portable; the 64-bit
-    rolling-hash variant is Spark-side only, see operators.text
-    .fingerprint)."""
+    """Content fingerprinting (X4 — md5 is engine-portable)."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.select("doc_id", F.md5("text").alias("fp_md5"))
 
@@ -1130,10 +1128,10 @@ def minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_union").cast("long").alias("n_union"),
         )
     )
-    # r14: the candidate side reuses the SAME shingle-set subtree the
-    # truth side was built from (minhash_lsh_candidates_md5 would
-    # re-derive it from docs — one more full tokenize+shingle pass);
-    # identical parameters (shingle_n=3, num_hashes=16, bands=4)
+    # the candidate side reuses the SAME shingle-set subtree the truth
+    # side was built from (deriving it from docs again would be one
+    # more full tokenize+shingle pass); the parameters of
+    # minhash_lsh_pairs_md5 (shingle_n=3, num_hashes=16, bands=4)
     cand = dedup._md5_band_candidates(sets, num_hashes=16, bands=4)
     return (
         truth.join(
@@ -3341,9 +3339,14 @@ def ann_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = similarity.pq_candidates_int(
         emb, dim=64, m=4, n_codes=8, rerank=50, n_queries=5
     )
+    # the pool holds at most n_queries x rerank = 250 rows at any scale:
+    # broadcast it up front.  Left to AQE, the join was planned as a
+    # sort-merge join and re-planned to the same broadcast only when
+    # the pool's stage finished first; otherwise the truth side's
+    # shuffle had already run (one more job, three more stages).
     return (
         exact.join(
-            cand.withColumn("captured", F.lit(1).cast("long")),
+            F.broadcast(cand.withColumn("captured", F.lit(1).cast("long"))),
             ["query_id", "neighbor_id"],
             "left",
         )

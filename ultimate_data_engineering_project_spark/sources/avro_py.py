@@ -1,10 +1,9 @@
 """Pure-Python Avro binary codec for Debezium-style change events (S13,
 the payload half of the Confluent wire format).
 
-``sources.kafka.decode_confluent_avro`` decodes with spark-avro's
-``from_avro``, which needs the spark-avro package on the cluster.  This
-module decodes and encodes the same frames with no extra package, over
-Arrow batches via ``mapInPandas``, so the CDC path runs and is
+Spark's own ``from_avro`` needs the spark-avro package on the cluster.
+This module decodes and encodes the same frames with no extra package,
+over Arrow batches via ``mapInPandas``, so the CDC path runs and is
 oracle-checked anywhere.
 
 Supported surface: records (nested, and named types referenced by their
@@ -992,8 +991,8 @@ def decode_confluent_avro_py(
     """Confluent wire format -> typed columns, end to end, with zero
     cluster packages: `strip_confluent_envelope` (pure expressions)
     splits magic/schema_id/payload, then the pure-Python codec decodes
-    the Avro body.  The executable twin of ``decode_confluent_avro``
-    for flat row schemas; oracle-checked by the
+    the Avro body.  The package's one Confluent-Avro decode (spark-avro's
+    ``from_avro`` is not needed); oracle-checked by the
     ``avro_roundtrip_decode`` catalog entry on synthesized frames."""
     from ultimate_data_engineering_project_spark.sources.kafka import (
         strip_confluent_envelope,

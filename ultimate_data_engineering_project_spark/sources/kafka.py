@@ -1,12 +1,13 @@
-"""Kafka source/sink option contracts and Confluent-Avro envelope
-decode (SURVEY.md §2.1 S12, §2.1 S13).
+"""Kafka source/sink option contracts and the Confluent-Avro envelope
+strip (SURVEY.md §2.1 S12, §2.1 S13).
 
 The reference fronts ingestion with a Kafka broker on localhost:29092
 (docker-compose.yaml:54-78) driven by kafka-python producers/consumers
 (cdc/test.py:8-18), and runs Debezium with Avro key/value converters
 against a Confluent Schema Registry (docker-compose.yaml:79-97).  The
 Spark-native equivalents are the ``format("kafka")`` structured-
-streaming connector and ``from_avro`` over the Confluent wire format.
+streaming connector and an Avro decode of the Confluent wire format
+(sources/avro_py.py, no package needed).
 
 This container ships neither a broker nor the spark-sql-kafka /
 spark-avro connector jars, so the surface splits into what IS
@@ -18,10 +19,10 @@ verifiable here and what needs a cluster:
   * the Confluent wire-format strip (`strip_confluent_envelope`) is
     built-in binary expressions only — magic byte check, big-endian
     schema id, payload slice — unit-tested on synthesized bytes;
-  * `kafka_source` / `kafka_sink` / `decode_confluent_avro` apply those
-    contracts verbatim; on a cluster with the connector packages they
-    run as-is, in-container they raise Spark's own connector-missing
-    error at load/analysis time.
+  * `kafka_source` / `kafka_sink` apply those contracts verbatim; on a
+    cluster with the connector packages they run as-is, in-container
+    they raise Spark's own connector-missing error at load/analysis
+    time.
 
 CDC integration: `run_cdc_stream(..., source=kafka_source(...))` —
 the pipeline accepts any streaming DataFrame with a ``value`` column,
@@ -30,7 +31,7 @@ so the Kafka frame drops in where the file-based stand-in reads.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 #: Confluent wire format: 1 magic byte (0x00) + 4-byte big-endian
 #: schema-registry id + Avro binary body.
@@ -198,26 +199,3 @@ def strip_confluent_envelope(
         .withColumn("payload", F.when(ok, payload))
     )
 
-
-def decode_confluent_avro(
-    df: DataFrame,
-    avro_schema_json: str,
-    value_col: str = "value",
-    *,
-    record_col: str = "record",
-    bad_magic: str = "error",
-) -> DataFrame:
-    """Confluent wire format → parsed record column (S13): strip the
-    envelope, then `from_avro` with the caller-provided writer schema
-    (the registry lookup for the stripped ``schema_id`` happens outside
-    Spark — schemas are config, not per-row state).  Requires the
-    spark-avro package on the cluster; for flat Debezium row schemas,
-    `sources.avro_py.decode_confluent_avro_py` is the executable twin
-    with zero cluster packages (oracle-checked end to end by the
-    ``avro_roundtrip_decode`` catalog entry)."""
-    from pyspark.sql.avro.functions import from_avro
-
-    stripped = strip_confluent_envelope(df, value_col, bad_magic=bad_magic)
-    return stripped.withColumn(
-        record_col, from_avro(F.col("payload"), avro_schema_json)
-    )

@@ -121,9 +121,8 @@ def _hadoop_fs(spark, path: str):
     return jpath.getFileSystem(conf), jpath, jvm
 
 
-def read_pointer(spark, table_dir: str) -> dict | None:
-    """The table's current manifest, or None if the table has no
-    pointer (legacy flat layout)."""
+def _load_pointer(spark, table_dir: str) -> dict | None:
+    """The pointer object as stored, of any version, or None."""
     if _is_local(table_dir):
         p = os.path.join(_local_path(table_dir), POINTER_NAME)
         if not os.path.exists(p):
@@ -142,6 +141,26 @@ def read_pointer(spark, table_dir: str) -> dict | None:
     finally:
         stream.close()
     return json.loads(raw.decode("utf-8"))
+
+
+def read_pointer(spark, table_dir: str) -> dict | None:
+    """The table's current manifest, or None if the table has no
+    pointer (legacy flat layout).  A pointer without the keys of this
+    layout (earlier versions wrote ``{data, generation}``,
+    ``{base, folded_through, generation}``, or a CDC pointer with no
+    ``through``) raises ``ValueError`` naming the table and the missing
+    keys."""
+    meta = _load_pointer(spark, table_dir)
+    if meta is None:
+        return None
+    missing = [k for k in new_pointer() if k not in meta]
+    if missing:
+        raise ValueError(
+            f"table at {table_dir} has a pointer from an earlier layout: "
+            f"it lacks {missing} (keys: {sorted(meta)}); rewrite the table "
+            "with this version"
+        )
+    return meta
 
 
 def write_pointer(spark, table_dir: str, meta: dict) -> None:
@@ -264,8 +283,10 @@ def verify_pointer_generation(spark, table_dir: str, generation: int) -> None:
     after the fact rather than preventing it).  ``commit`` calls it
     between its flip and its cleanup, so a losing compactor never
     deletes the winner's state; ``retry_races`` catches the
-    :class:`ManifestRaceError` and re-runs from the fresh pointer."""
-    ptr = read_pointer(spark, table_dir)
+    :class:`ManifestRaceError` and re-runs from the fresh pointer.
+    Any writer's flip counts, whatever version of the pointer it
+    wrote."""
+    ptr = _load_pointer(spark, table_dir)
     got = ptr.get("generation") if ptr else None
     if got != generation:
         raise ManifestRaceError(

@@ -3,8 +3,8 @@
 The reference lands pandas CSVs on S3 one object per batch
 (psql_connector.py:136-166) and mutates rows with per-row UPDATEs
 (oltp_seeder.py:483-487).  Spark-native equivalents:
-  * typed, partitioned parquet append (bronze);
-  * CSV kept only for compatibility;
+  * typed, partitioned parquet append (bronze) and compatibility CSV:
+    ``DataFrameWriter`` directly, no wrapper;
   * ``merge_overwrite`` — the join+overwrite MERGE pattern replacing
     in-place UPDATE (SURVEY §7 hard part (a)).
 """
@@ -12,24 +12,6 @@ The reference lands pandas CSVs on S3 one object per batch
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "append",
-    partition_by: list[str] | None = None,
-) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "append") -> None:
-    """S5 compatibility sink (reference psql_connector.py:152-156) —
-    header on, but parquet is the real bronze format (types survive)."""
-    df.write.mode(mode).option("header", True).csv(path)
 
 
 def write_bucketed(
@@ -263,8 +245,8 @@ def s3a_conf(
     compose.yaml MinIO service).  Apply with
     ``for k, v in s3a_conf(...).items():
         spark.sparkContext._jsc.hadoopConfiguration().set(k, v)``
-    or as ``spark.hadoop.*`` builder configs; then every write_parquet/
-    write_csv path may be ``s3a://bucket/prefix``.  Path-style access +
+    or as ``spark.hadoop.*`` builder configs; then every parquet or
+    CSV path may be ``s3a://bucket/prefix``.  Path-style access +
     no-SSL are the MinIO-compatible defaults; credentials default to the
     provider chain (IAM role) when not given."""
     conf = {
